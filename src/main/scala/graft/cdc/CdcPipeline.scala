@@ -41,11 +41,15 @@ import org.apache.spark.sql.types.{DataType, IntegerType, LongType, NumericType,
   * The pointer swap stays a one-line atomic move, so readers see the
   * old or the new manifest, never a torn state.
   *
-  * Writer contract: ONE writer per target at a time (the reference's
-  * scheduler likewise runs the procedure serially per table) —
-  * readers and `vacuum` are safe concurrently with that writer, but
-  * two concurrent publishes to the same target would race on the
-  * next version number.
+  * Writer contract: every version-producing write commits through
+  * one path ([[commit]]), which claims `v<base+1>` and re-checks that
+  * the pointer still sits at the base the write derived from. Two
+  * concurrent writers to one target therefore serialize: the loser
+  * throws [[ConcurrentWriteException]] before its version becomes
+  * visible, and [[retryOnConflict]] re-derives it against the
+  * winner's state. Readers and `vacuum` are safe concurrently with
+  * any writer. The reference's scheduler runs the procedure serially
+  * per table; graft stays correct without relying on that.
   */
 object CdcPipeline {
 
@@ -161,7 +165,7 @@ object CdcPipeline {
     * addressing and ON-clause validation — wrong touched-bucket
     * pruning with no error. Fail loudly instead (rename flows rewrite
     * the sidecar explicitly, outside the publish path). Called BEFORE
-    * `claimVersion` so a refused write never leaves a claim behind.
+    * [[commit]] so a refused write never takes a claim.
     */
   private def validatePk(targetDir: String, pkCols: Seq[String]): Unit =
     if (pkCols.nonEmpty && StoreFs.exists(s"$targetDir/$PkFile")) {
@@ -370,10 +374,6 @@ object CdcPipeline {
     issues.result()
   }
 
-  /** Commit metadata for the version a maintenance op is publishing. */
-  private def commitMeta(op: String): Map[String, String] =
-    Map("op" -> op, "commit_us" -> (System.currentTimeMillis() * 1000L).toString)
-
   /** PK-hash bucket of a row — Spark's Murmur3 `hash`, so the layout
     * is stable across sessions and the delta's touched-bucket set is
     * computable from the keys alone.
@@ -435,32 +435,152 @@ object CdcPipeline {
     tryClaim(retry = true)
   }
 
-  /** Claim the successor of `base` and verify base is STILL the
-    * current version after the claim (A66): the claim-then-check
-    * closes the read→derive→commit race for every full-rewrite and
-    * metadata publish path, exactly as publishDelta's readVersion
-    * check does for delta publishes — without it, a commit landing
-    * between the manifest read and the claim would be silently
-    * overwritten by state derived from the stale manifest (the
-    * racer's claim is already released at its swap, so the
-    * same-number claim alone never fires).
-    */
-  private def claimNextFrom(targetDir: String, base: Long): Long = {
-    val next = base + 1
-    claimVersion(targetDir, next)
-    val cur = currentVersion(targetDir).getOrElse(-1L)
-    if (cur != base) {
-      releaseClaim(targetDir, next)
-      throw new ConcurrentWriteException(
-        s"base version v$base of $targetDir is no longer current " +
-          s"(pointer is at v$cur): a concurrent commit landed after this " +
-          "operation read its snapshot — re-derive and retry")
-    }
-    next
-  }
-
   private def releaseClaim(targetDir: String, version: Long): Unit =
     StoreFs.deleteFile(claimPath(targetDir, version))
+
+  /** What one commit changed relative to the manifest it derived from
+    * (`from` in [[commit]]). An op body writes only its data into
+    * `v<next>` (bucket files, DV rows, index sidecars) and returns
+    * this; [[commit]] builds the manifest.
+    *
+    *  - `rewritten`: buckets whose files the op replaced or emptied.
+    *    They lose their stats, bloom/NDV sidecars and DV entries (the
+    *    rewrite read them DV-applied, so the entries are folded).
+    *    Buckets the op wrote into `v<next>` point there; every other
+    *    bucket of `from` carries by reference.
+    *  - `stats`: fresh stats of the rewritten buckets.
+    *  - `deletedFrom`: buckets that lost rows to a deletion vector
+    *    without a rewrite. Superset-safe indexes (stats, bloom) stay;
+    *    NDV sketches, which would overcount, drop.
+    *  - `set` / `unset`: op-specific meta edits, applied last. An op
+    *    that sets `dv` or an index key owns what lies under it, and
+    *    commit carries nothing there.
+    *  - `dropCols`: columns whose stats, default and indexes go.
+    */
+  private final case class Edit(
+      rewritten: Set[Int] = Set.empty,
+      stats: Map[Int, Map[String, (String, String)]] = Map.empty,
+      deletedFrom: Set[Int] = Set.empty,
+      set: Map[String, String] = Map.empty,
+      unset: Set[String] = Set.empty,
+      dropCols: Set[String] = Set.empty,
+      numBuckets: Option[Int] = None,
+      schemaJson: Option[String] = None)
+
+  /** The one commit path: every version-producing write goes through
+    * here, in this order.
+    *
+    *  1. Claim `base + 1` and re-check that the pointer still sits at
+    *     `base` (A66). `base` is the version the op derived its state
+    *     from. Without the re-check, a commit landing between that
+    *     read and the claim would be overwritten by state derived from
+    *     the stale base; the racer's claim is already released at its
+    *     swap, so the claim alone never fires.
+    *  2. Refuse a `v<next>` that already holds a manifest: it is a
+    *     staged commit awaiting completion (A55) — overwriting it
+    *     would break Txn's roll-forward — or a writer that died
+    *     between manifest and swap. Delete a manifest-less leftover of
+    *     a crashed writer, whose sidecars would otherwise read as this
+    *     version's.
+    *  3. Run `body`. If it throws, release the claim and delete
+    *     `v<next>`, so one failed write never blocks the next.
+    *  4. Build the manifest from `from` (resolved against `fromDir`,
+    *     the store it lives in) with one carry rule. `coldefault.*`,
+    *     `constraint.*`, `colvirt.*` and `prop.*` carry verbatim;
+    *     defaults drop once no bucket carries by reference, since they
+    *     only fill pre-declaration buckets. Stats, bloom and NDV
+    *     sidecars are pruned to the carried buckets, but an index's
+    *     meta key survives with zero sidecars: it declares the index,
+    *     which readers treat as all-must-read and [[maintain]]'s rebuild
+    *     trigger needs to see (r8 verdict #2). The DV is folded for
+    *     rewritten buckets and copied by a metadata-only commit. The
+    *     op's [[Edit]] applies on top.
+    *  5. Write the chain-hashed manifest, then swap the pointer, or
+    *     leave the commit staged with its claim held when `swapNow`
+    *     is false (Txn).
+    *
+    * Only the DV fold of a rewriting commit over a DV'd store runs a
+    * Spark job; everything else is driver metadata I/O.
+    */
+  private def commit(targetDir: String, base: Long, from: Option[Manifest], op: String,
+      fromDir: Option[String] = None, swapNow: Boolean = true, batchId: Long = -1L)
+      (body: Long => Edit): Long = {
+    val next = base + 1
+    val dir = s"$targetDir/v$next"
+    claimVersion(targetDir, next)
+    def refuse(why: String): Nothing = {
+      releaseClaim(targetDir, next)
+      throw new ConcurrentWriteException(s"cannot commit v$next of $targetDir: $why")
+    }
+    val cur = currentVersion(targetDir).getOrElse(-1L)
+    if (cur != base)
+      refuse(s"base v$base is no longer current (pointer is at v$cur): a concurrent " +
+        "commit landed after this operation read its snapshot — re-derive and retry")
+    if (StoreFs.exists(s"$dir/$ManifestFile"))
+      refuse("it already holds a manifest — a staged commit awaiting Txn.recover, or a " +
+        "writer that died before its pointer swap (fsck: orphan_inflight); complete or " +
+        "remove it first")
+    try {
+      StoreFs.deleteRecursive(dir)
+      val e = body(next)
+      val src = from.getOrElse(Manifest(0, "", Map.empty))
+      val srcDir = fromDir.getOrElse(targetDir)
+      val kept = src.buckets.keySet -- e.rewritten
+      def carriedRef(ref: String): String = {
+        val abs = if (ref.contains("/")) ref else s"$srcDir/$ref"
+        val local = abs.stripPrefix(s"$targetDir/")
+        if (local != abs && local.matches("v\\d+")) local else abs
+      }
+      val buckets = src.buckets.collect { case (b, r) if kept(b) => b -> carriedRef(r) } ++
+        writtenBuckets(dir).map(_ -> s"v$next")
+      val stats = (src.stats.filter(kv => kept(kv._1)) ++ e.stats)
+        .map { case (b, cs) => b -> (cs -- e.dropCols) }.filter(_._2.nonEmpty)
+      val dropKeys = e.unset ++ e.dropCols.flatMap(c =>
+        Seq(DefaultPrefix + statEnc(c), Bloom.prefix + c, Ndv.prefix + c))
+      val declared = src.meta.filter { case (k, _) =>
+        Seq(ConstraintPrefix, VirtualPrefix, PropPrefix).exists(k.startsWith) ||
+          (k.startsWith(DefaultPrefix) && kept.nonEmpty)
+      }
+      val indexes = for {
+        idx <- Seq(Bloom, Ndv)
+        (key, ref) <- src.meta.toSeq.sorted
+        if key.startsWith(idx.prefix) && !e.set.contains(key) && !dropKeys(key)
+      } yield {
+        val keep = if (idx == Ndv) kept -- e.deletedFrom else kept
+        idx.carry(srcDir, ref, key.stripPrefix(idx.prefix), keep, targetDir, next)
+        key -> s"v$next"
+      }
+      // a commit's DV always lives in its own version dir (so vacuum
+      // can never orphan it): a metadata-only commit copies it (it is
+      // small); a rewrite keeps only the carried buckets' entries
+      val dv = src.meta.get("dv").filterNot(_ => e.set.contains("dv")).flatMap { ref =>
+        val dst = s"$dir/$DvDir"
+        if (e.rewritten.isEmpty) {
+          StoreFs.copyDir(dvPath(srcDir, ref), dst)
+          Some("dv" -> s"v$next")
+        } else if (kept.isEmpty) None
+        else {
+          val keep = readDv(SparkSession.active, srcDir, src, Some(kept)).get.localCheckpoint()
+          if (keep.isEmpty) None
+          else {
+            keep.coalesce(1).write.mode(SaveMode.Overwrite).parquet(dst)
+            Some("dv" -> s"v$next")
+          }
+        }
+      }
+      writeManifest(targetDir, next, Manifest(e.numBuckets.getOrElse(src.numBuckets),
+        e.schemaJson.getOrElse(src.schemaJson), buckets, stats,
+        (declared ++ indexes ++ dv) -- dropKeys ++ e.set +
+          ("op" -> op) + ("commit_us" -> (System.currentTimeMillis() * 1000L).toString)))
+    } catch {
+      case t: Throwable =>
+        releaseClaim(targetDir, next)
+        StoreFs.deleteRecursive(dir)
+        throw t
+    }
+    if (swapNow) swapPointer(targetDir, next, batchId)
+    next
+  }
 
   /** Per-bucket min/max of the declared stats columns, aggregated
     * from the files just written under `dir` — reading the
@@ -639,18 +759,12 @@ object CdcPipeline {
     */
   private def columnDefaults(m: Manifest): Seq[(String, Long, String)] =
     m.meta.collect {
-      case (k, v) if k.startsWith("coldefault.") =>
+      case (k, v) if k.startsWith(DefaultPrefix) =>
         val Array(declV, d) = v.split(" ", 2)
-        (statDec(k.stripPrefix("coldefault.")), declV.toLong, statDec(d))
+        (statDec(k.stripPrefix(DefaultPrefix)), declV.toLong, statDec(d))
     }.toSeq.sortBy(_._1)
 
-  /** `coldefault.*` meta entries carried verbatim into any publish
-    * that keeps pre-declaration buckets by reference. Full rewrites
-    * materialize the fill (readBuckets applies it on the way in) and
-    * start from fresh meta instead.
-    */
-  private def carryDefaults(prev: Manifest): Map[String, String] =
-    prev.meta.filter(_._1.startsWith("coldefault."))
+  private val DefaultPrefix = "coldefault."
 
   private def refVersion(ver: String): Option[Long] = {
     val tail = if (ver.contains("/")) ver.substring(ver.lastIndexOf('/') + 1) else ver
@@ -807,72 +921,30 @@ object CdcPipeline {
   // (must-read until reindexed); merge-on-read deletes keep all
   // entries (a bloom over a superset is just extra FPs — safe).
 
-  private val BloomDir = "_bloom"
-  private val NdvDir = "_ndv"
-  private def ndvMetaKey(column: String): String = s"ndv.$column"
-  private def ndvDirPath(targetDir: String, ref: String, column: String): String =
-    (if (ref.contains("/")) ref else s"$targetDir/$ref") +
-      s"/$NdvDir/${statEnc(column)}"
-
-  /** Carry NDV sketch sidecars into version `next` — the same
-    * discipline as [[carryBlooms]]: entries for `keepBuckets` copy by
-    * driver I/O, rewritten buckets' entries DROP (their distinct set
-    * changed — a stale sketch would lie), a column in `dropCols`
-    * loses its whole index, and the `ndv.*` meta KEY survives even
-    * fully degraded so [[ndvStats]] reports partial coverage and
-    * [[maintain]]'s heal trigger can see it.
+  /** One per-bucket index family: sidecars at
+    * `<version>/<dir>/<enc col>/<bucket>.<ext>`, advertised by the meta
+    * key `<prefix><col>` → version ref ("v7" or an absolute version
+    * dir). [[commit]] carries every family's sidecars for carried
+    * buckets only — a rewritten bucket's entry would lie.
     */
-  private def carryNdv(targetDir: String, prev: Manifest, keepBuckets: Set[Int],
-      next: Long, dropCols: Set[String] = Set.empty): Map[String, String] =
-    prev.meta.keys.filter(_.startsWith("ndv.")).toSeq.sorted.flatMap { key =>
-      val column = key.stripPrefix("ndv.")
-      if (dropCols.contains(column)) None
-      else {
-        val srcDir = ndvDirPath(targetDir, prev.meta(key), column)
-        keepBuckets.toSeq.sorted.foreach { b =>
-          val src = s"$srcDir/$b.hll"
-          if (StoreFs.exists(src)) StoreFs.writeBytes(
-            s"$targetDir/v$next/$NdvDir/${statEnc(column)}/$b.hll",
-            StoreFs.readBytes(src))
-        }
-        Some(key -> s"v$next")
+  private final class SidecarIndex(val prefix: String, dir: String, ext: String) {
+    def file(root: String, ref: String, column: String, b: Int): String =
+      (if (ref.contains("/")) ref else s"$root/$ref") + s"/$dir/${statEnc(column)}/$b.$ext"
+    /** Copy `column`'s sidecars of `buckets` from version `ref` of
+      * `fromRoot` into `v<next>` of `toRoot`, by driver I/O; missing
+      * entries stay missing.
+      */
+    def carry(fromRoot: String, ref: String, column: String, buckets: Set[Int],
+        toRoot: String, next: Long): Unit =
+      buckets.toSeq.sorted.foreach { b =>
+        val src = file(fromRoot, ref, column, b)
+        if (StoreFs.exists(src))
+          StoreFs.writeBytes(file(toRoot, s"v$next", column, b), StoreFs.readBytes(src))
       }
-    }.toMap
+  }
 
-  private def bloomMetaKey(column: String): String = s"bloom.$column"
-  private def bloomDirPath(targetDir: String, ref: String, column: String): String =
-    (if (ref.contains("/")) ref else s"$targetDir/$ref") +
-      s"/$BloomDir/${statEnc(column)}"
-
-  /** Carry bloom sidecars into version `next`: entries for
-    * `keepBuckets` copy by reference-sized driver I/O, all others
-    * drop; a column listed in `dropCols` loses its whole index.
-    * Returns the surviving `bloom.*` meta entries.
-    *
-    * The meta KEY survives even when zero sidecars do (a publish that
-    * rewrote every bucket): it is the declaration "this column is
-    * bloom-indexed", which readPoint treats identically to
-    * all-entries-missing (every bucket must-read — degrade, never
-    * lie) and which [[maintain]]'s rebuild trigger needs to SEE the
-    * fully-degraded index; dropping the key made that degradation
-    * permanent and invisible (r8 verdict #2).
-    */
-  private def carryBlooms(targetDir: String, prev: Manifest, keepBuckets: Set[Int],
-      next: Long, dropCols: Set[String] = Set.empty): Map[String, String] =
-    prev.meta.keys.filter(_.startsWith("bloom.")).toSeq.sorted.flatMap { key =>
-      val column = key.stripPrefix("bloom.")
-      if (dropCols.contains(column)) None
-      else {
-        val srcDir = bloomDirPath(targetDir, prev.meta(key), column)
-        keepBuckets.toSeq.sorted.foreach { b =>
-          val src = s"$srcDir/$b.bf"
-          if (StoreFs.exists(src)) StoreFs.writeBytes(
-            s"$targetDir/v$next/$BloomDir/${statEnc(column)}/$b.bf",
-            StoreFs.readBytes(src))
-        }
-        Some(key -> s"v$next")
-      }
-    }.toMap
+  private val Bloom = new SidecarIndex("bloom.", "_bloom", "bf")
+  private val Ndv = new SidecarIndex("ndv.", "_ndv", "hll")
 
   /** Build (or rebuild) the bloom index for `column` and publish it
     * as a metadata version. One Spark pass over `buckets` (default:
@@ -913,42 +985,19 @@ object CdcPipeline {
           .groupBy("b")
           .agg(graft.functions.BloomBuildAgg(col("v"), expectedPerBucket, fpp).as("bf"))
           .collect()
-      val next = claimNextFrom(targetDir, m.readVersion)
-      // OTHER columns' sidecars carry over every bucket (the data is
-      // unchanged — an index build invalidates nothing); THIS
-      // column's carry depends on the mode: full build replaces all
-      // (no carry), incremental repair carries the UNscanned buckets'
-      // surviving sidecars, then the fresh builds land on top — a
-      // rebuilt bucket never keeps a stale filter
-      val carried = carryBlooms(targetDir, m, m.buckets.keySet, next, Set(column))
-      if (buckets.nonEmpty) m.meta.get(bloomMetaKey(column)).foreach { ref =>
-        val srcDir = bloomDirPath(targetDir, ref, column)
-        (m.buckets.keySet -- scanSet).toSeq.sorted.foreach { b =>
-          val src = s"$srcDir/$b.bf"
-          if (StoreFs.exists(src)) StoreFs.writeBytes(
-            s"$targetDir/v$next/$BloomDir/${statEnc(column)}/$b.bf",
-            StoreFs.readBytes(src))
-        }
+      val key = Bloom.prefix + column
+      commit(targetDir, m.readVersion, Some(m), "bloom-index") { next =>
+        // THIS column's index is owned here (other columns' carry
+        // through commit): a full build replaces it, an incremental
+        // repair carries the UNscanned buckets' surviving sidecars and
+        // the fresh builds land on top — a rebuilt bucket never keeps
+        // a stale filter
+        if (buckets.nonEmpty) m.meta.get(key).foreach(ref =>
+          Bloom.carry(targetDir, ref, column, m.buckets.keySet -- scanSet, targetDir, next))
+        entries.foreach(r => StoreFs.writeBytes(
+          Bloom.file(targetDir, s"v$next", column, r.getInt(0)), r.getAs[Array[Byte]](1)))
+        Edit(set = Map("bloom_col" -> column, key -> s"v$next"))
       }
-      entries.foreach(r => StoreFs.writeBytes(
-        s"$targetDir/v$next/$BloomDir/${statEnc(column)}/${r.getInt(0)}.bf",
-        r.getAs[Array[Byte]](1)))
-      val dvMeta = m.meta.get("dv").map { ref =>
-        StoreFs.copyDir(dvPath(targetDir, ref), s"$targetDir/v$next/$DvDir")
-        "dv" -> s"v$next"
-      }.toMap
-      writeManifest(targetDir, next, Manifest(m.numBuckets, m.schemaJson,
-        m.buckets, m.stats,
-        // defaults/constraints carry like every other metadata-only
-        // publish (pre-r9 this dropped coldefault.*, so an index build
-        // on a defaulted table silently lost the fill — regression
-        // pinned in CdcPipelineSpec)
-        commitMeta("bloom-index") + ("bloom_col" -> column) ++ dvMeta ++
-          carryDefaults(m) ++ carryConstraints(m) ++ carryVirtual(m) ++ carryProps(m) ++
-          carryNdv(targetDir, m, m.buckets.keySet, next) ++
-          carried + (bloomMetaKey(column) -> s"v$next")))
-      swapPointer(targetDir, next, -1L)
-      next
     }
 
   /** Point lookup on a NON-key column through the bloom index: reads
@@ -972,11 +1021,10 @@ object CdcPipeline {
         case _ => v
       })
       val residual: DataFrame => DataFrame = _.filter(col(column).isin(typed: _*))
-      val keep = m.meta.get(bloomMetaKey(column)) match {
+      val keep = m.meta.get(Bloom.prefix + column) match {
         case Some(ref) =>
-          val dir = bloomDirPath(targetDir, ref, column)
           m.buckets.keySet.filter { b =>
-            val p = s"$dir/$b.bf"
+            val p = Bloom.file(targetDir, ref, column, b)
             if (!StoreFs.exists(p)) true // missing entry: must read
             else {
               val f = org.apache.spark.util.sketch.BloomFilter.readFrom(
@@ -1033,56 +1081,34 @@ object CdcPipeline {
           .agg(hll_sketch_agg(col(columns.head)).as(columns.head),
             columns.tail.map(c => hll_sketch_agg(col(c)).as(c)): _*)
           .collect()
-      val next = claimNextFrom(targetDir, m.readVersion)
-      // other columns' sketches carry everywhere; the rebuilt columns
-      // carry only OUTSIDE the scanned set (incremental repair), and
-      // the fresh sketches land on top
-      val carried = carryNdv(targetDir, m, m.buckets.keySet, next, columns.toSet)
-      if (buckets.nonEmpty) columns.foreach { c =>
-        m.meta.get(ndvMetaKey(c)).foreach { ref =>
-          val srcDir = ndvDirPath(targetDir, ref, c)
-          (m.buckets.keySet -- scanSet).toSeq.sorted.foreach { b =>
-            val src = s"$srcDir/$b.hll"
-            if (StoreFs.exists(src)) StoreFs.writeBytes(
-              s"$targetDir/v$next/$NdvDir/${statEnc(c)}/$b.hll",
-              StoreFs.readBytes(src))
+      commit(targetDir, m.readVersion, Some(m), "ndv-index") { next =>
+        // the rebuilt columns' indexes are owned here (other columns'
+        // carry through commit): they keep their sketches only OUTSIDE
+        // the scanned set (incremental repair), and the fresh sketches
+        // land on top
+        if (buckets.nonEmpty) columns.foreach(c => m.meta.get(Ndv.prefix + c).foreach(ref =>
+          Ndv.carry(targetDir, ref, c, m.buckets.keySet -- scanSet, targetDir, next)))
+        entries.foreach { r =>
+          columns.zipWithIndex.foreach { case (c, i) =>
+            Option(r.get(i + 1)).foreach(sk => StoreFs.writeBytes(
+              Ndv.file(targetDir, s"v$next", c, r.getInt(0)), sk.asInstanceOf[Array[Byte]]))
           }
         }
-      }
-      entries.foreach { r =>
-        val b = r.getInt(0)
-        columns.zipWithIndex.foreach { case (c, i) =>
-          Option(r.get(i + 1)).foreach(sk => StoreFs.writeBytes(
-            s"$targetDir/v$next/$NdvDir/${statEnc(c)}/$b.hll",
-            sk.asInstanceOf[Array[Byte]]))
-        }
-      }
-      // Zero-cardinality sentinel (r9 ADVICE): a SCANNED bucket can
-      // legitimately produce no sketch — fully DV-deleted (no rows
-      // survive the anti-join) or an all-NULL column (hll_sketch_agg
-      // → null). Without a file, coverage never reaches full and
-      // maintain()'s ndvRebuildPct trigger re-runs the heal on every
-      // pass, committing a version each time without converging. An
-      // EMPTY .hll file records "scanned, zero cardinality";
-      // ndvStats counts it as covered and excludes it from the union.
-      columns.foreach { c =>
-        scanSet.toSeq.sorted.foreach { b =>
-          val p = s"$targetDir/v$next/$NdvDir/${statEnc(c)}/$b.hll"
+        // Zero-cardinality sentinel (r9 ADVICE): a SCANNED bucket can
+        // legitimately produce no sketch — fully DV-deleted (no rows
+        // survive the anti-join) or an all-NULL column (hll_sketch_agg
+        // → null). Without a file, coverage never reaches full and
+        // maintain()'s ndvRebuildPct trigger re-runs the heal on every
+        // pass, committing a version each time without converging. An
+        // EMPTY .hll file records "scanned, zero cardinality";
+        // ndvStats counts it as covered and excludes it from the union.
+        for (c <- columns; b <- scanSet.toSeq.sorted) {
+          val p = Ndv.file(targetDir, s"v$next", c, b)
           if (!StoreFs.exists(p)) StoreFs.writeBytes(p, Array.emptyByteArray)
         }
+        Edit(set = columns.map(c => Ndv.prefix + c -> s"v$next").toMap +
+          ("ndv_cols" -> columns.sorted.mkString(",")))
       }
-      val dvMeta = m.meta.get("dv").map { ref =>
-        StoreFs.copyDir(dvPath(targetDir, ref), s"$targetDir/v$next/$DvDir")
-        "dv" -> s"v$next"
-      }.toMap
-      writeManifest(targetDir, next, Manifest(m.numBuckets, m.schemaJson,
-        m.buckets, m.stats,
-        commitMeta("ndv-index") + ("ndv_cols" -> columns.sorted.mkString(",")) ++
-          dvMeta ++ carryDefaults(m) ++ carryConstraints(m) ++ carryVirtual(m) ++
-          carryProps(m) ++ carryBlooms(targetDir, m, m.buckets.keySet, next) ++
-          carried ++ columns.map(c => ndvMetaKey(c) -> s"v$next")))
-      swapPointer(targetDir, next, -1L)
-      next
     }
   }
 
@@ -1105,10 +1131,9 @@ object CdcPipeline {
   def ndvStats(spark: SparkSession, targetDir: String,
       column: String): Option[NdvReport] =
     currentVersion(targetDir).flatMap(v => manifest(targetDir, v)).flatMap { m =>
-      m.meta.get(ndvMetaKey(column)).map { ref =>
-        val dir = ndvDirPath(targetDir, ref, column)
+      m.meta.get(Ndv.prefix + column).map { ref =>
         val present = m.buckets.keySet.toSeq.sorted.flatMap { b =>
-          val p = s"$dir/$b.hll"
+          val p = Ndv.file(targetDir, ref, column, b)
           if (StoreFs.exists(p)) Some(StoreFs.readBytes(p)) else None
         }
         // zero-length files are the zero-cardinality sentinel (see
@@ -1413,114 +1438,75 @@ object CdcPipeline {
     else Some(steps.flatten.reduce(_ unionByName _))
   }
 
+  /** The `op` of a CREATE OR REPLACE publish (see [[publish]]). */
+  private[graft] val ReplaceOp = "replace"
+
   /** Publish `df` as the next FULL snapshot version and move the
     * pointer: every bucket is written and the manifest points them
-    * all at the new version. Used for first builds and legacy-layout
-    * migration; incremental runs go through `publishDelta`.
+    * all at the new version. Used for first builds, full overwrites
+    * and legacy-layout migration; incremental runs go through
+    * `publishDelta`. Declared metadata carries like any other commit
+    * (INSERT OVERWRITE keeps constraints, generated columns and
+    * properties), except for `op = ReplaceOp`: CREATE OR REPLACE is a
+    * redefinition and starts from empty metadata.
     */
   private[graft] def publish(df: DataFrame, targetDir: String, pkCols: Seq[String],
       batchId: Long = -1L, buckets: Option[Int] = None,
       statsCols: Seq[String] = Nil, op: String = "publish",
       swapNow: Boolean = true): Long = {
     validatePk(targetDir, pkCols)
-    val next = currentVersion(targetDir).getOrElse(-1L) + 1
-    claimVersion(targetDir, next)
+    val base = currentVersion(targetDir).getOrElse(-1L)
+    val prev = manifest(targetDir, base)
     // Bucket count is fixed at first publish (a repartition-in-place
     // of the whole target would be needed to change it; ~parallelism
     // is the right default at any scale where this runs).
-    val numBuckets = currentVersion(targetDir)
-      .flatMap(v => manifest(targetDir, v)).map(_.numBuckets)
-      .orElse(buckets)
+    val numBuckets = prev.map(_.numBuckets).orElse(buckets)
       .getOrElse(df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt)
-    val dir = s"$targetDir/v$next"
-    labeled(df.sparkSession, "store.publish: bucket write") {
-      writeBuckets(df, pkCols, numBuckets, dir)
+    val from = prev.filter(_ => op != ReplaceOp)
+    commit(targetDir, base, from, op, swapNow = swapNow, batchId = batchId) { next =>
+      val dir = s"$targetDir/v$next"
+      labeled(df.sparkSession, "store.publish: bucket write") {
+        writeBuckets(df, pkCols, numBuckets, dir)
+      }
+      recordPk(targetDir, pkCols)
+      Edit(rewritten = from.fold(Set.empty[Int])(_.buckets.keySet),
+        stats = labeled(df.sparkSession, "store.publish: bucket stats") {
+          bucketStats(df.sparkSession, dir, statsCols)
+        }, numBuckets = Some(numBuckets), schemaJson = Some(df.schema.json))
     }
-    recordPk(targetDir, pkCols)
-    writeManifest(targetDir, next, Manifest(numBuckets, df.schema.json,
-      writtenBuckets(dir).map(_ -> s"v$next").toMap,
-      labeled(df.sparkSession, "store.publish: bucket stats") {
-        bucketStats(df.sparkSession, dir, statsCols)
-      }, commitMeta(op)))
-    if (swapNow) swapPointer(targetDir, next, batchId)
-    next
   }
 
   /** Publish a merge that only recomputed `touched` buckets: write
     * those, carry every other bucket forward by manifest reference.
-    * Publish I/O ∝ delta, not target.
+    * Publish I/O ∝ delta, not target. `prev` is the manifest the
+    * delta was derived from; the commit refuses if the pointer moved
+    * past it ([[ConcurrentWriteException]] — the caller re-derives,
+    * e.g. under [[retryOnConflict]]).
     */
   private[graft] def publishDelta(mergedSubset: DataFrame, targetDir: String,
       pkCols: Seq[String], prev: Manifest, touched: Set[Int], batchId: Long,
       statsCols: Seq[String] = Nil, op: String = "merge",
       swapNow: Boolean = true): Long = {
     validatePk(targetDir, pkCols)
-    val next = currentVersion(targetDir).getOrElse(-1L) + 1
-    claimVersion(targetDir, next)
-    // Stale-base check (A66): `prev` is the manifest this delta was
-    // DERIVED from. If the pointer advanced past it between the read
-    // and this commit, the carried references (and the folded DV)
-    // would silently drop the intervening commit — the lost-update
-    // race the same-number claim alone cannot see, because the
-    // winner's claim is released at its pointer swap. Refuse; the
-    // caller re-derives against the new current (retryOnConflict).
-    if (prev.readVersion >= 0 && next != prev.readVersion + 1) {
-      releaseClaim(targetDir, next)
-      throw new ConcurrentWriteException(
-        s"base version v${prev.readVersion} of $targetDir is no longer " +
-          s"current (pointer is at v${next - 1}): a concurrent commit " +
-          "landed after this delta was derived — re-derive and retry")
+    commit(targetDir, prev.readVersion, Some(prev), op, swapNow = swapNow,
+        batchId = batchId) { next =>
+      val dir = s"$targetDir/v$next"
+      labeled(mergedSubset.sparkSession, "store.publishDelta: bucket write") {
+        writeBuckets(mergedSubset, pkCols, prev.numBuckets, dir)
+      }
+      recordPk(targetDir, pkCols)
+      Edit(rewritten = touched,
+        stats = labeled(mergedSubset.sparkSession, "store.publishDelta: bucket stats") {
+          bucketStats(mergedSubset.sparkSession, dir, statsCols)
+        }, schemaJson = Some(mergedSubset.schema.json))
     }
-    val dir = s"$targetDir/v$next"
-    labeled(mergedSubset.sparkSession, "store.publishDelta: bucket write") {
-      writeBuckets(mergedSubset, pkCols, prev.numBuckets, dir)
-    }
-    recordPk(targetDir, pkCols)
-    val carried = prev.buckets -- touched
-    val fresh = writtenBuckets(dir).map(_ -> s"v$next").toMap
-    // stats mirror the bucket pointers: recomputed for rewritten
-    // buckets, carried by reference otherwise (their content did not
-    // change, so neither did their min/max)
-    val freshStats = labeled(mergedSubset.sparkSession, "store.publishDelta: bucket stats") {
-      bucketStats(mergedSubset.sparkSession, dir, statsCols)
-    }
-    writeManifest(targetDir, next,
-      Manifest(prev.numBuckets, mergedSubset.schema.json, carried ++ fresh,
-        (prev.stats -- touched) ++ freshStats,
-        commitMeta(op) ++ carryDefaults(prev) ++ carryConstraints(prev) ++
-          carryVirtual(prev) ++ carryProps(prev) ++
-          carryDv(mergedSubset.sparkSession, targetDir, prev, carried.keySet,
-            next) ++
-          carryBlooms(targetDir, prev, carried.keySet, next) ++
-          carryNdv(targetDir, prev, carried.keySet, next)))
-    if (swapNow) swapPointer(targetDir, next, batchId)
-    next
   }
 
-  /** Deletion-vector half of a delta publish: rewritten buckets were
-    * produced from DV-applied reads, so their entries are FOLDED into
-    * the new files; entries for buckets still carried by reference
-    * must follow those references into the new version. Returns the
-    * `dv` meta entry to add — empty when nothing remains (either no
-    * prior DV, or every remaining entry's bucket was rewritten —
-    * which is how merges and OPTIMIZE gradually retire a vector).
-    * The surviving entries rewrite into the NEW version's own dir, so
-    * a manifest's DV never references another version and vacuum
-    * cannot orphan it.
+  /** Columns the manifest's stats index tracks — what a rewrite of
+    * some buckets recomputes for them.
     */
-  private def carryDv(spark: SparkSession, targetDir: String, prev: Manifest,
-      carriedBuckets: Set[Int], next: Long): Map[String, String] =
-    readDv(spark, targetDir, prev, Some(carriedBuckets)) match {
-      case Some(dv) if carriedBuckets.nonEmpty =>
-        val keep = dv.localCheckpoint()
-        if (keep.isEmpty) Map.empty
-        else {
-          keep.coalesce(1).write.mode(SaveMode.Overwrite)
-            .parquet(s"$targetDir/v$next/$DvDir")
-          Map("dv" -> s"v$next")
-        }
-      case _ => Map.empty
-    }
+  private def trackedStats(m: Manifest): Seq[String] =
+    m.stats.values.flatMap(_.keys).toSeq.distinct
 
   /** Change the target's frozen bucket count — the layout-maintenance
     * op for a target that outgrew its first-publish sizing (64
@@ -1529,27 +1515,23 @@ object CdcPipeline {
     * delta publish then uses the new count. Readers are never broken:
     * old versions keep their own manifests (and bucket counts), the
     * pointer swap is atomic, and an in-flight delta publish against
-    * the old layout loses the pointer race benignly (its version is
-    * simply never pointed at). Returns the new version, None when the
-    * target doesn't exist yet.
+    * the old layout fails its commit's base check (the caller
+    * re-derives against the new layout). Returns the new version,
+    * None when the target doesn't exist yet.
     */
   def rebucket(spark: SparkSession, targetDir: String, pkCols: Seq[String],
       newBuckets: Int): Option[Long] = {
     require(newBuckets > 0, s"bucket count must be positive: $newBuckets")
     currentVersion(targetDir).flatMap(v => manifest(targetDir, v)).map { m =>
       val snap = readBuckets(spark, targetDir, m, m.buckets.keySet)
-      val next = claimNextFrom(targetDir, m.readVersion)
-      val dir = s"$targetDir/v$next"
-      writeBuckets(snap, pkCols, newBuckets, dir)
-      // every bucket is rewritten, so stats recompute from scratch for
-      // whatever columns the previous manifest tracked
-      val statsCols = m.stats.values.flatMap(_.keys).toSeq.distinct
-      writeManifest(targetDir, next, Manifest(newBuckets, m.schemaJson,
-        writtenBuckets(dir).map(_ -> s"v$next").toMap,
-        bucketStats(spark, dir, statsCols),
-        commitMeta("rebucket") ++ carryConstraints(m) ++ carryVirtual(m) ++ carryProps(m)))
-      swapPointer(targetDir, next, -1L)
-      next
+      commit(targetDir, m.readVersion, Some(m), "rebucket") { next =>
+        val dir = s"$targetDir/v$next"
+        writeBuckets(snap, pkCols, newBuckets, dir)
+        // every bucket is rewritten, so stats recompute from scratch for
+        // whatever columns the previous manifest tracked
+        Edit(rewritten = m.buckets.keySet, stats = bucketStats(spark, dir, trackedStats(m)),
+          numBuckets = Some(newBuckets))
+      }
     }
   }
 
@@ -1635,7 +1617,7 @@ object CdcPipeline {
 
   /** Fold the deletion vector into the data files (A56): OPTIMIZE
     * exactly the buckets the vector touches — every entry's bucket is
-    * rewritten from a DV-applied read, so `carryDv` retires the whole
+    * rewritten from a DV-applied read, so the commit's fold retires the whole
     * vector and the read-side anti-join cost disappears. Rewrite I/O
     * ∝ affected buckets, clustering by `sortCols` (default: the PK).
     * Returns the folding version; None when there is no vector.
@@ -1731,22 +1713,16 @@ object CdcPipeline {
       val n = hits.count()
       if (n == 0L) (currentVersion(targetDir).get, 0L)
       else {
-        val next = claimNextFrom(targetDir, m.readVersion)
         val all = readDv(spark, targetDir, m, None).fold(hits)(_ unionByName hits)
-        all.coalesce(1).write.mode(SaveMode.Overwrite)
-          .parquet(s"$targetDir/v$next/$DvDir")
-        val dvB = all.select("bucket").distinct().collect()
-          .map(_.getInt(0)).toSet
-        writeManifest(targetDir, next, Manifest(m.numBuckets, m.schemaJson,
-          m.buckets, m.stats,
-          commitMeta("delete_mor") + ("dv" -> s"v$next") ++
-            carryDefaults(m) ++ carryConstraints(m) ++ carryVirtual(m) ++ carryProps(m) ++
-            // blooms stay valid over a superset — just extra FPs;
-            // NDV sketches over a superset become upper bounds — a
-            // MoR delete DROPS every DV'd bucket's entry instead
-            carryBlooms(targetDir, m, m.buckets.keySet, next) ++
-            carryNdv(targetDir, m, m.buckets.keySet -- dvB, next)))
-        swapPointer(targetDir, next, -1L)
+        commit(targetDir, m.readVersion, Some(m), "delete_mor") { next =>
+          all.coalesce(1).write.mode(SaveMode.Overwrite)
+            .parquet(s"$targetDir/v$next/$DvDir")
+          // blooms stay valid over a superset — just extra FPs; NDV
+          // sketches over a superset become upper bounds, so the sketch
+          // of every bucket this delete hits DROPS instead
+          Edit(deletedFrom = hits.select("bucket").distinct().collect().map(_.getInt(0)).toSet,
+            set = Map("dv" -> s"v$next"))
+        }
         // A56 fold policy: once the accumulated vector crosses
         // `autoFoldPct` percent of the table (both row counts from
         // footers — free), pay the bucket rewrite NOW and retire the
@@ -1810,7 +1786,6 @@ object CdcPipeline {
       else {
         val touched = hits.keySet
         val subset = readBuckets(spark, targetDir, m, touched)
-        val statsCols = m.stats.values.flatMap(_.keys).toSeq.distinct
         val rewritten = rewrite(subset)
         // A71: an UPDATE introduces new cell values — enforce the
         // table's CHECK constraints on the rewritten subset before
@@ -1819,7 +1794,7 @@ object CdcPipeline {
         // remove rows and skip the check.
         if (op == "update") enforceConstraints(m, rewritten, targetDir)
         val next = publishDelta(rewritten, targetDir, pkCols, m, touched,
-          batchId = -1L, statsCols, op = op)
+          batchId = -1L, trackedStats(m), op = op)
         (next, hits.values.sum)
       }
     }
@@ -1942,36 +1917,26 @@ object CdcPipeline {
     currentVersion(targetDir).flatMap(v => manifest(targetDir, v)).map { m =>
       val chosen = buckets.fold(m.buckets.keySet)(_ intersect m.buckets.keySet)
       val snap = readBuckets(spark, targetDir, m, chosen)
-      val next = claimNextFrom(targetDir, m.readVersion)
-      val dir = s"$targetDir/v$next"
-      val writer = snap.withColumn(BucketCol, bucketExpr(pkCols, m.numBuckets))
-        .repartition(col(BucketCol))
-        // BucketCol leads the sort: a shuffle partition can hold
-        // several buckets (hash collision), and the dynamic-partition
-        // writer splits files per bucket value — leading with it keeps
-        // each bucket's rows contiguous so the per-bucket sort order
-        // survives into the files
-        .sortWithinPartitions(col(BucketCol) +: sortExprs: _*)
-        .write.partitionBy(BucketCol).mode(SaveMode.Overwrite)
-      (if (maxRecordsPerFile > 0)
-        writer.option("maxRecordsPerFile", maxRecordsPerFile)
-      else writer).parquet(dir)
-      val carried = m.buckets -- chosen
-      val fresh = writtenBuckets(dir).map(_ -> s"v$next").toMap
-      // rewritten buckets: same rows, so previous stats still hold —
-      // but recompute for the union of tracked + clustering columns
-      // so the manifest index learns the new dimension(s)
-      val trackCols = (m.stats.values.flatMap(_.keys).toSeq ++ trackColsNew).distinct
-      val freshStats = bucketStats(spark, dir, trackCols)
-      writeManifest(targetDir, next, Manifest(m.numBuckets, m.schemaJson,
-        carried ++ fresh, (m.stats -- chosen) ++ freshStats,
-        commitMeta(opLabel) ++ carryConstraints(m) ++ carryVirtual(m) ++ carryProps(m) ++
-          (if (carried.nonEmpty) carryDefaults(m) else Map.empty) ++
-          carryDv(spark, targetDir, m, carried.keySet, next) ++
-          carryBlooms(targetDir, m, carried.keySet, next) ++
-          carryNdv(targetDir, m, carried.keySet, next)))
-      swapPointer(targetDir, next, -1L)
-      next
+      commit(targetDir, m.readVersion, Some(m), opLabel) { next =>
+        val dir = s"$targetDir/v$next"
+        val writer = snap.withColumn(BucketCol, bucketExpr(pkCols, m.numBuckets))
+          .repartition(col(BucketCol))
+          // BucketCol leads the sort: a shuffle partition can hold
+          // several buckets (hash collision), and the dynamic-partition
+          // writer splits files per bucket value — leading with it keeps
+          // each bucket's rows contiguous so the per-bucket sort order
+          // survives into the files
+          .sortWithinPartitions(col(BucketCol) +: sortExprs: _*)
+          .write.partitionBy(BucketCol).mode(SaveMode.Overwrite)
+        (if (maxRecordsPerFile > 0)
+          writer.option("maxRecordsPerFile", maxRecordsPerFile)
+        else writer).parquet(dir)
+        // rewritten buckets: same rows, so previous stats still hold —
+        // but recompute for the union of tracked + clustering columns
+        // so the manifest index learns the new dimension(s)
+        Edit(rewritten = chosen,
+          stats = bucketStats(spark, dir, (trackedStats(m) ++ trackColsNew).distinct))
+      }
     }
 
   /** ALTER TABLE … DROP COLUMN (A49) — METADATA-ONLY on the bucketed
@@ -2015,27 +1980,11 @@ object CdcPipeline {
       require(danglingVirt.isEmpty,
         "cannot drop column(s) referenced by generated column(s): " +
           s"${danglingVirt.map(_._1).sorted.mkString(",")} — drop the generated column first")
-      val next = claimNextFrom(targetDir, m.readVersion)
-      // a metadata-only publish carries the deletion vector by COPY
-      // (it is small) into its own version dir, preserving the
-      // invariant that a manifest's DV lives with its manifest
-      val dvMeta = m.meta.get("dv").map { ref =>
-        StoreFs.copyDir(dvPath(targetDir, ref), s"$targetDir/v$next/$DvDir")
-        "dv" -> s"v$next"
-      }.toMap
-      writeManifest(targetDir, next, Manifest(m.numBuckets, newSchema.json,
-        m.buckets,
-        m.stats.map { case (b, cols) => b -> (cols -- drop) }.filter(_._2.nonEmpty),
-        commitMeta("drop-columns") + ("dropped" -> drop.sorted.mkString(",")) ++
-          carryConstraints(m) ++ carryVirtual(m) ++ carryProps(m) ++
-          carryDefaults(m).filterNot { case (k, _) =>
-            drop.exists(c => k == s"coldefault.${statEnc(c)}") } ++
-          dvMeta ++
-          // a dropped column's bloom and NDV indexes go with it
-          carryBlooms(targetDir, m, m.buckets.keySet, next, drop.toSet) ++
-          carryNdv(targetDir, m, m.buckets.keySet, next, drop.toSet)))
-      swapPointer(targetDir, next, -1L)
-      next
+      // a dropped column's stats, default, bloom and NDV indexes go with it
+      commit(targetDir, m.readVersion, Some(m), "drop-columns") { _ =>
+        Edit(set = Map("dropped" -> drop.sorted.mkString(",")), dropCols = drop.toSet,
+          schemaJson = Some(newSchema.json))
+      }
     }
   }
 
@@ -2069,21 +2018,11 @@ object CdcPipeline {
         s"generated column exists: $name")
       require(dataType.isInstanceOf[NumericType] || dataType == StringType,
         s"initial defaults support numeric or string columns, got $dataType")
-      val next = claimNextFrom(targetDir, m.readVersion)
-      val dvMeta = m.meta.get("dv").map { ref =>
-        StoreFs.copyDir(dvPath(targetDir, ref), s"$targetDir/v$next/$DvDir")
-        "dv" -> s"v$next"
-      }.toMap
-      writeManifest(targetDir, next, Manifest(m.numBuckets,
-        schema.add(name, dataType).json, m.buckets, m.stats,
-        commitMeta("add-column") + ("added" -> name) ++
-          carryDefaults(m) ++ carryConstraints(m) ++ carryVirtual(m) ++ carryProps(m) +
-          (s"coldefault.${statEnc(name)}" ->
-            s"$next ${statEnc(String.valueOf(default))}") ++
-          dvMeta ++ carryBlooms(targetDir, m, m.buckets.keySet, next) ++
-          carryNdv(targetDir, m, m.buckets.keySet, next)))
-      swapPointer(targetDir, next, -1L)
-      next
+      commit(targetDir, m.readVersion, Some(m), "add-column") { next =>
+        Edit(set = Map("added" -> name,
+          DefaultPrefix + statEnc(name) -> s"$next ${statEnc(String.valueOf(default))}"),
+          schemaJson = Some(schema.add(name, dataType).json))
+      }
     }
 
   /** ALTER TABLE … RENAME COLUMN (A49) — a FULL-REWRITE publish: the
@@ -2124,18 +2063,15 @@ object CdcPipeline {
       val snap = readBuckets(spark, targetDir, m, m.buckets.keySet)
         .withColumnRenamed(from, to)
       val newPk = pkCols.map(c => if (c.equalsIgnoreCase(from)) to else c)
-      val next = claimNextFrom(targetDir, m.readVersion)
-      val dir = s"$targetDir/v$next"
-      writeBuckets(snap, newPk, m.numBuckets, dir)
-      val trackCols = m.stats.values.flatMap(_.keys).toSeq.distinct
-        .map(c => if (c == from) to else c)
-      writeManifest(targetDir, next, Manifest(m.numBuckets, snap.schema.json,
-        writtenBuckets(dir).map(_ -> s"v$next").toMap,
-        bucketStats(spark, dir, trackCols),
-        commitMeta("rename-column") + ("renamed" -> s"$from>$to") ++
-          carryConstraints(m) ++ carryVirtual(m) ++ carryProps(m)))
-      swapPointer(targetDir, next, -1L)
-      next
+      commit(targetDir, m.readVersion, Some(m), "rename-column") { next =>
+        val dir = s"$targetDir/v$next"
+        writeBuckets(snap, newPk, m.numBuckets, dir)
+        // the renamed column's indexes go (their keys name the old column)
+        Edit(rewritten = m.buckets.keySet,
+          stats = bucketStats(spark, dir, trackedStats(m).map(c => if (c == from) to else c)),
+          set = Map("renamed" -> s"$from>$to"), dropCols = Set(from),
+          schemaJson = Some(snap.schema.json))
+      }
     }
   }
 
@@ -2173,14 +2109,6 @@ object CdcPipeline {
       case (k, v) if k.startsWith(ConstraintPrefix) =>
         k.stripPrefix(ConstraintPrefix) -> v
     }
-
-  /** `constraint.*` meta carried verbatim into any publish that keeps
-    * the table's identity (delta publishes, rebucket, rename — the
-    * rename GUARDS that no constraint references the renamed column,
-    * so carrying verbatim stays sound).
-    */
-  private def carryConstraints(prev: Manifest): Map[String, String] =
-    prev.meta.filter(_._1.startsWith(ConstraintPrefix))
 
   /** Declared constraints of the current version: name → predicate
     * SQL. Empty when the store doesn't exist or declares none.
@@ -2228,19 +2156,9 @@ object CdcPipeline {
       val bad = snap.filter(!coalesce(expr(predicate), lit(true))).count()
       if (bad > 0)
         throw new ConstraintViolationException(targetDir, Map(name -> bad))
-      val next = claimNextFrom(targetDir, m.readVersion)
-      val dvMeta = m.meta.get("dv").map { ref =>
-        StoreFs.copyDir(dvPath(targetDir, ref), s"$targetDir/v$next/$DvDir")
-        "dv" -> s"v$next"
-      }.toMap
-      writeManifest(targetDir, next, Manifest(m.numBuckets, m.schemaJson,
-        m.buckets, m.stats,
-        commitMeta("add-constraint") ++ carryDefaults(m) ++ carryVirtual(m) ++ carryProps(m) ++
-          carryConstraints(m) + (s"$ConstraintPrefix$name" -> predicate) ++
-          dvMeta ++ carryBlooms(targetDir, m, m.buckets.keySet, next) ++
-          carryNdv(targetDir, m, m.buckets.keySet, next)))
-      swapPointer(targetDir, next, -1L)
-      next
+      commit(targetDir, m.readVersion, Some(m), "add-constraint") { _ =>
+        Edit(set = Map(ConstraintPrefix + name -> predicate))
+      }
     }
   }
 
@@ -2252,20 +2170,9 @@ object CdcPipeline {
     currentVersion(targetDir).flatMap(v => manifest(targetDir, v)).flatMap { m =>
       if (!constraintsOf(m).contains(name)) None
       else {
-        val next = claimNextFrom(targetDir, m.readVersion)
-        val dvMeta = m.meta.get("dv").map { ref =>
-          StoreFs.copyDir(dvPath(targetDir, ref), s"$targetDir/v$next/$DvDir")
-          "dv" -> s"v$next"
-        }.toMap
-        writeManifest(targetDir, next, Manifest(m.numBuckets, m.schemaJson,
-          m.buckets, m.stats,
-          commitMeta("drop-constraint") + ("unconstrained" -> name) ++
-            carryDefaults(m) ++ carryVirtual(m) ++ carryProps(m) ++
-            (carryConstraints(m) - s"$ConstraintPrefix$name") ++
-            dvMeta ++ carryBlooms(targetDir, m, m.buckets.keySet, next) ++
-            carryNdv(targetDir, m, m.buckets.keySet, next)))
-        swapPointer(targetDir, next, -1L)
-        Some(next)
+        Some(commit(targetDir, m.readVersion, Some(m), "drop-constraint") { _ =>
+          Edit(set = Map("unconstrained" -> name), unset = Set(ConstraintPrefix + name))
+        })
       }
     }
 
@@ -2285,9 +2192,6 @@ object CdcPipeline {
     m.meta.collect { case (k, v) if k.startsWith(PropPrefix) =>
       k.stripPrefix(PropPrefix) -> statDec(v) }
 
-  private def carryProps(prev: Manifest): Map[String, String] =
-    prev.meta.view.filterKeys(_.startsWith(PropPrefix)).toMap
-
   /** Current table properties (empty when none or no store). */
   def tableProperties(targetDir: String): Map[String, String] =
     currentVersion(targetDir).flatMap(v => manifest(targetDir, v))
@@ -2303,20 +2207,9 @@ object CdcPipeline {
     props.keys.foreach(k => require(k.nonEmpty && !k.exists(_.isWhitespace),
       s"property key must be non-empty and whitespace-free: '$k'"))
     currentVersion(targetDir).flatMap(v => manifest(targetDir, v)).map { m =>
-      val next = claimNextFrom(targetDir, m.readVersion)
-      val dvMeta = m.meta.get("dv").map { ref =>
-        StoreFs.copyDir(dvPath(targetDir, ref), s"$targetDir/v$next/$DvDir")
-        "dv" -> s"v$next"
-      }.toMap
-      writeManifest(targetDir, next, Manifest(m.numBuckets, m.schemaJson,
-        m.buckets, m.stats,
-        commitMeta("set-properties") ++ carryDefaults(m) ++ carryVirtual(m) ++
-          carryConstraints(m) ++ carryProps(m) ++
-          props.map { case (k, v) => s"$PropPrefix$k" -> statEnc(v) } ++
-          dvMeta ++ carryBlooms(targetDir, m, m.buckets.keySet, next) ++
-          carryNdv(targetDir, m, m.buckets.keySet, next)))
-      swapPointer(targetDir, next, -1L)
-      next
+      commit(targetDir, m.readVersion, Some(m), "set-properties") { _ =>
+        Edit(set = props.map { case (k, v) => PropPrefix + k -> statEnc(v) })
+      }
     }
   }
 
@@ -2329,19 +2222,9 @@ object CdcPipeline {
       val present = propsOf(m).keySet.intersect(keys.toSet)
       if (present.isEmpty) None
       else {
-        val next = claimNextFrom(targetDir, m.readVersion)
-        val dvMeta = m.meta.get("dv").map { ref =>
-          StoreFs.copyDir(dvPath(targetDir, ref), s"$targetDir/v$next/$DvDir")
-          "dv" -> s"v$next"
-        }.toMap
-        writeManifest(targetDir, next, Manifest(m.numBuckets, m.schemaJson,
-          m.buckets, m.stats,
-          commitMeta("unset-properties") ++ carryDefaults(m) ++
-            carryVirtual(m) ++ carryConstraints(m) ++
-            (carryProps(m) -- keys.map(PropPrefix + _)) ++
-            dvMeta ++ carryBlooms(targetDir, m, m.buckets.keySet, next)))
-        swapPointer(targetDir, next, -1L)
-        Some(next)
+        Some(commit(targetDir, m.readVersion, Some(m), "unset-properties") { _ =>
+          Edit(unset = keys.map(PropPrefix + _).toSet)
+        })
       }
     }
 
@@ -2498,9 +2381,6 @@ object CdcPipeline {
         (k.stripPrefix(VirtualPrefix), DataType.fromJson(statDec(t)), statDec(e))
     }.toSeq.sortBy(_._1)
 
-  private def carryVirtual(prev: Manifest): Map[String, String] =
-    prev.meta.filter(_._1.startsWith(VirtualPrefix))
-
   /** Declared virtual columns of the current version: name →
     * (type, expression SQL). Empty when none / no store.
     */
@@ -2527,20 +2407,10 @@ object CdcPipeline {
       require(bad.isEmpty,
         s"generated column may reference only physical columns; unknown: " +
           bad.toSeq.sorted.mkString(","))
-      val next = claimNextFrom(targetDir, m.readVersion)
-      val dvMeta = m.meta.get("dv").map { ref =>
-        StoreFs.copyDir(dvPath(targetDir, ref), s"$targetDir/v$next/$DvDir")
-        "dv" -> s"v$next"
-      }.toMap
-      writeManifest(targetDir, next, Manifest(m.numBuckets, m.schemaJson,
-        m.buckets, m.stats,
-        commitMeta("add-generated") + ("generated" -> name) ++
-          carryDefaults(m) ++ carryConstraints(m) ++ carryVirtual(m) ++ carryProps(m) +
-          (s"$VirtualPrefix$name" ->
-            s"${statEnc(dataType.json)} ${statEnc(exprSql)}") ++
-          dvMeta ++ carryBlooms(targetDir, m, m.buckets.keySet, next)))
-      swapPointer(targetDir, next, -1L)
-      next
+      commit(targetDir, m.readVersion, Some(m), "add-generated") { _ =>
+        Edit(set = Map("generated" -> name,
+          VirtualPrefix + name -> s"${statEnc(dataType.json)} ${statEnc(exprSql)}"))
+      }
     }
 
   /** DROP a virtual generated column — metadata-only. None when the
@@ -2550,19 +2420,9 @@ object CdcPipeline {
     currentVersion(targetDir).flatMap(v => manifest(targetDir, v)).flatMap { m =>
       if (!virtualCols(m).exists(_._1 == name)) None
       else {
-        val next = claimNextFrom(targetDir, m.readVersion)
-        val dvMeta = m.meta.get("dv").map { ref =>
-          StoreFs.copyDir(dvPath(targetDir, ref), s"$targetDir/v$next/$DvDir")
-          "dv" -> s"v$next"
-        }.toMap
-        writeManifest(targetDir, next, Manifest(m.numBuckets, m.schemaJson,
-          m.buckets, m.stats,
-          commitMeta("drop-generated") + ("ungenerated" -> name) ++
-            carryDefaults(m) ++ carryConstraints(m) ++
-            (carryVirtual(m) ++ carryProps(m) - s"$VirtualPrefix$name") ++
-            dvMeta ++ carryBlooms(targetDir, m, m.buckets.keySet, next)))
-        swapPointer(targetDir, next, -1L)
-        Some(next)
+        Some(commit(targetDir, m.readVersion, Some(m), "drop-generated") { _ =>
+          Edit(set = Map("ungenerated" -> name), unset = Set(VirtualPrefix + name))
+        })
       }
     }
 
@@ -2751,11 +2611,11 @@ object CdcPipeline {
     }
   }
 
-  /** Writer lease (A46) — opt-in mutual exclusion for the ONE-writer
-    * contract (object doc): two concurrent publishes to the same
-    * target race benignly on the version number, but the loser's work
-    * is silently discarded — a scheduler bug that double-fires a
-    * table's merge deserves a loud failure instead. `withWriterLease`
+  /** Writer lease (A46) — opt-in mutual exclusion for a whole
+    * multi-commit bracket: the commit claim (object doc) serializes
+    * single commits, but a maintenance pass of several commits, or a
+    * scheduler bug that double-fires a table's merge, deserves one
+    * loud failure up front instead. `withWriterLease`
     * brackets any maintenance op in an exclusive `_LOCK` file
     * (atomic create-no-overwrite — the same primitive HDFS leases and
     * Delta's LogStore mutual exclusion build on): a second writer
@@ -3029,10 +2889,10 @@ object CdcPipeline {
             val degraded = for {
               v <- currentVersion(targetDir).toSeq
               m <- manifest(targetDir, v).toSeq
-              key <- m.meta.keys.filter(_.startsWith("bloom.")).toSeq.sorted
-              column = key.stripPrefix("bloom.")
-              dir = bloomDirPath(targetDir, m.meta(key), column)
-              missing = m.buckets.keySet.filter(b => !StoreFs.exists(s"$dir/$b.bf"))
+              key <- m.meta.keys.filter(_.startsWith(Bloom.prefix)).toSeq.sorted
+              column = key.stripPrefix(Bloom.prefix)
+              missing = m.buckets.keySet.filter(b =>
+                !StoreFs.exists(Bloom.file(targetDir, m.meta(key), column, b)))
               if m.buckets.nonEmpty &&
                 missing.size.toLong * 100 > pct.toLong * m.buckets.size
             } yield (column, missing)
@@ -3051,10 +2911,10 @@ object CdcPipeline {
             val degraded = for {
               v <- currentVersion(targetDir).toSeq
               m <- manifest(targetDir, v).toSeq
-              key <- m.meta.keys.filter(_.startsWith("ndv.")).toSeq.sorted
-              column = key.stripPrefix("ndv.")
-              dir = ndvDirPath(targetDir, m.meta(key), column)
-              missing = m.buckets.keySet.filter(b => !StoreFs.exists(s"$dir/$b.hll"))
+              key <- m.meta.keys.filter(_.startsWith(Ndv.prefix)).toSeq.sorted
+              column = key.stripPrefix(Ndv.prefix)
+              missing = m.buckets.keySet.filter(b =>
+                !StoreFs.exists(Ndv.file(targetDir, m.meta(key), column, b)))
               if m.buckets.nonEmpty &&
                 missing.size.toLong * 100 > pct.toLong * m.buckets.size
             } yield (column, missing)
@@ -3318,59 +3178,37 @@ object CdcPipeline {
       require(columnDefaults(m).isEmpty,
         s"cannot clone a store with unmaterialized column defaults " +
           s"(${columnDefaults(m).map(_._1).mkString(",")}): OPTIMIZE first")
-      val resolved: Map[Int, String] = m.buckets.map { case (b, ver) =>
-        b -> (if (ver.contains("/")) ver else s"$sourceDir/$ver")
-      }
-      // the source's deletion vector (if any) is COPIED into the
-      // clone's own v0 — it is small, and a self-contained copy means
-      // neither the pin machinery nor the source's vacuum ever has to
-      // know the clone depends on it
-      val dvMeta = m.meta.get("dv").map { ref =>
-        StoreFs.copyDir(dvPath(sourceDir, ref), s"$destDir/v0/$DvDir")
-        "dv" -> "v0"
-      }.toMap ++
-        m.meta.keys.filter(_.startsWith("bloom.")).flatMap { key =>
-          val column = key.stripPrefix("bloom.")
-          val src = bloomDirPath(sourceDir, m.meta(key), column)
-          // a fully-degraded index (key kept as a rebuild declaration,
-          // zero surviving sidecars — see carryBlooms) has no dir to
-          // copy; the clone still inherits the declaration
-          if (StoreFs.exists(src))
-            StoreFs.copyDir(src, s"$destDir/v0/$BloomDir/${statEnc(column)}")
-          Some(key -> "v0")
-        }.toMap
-      if (deep) {
-        resolved.foreach { case (b, verDir) =>
+      // the commit carries every bucket as an absolute reference into
+      // the source, and COPIES the source's deletion vector and index
+      // sidecars into the clone's own v0 — they are small, and a
+      // self-contained copy means neither the pin machinery nor the
+      // source's vacuum ever has to know the clone depends on them
+      commit(destDir, -1L, Some(m), if (deep) "deep-clone" else "clone",
+        fromDir = Some(sourceDir)) { _ =>
+        if (deep) m.buckets.foreach { case (b, ver) =>
+          val verDir = if (ver.contains("/")) ver else s"$sourceDir/$ver"
           StoreFs.copyDir(s"$verDir/$BucketCol=$b", s"$destDir/v0/$BucketCol=$b")
+        } else {
+          // every store this clone's references resolve into gets a pin
+          // keyed by THIS clone: source-local refs pin at sourceDir,
+          // inherited absolute refs (cloning a clone) pin at the store
+          // that owns them — so each clone stands on its own pins and
+          // dropClonePin on an intermediate clone can never tear files
+          // out from under a grand-clone (ADVICE r7)
+          m.buckets.values.toSeq.distinct
+            .groupBy(ver =>
+              if (ver.contains("/")) ver.substring(0, ver.lastIndexOf('/'))
+              else sourceDir)
+            .foreach { case (root, vers) =>
+              val names = vers.map(v =>
+                if (v.contains("/")) v.substring(v.lastIndexOf('/') + 1) else v)
+                .distinct.sorted
+              StoreFs.writeString(s"$root/$ClonesDir/${clonePinToken(destDir)}",
+                names.mkString("\n"))
+            }
         }
-        writeManifest(destDir, 0, Manifest(m.numBuckets, m.schemaJson,
-          m.buckets.keySet.map(_ -> "v0").toMap, m.stats,
-          commitMeta("deep-clone") ++ dvMeta ++ carryConstraints(m) ++
-            carryVirtual(m) ++ carryProps(m)))
-      } else {
-        // every store this clone's references resolve into gets a pin
-        // keyed by THIS clone: source-local refs pin at sourceDir,
-        // inherited absolute refs (cloning a clone) pin at the store
-        // that owns them — so each clone stands on its own pins and
-        // dropClonePin on an intermediate clone can never tear files
-        // out from under a grand-clone (ADVICE r7)
-        m.buckets.values.toSeq.distinct
-          .groupBy(ver =>
-            if (ver.contains("/")) ver.substring(0, ver.lastIndexOf('/'))
-            else sourceDir)
-          .foreach { case (root, vers) =>
-            val names = vers.map(v =>
-              if (v.contains("/")) v.substring(v.lastIndexOf('/') + 1) else v)
-              .distinct.sorted
-            StoreFs.writeString(s"$root/$ClonesDir/${clonePinToken(destDir)}",
-              names.mkString("\n"))
-          }
-        writeManifest(destDir, 0, Manifest(m.numBuckets, m.schemaJson,
-          resolved, m.stats, commitMeta("clone") ++ dvMeta ++
-            carryConstraints(m) ++ carryVirtual(m) ++ carryProps(m)))
+        Edit()
       }
-      swapPointer(destDir, 0, -1L)
-      0L
     }
   }
 
@@ -3384,20 +3222,21 @@ object CdcPipeline {
     * semantics compare against data versions that don't exist here —
     * same refusal reasoning as cloneSnapshot, but an empty table can
     * simply drop them: there are no pre-declaration rows to read),
-    * bloom/dv sidecars (no data), and the identity high-water (a new
-    * table allocates from its seed). Refuses an existing dest.
+    * stats, DV and index sidecars (no data — a bloom/NDV declaration
+    * carries with zero sidecars, so [[maintain]] builds the index once
+    * data lands), and the identity high-water (a new table allocates
+    * from its seed). Refuses an existing dest.
     */
   def createLike(sourceDir: String, destDir: String): Option[Long] = {
     require(!StoreFs.exists(s"$destDir/$VersionFile"),
       s"createLike destination already holds a store: $destDir")
     val v = currentVersion(sourceDir).getOrElse(return None)
     manifest(sourceDir, v).map { m =>
-      writeManifest(destDir, 0, Manifest(m.numBuckets, m.schemaJson,
-        Map.empty, Map.empty,
-        commitMeta("create-like") + ("like_of" -> sourceDir) ++
-          carryConstraints(m) ++ carryVirtual(m) ++ carryProps(m)))
-      swapPointer(destDir, 0, -1L)
-      0L
+      // every bucket "rewritten" to empty: no data, stats, DV or index
+      // sidecars carry — only the declarations
+      commit(destDir, -1L, Some(m), "create-like", fromDir = Some(sourceDir)) { _ =>
+        Edit(rewritten = m.buckets.keySet, set = Map("like_of" -> sourceDir))
+      }
     }
   }
 
@@ -3466,22 +3305,13 @@ object CdcPipeline {
       if (!refRoots.forall(StoreFs.exists)) None // vacuumed out from under us
       else {
         // restore derives from an OLD manifest by design; its base is
-        // the CURRENT pointer captured at entry (A66 claim-then-check)
-        val next = claimNextFrom(targetDir, cur)
-        val dvMeta = m.meta.get("dv").map { ref =>
-          StoreFs.copyDir(dvPath(targetDir, ref), s"$targetDir/v$next/$DvDir")
-          "dv" -> s"v$next"
-        }.toMap
-        writeManifest(targetDir, next, Manifest(m.numBuckets, m.schemaJson,
-          m.buckets, m.stats,
-          commitMeta("restore") + ("restore_of" -> version.toString) ++
-            // constraints restore WITH the state: the rolled-back
-            // version's constraint set (not the abandoned head's) is
-            // what its data provably satisfies
-            carryDefaults(m) ++ carryConstraints(m) ++ carryVirtual(m) ++ carryProps(m) ++ dvMeta ++
-            carryBlooms(targetDir, m, m.buckets.keySet, next)))
-        swapPointer(targetDir, next, -1L)
-        Some(next)
+        // the CURRENT pointer captured at entry (A66 claim-then-check).
+        // Declarations restore WITH the state: the rolled-back
+        // version's constraint set (not the abandoned head's) is what
+        // its data provably satisfies
+        Some(commit(targetDir, cur, Some(m), "restore") { _ =>
+          Edit(set = Map("restore_of" -> version.toString))
+        })
       }
     }
   }
@@ -3608,11 +3438,12 @@ object CdcPipeline {
     * into the new upstream version dir (bytes ∝ branch delta, and
     * the upstream never depends on the branch's directory — the pin
     * direction stays branch→source, so dropping the branch after
-    * publish is always safe). DV and bloom sidecars ride along the
+    * publish is always safe). DV and index sidecars are copied the
     * same way; constraints/virtual columns/properties carry from the
     * BRANCH (the audited state is what publishes). The upstream
-    * commit is claim-checked ([[claimNextFrom]]) like every other
-    * publish. Returns the new upstream version.
+    * commit goes through [[commit]] like every other publish, so it
+    * is claim-checked against `forkV`. Returns the new upstream
+    * version.
     */
   def publishBranch(branchDir: String): Option[Long] = {
     val (sourceDir, forkV) = branchUpstream(branchDir).getOrElse(return None)
@@ -3627,38 +3458,17 @@ object CdcPipeline {
       require(columnDefaults(bm).isEmpty,
         "cannot fast-forward a branch with unmaterialized column defaults" +
           ": OPTIMIZE the branch first")
-      val next = claimNextFrom(sourceDir, cur)
       val srcPrefix = s"$sourceDir/"
-      val rewired = bm.buckets.map { case (b, ref) =>
-        val abs = if (ref.contains("/")) ref else s"$branchDir/$ref"
-        if (abs.startsWith(srcPrefix) &&
-            abs.stripPrefix(srcPrefix).matches("v\\d+"))
-          b -> abs.stripPrefix(srcPrefix) // untouched: upstream's own dir
-        else {
-          StoreFs.copyDir(s"$abs/$BucketCol=$b",
-            s"$sourceDir/v$next/$BucketCol=$b")
-          b -> s"v$next" // branch-written: copy ∝ branch delta
+      commit(sourceDir, cur, Some(bm), "branch-publish", fromDir = Some(branchDir)) { next =>
+        // buckets the branch wrote are copied (∝ branch delta); the
+        // commit rewires the rest back to the upstream's own dirs
+        bm.buckets.foreach { case (b, ref) =>
+          val abs = if (ref.contains("/")) ref else s"$branchDir/$ref"
+          if (!(abs.startsWith(srcPrefix) && abs.stripPrefix(srcPrefix).matches("v\\d+")))
+            StoreFs.copyDir(s"$abs/$BucketCol=$b", s"$sourceDir/v$next/$BucketCol=$b")
         }
+        Edit(set = Map("branch_of" -> branchDir))
       }
-      val dvMeta = bm.meta.get("dv").map { ref =>
-        StoreFs.copyDir(dvPath(branchDir, ref), s"$sourceDir/v$next/$DvDir")
-        "dv" -> s"v$next"
-      }.toMap
-      val bloomMeta = bm.meta.keys.filter(_.startsWith("bloom."))
-        .flatMap { key =>
-          val column = key.stripPrefix("bloom.")
-          val src = bloomDirPath(branchDir, bm.meta(key), column)
-          if (StoreFs.exists(src))
-            StoreFs.copyDir(src, s"$sourceDir/v$next/$BloomDir/${statEnc(column)}")
-          Some(key -> s"v$next")
-        }.toMap
-      writeManifest(sourceDir, next, Manifest(bm.numBuckets, bm.schemaJson,
-        rewired, bm.stats,
-        commitMeta("branch-publish") + ("branch_of" -> branchDir) ++
-          carryDefaults(bm) ++ carryConstraints(bm) ++ carryVirtual(bm) ++
-          carryProps(bm) ++ dvMeta ++ bloomMeta))
-      swapPointer(sourceDir, next, -1L)
-      next
     }
   }
 

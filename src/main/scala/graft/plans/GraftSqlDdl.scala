@@ -360,7 +360,7 @@ object GraftSqlDdl {
           val m = CdcPipeline.manifest(path,
             CdcPipeline.currentVersion(path).get).get
           val v = CdcPipeline.publish(df, path, pk,
-            buckets = Some(buckets.getOrElse(m.numBuckets)), op = "replace")
+            buckets = Some(buckets.getOrElse(m.numBuckets)), op = CdcPipeline.ReplaceOp)
           Seq(Row(v))
         case None if orCreate =>
           val pk = pkProp.getOrElse(throw new IllegalArgumentException(
@@ -379,9 +379,8 @@ object GraftSqlDdl {
     * time travel / RESTORE still reach the pre-truncate data until
     * vacuumed — the versioned-store semantics, not a file unlink).
     * Routed through the A41 predicate delete with an always-true
-    * predicate: that op already carries properties / constraints /
-    * defaults / virtual columns across the rewrite, which a fresh
-    * bootstrap publish would silently drop.
+    * predicate, whose commit carries properties / constraints /
+    * defaults / virtual columns across the rewrite.
     */
   final case class GraftTruncateCommand(path: String)
       extends LeafRunnableCommand {

@@ -281,7 +281,9 @@ object GraftSqlDml {
     * one-row-per-key invariant); cost is the usual touched-bucket
     * delta publish. `INSERT OVERWRITE` replaces the snapshot
     * entirely (Delta's table-overwrite semantics) as one full
-    * publish. A column list (`INSERT INTO t (a, b)`) maps the query
+    * publish; the table's CHECK constraints, generated columns and
+    * properties stay declared (the new rows are checked first). A
+    * column list (`INSERT INTO t (a, b)`) maps the query
     * positionally onto those columns, absent target columns take
     * NULL; `BY NAME` maps by name. Everything casts to the stored
     * column types. Returns (version, inserted_rows).

@@ -760,11 +760,22 @@ class GraftExtensionsSpec extends AnyFunSuite {
       .collect()(0).getLong(0) === 63L)
 
     // INSERT OVERWRITE replaces the snapshot wholesale
+    spark.sql(s"ALTER TABLE graft.`$dir` ADD CONSTRAINT v_nonneg CHECK (v >= 0)").collect()
+    spark.sql(s"SELECT * FROM graft_add_generated('$dir', 'v10', 'BIGINT', 'v * 10')").collect()
+    spark.sql(s"ALTER TABLE graft.`$dir` SET TBLPROPERTIES('retention'='30d')").collect()
     val ow = spark.sql(
       s"INSERT OVERWRITE graft.`$dir` SELECT id, id AS v, 'o' AS tag FROM range(0, 7)")
       .collect()(0)
     assert(ow.getLong(1) === 7L)
     assert(spark.sql(s"SELECT count(*) FROM graft.`$dir`").collect()(0).getLong(0) === 7L)
+    // …but keeps the table's declared metadata
+    assert(CdcPipeline.checkConstraints(dir) === Map("v_nonneg" -> "v >= 0"))
+    assert(CdcPipeline.generatedColumns(dir).keySet === Set("v10"))
+    assert(CdcPipeline.tableProperties(dir) === Map("retention" -> "30d"))
+    assert(spark.sql(s"SELECT sum(v10) FROM graft.`$dir`").collect()(0).getLong(0) === 210L)
+    intercept[Exception] {
+      spark.sql(s"INSERT OVERWRITE graft.`$dir` SELECT -1 AS id, -1 AS v, 'x' AS tag").collect()
+    }
     // …and the pre-overwrite state is still one VERSION AS OF away
     assert(spark.sql(s"SELECT count(*) FROM graft.`$dir` VERSION AS OF 2")
       .collect()(0).getLong(0) === 63L)

@@ -540,6 +540,17 @@ class CdcPipelineSpec extends AnyFunSuite {
     assert(CdcPipeline.readSnapshot(spark, target).get
       .filter(col("user_id") === 1L).select("k").as[Long].head() === 9L)
     assert(StoreFs.listFilePaths(s"$target/_commits", ".claim").isEmpty)
+    // a publish whose bucket write throws releases its claim and its
+    // half-written version dir: the next publish takes the same number
+    val snap = CdcPipeline.readSnapshot(spark, target).get
+    val boom = snap.withColumn("k",
+      when(col("user_id") === 3L, raise_error(lit("boom"))).otherwise(col("k")))
+    intercept[Exception](CdcPipeline.publish(boom, target, Seq("user_id")))
+    assert(StoreFs.listFilePaths(s"$target/_commits", ".claim").isEmpty,
+      "a failed publish must not leave its claim behind")
+    assert(!StoreFs.exists(s"$target/v2"), "a failed publish must not leave its version dir")
+    assert(CdcPipeline.publish(snap, target, Seq("user_id")) === 2L)
+    assert(CdcPipeline.readSnapshot(spark, target).get.count() === 30L)
   }
 
   test("a publish under a DIFFERENT pk than the _PK sidecar fails loudly") {

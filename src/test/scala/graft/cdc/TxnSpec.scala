@@ -181,6 +181,66 @@ class TxnSpec extends AnyFunSuite {
     assert(audit.forall(_.getString(0) == "ok"), audit.mkString(";"))
   }
 
+  /** The lost-update interleaving, made deterministic: writer A's
+    * whole commit runs at the moment writer B, having derived its
+    * state from v0, takes its commit claim. B must refuse; under
+    * [[CdcPipeline.retryOnConflict]] it re-derives from A's state.
+    */
+  private def race[T](writerA: => Any)(writerB: => T): T =
+    CommitRaceFs.install(spark) {
+      CommitRaceFs.arm(writerA)
+      try writerB
+      finally assert(CommitRaceFs.fired, "the interleaving never happened")
+    }
+
+  test("a commit landing between a delete's base read and its claim fails that delete; retry serializes") {
+    def deleteA(dir: String) = CdcPipeline.deleteWhere(spark, dir, Seq("id"), col("id") < 100L)
+    def deleteB(dir: String) = CdcPipeline.deleteWhere(spark, dir, Seq("id"), col("id") >= 800L)
+    val dir = tmp()
+    CdcPipeline.publish(fx(1000, "base"), dir, Seq("id"), buckets = Some(4))
+    var a: Option[(Long, Long)] = None
+    intercept[CdcPipeline.ConcurrentWriteException] {
+      race { a = deleteA(dir) } { deleteB(dir) }
+    }
+    assert(a === Some((1L, 100L)))
+    assert(CdcPipeline.currentVersion(dir) === Some(1L))
+    assert(CdcPipeline.readSnapshot(spark, dir).get.count() === 900L, "A's delete must stand")
+
+    val dir2 = tmp()
+    CdcPipeline.publish(fx(1000, "base"), dir2, Seq("id"), buckets = Some(4))
+    val b = race(deleteA(dir2)) {
+      CdcPipeline.retryOnConflict(maxRetries = 3, backoffMs = 10L)(deleteB(dir2))
+    }
+    assert(b === Some((2L, 200L)))
+    // serial execution (A, then B) leaves 700 rows
+    assert(CdcPipeline.readSnapshot(spark, dir2).get.count() === 700L)
+  }
+
+  test("a commit landing between a full publish's base read and its claim fails that publish; retry serializes") {
+    def deleteA(dir: String) = CdcPipeline.deleteWhere(spark, dir, Seq("id"), col("id") < 100L)
+    def publishB(dir: String) = CdcPipeline.publish(fx(1000, "b"), dir, Seq("id"))
+    val dir = tmp()
+    CdcPipeline.publish(fx(1000, "base"), dir, Seq("id"), buckets = Some(4))
+    intercept[CdcPipeline.ConcurrentWriteException] {
+      race(deleteA(dir))(publishB(dir))
+    }
+    assert(CdcPipeline.currentVersion(dir) === Some(1L))
+    assert(CdcPipeline.manifest(dir, 1L).get.meta("op") === "delete")
+    assert(CdcPipeline.readSnapshot(spark, dir).get.count() === 900L, "A's delete must stand")
+
+    val dir2 = tmp()
+    CdcPipeline.publish(fx(1000, "base"), dir2, Seq("id"), buckets = Some(4))
+    val vb = race(deleteA(dir2)) {
+      CdcPipeline.retryOnConflict(maxRetries = 3, backoffMs = 10L)(publishB(dir2))
+    }
+    assert(vb === 2L)
+    // serial execution: A's delete is v1, B's full snapshot v2 replaces it
+    assert(CdcPipeline.readSnapshotAt(spark, dir2, 1L).get.count() === 900L)
+    val fin = CdcPipeline.readSnapshot(spark, dir2).get
+    assert(fin.count() === 1000L)
+    assert(fin.select("tag").distinct.collect().map(_.getString(0)).toSeq === Seq("b"))
+  }
+
   test("sweep drops only aged completed pairs") {
     val (a, coord) = (tmp(), tmp())
     CdcPipeline.publish(fx(20, "a0"), a, Seq("id"), buckets = Some(2))
@@ -189,5 +249,51 @@ class TxnSpec extends AnyFunSuite {
     assert(Txn.sweep(coord, keepMs = 3600 * 1000L) === Seq.empty, "fresh pair kept")
     assert(Txn.sweep(coord, keepMs = -1L) === Seq(id))
     assert(!StoreFs.exists(s"$coord/$id.intent") && !StoreFs.exists(s"$coord/$id.done"))
+  }
+}
+
+/** A local filesystem whose `_VERSION` opens can run a one-shot hook:
+  * the deterministic interleaving behind the lost-update specs.
+  * Installed through `fs.file.impl` with the FS cache disabled, so
+  * every store operation gets a fresh instance that consults the
+  * shared hook. The hook fires on the armed thread, at its first
+  * pointer read made while taking a commit claim — after the writer
+  * has derived its state, before the claim exists.
+  */
+class CommitRaceFs extends org.apache.hadoop.fs.LocalFileSystem {
+  override def open(f: org.apache.hadoop.fs.Path,
+      bufferSize: Int): org.apache.hadoop.fs.FSDataInputStream = {
+    if (f.getName == "_VERSION") CommitRaceFs.fire()
+    super.open(f, bufferSize)
+  }
+}
+
+object CommitRaceFs {
+  @volatile private var armed: Option[(Thread, () => Any)] = None
+
+  def arm(hook: => Any): Unit = armed = Some((Thread.currentThread(), () => hook))
+
+  def fired: Boolean = armed.isEmpty
+
+  private def fire(): Unit = armed match {
+    case Some((t, hook)) if (t eq Thread.currentThread()) &&
+        t.getStackTrace.exists(_.getMethodName.contains("claimVersion")) =>
+      armed = None
+      hook()
+      ()
+    case _ => ()
+  }
+
+  def install[T](spark: org.apache.spark.sql.SparkSession)(body: => T): T = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val keys = Seq("fs.file.impl", "fs.file.impl.disable.cache")
+    val saved = keys.map(k => k -> Option(conf.get(k)))
+    conf.set("fs.file.impl", classOf[CommitRaceFs].getName)
+    conf.setBoolean("fs.file.impl.disable.cache", true)
+    try body
+    finally {
+      armed = None
+      saved.foreach { case (k, v) => v.fold(conf.unset(k))(conf.set(k, _)) }
+    }
   }
 }
