@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.util.QueryExecutionListener
 
@@ -28,14 +27,7 @@ object ExplainAudit {
     // skeleton drops the Project/Filter lines between an exchange and
     // its real child)
     val full = sys.env.get("SPARK_GRAFT_FULL").contains("1")
-    val spark = SparkSession.builder().master("local[8]")
-      .withExtensions(new GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
+    val spark = Session.local(8)
     spark.sparkContext.setLogLevel("ERROR")
 
     val captured = new scala.collection.mutable.LinkedHashMap[Int, String]()

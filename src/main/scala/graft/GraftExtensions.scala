@@ -8,7 +8,7 @@ import graft.functions.{BoundedCollectLongPairs, CosineSimilarity, LatestByOrder
 /** SQL surface of the graft function library, registered through the
   * sanctioned `SparkSessionExtensions` hook:
   *
-  *   SparkSession.builder().withExtensions(new GraftExtensions) ...
+  *   <session builder>.withExtensions(new GraftExtensions)  ([[Session.local]])
   *   — or —
   *   spark.sql.extensions=graft.GraftExtensions
   *

@@ -1,6 +1,5 @@
 package graft
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 
 /** Per-job wall-clock attribution for ONE declared query (guide §1 —
   * measure first): runs the query once at the given SF through the
@@ -17,18 +16,7 @@ object JobProbe {
     val sfDir = args(0)
     val names = args(1).split(",").map(_.trim).filter(_.nonEmpty)
     val passes = if (args.length > 2) args(2).toInt else 2
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_CACHE", "false"))
-      .getOrCreate()
+    val spark = Session.local()
     spark.sparkContext.setLogLevel("ERROR")
 
     val starts = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String)]()

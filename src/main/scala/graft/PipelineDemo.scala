@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types.LongType
 import graft.cdc._
 
@@ -13,13 +12,7 @@ import graft.cdc._
 object PipelineDemo {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = Session.local(4)
     spark.sparkContext.setLogLevel("WARN")
 
     val cfg = CdcTableConfig(

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Dumps `.explain("formatted")` for named declared queries to files —
@@ -16,16 +15,7 @@ import org.apache.spark.sql.execution.ExplainMode
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir, tag, qlist) = args.take(4)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
+    val spark = Session.local()
     spark.sparkContext.setLogLevel("ERROR")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     qlist.split(",").map(_.trim).filter(_.nonEmpty).foreach { name =>

@@ -33,12 +33,7 @@ object ScaleData {
     val src = args(0)
     val dst = args(1)
     val factor = if (args.length > 2) args(2).toInt else 10
-    val spark = SparkSession.builder().master("local[16]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = Session.local()
     spark.sparkContext.setLogLevel("ERROR")
     run(spark, src, dst, factor)
     spark.stop()

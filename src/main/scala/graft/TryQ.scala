@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Dev harness: run named registry queries against a data dir and
   * print OK/row-count or the failure class+message — the fast loop
@@ -7,14 +6,7 @@ import org.apache.spark.sql.SparkSession
   */
 object TryQ {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[16]")
-      .withExtensions(new GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
+    val spark = Session.local()
     spark.sparkContext.setLogLevel("ERROR")
     for (n <- args(1).split(",")) {
       try {

@@ -197,7 +197,7 @@ object MergeInto {
 
   /** Source-size ceiling for the explicit broadcast pick in
     * [[MergeInto.sourceRows]] — same threshold as SnapshotMerge's
-    * delta heuristic (measured there at 10 M rows, StressBench r2).
+    * delta heuristic (measured there at 10 M rows, core_scale probe, r2).
     */
   val BroadcastSourceRows: Long = SnapshotMerge.LargeDeltaRows
 

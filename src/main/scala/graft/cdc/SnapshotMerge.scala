@@ -30,7 +30,7 @@ object SnapshotMerge {
     * shuffled-hash. NEVER sort-merge: on an in-flight delta Catalyst
     * has no stats, guesses big, and SMJ sorts the full-width target
     * on both sides of the shuffle (measured 46 s vs 9.6 s at 10 M
-    * rows, StressBench r2; the r1 measurement that looked fine relied
+    * rows, core_scale probe, r2; the r1 measurement that looked fine relied
     * on AQE having small-stats luck at sf0.01).
     */
   val LargeDeltaRows: Long = 1000000L

@@ -25,7 +25,7 @@ import java.nio.charset.StandardCharsets
   *    as delete(dst) THEN rename(src, dst), so a concurrent pointer
   *    read lands in a window where the file does not exist
   *    (reproduced at ~10⁵ absent sightings/6 s under reader pressure
-  *    by `StressBenchNew11`; surfaced as the r12 TxnSpec flake where
+  *    by the `pointer_visibility` probe; surfaced as the r12 TxnSpec flake where
   *    `deleteWhere` returned None mid-retry). Local replaces
   *    therefore go through java.nio `ATOMIC_MOVE` — POSIX rename(2)
   *    replaces the destination atomically, so the pointer is never

@@ -51,7 +51,7 @@ object Clusters {
     * (the r7 driver record charged 17 s to this loop's job
     * overhead). The bound is deliberately conservative: collect-side
     * row deserialization is the driver path's real cost, and a
-    * StressBench A/B at 3M clique edges measured union-find 10.6 s
+    * core_scale probe A/B at 3M clique edges measured union-find 10.6 s
     * vs 4.7 s distributed — the crossover sits under a million
     * edges, so big graphs (the true 100 TB regime) take the
     * distributed loop.

@@ -267,7 +267,7 @@ object CorpusStats {
     * 50 % of the stream — so the shuffle regime leans on AQE's
     * skew-join split (`spark.sql.adaptive.skewJoin`, on by default
     * here); if a single token still overflows a split, salt the token
-    * key (the C28 move). StressBenchNew12's shuffle leg drives this
+    * key (the C28 move). The naive_bayes probe's shuffle leg drives this
     * exact shape — the 10M-doc 50%-one-key corpus with the broadcast
     * threshold forced to −1 — and proves truth and conservation hold
     * through the skew-split join.

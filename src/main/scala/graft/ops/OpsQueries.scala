@@ -5086,7 +5086,7 @@ object OpsQueries {
     textImportanceOn(T.documents(s, d))
 
   /** C76 core over any (doc_id, lang, text) frame — also driven by
-    * the StressBench 1M-doc probe.
+    * the pagerank_copy_identity 1M-doc probe.
     */
   def textImportanceOn(input: DataFrame): DataFrame = {
     val docs = input

@@ -246,7 +246,7 @@ object Pq {
     * `rerank = false` returns the top-`topK` by RAW ADC order (refine
     * ignored, the float column never touched) — the memory-floor
     * configuration whose recall gap vs the reranked path the
-    * 10M-vector frontier probe (StressBenchNew13) measures.
+    * 10M-vector frontier probe (`graft.Probe ann_frontier`) measures.
     */
   def ivfPqTopK(queries: DataFrame, index: DataFrame, corpus: DataFrame,
       centroids: DataFrame, model: PqModel, topK: Int, nprobe: Int,

@@ -254,7 +254,7 @@ object Similarity {
     * corpus vector under its argmax-cosine centroid. A deployment
     * PERSISTS this and sweeps probe budgets against it; exposed
     * separately from [[annIvfSearch]] so the 10M-vector frontier
-    * probe (StressBenchNew13) builds once per index like a deployment
+    * probe (`graft.Probe ann_frontier`) builds once per index like a deployment
     * would, instead of re-assigning the corpus per nprobe point.
     *
     * Assignment shape: the r2 form was a row_number window (N·M

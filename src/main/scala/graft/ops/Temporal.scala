@@ -87,7 +87,7 @@ object Temporal {
     * two buckets and comparisons are bucket-local. Joining on the
     * bare key compares each left row against the key's ENTIRE right
     * history — per-key |L|·|R| products; measured 82 s → 8 s at 10 M
-    * × 10 M rows (StressBench r2). A right row sits in exactly one
+    * × 10 M rows (core_scale probe, r2). A right row sits in exactly one
     * bucket, so no pair dedup is needed. Assumes epoch-µs ≥ 0.
     */
   def intervalJoin(left: DataFrame, right: DataFrame, keys: Seq[String],

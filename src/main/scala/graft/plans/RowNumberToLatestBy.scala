@@ -18,7 +18,7 @@ import graft.functions.{LatestByOrder, TopKByOrder}
   * aggregation. The window form shuffles AND sorts every partition;
   * the aggregate form is ObjectHashAggregate with map-side partial
   * combine — same result, no sort, shuffle ≈ |distinct keys|
-  * (measured 10 M rows: 1.0 s vs a full sort; StressBench).
+  * (measured 10 M rows: 1.0 s vs a full sort; core_scale probe).
   *
   * Conservative guards: exactly one window expression (the
   * row_number), two DESC NULLS LAST order keys (matching

@@ -1,8 +1,10 @@
 package graft
+package probes
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.queries.Relational
+import Probe.secs
 
 /** r11 scale probe: B101's trailing-window actives and B100's
   * Mann–Whitney U at 10 M rows, against INDEPENDENT truth jobs.
@@ -22,27 +24,11 @@ import graft.queries.Relational
   * (pairwise wins + half-ties) than the operator's rank2 sweep, exact
   * integer both ways.
   *
-  * Runnable standalone: `sbt 'runMain graft.StressBenchNew8 [multiplier]'`
+  * Runnable standalone: `sbt 'runMain graft.Probe actives_mann_whitney [multiplier]'`
   * (multiplier 100 = 10 M user-days).
   */
-object StressBenchNew8 {
-  def main(args: Array[String]): Unit = {
-    val mult = if (args.nonEmpty) args(0).toInt else 100
-    val spark = SparkSession.builder().master("local[16]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    run(spark, 100000L * mult)
-    spark.stop()
-  }
-
+object ActivesMannWhitney {
   def run(spark: SparkSession, n: Long): Unit = {
-    def secs[T](f: => T): (T, Double) = {
-      val t0 = System.nanoTime(); val r = f; (r, (System.nanoTime() - t0) / 1e9)
-    }
     val days = 2600L
     val tailUsers = n / 10 // ~10 days per tail user
     // rows with id%5==0 → the whale (user 0), day uniform over the

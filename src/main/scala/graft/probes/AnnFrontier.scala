@@ -1,8 +1,10 @@
 package graft
+package probes
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.ops.{Pq, Similarity}
+import Probe.secs
 
 /** r14 scale probe (r13 verdict #2): the ANN recall/cost FRONTIER at
   * 10 M vectors — recall@10 vs probe budget for `ann_ivf` (C16) and
@@ -67,29 +69,12 @@ import graft.ops.{Pq, Similarity}
   * not pinned a priori.
   *
   * Runnable standalone:
-  *   `sbt 'runMain graft.StressBenchNew13 [multiplier] [outPath]'`
+  *   `sbt 'runMain graft.Probe ann_frontier [multiplier] [outPath]'`
   * (multiplier 100 = 10 M vectors; outPath writes the JSON frontier
   * artifact, e.g. STRESS_ANN_FRONTIER.json).
   */
-object StressBenchNew13 {
-  def main(args: Array[String]): Unit = {
-    val mult = if (args.nonEmpty) args(0).toInt else 100
-    val out = if (args.length > 1) Some(args(1)) else None
-    val spark = SparkSession.builder().master("local[16]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    run(spark, 100000L * mult, out)
-    spark.stop()
-  }
-
+object AnnFrontier {
   def run(spark: SparkSession, n: Long, out: Option[String]): Unit = {
-    def secs[T](f: => T): (T, Double) = {
-      val t0 = System.nanoTime(); val r = f; (r, (System.nanoTime() - t0) / 1e9)
-    }
     val dims = 64
     val nClusters = 1024L
     val nQueries = 64L

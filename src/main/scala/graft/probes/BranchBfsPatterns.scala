@@ -1,12 +1,14 @@
 package graft
+package probes
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import Probe.secs
 
 /** r9 late-batch scale probes (A78 branch WAP, C79 BFS, B62 event
   * patterns, B63 rolling MAD, C81 cross-source overlap) — runnable
-  * standalone (`sbt 'runMain graft.StressBenchNew2 [multiplier]'`)
-  * and invoked from the full [[StressBench]] protocol. Claims probed:
+  * standalone (`sbt 'runMain graft.Probe branch_bfs_patterns [multiplier]'`)
+  * and part of `Probe all`. Claims probed:
   *
   *  - branch WAP: the fast-forward publish is priced ∝ the BRANCH
   *    DELTA (copied buckets), never the 10M-row table — and the
@@ -20,26 +22,9 @@ import org.apache.spark.sql.functions._
   *  - cross-source overlap: postings-shaped self-join ∝ distinct
   *    (source, gram) postings at 1M docs.
   */
-object StressBenchNew2 {
-  def main(args: Array[String]): Unit = {
-    val mult = if (args.nonEmpty) args(0).toInt else 100
-    val spark = SparkSession.builder().master("local[16]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    run(spark, 100000L * mult)
-    spark.stop()
-  }
-
+object BranchBfsPatterns {
   def run(spark: SparkSession, n: Long): Unit = {
     import graft.cdc.{CdcPipeline => P, StoreFs}
-    def secs[T](f: => T): (T, Double) = {
-      val t0 = System.nanoTime(); val r = f; (r, (System.nanoTime() - t0) / 1e9)
-    }
 
     // A78: branch WAP on a 10M-row store — fork, rewrite 2 of 64
     // buckets on the branch, fast-forward. The publish must be priced

@@ -1,11 +1,13 @@
 package graft
+package probes
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import Probe.secs
 
 /** r10 scale probes (A90 cost-based join admission) — runnable
-  * standalone (`sbt 'runMain graft.StressBenchNew4 [multiplier]'`)
-  * and invoked from the full [[StressBench]] protocol. Claim probed:
+  * standalone (`sbt 'runMain graft.Probe broadcast_admission [multiplier]'`)
+  * and part of `Probe all`. Claim probed:
   *
   *  - join admission: against a 10 M-row store, the metadata
   *    decision (parquet footers only, zero Spark jobs, milliseconds)
@@ -14,26 +16,9 @@ import org.apache.spark.sql.functions._
   *    build side is a driver OOM at real widths). The admitted
   *    big⋈big plan is shuffled-hash, never sort-merge.
   */
-object StressBenchNew4 {
-  def main(args: Array[String]): Unit = {
-    val mult = if (args.nonEmpty) args(0).toInt else 100
-    val spark = SparkSession.builder().master("local[16]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    run(spark, 100000L * mult)
-    spark.stop()
-  }
-
+object BroadcastAdmission {
   def run(spark: SparkSession, n: Long): Unit = {
     import graft.cdc.{CdcPipeline => P, StoreFs}
-    def secs[T](f: => T): (T, Double) = {
-      val t0 = System.nanoTime(); val r = f; (r, (System.nanoTime() - t0) / 1e9)
-    }
 
     // A90: two 10 M stores + one 10 k dim. The admission call itself
     // must be metadata-priced (no jobs); the strategy must flip with

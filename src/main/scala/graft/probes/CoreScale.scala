@@ -1,8 +1,10 @@
 package graft
+package probes
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.cdc._
+import Probe.secs
 
 /** Compaction/merge throughput at volumes beyond the test parquet —
   * events are synthesized in-flight (explode of the sf0.1 table, no
@@ -14,20 +16,10 @@ import graft.cdc._
   *    absorb the skew (a sort- or window-based compaction would put
   *    half the data in one task).
   *
-  *   sbt 'runMain graft.StressBench [multiplier]'
+  *   sbt 'runMain graft.Probe core_scale [multiplier]'
   */
-object StressBench {
-  def main(args: Array[String]): Unit = {
-    val mult = if (args.nonEmpty) args(0).toInt else 100
-    val spark = SparkSession.builder().master("local[16]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-
+object CoreScale {
+  def run(spark: SparkSession, mult: Int): Unit = {
     // 100k base events × mult, replica i shifts key space and position.
     val base = Tables.events(spark, "/root/testdata/sf0.1")
     val env0 = CdcEnvelope.fromEvents(base)
@@ -39,9 +31,8 @@ object StressBench {
     val n = big.count()
 
     def time[T](what: String)(f: => T): T = {
-      val t0 = System.nanoTime()
-      val r = f
-      println(f"[stress] $what: ${(System.nanoTime() - t0) / 1e9}%.2f s  (${n / 1e6}%.1f M rows)")
+      val (r, t) = secs(f)
+      println(f"[stress] $what: $t%.2f s  (${n / 1e6}%.1f M rows)")
       r
     }
 
@@ -747,9 +738,6 @@ object StressBench {
       val facts = spark.range(0, n).select(col("id"),
         concat(lit("t-"), col("id") * 7919L).as("tag"))
       P.publish(facts, dir, Seq("id"), buckets = Some(64))
-      def secs[T](f: => T): (T, Double) = {
-        val t0 = System.nanoTime(); val r = f; (r, (System.nanoTime() - t0) / 1e9)
-      }
       val (_, tFull) = secs(P.buildBloomIndex(spark, dir, "tag",
         expectedPerBucket = math.max(1000L, n / 32)).get)
       println(f"[stress] bloom full build (${n / 1e6}%.1f M rows / 64 buckets): $tFull%.2f s")
@@ -789,9 +777,6 @@ object StressBench {
         (pmod(col("id") * 131, lit(97)) + 3).as("toks"),
         pmod(col("id") * 7919, lit(500)).as("score"),
         concat(lit("s"), pmod(col("id"), lit(12))).as("src")).localCheckpoint()
-      def secs[T](f: => T): (T, Double) = {
-        val t0 = System.nanoTime(); val r = f; (r, (System.nanoTime() - t0) / 1e9)
-      }
       val (kept, tTemp) = secs(Packing.sampleTemperature(docs,
         col("src"), col("doc_id"), quarters = 2).count())
       println(f"[stress] temperature sampling (12 groups, α=1/2): $tTemp%.2f s, kept $kept")
@@ -852,9 +837,6 @@ object StressBench {
       val facts = spark.range(0, n).select(col("id"),
         (col("id") % 1000L).as("v"))
       P.publish(facts, dir, Seq("id"), buckets = Some(64))
-      def secs[T](f: => T): (T, Double) = {
-        val t0 = System.nanoTime(); val r = f; (r, (System.nanoTime() - t0) / 1e9)
-      }
       val (_, tDecl) = secs(P.addCheckConstraint(spark, dir, "nonneg_v", "v >= 0").get)
       println(f"[stress] constraint declaration scan (${n / 1e6}%.1f M rows): $tDecl%.2f s")
       val m = P.manifest(dir, P.currentVersion(dir).get).get
@@ -876,18 +858,5 @@ object StressBench {
         f"virtual column must ride the scan, not re-derive: $tVirt%.2f vs $tPhys%.2f")
       StoreFs.deleteRecursive(dir)
     }
-    // r9 new-op probes (C75/A75/C76/A76) — section shared with the
-    // standalone `graft.StressBenchNew` main for a faster loop.
-    StressBenchNew.run(spark, n)
-    // r9 late-batch probes (A78/C79/B62/B63/C81).
-    StressBenchNew2.run(spark, n)
-
-    StressBenchNew3.run(spark, n)
-
-    StressBenchNew4.run(spark, n)
-
-    StressBenchNew5.run(spark, n)
-
-    spark.stop()
   }
 }

@@ -1,8 +1,10 @@
 package graft
+package probes
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.ops.Temporal
+import Probe.secs
 
 /** r11 scale probe: the B17 pair-free coverage sweep
   * (`Temporal.coverageCounts`) under volume AND bucket skew. The
@@ -16,27 +18,11 @@ import graft.ops.Temporal
   * boundary cases) the sweep's count must equal a direct distributed
   * filter-count over the interval table.
   *
-  * Runnable standalone: `sbt 'runMain graft.StressBenchNew7 [multiplier]'`
+  * Runnable standalone: `sbt 'runMain graft.Probe coverage_sweep [multiplier]'`
   * (multiplier 100 = 10 M points / 1 M intervals).
   */
-object StressBenchNew7 {
-  def main(args: Array[String]): Unit = {
-    val mult = if (args.nonEmpty) args(0).toInt else 100
-    val spark = SparkSession.builder().master("local[16]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    run(spark, 100000L * mult)
-    spark.stop()
-  }
-
+object CoverageSweep {
   def run(spark: SparkSession, n: Long): Unit = {
-    def secs[T](f: => T): (T, Double) = {
-      val t0 = System.nanoTime(); val r = f; (r, (System.nanoTime() - t0) / 1e9)
-    }
     val dayUs = 86400000000L
     val days = 2600L
     val hotDay = 1300L

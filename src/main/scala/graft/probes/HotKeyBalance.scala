@@ -1,7 +1,9 @@
 package graft
+package probes
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import Probe.secs
 
 /** r11 scale probe: the B93 hot-key bound. `clampedBalance` holds one
   * KEY's whole history in a single aggregation buffer; the r10 verdict
@@ -18,27 +20,11 @@ import org.apache.spark.sql.functions._
   *    hot key's total-ordered history, and the clamp genuinely binds
   *    (final ≠ max(0, Σδ)) so the check is non-vacuous.
   *
-  * Runnable standalone: `sbt 'runMain graft.StressBenchNew6 [multiplier]'`
+  * Runnable standalone: `sbt 'runMain graft.Probe hot_key_balance [multiplier]'`
   * (multiplier 100 = 10 M rows).
   */
-object StressBenchNew6 {
-  def main(args: Array[String]): Unit = {
-    val mult = if (args.nonEmpty) args(0).toInt else 100
-    val spark = SparkSession.builder().master("local[16]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    run(spark, 100000L * mult)
-    spark.stop()
-  }
-
+object HotKeyBalance {
   def run(spark: SparkSession, n: Long): Unit = {
-    def secs[T](f: => T): (T, Double) = {
-      val t0 = System.nanoTime(); val r = f; (r, (System.nanoTime() - t0) / 1e9)
-    }
     val days = 2600L
     // key 0 takes 99 of every 100 events; the rest scatter over 97 keys
     val ev = spark.range(0, n).select(

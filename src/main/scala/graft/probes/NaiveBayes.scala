@@ -1,8 +1,10 @@
 package graft
+package probes
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.ops.CorpusStats
+import Probe.secs
 
 /** r13 scale probe: the C134 Naive Bayes classifier at 10 M docs /
   * 80 M tokens — the round's fitted-classifier addition, probed at
@@ -14,7 +16,7 @@ import graft.ops.CorpusStats
   * Corpus shape (adversarial on purpose):
   *  - 8 tokens/doc; HOT-KEY skew — every doc carries 4 copies of ONE
   *    shared filler token (50 % of the entire token stream on one
-  *    key, the StressBenchNew10 adversary applied to the (token,
+  *    key, the prefix_rank adversary applied to the (token,
   *    class) agg and the scoring join);
   *  - the remaining 4 tokens are class-discriminative: class-1 docs
   *    draw from a 100 k-token A-vocabulary, class-0 docs from a
@@ -42,27 +44,11 @@ import graft.ops.CorpusStats
   * the shape survives it: identical agreement/conservation, wall time
   * reported next to the broadcast leg.
   *
-  * Runnable standalone: `sbt 'runMain graft.StressBenchNew12 [multiplier]'`
+  * Runnable standalone: `sbt 'runMain graft.Probe naive_bayes [multiplier]'`
   * (multiplier 100 = 10 M docs).
   */
-object StressBenchNew12 {
-  def main(args: Array[String]): Unit = {
-    val mult = if (args.nonEmpty) args(0).toInt else 100
-    val spark = SparkSession.builder().master("local[16]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    run(spark, 100000L * mult)
-    spark.stop()
-  }
-
+object NaiveBayes {
   def run(spark: SparkSession, n: Long): Unit = {
-    def secs[T](f: => T): (T, Double) = {
-      val t0 = System.nanoTime(); val r = f; (r, (System.nanoTime() - t0) / 1e9)
-    }
     // 4 hot filler copies + 4 class-vocabulary tokens per doc; the
     // class vocabularies are disjoint 100k-token universes
     val docs = spark.range(n)

@@ -1,12 +1,14 @@
 package graft
+package probes
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import Probe.secs
 
 /** r9 new-op scale probes (C75 PageRank, A75 COPY INTO, C76
   * importance scoring, A76 identity allocation) — runnable standalone
-  * (`sbt 'runMain graft.StressBenchNew [multiplier]'`) for a fast
-  * loop, and invoked from the full [[StressBench]] so the recorded
+  * (`sbt 'runMain graft.Probe pagerank_copy_identity [multiplier]'`)
+  * for a fast loop, and part of `Probe all` so the recorded
   * 10M protocol covers them. Claims probed:
   *
   *  - PageRank: K fixed iterations = K edge-sized shuffles over a
@@ -21,26 +23,9 @@ import org.apache.spark.sql.functions._
   *    single-task window (the C74 two-pass path), all unique, all
   *    above the high-water.
   */
-object StressBenchNew {
-  def main(args: Array[String]): Unit = {
-    val mult = if (args.nonEmpty) args(0).toInt else 100
-    val spark = SparkSession.builder().master("local[16]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    run(spark, 100000L * mult)
-    spark.stop()
-  }
-
+object PageRankCopyIdentity {
   def run(spark: SparkSession, n: Long): Unit = {
     import graft.cdc.{CdcPipeline => P, CopyInto, IdentityColumns, StoreFs}
-    def secs[T](f: => T): (T, Double) = {
-      val t0 = System.nanoTime(); val r = f; (r, (System.nanoTime() - t0) / 1e9)
-    }
 
     // C75: PageRank over a synthetic 1M-host graph, 8 out-edges per
     // host (multiplicative strides → cyclic, skewed in-degree).

@@ -1,4 +1,5 @@
 package graft
+package probes
 
 import graft.cdc.{CdcPipeline, StoreFs}
 import org.apache.spark.sql.SparkSession
@@ -41,18 +42,10 @@ import java.util.concurrent.atomic.{AtomicBoolean, AtomicLong}
   *     the flake needed). Zero None-sightings required once the store
   *     exists.
   *
-  * Run: java -cp ... graft.StressBenchNew11 [seconds-per-phase]
+  * Run: `sbt 'runMain graft.Probe pointer_visibility [seconds-per-phase]'`
   */
-object StressBenchNew11 {
-  def main(args: Array[String]): Unit = {
-    val secs = if (args.nonEmpty) args(0).toInt else 8
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-
+object PointerVisibility {
+  def run(spark: SparkSession, secs: Int): Unit = {
     // ---- phase 1: the rename primitive ----
     val dir = java.nio.file.Files.createTempDirectory("graft_vis_stress").toString
     val ptr = s"$dir/_VERSION"
@@ -150,7 +143,6 @@ object StressBenchNew11 {
     StoreFs.deleteRecursive(dir); StoreFs.deleteRecursive(store)
     val bad = absent.get + torn.get + noneVersion.get + noneSnap.get
     println(if (bad == 0) "VISIBILITY OK" else s"VISIBILITY BROKEN ($bad sightings)")
-    spark.stop()
-    if (bad != 0) sys.exit(1)
+    if (bad != 0) sys.error(s"VISIBILITY BROKEN ($bad sightings)")
   }
 }

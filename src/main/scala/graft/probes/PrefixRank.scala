@@ -1,8 +1,10 @@
 package graft
+package probes
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.ops.Prefix
+import Probe.secs
 
 /** r12 scale probe: `Prefix.globalRank` + `ntileFromRank` at 10 M
   * rows — the shared partition-wise prefix this round moved
@@ -23,27 +25,12 @@ import graft.ops.Prefix
   *    group sizes from groupBy(phase) must equal the exact SQL ntile
   *    law (first N mod 4 groups carry the extra row).
   *
-  * Runnable standalone: `sbt 'runMain graft.StressBenchNew10 [rows]'`.
+  * Runnable standalone: `sbt 'runMain graft.Probe prefix_rank [multiplier]'`
+  * (multiplier 100 = 10 000 001 rows).
   */
-object StressBenchNew10 {
-  def main(args: Array[String]): Unit = {
-    val n = if (args.nonEmpty) args(0).toLong else 10000001L
-    val spark = SparkSession.builder().master("local[16]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    run(spark, n)
-    spark.stop()
-  }
-
+object PrefixRank {
   def run(spark: SparkSession, n: Long): Unit = {
     import spark.implicits._
-    def secs[T](f: => T): (T, Double) = {
-      val t0 = System.nanoTime(); val r = f; (r, (System.nanoTime() - t0) / 1e9)
-    }
     // even ids: ONE hot key (42); odd ids: ~1M-value cold spread
     val rows = spark.range(0, n).select(col("id"),
       expr("CASE WHEN id % 2 = 0 THEN 42L" +

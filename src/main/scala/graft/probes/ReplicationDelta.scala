@@ -1,11 +1,13 @@
 package graft
+package probes
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import Probe.secs
 
 /** r9 final-batch scale probes (A82 replication) — runnable
-  * standalone (`sbt 'runMain graft.StressBenchNew3 [multiplier]'`)
-  * and invoked from the full [[StressBench]] protocol. Claim probed:
+  * standalone (`sbt 'runMain graft.Probe replication_delta [multiplier]'`)
+  * and part of `Probe all`. Claim probed:
   *
   *  - replication: after bootstrap, converging the replica to a
   *    5-key source commit is priced ∝ the DELTA — the replica commit
@@ -13,27 +15,10 @@ import org.apache.spark.sql.functions._
   *    the bootstrap bytes; a current replica's noop poll is
   *    metadata-only (no Spark job).
   */
-object StressBenchNew3 {
-  def main(args: Array[String]): Unit = {
-    val mult = if (args.nonEmpty) args(0).toInt else 100
-    val spark = SparkSession.builder().master("local[16]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    run(spark, 100000L * mult)
-    spark.stop()
-  }
-
+object ReplicationDelta {
   def run(spark: SparkSession, n: Long): Unit = {
     import spark.implicits._
     import graft.cdc.{CdcEnvelope, CdcPipeline => P, CdcTableConfig, Replication, StoreFs}
-    def secs[T](f: => T): (T, Double) = {
-      val t0 = System.nanoTime(); val r = f; (r, (System.nanoTime() - t0) / 1e9)
-    }
 
     // A82: replicate a 10M-row / 64-bucket store, then converge a
     // 5-key source commit. The incremental replica commit must be

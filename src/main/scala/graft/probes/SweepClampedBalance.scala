@@ -1,13 +1,15 @@
 package graft
+package probes
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import Probe.secs
 
 /** r10 scale probes (B91 sweep-line concurrency, B93 clamped balance)
-  * — runnable standalone (`sbt 'runMain graft.StressBenchNew5
-  * [multiplier]'`) and invoked from the full [[StressBench]]
-  * protocol. Claims probed, each against a LOCAL driver-side replay
-  * of one sampled key (the fold semantics are sequential per key, so
+  * — runnable standalone (`sbt 'runMain graft.Probe
+  * sweep_clamped_balance [multiplier]'`) and part of `Probe all`.
+  * Claims probed, each against a LOCAL driver-side replay of one
+  * sampled key (the fold semantics are sequential per key, so
   * a scalar replay is an exact oracle):
   *
   *  - B93 clamped balance: 10 M events over 100 k parts fold in one
@@ -18,25 +20,8 @@ import org.apache.spark.sql.functions._
   *    calendar-many rows regardless of interval count (the explode-
   *    free, self-join-free shape).
   */
-object StressBenchNew5 {
-  def main(args: Array[String]): Unit = {
-    val mult = if (args.nonEmpty) args(0).toInt else 100
-    val spark = SparkSession.builder().master("local[16]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    run(spark, 100000L * mult)
-    spark.stop()
-  }
-
+object SweepClampedBalance {
   def run(spark: SparkSession, n: Long): Unit = {
-    def secs[T](f: => T): (T, Double) = {
-      val t0 = System.nanoTime(); val r = f; (r, (System.nanoTime() - t0) / 1e9)
-    }
     val keys = math.max(1L, n / 100L) // ~100 events per key
 
     // B93: clamped running balance. Deterministic synthetic deltas

@@ -1,8 +1,10 @@
 package graft
+package probes
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.ops.Vocab
+import Probe.secs
 
 /** r12 scale probe: C119's vocabulary-growth curve at 10 M docs —
   * the operator this round rebuilt from a single-task global window
@@ -25,27 +27,11 @@ import graft.ops.Vocab
   *  - the curve is strictly monotone in docs/tokens and nondecreasing
   *    in distinct tokens.
   *
-  * Runnable standalone: `sbt 'runMain graft.StressBenchNew9 [multiplier]'`
+  * Runnable standalone: `sbt 'runMain graft.Probe vocab_growth [multiplier]'`
   * (multiplier 100 = 10 M docs).
   */
-object StressBenchNew9 {
-  def main(args: Array[String]): Unit = {
-    val mult = if (args.nonEmpty) args(0).toInt else 100
-    val spark = SparkSession.builder().master("local[16]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    run(spark, 100000L * mult)
-    spark.stop()
-  }
-
+object VocabGrowth {
   def run(spark: SparkSession, n: Long): Unit = {
-    def secs[T](f: => T): (T, Double) = {
-      val t0 = System.nanoTime(); val r = f; (r, (System.nanoTime() - t0) / 1e9)
-    }
     // 8 tokens/doc; token universe at doc id is 1 + id/16 distinct
     // values, so later deciles keep minting first-seen tokens
     val docs = spark.range(0, n).select(col("id").as("doc_id"),

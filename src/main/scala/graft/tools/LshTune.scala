@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.ops.Similarity
 import graft.{Tables => T}
@@ -13,12 +12,7 @@ import graft.{Tables => T}
 object LshTune {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
-    val spark = SparkSession.builder()
-      .master("local[16]")
-      .config("spark.sql.shuffle.partitions", "16")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = graft.Session.local()
     spark.sparkContext.setLogLevel("ERROR")
     val emb = T.embeddings(spark, sfDir).cache()
     val truth = Similarity.cosinePairs(emb, 0.42)

@@ -7,15 +7,7 @@ import org.apache.spark.sql.SparkSession
   */
 object LocalSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .withExtensions(new GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val s = Session.local(4)
     s.sparkContext.setLogLevel("WARN")
     s
   }

@@ -62,4 +62,14 @@ class PlanAuditSpec extends AnyFunSuite {
     // small-side estimates legitimately move between SFs
     info(s"declared-but-absent at sf0.001: ${(declaredCartesian -- hasCartesian).toSeq.sorted}")
   }
+
+  test("each CDC parse gate decodes its JSON payload with one from_json") {
+    // "parse once": a second from_json in the executed plan means the
+    // payload is decoded twice per change row
+    for (n <- Seq("cdc_typed_projection", "cdc_typed_projection_v2",
+        "cdc_rowkey", "cdc_parse")) {
+      val plan = SparkEntry.queries(n)(spark, sf).queryExecution.executedPlan.toString
+      assert("from_json".r.findAllIn(plan).length == 1, s"$n:\n$plan")
+    }
+  }
 }

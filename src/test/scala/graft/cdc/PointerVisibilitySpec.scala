@@ -13,7 +13,7 @@ import java.util.concurrent.atomic.{AtomicBoolean, AtomicLong}
   * Pre-fix, two seconds of this loop saw ~10⁵ absent sightings; the
   * nio ATOMIC_MOVE path must hold it at exactly 0. The full-pressure
   * version (real store, publish/completeStaged/readSnapshot, parallel
-  * FS churn) lives in `graft.StressBenchNew11`.
+  * FS churn) is the `pointer_visibility` probe of `graft.Probe`.
   */
 class PointerVisibilitySpec extends AnyFunSuite {
 

@@ -131,7 +131,7 @@ class TxnSpec extends AnyFunSuite {
     // pointer swap had a window where the pointer file was ABSENT —
     // under full-suite FS load a retry's pointer() read landed in it.
     // Fixed in StoreFs.atomicReplace (nio ATOMIC_MOVE on file://);
-    // PointerVisibilitySpec and StressBenchNew11 gate the regression.
+    // PointerVisibilitySpec and the pointer_visibility probe gate the regression.
     // The assert stays as a diagnosable tripwire.
     assert(res.isDefined,
       s"deleteWhere returned None under retry; pointer=" +
