@@ -185,6 +185,17 @@ final case class CdcTableConfig(
   /** Target schema = pk ++ projected ++ passthrough columns. */
   def targetCols: Seq[String] =
     (pk ++ fieldSpecs.map(_.as) ++ passthrough).distinct
+
+  /** Typed projection of an envelope frame (merge.sql:220–304): the
+    * `fieldSpecs` rules parse the JSON payload, and the row keeps
+    * `pk`, the envelope's `__op`/ts/pos/load_ts columns and
+    * `passthrough`. Row-preserving and uncompacted, so one frame
+    * feeds the merge's compaction and the SCD2 history alike.
+    */
+  def project(env: DataFrame): DataFrame =
+    TypedProjection.project(env, CdcEnvelope.DataCol, fieldSpecs,
+      keep = pk ++ Seq(CdcEnvelope.OpCol, CdcEnvelope.TsCol, CdcEnvelope.PosCol,
+        CdcEnvelope.LoadTsCol) ++ passthrough)
 }
 
 object CdcConfig {

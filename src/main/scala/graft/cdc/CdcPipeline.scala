@@ -3823,9 +3823,8 @@ object CdcPipeline {
     var projected: DataFrame = null
     try {
       val win = CdcEnvelope.window(source, startUs, nowUs, cfg.partitionField)
-      val projectedRaw = TypedProjection.project(win, CdcEnvelope.DataCol, cfg.fieldSpecs,
-        keep = cfg.pk ++ Seq(CdcEnvelope.OpCol, CdcEnvelope.TsCol, CdcEnvelope.PosCol,
-          CdcEnvelope.LoadTsCol) ++ cfg.passthrough)
+      // the config's typed projection (see CdcTableConfig.project)
+      val projectedRaw = cfg.project(win)
       // Write-time expectations (A39): Fail-actioned checks throw
       // here, before any write, and land in the job log as a FAILED
       // run via the catch below — the reference's all-or-nothing
@@ -3902,9 +3901,11 @@ object CdcPipeline {
         nQuarantined)
     } catch {
       case e: Throwable =>
-        JobLog.append(spark, logDir, JobLog.RunRecord(
+        // a failing log write must not mask the run's own failure
+        try JobLog.append(spark, logDir, JobLog.RunRecord(
           java.util.UUID.randomUUID().toString, cfg.cdcTable, cfg.targetDb, cfg.targetTable,
           startUs, nowUs, nowUs, "FAILED", String.valueOf(e.getMessage), 0, 0, 0))
+        catch { case logErr: Throwable => e.addSuppressed(logErr) }
         throw e
     } finally {
       if (changes != null) changes.unpersist()

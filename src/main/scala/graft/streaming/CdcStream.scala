@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
-import graft.cdc.{CdcEnvelope, CdcPipeline, CdcTableConfig, ChangeCompaction, PartialMerge, Scd2Store, SnapshotMerge, TypedProjection}
+import graft.cdc.{CdcPipeline, CdcTableConfig, ChangeCompaction, PartialMerge, Scd2Store, SnapshotMerge, TypedProjection}
 
 /** Structured-Streaming form of the CDC pipeline (SURVEY.md §2
   * A11/A12): the reference's scheduled stored-procedure loop becomes
@@ -59,7 +59,7 @@ object CdcStream {
       // keys never mix), and a replayed batch overwrites its own
       // quarantine directory instead of duplicating it.
       val projected = CdcPipeline.gateExpectations(
-        projectBatch(batch, cfg), cfg, windowKey = batchId)._1
+        cfg.project(batch), cfg, windowKey = batchId)._1
       val changes = ChangeCompaction.compactForMerge(projected, cfg.pk).cache()
       try {
         val deltaRows = changes.count()
@@ -91,20 +91,11 @@ object CdcStream {
     }
   }
 
-  /** Typed projection of one micro-batch (uncompacted — the SCD2
-    * history consumes every event; the merge compacts it next).
-    */
-  private[graft] def projectBatch(batch: DataFrame, cfg: CdcTableConfig): DataFrame =
-    TypedProjection.project(batch, CdcEnvelope.DataCol,
-      cfg.fieldSpecs,
-      keep = cfg.pk ++ Seq(CdcEnvelope.OpCol, CdcEnvelope.TsCol, CdcEnvelope.PosCol,
-        CdcEnvelope.LoadTsCol) ++ cfg.passthrough)
-
   /** Projection + compaction of one micro-batch — the delta a merge
     * applies. Exposed for plan-shape specs.
     */
   private[graft] def compactBatch(batch: DataFrame, cfg: CdcTableConfig): DataFrame =
-    ChangeCompaction.compactForMerge(projectBatch(batch, cfg), cfg.pk)
+    ChangeCompaction.compactForMerge(cfg.project(batch), cfg.pk)
 
   /** PRODUCTION streaming merge: readStream envelope → foreachBatch →
     * versioned parquet target (`cfg.targetPath`), batchId-idempotent.

@@ -141,6 +141,16 @@ class ExpectationsSpec extends AnyFunSuite {
     val r3 = CdcPipeline.run(spark, failing, env(Seq(
       (2L, "u", 3000L, 2L, 3000L, """{"k":2}""", 11L, 1.0))), log, 4000L)
     assert(r3.status === "SUCCESS" && r3.windowStartUs === 2000L)
+    // a job log that cannot take the FAILED row (a regular file where
+    // the log dir should be: no watermark, no room for the append's
+    // temp file) must not mask the batch's own failure
+    val unwritableLog = Files.createTempFile("graft-joblog", ".log").toString
+    val e = intercept[Expectations.ExpectationFailedException] {
+      CdcPipeline.run(spark, failing, env(Seq(
+        (3L, "u", 5000L, 3L, 5000L, """{"k":3}""", 12L, -1.0))), unwritableLog, 6000L)
+    }
+    assert(e.getSuppressed.exists(_.isInstanceOf[java.io.IOException]),
+      s"the failed log append rides along as suppressed: ${e.getSuppressed.toSeq}")
   }
 
   test("run(): replayed window overwrites its quarantine directory (no duplicates)") {

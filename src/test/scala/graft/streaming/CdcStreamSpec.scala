@@ -331,7 +331,7 @@ class CdcStreamSpec extends AnyFunSuite {
 
     val hist = Scd2Store.readHistory(spark, sCfg).get
     val all = graft.sources.ChangeFeed.debeziumJsonLines(spark, inDir, valueSchema, Seq("user_id"))
-    val oneShot = Scd2.fromHistory(CdcStream.projectBatch(all, sCfg),
+    val oneShot = Scd2.fromHistory(sCfg.project(all),
       Seq("user_id"), Seq("k", "event_id", "value"))
     def rows(df: org.apache.spark.sql.DataFrame): Set[Seq[Any]] =
       df.select("user_id", "k", "event_id", "value", "valid_from_us", "valid_to_us")
@@ -359,7 +359,7 @@ class CdcStreamSpec extends AnyFunSuite {
     val batch3: Seq[Env] = Seq(
       (5L, "u", 300L, 7L, 300L, """{"k":50}""", 7L, 5.0), // insert 5
       (1L, "u", 300L, 8L, 300L, """{"k":12}""", 8L, 1.2)) // update 1
-    val projected = CdcStream.projectBatch(toDf(batch3), dCfg)
+    val projected = dCfg.project(toDf(batch3))
     val changes = ChangeCompaction.compactForMerge(projected, Seq("user_id"))
     CdcPipeline.mergeAndPublish(spark, dCfg, changes, changes.count(), batchId = 2)
     assert(Scd2Store.lastAppliedSeq(dCfg) === -1L, "history untouched by the crashed attempt")

@@ -64,8 +64,10 @@ def main():
     oracles = json.load(open(f"{outdir}/oracle_sql.json"))
     n_pass = n_fail = 0
     fails = []
-    names = sorted(d for d in os.listdir(outdir)
-                   if os.path.isdir(os.path.join(outdir, d)))
+    # Verify writes no dir for a query that threw, so a query with an
+    # oracle but no output must still be named (as FAIL, below).
+    names = sorted(set(oracles) | {d for d in os.listdir(outdir)
+                                   if os.path.isdir(os.path.join(outdir, d))})
     for name in names:
         files = glob.glob(f"{outdir}/{name}/*.parquet")
         if not files:
