@@ -7,7 +7,10 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkList
   * so a multi-action operator (the CDC store gates run counts, merge,
   * rollup, SCD2 and log jobs per publish) shows where its seconds go.
   * Driver gaps (planning, file listing, pointer I/O) appear as the
-  * difference between the job-sum and the total. Usage:
+  * difference between the job-sum and the total. The warm-up and
+  * each pass run under their own job group, and a pass counts only
+  * the jobs of its group, so a late-delivered job of the run before
+  * never lands in it. Usage:
   *
   *   runMain graft.JobProbe <sfDir> <q1,q2,...> [passes]
   */
@@ -19,10 +22,12 @@ object JobProbe {
     val spark = Session.local()
     spark.sparkContext.setLogLevel("ERROR")
 
-    val starts = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String)]()
+    val sc = spark.sparkContext
+    @volatile var group = ""
+    val starts = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String, String)]()
     val rows = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Double, String)]()
     val spans = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Long, String)]()
-    spark.sparkContext.addSparkListener(new SparkListener {
+    sc.addSparkListener(new SparkListener {
       override def onJobStart(js: SparkListenerJobStart): Unit = {
         val site = Option(js.properties)
           .flatMap(p => Option(p.getProperty("spark.job.description")))
@@ -32,10 +37,13 @@ object JobProbe {
           .getOrElse("?")
         val stages = js.stageInfos.map(si =>
           s"${si.name.takeWhile(_ != '\n')}[${si.numTasks}]").mkString(" | ")
-        starts.put(js.jobId, (System.nanoTime(), s"$site :: $stages"))
+        val gid = Option(js.properties).map(_.getProperty("spark.jobGroup.id")).orNull
+        starts.put(js.jobId, (System.nanoTime(), s"$site :: $stages", gid))
       }
+      // a job counts only in its own pass: the warm-up's last job may
+      // end after the pass has begun
       override def onJobEnd(je: SparkListenerJobEnd): Unit = {
-        Option(starts.remove(je.jobId)).foreach { case (t0, site) =>
+        Option(starts.remove(je.jobId)).filter(_._3 == group).foreach { case (t0, site, _) =>
           rows.add((je.jobId, (System.nanoTime() - t0) / 1e9, site))
           spans.add((t0, System.nanoTime(), site))
         }
@@ -43,11 +51,19 @@ object JobProbe {
     })
     def run(df: org.apache.spark.sql.DataFrame): Unit =
       df.write.mode("overwrite").format("noop").save()
+    // set before the query is built: the CDC gates run jobs eagerly.
+    // A null description keeps each job's own label or call site.
+    def inGroup(gid: String): Unit = {
+      group = gid
+      sc.setJobGroup(gid, null)
+    }
 
     names.foreach { name =>
       val fn = SparkEntry.queries(name)
+      inGroup(s"$name-warmup")
       run(fn(spark, "/root/testdata/sf0.001")) // warm-up
       (1 to passes).foreach { p =>
+        inGroup(s"$name-pass$p")
         rows.clear()
         spans.clear()
         val t0 = System.nanoTime()

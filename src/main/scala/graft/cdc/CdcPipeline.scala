@@ -1,6 +1,6 @@
 package graft.cdc
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, IntegerType, LongType, NumericType, StringType, StructField, StructType}
 
@@ -380,6 +380,14 @@ object CdcPipeline {
     */
   private[graft] def bucketExpr(pkCols: Seq[String], numBuckets: Int): Column =
     pmod(hash(pkCols.map(col): _*), lit(numBuckets))
+
+  /** Buckets the rows of `keys` hash to: one id per row, collected as
+    * ints with no aggregation (see [[readKeys]] for why that is
+    * bounded). Only for key sets the caller also broadcasts.
+    */
+  private[graft] def keyBuckets(keys: DataFrame, pkCols: Seq[String],
+      numBuckets: Int): Set[Int] =
+    keys.select(bucketExpr(pkCols, numBuckets)).as[Int](Encoders.scalaInt).collect().toSet
 
   private def swapPointer(targetDir: String, version: Long, batchId: Long): Unit = {
     val tmp = s"$targetDir/.$VersionFile.tmp"
@@ -813,6 +821,14 @@ object CdcPipeline {
     * broadcasts into a semi join over the pruned scan. This is the
     * serving-path read the reference gets from its MySQL target's
     * PRIMARY KEY — re-expressed as bucket pruning on immutable files.
+    *
+    * The touched set is collected as one bucket id per key, with no
+    * `distinct`: the same key set is broadcast into the semi join, so
+    * the driver holds every key anyway, and one int per key is less
+    * than that. Skipping the aggregation skips its shuffle: a
+    * driver-local key list (`Seq(...).toDF`) folds into a local
+    * relation and starts no Spark job before the scan, and a
+    * distributed key set costs one map-only job.
     */
   def readKeys(spark: SparkSession, targetDir: String, pkCols: Seq[String],
       keys: DataFrame): Option[DataFrame] =
@@ -827,9 +843,7 @@ object CdcPipeline {
           val storedType = m.schema.fields.map(f => f.name -> f.dataType).toMap
           val typedKeys = keys.select(pkCols.map(c => storedType.get(c)
             .map(t => col(c).cast(t).as(c)).getOrElse(col(c))): _*)
-          val touched = typedKeys
-            .select(bucketExpr(pkCols, m.numBuckets).as("b"))
-            .distinct().collect().map(_.getInt(0)).toSet
+          val touched = keyBuckets(typedKeys, pkCols, m.numBuckets)
           applyVirtual(readBuckets(spark, targetDir, m, touched)
             .join(broadcast(typedKeys), pkCols, "left_semi"), m)
         case None => // pre-manifest flat layout: no pruning possible
@@ -3490,13 +3504,57 @@ object CdcPipeline {
 
   private[graft] final case class MergeOutcome(version: Long, updated: Long)
 
+  /** What a compacted change set holds, from one aggregation
+    * ([[summarize]]): its upsert and delete counts, and for each
+    * bucket count of the stores it will be merged into, the buckets
+    * its keys hash to (at most that many ids each).
+    */
+  private[graft] final case class ChangeSummary(upserts: Long, deletes: Long,
+      bucketsByCount: Map[Int, Set[Int]]) {
+    def rows: Long = upserts + deletes
+
+    /** The buckets of `storeDir` (currently `numBuckets` wide) these
+      * changes touch. A count the summary lacks means the store was
+      * rebucketed after the summary was taken: refused as a stale
+      * base, like any commit that lost a race.
+      */
+    def touched(storeDir: String, numBuckets: Int): Set[Int] =
+      bucketsByCount.getOrElse(numBuckets, throw new ConcurrentWriteException(
+        s"$storeDir now has $numBuckets buckets, but its changes were summarized " +
+          s"for ${bucketsByCount.keys.toSeq.sorted.mkString("[", ", ", "]")}: " +
+          "the store was rebucketed meanwhile; summarize again and retry"))
+  }
+
+  /** One pass over compacted `changes`: the op split and the touched
+    * buckets of the target and, when SCD2 is declared and its open
+    * store exists, of that store. The bucket counts come from their
+    * current manifests (driver reads). [[mergeAndPublish]] and
+    * `Scd2Store.maintain` take the result instead of computing their
+    * bucket sets again.
+    */
+  private[graft] def summarize(cfg: CdcTableConfig, changes: DataFrame): ChangeSummary = {
+    def bucketCount(dir: String): Option[Int] =
+      currentVersion(dir).flatMap(manifest(dir, _)).map(_.numBuckets)
+    val counts = (bucketCount(cfg.targetPath).toSeq ++
+      cfg.scd2.flatMap(_ => bucketCount(Scd2Store.openPath(cfg)))).distinct
+    val op = if (changes.columns.contains(CdcEnvelope.OpCol)) col(CdcEnvelope.OpCol)
+      else lit(CdcEnvelope.Upsert)
+    val row = changes.agg(count(when(op =!= CdcEnvelope.Delete, 1)),
+      count(when(op === CdcEnvelope.Delete, 1)) +:
+        counts.map(nb => collect_set(bucketExpr(cfg.pk, nb))): _*).collect()(0)
+    ChangeSummary(row.getLong(0), row.getLong(1),
+      counts.zipWithIndex.map { case (nb, i) => nb -> row.getSeq[Int](i + 2).toSet }.toMap)
+  }
+
   /** Merge compacted `changes` into cfg's target and publish the next
     * version — the shared apply path of the batch pipeline and the
     * streaming foreachBatch. With a bucketed target this reads and
-    * rewrites only the buckets the delta touches; `deltaRows` (the
-    * caller counts the compacted set anyway) picks the merge join
-    * strategy, so a typical small delta broadcasts its key set and
-    * the target side is never shuffled. Also computes the
+    * rewrites only the buckets the delta touches, taken from
+    * `summary` (the [[summarize]] of `changes`), which refuses with
+    * [[ConcurrentWriteException]] when the target's bucket count is
+    * not one it was taken for. The summary's row count picks the
+    * merge join strategy, so a typical small delta broadcasts its key
+    * set and the target side is never shuffled. Also computes the
     * records_updated split: upsert PKs already present in the
     * pre-merge target (the reference MERGE's matched-update count,
     * merge.sql:520–534) — evaluated against the touched-bucket
@@ -3504,8 +3562,9 @@ object CdcPipeline {
     * construction.
     */
   private[graft] def mergeAndPublish(spark: SparkSession, cfg: CdcTableConfig,
-      changes: DataFrame, deltaRows: Long, batchId: Long = -1L,
+      changes: DataFrame, summary: ChangeSummary, batchId: Long = -1L,
       swapNow: Boolean = true): MergeOutcome = {
+    val deltaRows = summary.rows
     val targetCols = cfg.targetCols.map(col)
     // config evolution: a target column declared after the stored
     // snapshot was written (the reference picks up upstream column
@@ -3535,11 +3594,7 @@ object CdcPipeline {
                 else changes).select(
                   cfg.targetCols.filter(changes.columns.contains).map(col): _*),
                 cfg.targetPath)
-            val touched = labeled(spark, "store.merge: touched buckets") {
-              changes
-                .select(bucketExpr(cfg.pk, m.numBuckets).as("b"))
-                .distinct().collect().map(_.getInt(0)).toSet
-            }
+            val touched = summary.touched(cfg.targetPath, m.numBuckets)
             val subset = readBuckets(spark, cfg.targetPath, m, touched)
             val updated = labeled(spark, "store.merge: matched keys") {
               SnapshotMerge
@@ -3837,17 +3892,15 @@ object CdcPipeline {
       val (projectedGated, nQuarantined) = gateExpectations(projectedRaw, cfg, nowUs)
       projected = projectedGated.cache()
       changes = ChangeCompaction.compactForMerge(projected, cfg.pk).cache()
-      // r14 (guide §1.2 — fewer passes): one aggregation job computes
-      // both op-split counts (and materializes the cache) instead of
-      // two filtered count() actions over the same cached relation.
-      val opCounts = labeled(spark, "cdc.run: op counts") {
-        changes.agg(
-          count(when(col(CdcEnvelope.OpCol) =!= CdcEnvelope.Delete, 1)).as("u"),
-          count(when(col(CdcEnvelope.OpCol) === CdcEnvelope.Delete, 1)).as("d"))
-          .collect()(0)
+      // one aggregation job computes both op-split counts and the
+      // touched buckets of the target and the SCD2 open store (and
+      // materializes the cache); the merge and the history advance
+      // reuse it instead of collecting their bucket sets again.
+      val summary = labeled(spark, "cdc.run: op counts") {
+        summarize(cfg, changes)
       }
-      val nUps = opCounts.getLong(0)
-      val nDel = opCounts.getLong(1)
+      val nUps = summary.upserts
+      val nDel = summary.deletes
       // r15 (guide §2.4 — don't rescan what is already materialized):
       // with no expectations declared the gated projection has exactly
       // the window's rows (TypedProjection is row-preserving and keeps
@@ -3862,13 +3915,13 @@ object CdcPipeline {
       val (cdcStart, cdcEnd) =
         if (bounds.isNullAt(0)) (nowUs, nowUs) else (bounds.getLong(0), bounds.getLong(1))
       val outcome = labeled(spark, "cdc.run: merge+publish") {
-        mergeAndPublish(spark, cfg, changes, nUps + nDel)
+        mergeAndPublish(spark, cfg, changes, summary)
       }
       // this window's changes produced the now-current version, so the
       // declared rollups advance by delta (reference: the derived-table
       // refresh inside the procedure, merge.sql:520–581)
       labeled(spark, "cdc.run: rollups") {
-        maintainRollups(spark, cfg, changes, Some(nUps + nDel), changesMatchCurrent = true)
+        maintainRollups(spark, cfg, changes, Some(summary.rows), changesMatchCurrent = true)
       }
       // the SCD2 history advances by the UNcompacted window (every
       // event keeps its slice), keyed on the window end: a crash-
@@ -3881,9 +3934,8 @@ object CdcPipeline {
       // whose scheduler passed fresh wall-clock (superset window,
       // larger seqKey) applies only the not-yet-applied suffix.
       labeled(spark, "cdc.run: scd2 advance") {
-        Scd2Store.maintain(spark, cfg, projected, seqKey = nowUs,
-          targetExistedBefore = startUs > 0, windowEmpty = nUps + nDel == 0,
-          seqIsLoadTs = true)
+        Scd2Store.maintain(spark, cfg, projected, summary, seqKey = nowUs,
+          targetExistedBefore = startUs > 0, seqIsLoadTs = true)
       }
       autoVacuum(cfg)
       // insert/update split: updated = upserts whose PK pre-existed

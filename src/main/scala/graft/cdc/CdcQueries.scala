@@ -137,6 +137,14 @@ object CdcQueries {
     def pinned(ev: DataFrame, lo: Long, hi: Long,
         derive: DataFrame => DataFrame = identity): DataFrame =
       changes(ev, lo, hi, derive).localCheckpoint(true)
+
+    /** Merge the compacted `chg` into `cfg`'s store: one summary pass
+      * (op counts and touched buckets), then the bucketed merge.
+      */
+    def merge(s: SparkSession, cfg: CdcTableConfig, chg: DataFrame,
+        swapNow: Boolean = true): CdcPipeline.MergeOutcome =
+      CdcPipeline.mergeAndPublish(s, cfg, chg, CdcPipeline.summarize(cfg, chg),
+        swapNow = swapNow)
   }
 
   private def env(s: SparkSession, d: String): DataFrame =
@@ -830,7 +838,7 @@ object CdcQueries {
     val target0 = EventsCdc.snapshot(ev, cfg.targetCols)
     CdcPipeline.publish(target0, cfg.targetPath, pk, buckets = cfg.numBuckets) // v0
     val chg1 = EventsCdc.pinned(ev, W0, W1)
-    CdcPipeline.mergeAndPublish(s, cfg, chg1, chg1.count()) // v1
+    EventsCdc.merge(s, cfg, chg1) // v1
     CdcPipeline.snapshotDiff(s, cfg.targetPath, 0L, 1L, pk).get
       .withColumnRenamed(CdcEnvelope.OpCol, "op")
       .orderBy(col("user_id"))
@@ -891,7 +899,7 @@ object CdcQueries {
     require(r0.mode == "bootstrap" && r0.srcVersion == 0L,
       s"expected a bootstrap of src v0, got $r0")
     val chg1 = EventsCdc.pinned(ev, W0, W1)
-    CdcPipeline.mergeAndPublish(s, cfg, chg1, chg1.count()) // v1
+    EventsCdc.merge(s, cfg, chg1) // v1
     val r1 = Replication.replicate(s, srcDir, dstDir, pk).get
     require(r1.mode == "incremental" && r1.srcVersion == 1L,
       s"expected an incremental replay to src v1, got $r1")
@@ -930,7 +938,7 @@ object CdcQueries {
     CdcPipeline.buildNdvIndex(s, cfg.targetPath, Seq("k", "event_id"))        // v1
     require(CdcPipeline.ndvStats(s, cfg.targetPath, "k").exists(_.fullCoverage))
     val chg1 = EventsCdc.pinned(ev, W0, W1)
-    CdcPipeline.mergeAndPublish(s, cfg, chg1, chg1.count())                   // v2
+    EventsCdc.merge(s, cfg, chg1)                                             // v2
     val degraded = CdcPipeline.ndvStats(s, cfg.targetPath, "k").get
     require(degraded.coveredBuckets < degraded.totalBuckets,
       "the merge must drop rewritten buckets' NDV entries")
@@ -992,7 +1000,7 @@ object CdcQueries {
     val target0 = EventsCdc.snapshot(ev, cfg.targetCols)
     CdcPipeline.publish(target0, cfg.targetPath, pk, buckets = cfg.numBuckets) // v0
     val chg1 = EventsCdc.pinned(ev, W0, W1)
-    CdcPipeline.mergeAndPublish(s, cfg, chg1, chg1.count()) // v1
+    EventsCdc.merge(s, cfg, chg1) // v1
     val commits = CdcPipeline.describeHistory(s, cfg.targetPath).get
       .select(col("version"), col("commit_us")).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap // 2-row driver metadata
@@ -1030,7 +1038,7 @@ object CdcQueries {
     CdcPipeline.publish(target0, cfg.targetPath, pk, buckets = cfg.numBuckets,
       statsCols = cfg.statsCols) // v0: every bucket gets a stat entry
     val chg1 = EventsCdc.pinned(ev, W0, W1)
-    CdcPipeline.mergeAndPublish(s, cfg, chg1, chg1.count()) // v1: fresh + carried
+    EventsCdc.merge(s, cfg, chg1) // v1: fresh + carried
     // bounds = the middle third of the state's event_id span, derived
     // from the data so the range selects real rows at every SF
     val b = CdcPipeline.readSnapshot(s, cfg.targetPath).get
@@ -1066,9 +1074,9 @@ object CdcQueries {
     CdcPipeline.publish(EventsCdc.snapshot(ev, cfg.targetCols),
       cfg.targetPath, pk, buckets = cfg.numBuckets) // v0
     val chg1 = EventsCdc.pinned(ev, W0, W1)
-    CdcPipeline.mergeAndPublish(s, cfg, chg1, chg1.count()) // v1
+    EventsCdc.merge(s, cfg, chg1) // v1
     val chg2 = EventsCdc.pinned(ev, W1, W2)
-    CdcPipeline.mergeAndPublish(s, cfg, chg2, chg2.count()) // v2
+    EventsCdc.merge(s, cfg, chg2) // v2
     CdcPipeline.readChangeFeed(s, cfg.targetPath, pk, 0L, 2L).get
       .withColumnRenamed(CdcEnvelope.OpCol, "op")
       .select("user_id", "k", "event_id", "value", "op", "_commit_version")
@@ -1126,7 +1134,7 @@ object CdcQueries {
     val target0 = EventsCdc.snapshot(ev, cfg.targetCols)
     CdcPipeline.publish(target0, cfg.targetPath, pk, buckets = cfg.numBuckets) // v0
     val chg1 = EventsCdc.pinned(ev, W0, W1)
-    CdcPipeline.mergeAndPublish(s, cfg, chg1, chg1.count()) // v1
+    EventsCdc.merge(s, cfg, chg1) // v1
     CdcPipeline.optimize(s, cfg.targetPath, pk, Seq("event_id"),
       maxRecordsPerFile = 500L) // v2: clustered + learned stats
     val b = CdcPipeline.readSnapshot(s, cfg.targetPath).get
@@ -1153,7 +1161,7 @@ object CdcQueries {
     val target0 = EventsCdc.snapshot(ev, cfg.targetCols)
     CdcPipeline.publish(target0, cfg.targetPath, pk, buckets = cfg.numBuckets) // v0
     val chg1 = EventsCdc.pinned(ev, W0, W1)
-    CdcPipeline.mergeAndPublish(s, cfg, chg1, chg1.count()) // v1
+    EventsCdc.merge(s, cfg, chg1) // v1
     CdcPipeline.deleteWhere(s, cfg.targetPath, pk, col("event_id") % 5 === 0) // v2
     CdcPipeline.updateWhere(s, cfg.targetPath, pk, col("event_id") % 7 === 0,
       Map("k" -> (col("k") + lit(1000L)))) // v3
@@ -1206,7 +1214,7 @@ object CdcQueries {
       val target0 = EventsCdc.snapshot(ev, bcfg.targetCols)
       CdcPipeline.publish(target0, boot, pk, buckets = bcfg.numBuckets) // v0
       val chg1 = EventsCdc.changes(ev, W0, W1)
-      CdcPipeline.mergeAndPublish(s, bcfg, chg1, chg1.count()) // v1
+      EventsCdc.merge(s, bcfg, chg1) // v1
       CdcPipeline.optimize(s, boot, pk, sortCols = Seq("event_id"),
         maxRecordsPerFile = 20L) // v2: fragmented layout
       val Some((_, nDel)) =
@@ -1242,7 +1250,7 @@ object CdcQueries {
     val target0 = EventsCdc.snapshot(ev, cfg.targetCols)
     CdcPipeline.publish(target0, cfg.targetPath, pk, buckets = cfg.numBuckets) // v0
     val chg1 = EventsCdc.pinned(ev, W0, W1)
-    CdcPipeline.mergeAndPublish(s, cfg, chg1, chg1.count()) // v1
+    EventsCdc.merge(s, cfg, chg1) // v1
     // %2 then %3: both non-empty even in the 12-row sf0.001 snapshot
     // (a %5/%11 pair leaves the second vector commit empty there)
     val Some((v2, n2)) =
@@ -1287,7 +1295,7 @@ object CdcQueries {
     val target0 = EventsCdc.snapshot(ev, cfg.targetCols)
     CdcPipeline.publish(target0, cfg.targetPath, pk, buckets = cfg.numBuckets) // v0
     val chg1 = EventsCdc.pinned(ev, W0, W1)
-    CdcPipeline.mergeAndPublish(s, cfg, chg1, chg1.count()) // v1
+    EventsCdc.merge(s, cfg, chg1) // v1
     CdcPipeline.buildBloomIndex(s, cfg.targetPath, "event_id",
       expectedPerBucket = 1000L) // v2
     val keyDf = { import s.implicits._; Seq(10L, 20L, 30L).toDF(pk.head) }
@@ -1334,8 +1342,7 @@ object CdcQueries {
       val t0 = EventsCdc.snapshot(ev, cfg.targetCols, derive = _.filter(side))
       CdcPipeline.publish(t0, cfg.targetPath, pk, buckets = cfg.numBuckets) // v0
       val part = chg.filter(side)
-      val out = CdcPipeline.mergeAndPublish(s, cfg, part, part.count(),
-        swapNow = false)
+      val out = EventsCdc.merge(s, cfg, part, swapNow = false)
       Txn.Staged(cfg.targetPath, out.version)
     }
     require(staged.forall(st => CdcPipeline.currentVersion(st.targetDir).contains(0L)),
@@ -1374,7 +1381,7 @@ object CdcQueries {
     val target0 = EventsCdc.snapshot(ev, cfg.targetCols)
     CdcPipeline.publish(target0, cfg.targetPath, pk, buckets = cfg.numBuckets) // v0
     val chg1 = EventsCdc.pinned(ev, W0, W1)
-    CdcPipeline.mergeAndPublish(s, cfg, chg1, chg1.count()) // v1
+    EventsCdc.merge(s, cfg, chg1) // v1
     val v2 = CdcPipeline.addColumnWithDefault(s, cfg.targetPath, "score",
       LongType, 7L).get
     require(!StoreFs.listDirNames(s"${cfg.targetPath}/v$v2")
@@ -1419,12 +1426,12 @@ object CdcQueries {
       .limit(1).withColumn("event_id", lit(-5L))
     val before = CdcPipeline.currentVersion(cfg.targetPath).get
     val refused =
-      try { CdcPipeline.mergeAndPublish(s, cfg, bad, 1L); false }
+      try { EventsCdc.merge(s, cfg, bad); false }
       catch { case _: CdcPipeline.ConstraintViolationException => true }
     require(refused, "violating merge must throw")
     require(CdcPipeline.currentVersion(cfg.targetPath).get == before,
       "refused merge must not publish")
-    CdcPipeline.mergeAndPublish(s, cfg, chg1, chg1.count()) // v2 — clean
+    EventsCdc.merge(s, cfg, chg1) // v2 — clean
     require(CdcPipeline.checkConstraints(cfg.targetPath).contains("nonneg_event"),
       "constraint must survive the delta publish")
     CdcPipeline.addGeneratedColumn(cfg.targetPath, "k2e", LongType,
@@ -1458,7 +1465,7 @@ object CdcQueries {
     val target0 = EventsCdc.snapshot(ev, cfg.targetCols)
     CdcPipeline.publish(target0, cfg.targetPath, pk, buckets = cfg.numBuckets) // v0
     val chg1 = EventsCdc.pinned(ev, W0, W1)
-    CdcPipeline.mergeAndPublish(s, cfg, chg1, chg1.count()) // v1
+    EventsCdc.merge(s, cfg, chg1) // v1
     val Some((_, deleted)) =
       CdcPipeline.deleteWhere(s, cfg.targetPath, pk, col("user_id") % 3 === 0) // v2
     require(deleted > 0, "fixture must actually lose rows before the restore")
@@ -1501,7 +1508,7 @@ object CdcQueries {
       "branch must fork at v0")
     val bcfg = cfg.copy(targetPath = brDir + "/b")
     val chg1 = EventsCdc.pinned(ev, W0, W1)
-    CdcPipeline.mergeAndPublish(s, bcfg, chg1, chg1.count()) // branch v1
+    EventsCdc.merge(s, bcfg, chg1) // branch v1
     require(CdcPipeline.currentVersion(srcDir).contains(0L),
       "branch writes must not move the upstream pointer")
     require(CdcPipeline.fsck(s, bcfg.targetPath)

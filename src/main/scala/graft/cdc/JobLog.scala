@@ -45,7 +45,9 @@ object JobLog {
 
   /** Previous watermark for this (cdc_table, target), epoch if none —
     * exactly COALESCE(MAX(CDC_END_TS), '1970-01-01') of the
-    * reference (merge.sql:114).
+    * reference (merge.sql:114). A `logDir` that exists and is not a
+    * directory is refused with `IllegalArgumentException`, never read
+    * as an empty log.
     *
     * r15 (guide §1.2 / §5 — the driver gap between a store run's many
     * small jobs is planning, and the log is one row per run): reads
@@ -57,6 +59,7 @@ object JobLog {
     * path or [[append]]'s writer parse identically.
     */
   def lastWatermark(spark: SparkSession, logDir: String, cfg: CdcTableConfig): Long = {
+    requireLogDir(logDir)
     val files = parquetFiles(logDir)
     if (files.isEmpty) return 0L
     val conf = spark.sparkContext.hadoopConfiguration
@@ -129,6 +132,7 @@ object JobLog {
     */
   def append(spark: SparkSession, logDir: String, rec: RunRecord,
       autoCompactAt: Int = 64): Unit = {
+    requireLogDir(logDir)
     // Fresh name per APPEND (not per run_id): a crash-replayed run
     // must land as a second file/row — exactly what the Spark write
     // did — so the crash window stays "duplicates, never lost", and
@@ -158,6 +162,15 @@ object JobLog {
     StoreFs.atomicReplace(tmp, s"$logDir/$name")
     if (autoCompactAt > 0) { compact(spark, logDir, minFiles = autoCompactAt); () }
   }
+
+  /** Refuses a `logDir` that exists and is not a directory: listing a
+    * regular file finds no log parts, so its watermark would read as
+    * the epoch and the run would re-merge the whole source. A missing
+    * `logDir` is a fresh log.
+    */
+  private def requireLogDir(logDir: String): Unit =
+    if (StoreFs.existsAsNonDir(logDir))
+      throw new IllegalArgumentException(s"job log path is not a directory: $logDir")
 
   // fully-qualified paths via the Hadoop FileSystem API, so the log
   // works on any scheme (a java.io listing on hdfs://s3a:// returns

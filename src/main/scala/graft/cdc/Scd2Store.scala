@@ -331,9 +331,7 @@ object Scd2Store {
         val dirs = committedClosedDirs(cfg, v)
         val countOf: Map[String, Int] = dirs.map(d => d -> dirBuckets(d, m.numBuckets)).toMap
         val touchedByCount: Map[Int, Set[Int]] = countOf.values.toSet.map { nb: Int =>
-          nb -> typedKeys
-            .select(CdcPipeline.bucketExpr(cfg.pk, nb).as("b"))
-            .distinct().collect().map(_.getInt(0)).toSet
+          nb -> CdcPipeline.keyBuckets(typedKeys, cfg.pk, nb)
         }.toMap
         val bucketDirs = dirs.flatMap { d =>
           val touched = touchedByCount(countOf(d))
@@ -409,9 +407,19 @@ object Scd2Store {
     * load_ts > lastAppliedSeq excludes exactly that prefix. Streaming
     * batchIds are not in the load_ts domain — a checkpoint replay
     * carries the identical batch, so no filter is needed (or valid).
+    *
+    * `summary` is the `CdcPipeline.summarize` of the window's
+    * compacted changes, taken before the target merge. Its row count
+    * says whether the window is empty, and its bucket set for the
+    * open store's bucket count names the open buckets to rewrite: the
+    * compacted keys are exactly `env`'s keys. On a superset replay it
+    * may name more buckets than the filtered suffix touches, which
+    * only rewrites them with their open rows kept. A summary taken
+    * before the open store was rebucketed is refused with
+    * `ConcurrentWriteException`.
     */
   private[graft] def maintain(spark: SparkSession, cfg: CdcTableConfig, env: DataFrame,
-      seqKey: Long, targetExistedBefore: Boolean, windowEmpty: Boolean,
+      summary: CdcPipeline.ChangeSummary, seqKey: Long, targetExistedBefore: Boolean,
       seqIsLoadTs: Boolean = false): Unit =
     cfg.scd2.foreach { spec =>
       val lastApplied = lastAppliedSeq(cfg)
@@ -429,7 +437,8 @@ object Scd2Store {
         // so later windows always take the incremental path instead
         // of a lossy bootstrap; an empty window over an existing
         // store is a pure no-op
-        else if (!windowEmpty || !openExists) advance(spark, cfg, spec, envEff, seqKey)
+        else if (summary.rows > 0 || !openExists)
+          advance(spark, cfg, spec, envEff, summary, seqKey)
         spec.autoCompactAt.foreach { bound =>
           CdcPipeline.currentVersion(op).foreach { v =>
             if (committedClosedDirs(cfg, v).size > math.max(1, bound)) {
@@ -462,7 +471,7 @@ object Scd2Store {
   }
 
   private def advance(spark: SparkSession, cfg: CdcTableConfig, spec: Scd2Spec,
-      env: DataFrame, seqKey: Long): Unit = {
+      env: DataFrame, summary: CdcPipeline.ChangeSummary, seqKey: Long): Unit = {
     val pk = cfg.pk
     val pay = payloadOf(cfg, spec)
     val cols = histCols(cfg, spec)
@@ -490,9 +499,7 @@ object Scd2Store {
         val m = CdcPipeline.manifest(op, v).get
         // open-store I/O ∝ delta: only the buckets the window's PKs
         // hash to are read and rewritten
-        val touched = firstEvt
-          .select(CdcPipeline.bucketExpr(pk, m.numBuckets).as("b"))
-          .distinct().collect().map(_.getInt(0)).toSet
+        val touched = summary.touched(op, m.numBuckets)
         val openSubset = CdcPipeline.readBuckets(spark, op, m, touched)
         // ADDITIVE schema evolution: a payload column declared after
         // the store existed is absent from the stored open slices —

@@ -71,6 +71,13 @@ private[graft] object StoreFs {
     fs(p).exists(p)
   }
 
+  /** True when `path` exists and is not a directory. */
+  def existsAsNonDir(path: String): Boolean = {
+    val p = new Path(path)
+    try !fs(p).getFileStatus(p).isDirectory
+    catch { case _: java.io.FileNotFoundException => false }
+  }
+
   /** On the LOCAL checksum FS, `atomicReplace`'s rename moves the
     * data file and its `.crc` sidecar as TWO metadata ops — a reader
     * landing between them sees new bytes against the old checksum
@@ -290,11 +297,6 @@ private[graft] object StoreFs {
       /* deleteSource = */ false, /* overwrite = */ true, conf)
   }
 
-  /** Driver-side [min, max] of a long column across every parquet
-    * file under `dir`, read from the file FOOTERS' column statistics
-    * — metadata I/O only, zero Spark jobs. None when any chunk lacks
-    * usable stats (caller falls back to an aggregation).
-    */
   /** (row count, data bytes) of every parquet file under `dir`,
     * recursively — row counts from the footers' block metadata, bytes
     * from the file listing; driver metadata I/O, zero Spark jobs.
@@ -347,6 +349,11 @@ private[graft] object StoreFs {
       out.result()
     }.getOrElse(Seq.empty)
 
+  /** Driver-side [min, max] of a long column across every parquet
+    * file under `dir`, read from the file FOOTERS' column statistics
+    * — metadata I/O only, zero Spark jobs. None when any chunk lacks
+    * usable stats (caller falls back to an aggregation).
+    */
   def footerLongRange(dir: String, column: String): Option[(Long, Long)] =
     scala.util.Try {
       val p = new Path(dir)

@@ -95,16 +95,17 @@ object CoreScale {
         pk = Seq("user_id"), fieldSpecs = Nil,
         passthrough = Seq("event_id", "value"), numBuckets = Some(64))
       val initial = ChangeCompaction.compactForMerge(big, Seq("user_id"))
+      val initialSummary = CdcPipeline.summarize(cfg, initial)
       val v0 = time("bucketed publish: initial full build") {
-        CdcPipeline.mergeAndPublish(spark, cfg, initial, n, -1L).version
+        CdcPipeline.mergeAndPublish(spark, cfg, initial, initialSummary, -1L).version
       }
       // a handful of keys — the typical micro-batch regime; ≤ 5 of
       // the 64 buckets get rewritten, the rest carry by reference
       val delta = ChangeCompaction.compactForMerge(
         big.filter(col("user_id") < 5), Seq("user_id"))
-      val dRows = delta.count()
-      val v1 = time(s"bucketed publish: $dRows-key delta onto the full target") {
-        CdcPipeline.mergeAndPublish(spark, cfg, delta, dRows, -1L).version
+      val dSummary = CdcPipeline.summarize(cfg, delta)
+      val v1 = time(s"bucketed publish: ${dSummary.rows}-key delta onto the full target") {
+        CdcPipeline.mergeAndPublish(spark, cfg, delta, dSummary, -1L).version
       }
       val b0 = dirBytes(new java.io.File(s"$tdir/v$v0"))
       val b1 = dirBytes(new java.io.File(s"$tdir/v$v1"))
@@ -146,8 +147,9 @@ object CoreScale {
         passthrough = Seq("user_id", "value"), numBuckets = Some(64))
       val facts = big.withColumn("pk", col(CdcEnvelope.PosCol))
       val compacted = ChangeCompaction.compactForMerge(facts, Seq("pk"))
+      val compactedSummary = CdcPipeline.summarize(cfg, compacted)
       time("ivm: 10M-key bucketed target build (one-time)") {
-        CdcPipeline.mergeAndPublish(spark, cfg, compacted, n, -1L)
+        CdcPipeline.mergeAndPublish(spark, cfg, compacted, compactedSummary, -1L)
       }
       def withGrp(df: org.apache.spark.sql.DataFrame) =
         df.withColumn("grp", pmod(col("user_id"), lit(1024L)))

@@ -37,7 +37,7 @@ object ReplicationDelta {
         passthrough = Seq("v"), numBuckets = Some(64))
       val delta = Seq.tabulate(5)(i => (i * 1000L + 1L, 7777777L, CdcEnvelope.Upsert))
         .toDF("id", "v", CdcEnvelope.OpCol)
-      P.mergeAndPublish(spark, cfg, delta, 5L) // src v1
+      P.mergeAndPublish(spark, cfg, delta, P.summarize(cfg, delta)) // src v1
       val (r1, tInc) = secs { Replication.replicate(spark, src, dst, Seq("id")).get }
       val m1 = P.manifest(dst, r1.dstVersion).get
       val rewritten = m1.buckets.values.count(_ == s"v${r1.dstVersion}")

@@ -21,11 +21,12 @@ object CdcStream {
 
   /** Compact + project one micro-batch of envelope rows and merge it
     * into the versioned parquet target via the batch pipeline's
-    * bucketed `mergeAndPublish`: the compacted batch is counted
-    * (it's cached and typically tiny), so the anti-join broadcasts
-    * the delta keys instead of shuffling the full-width target every
-    * micro-batch (ADVICE r2), and only the touched PK-hash buckets
-    * are read and rewritten. Exactly-once: the checkpoint replays
+    * bucketed `mergeAndPublish`: one pass over the compacted batch
+    * (cached and typically tiny) counts it and collects its touched
+    * PK-hash buckets, so the anti-join broadcasts the delta keys
+    * instead of shuffling the full-width target every micro-batch
+    * (ADVICE r2), and only those buckets are read and rewritten, in
+    * the target and in the SCD2 open store. Exactly-once: the checkpoint replays
     * at-least-once, and the version pointer records the batchId that
     * produced each committed version, so a replayed batch (same
     * batchId, same data — file/Kafka sources are replayable) is
@@ -62,13 +63,13 @@ object CdcStream {
         cfg.project(batch), cfg, windowKey = batchId)._1
       val changes = ChangeCompaction.compactForMerge(projected, cfg.pk).cache()
       try {
-        val deltaRows = changes.count()
+        val summary = CdcPipeline.summarize(cfg, changes)
         if (targetFresh)
-          CdcPipeline.mergeAndPublish(batch.sparkSession, cfg, changes, deltaRows, batchId)
+          CdcPipeline.mergeAndPublish(batch.sparkSession, cfg, changes, summary, batchId)
         // changesMatchCurrent: this batch produced the current version
         // (either just now, or before the crash being replayed — the
         // pointer records which batch made it)
-        CdcPipeline.maintainRollups(batch.sparkSession, cfg, changes, Some(deltaRows),
+        CdcPipeline.maintainRollups(batch.sparkSession, cfg, changes, Some(summary.rows),
           changesMatchCurrent = targetFresh || committedBatch.contains(batchId))
         // history advances on the UNcompacted batch, keyed on the
         // batch id; targetExistedBefore = some OLDER batch built the
@@ -81,10 +82,9 @@ object CdcStream {
         // proves older batches ran, and a late declaration's replayed
         // declaring batch still bootstraps instead of silently
         // dropping every pre-declaration row (ADVICE r6).
-        Scd2Store.maintain(batch.sparkSession, cfg, projected, seqKey = batchId,
+        Scd2Store.maintain(batch.sparkSession, cfg, projected, summary, seqKey = batchId,
           targetExistedBefore = committedBatch.exists(_ < batchId) ||
-            CdcPipeline.currentVersion(cfg.targetPath).exists(_ > 0),
-          windowEmpty = deltaRows == 0)
+            CdcPipeline.currentVersion(cfg.targetPath).exists(_ > 0))
         CdcPipeline.autoVacuum(cfg)
         targetFresh
       } finally changes.unpersist()

@@ -849,6 +849,23 @@ class CdcPipelineSpec extends AnyFunSuite {
     assert(JobLog.read(spark, log).get.count() === 60)
   }
 
+  test("a job-log path that is a regular file is refused, not read as the epoch") {
+    val file = Files.createTempFile("graft-joblog", ".log").toString
+    val target = tmp()
+    val e1 = intercept[IllegalArgumentException](JobLog.lastWatermark(spark, file, cfg(target)))
+    assert(e1.getMessage.contains(file))
+    val rec = JobLog.RunRecord("run-0", "events_cdc", "graft", "events_snapshot",
+      0L, 100L, 0L, "SUCCESS", "", 1, 0, 0)
+    val e2 = intercept[IllegalArgumentException](JobLog.append(spark, file, rec))
+    assert(e2.getMessage.contains(file))
+    // the run refuses before it merges the source from the epoch
+    val env = CdcEnvelope.fromEvents(graft.Tables.events(spark, graft.LocalSpark.sf))
+    intercept[IllegalArgumentException](CdcPipeline.run(spark, cfg(target), env, file, w1))
+    assert(CdcPipeline.currentVersion(target).isEmpty)
+    // a missing log directory is still a fresh log
+    assert(JobLog.lastWatermark(spark, s"${tmp()}/absent", cfg(target)) === 0L)
+  }
+
   test("a failing run writes a FAILED job-log row and leaves the snapshot untouched") {
     val env = CdcEnvelope.fromEvents(graft.Tables.events(spark, graft.LocalSpark.sf))
     val target = tmp(); val log = tmp()
@@ -1147,8 +1164,10 @@ class CdcPipelineSpec extends AnyFunSuite {
     assert(open.select("user_id", "k", "event_id", "value").collect().map(_.toSeq).toSet ===
       snap.select("user_id", "k", "event_id", "value").collect().map(_.toSeq).toSet)
     // replayed window (same idempotence key) is a no-op
-    Scd2Store.maintain(spark, c, projectedWin(env, w1, w2), seqKey = w2,
-      targetExistedBefore = true, windowEmpty = false)
+    val w2win = projectedWin(env, w1, w2)
+    Scd2Store.maintain(spark, c, w2win,
+      CdcPipeline.summarize(c, ChangeCompaction.compactForMerge(w2win, Seq("user_id"))),
+      seqKey = w2, targetExistedBefore = true)
     assert(histRows(Scd2Store.readHistory(spark, c).get) === histRows(h2),
       "a replayed window must not advance the history twice")
   }
@@ -1190,7 +1209,7 @@ class CdcPipelineSpec extends AnyFunSuite {
     // simulate the crash window: the w2 merge publishes the target,
     // then the process dies before Scd2Store.maintain and the job log
     val w2changes = ChangeCompaction.compactForMerge(projectedWin(env, w1, w2), Seq("user_id"))
-    CdcPipeline.mergeAndPublish(spark, c, w2changes, w2changes.count())
+    CdcPipeline.mergeAndPublish(spark, c, w2changes, CdcPipeline.summarize(c, w2changes))
     assert(Scd2Store.lastAppliedSeq(c) === w1, "history still reflects window 1")
     // replay: the watermark never advanced, so run() re-merges the
     // same window (idempotent) and must apply the history delta ONCE
@@ -1494,9 +1513,10 @@ class CdcPipelineSpec extends AnyFunSuite {
     // advances the history, then dies before the job-log SUCCESS
     // append — the watermark still points at w1
     val w2changes = ChangeCompaction.compactForMerge(projectedWin(env, w1, w2), Seq("user_id"))
-    CdcPipeline.mergeAndPublish(spark, c, w2changes, w2changes.count())
-    Scd2Store.maintain(spark, c, projectedWin(env, w1, w2), seqKey = w2,
-      targetExistedBefore = true, windowEmpty = false, seqIsLoadTs = true)
+    val w2summary = CdcPipeline.summarize(c, w2changes)
+    CdcPipeline.mergeAndPublish(spark, c, w2changes, w2summary)
+    Scd2Store.maintain(spark, c, projectedWin(env, w1, w2), w2summary, seqKey = w2,
+      targetExistedBefore = true, seqIsLoadTs = true)
     assert(Scd2Store.lastAppliedSeq(c) === w2, "history reflects the crashed run's window")
     // replay: the scheduler passes FRESH wall-clock w3 > w2, so the
     // re-run's window is the SUPERSET (w1, w3] under a NEW key —

@@ -43,6 +43,9 @@ class ConstraintsSpec extends AnyFunSuite {
   private def changes(rows: (Long, Option[String], Option[Long], String)*) =
     rows.toSeq.toDF("id", "name", "value", "__op")
 
+  private def merge(dir: String, chg: org.apache.spark.sql.DataFrame) =
+    CdcPipeline.mergeAndPublish(spark, cfg(dir), chg, CdcPipeline.summarize(cfg(dir), chg))
+
   private def snap(dir: String): Map[Long, (String, Long)] =
     CdcPipeline.readSnapshot(spark, dir).get
       .select("id", "name", "value").as[(Long, String, Long)]
@@ -77,16 +80,14 @@ class ConstraintsSpec extends AnyFunSuite {
     CdcPipeline.addCheckConstraint(spark, dir, "pos_value", "value > 0")
     val before = snap(dir)
     val e = intercept[CdcPipeline.ConstraintViolationException] {
-      CdcPipeline.mergeAndPublish(spark, cfg(dir),
-        changes((4L, Some("d"), Some(-5L), "u"), (5L, Some("e"), Some(1L), "u")), 2L)
+      merge(dir, changes((4L, Some("d"), Some(-5L), "u"), (5L, Some("e"), Some(1L), "u")))
     }
     assert(e.counts === Map("pos_value" -> 1L))
     assert(CdcPipeline.currentVersion(dir) === Some(1L), "refused commit must not publish")
     assert(snap(dir) === before)
     // deletes are exempt (PK-only payload would read NULL anyway);
     // NULL predicate passes per SQL CHECK
-    CdcPipeline.mergeAndPublish(spark, cfg(dir),
-      changes((1L, None, None, "d"), (4L, Some("d"), None, "u")), 2L)
+    merge(dir, changes((1L, None, None, "d"), (4L, Some("d"), None, "u")))
     val after = CdcPipeline.readSnapshot(spark, dir).get
       .select("id", "value").as[(Long, Option[Long])].collect().toMap
     assert(!after.contains(1L) && after(4L).isEmpty)

@@ -141,10 +141,10 @@ class ExpectationsSpec extends AnyFunSuite {
     val r3 = CdcPipeline.run(spark, failing, env(Seq(
       (2L, "u", 3000L, 2L, 3000L, """{"k":2}""", 11L, 1.0))), log, 4000L)
     assert(r3.status === "SUCCESS" && r3.windowStartUs === 2000L)
-    // a job log that cannot take the FAILED row (a regular file where
-    // the log dir should be: no watermark, no room for the append's
-    // temp file) must not mask the batch's own failure
-    val unwritableLog = Files.createTempFile("graft-joblog", ".log").toString
+    // a job log that cannot take the FAILED row (its directory would
+    // sit under a regular file: no watermark yet, and no room for the
+    // append's temp file) must not mask the batch's own failure
+    val unwritableLog = s"${Files.createTempFile("graft-joblog", ".log")}/joblog"
     val e = intercept[Expectations.ExpectationFailedException] {
       CdcPipeline.run(spark, failing, env(Seq(
         (3L, "u", 5000L, 3L, 5000L, """{"k":3}""", 12L, -1.0))), unwritableLog, 6000L)

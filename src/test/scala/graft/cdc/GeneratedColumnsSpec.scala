@@ -67,9 +67,9 @@ class GeneratedColumnsSpec extends AnyFunSuite {
     CdcPipeline.addGeneratedColumn(dir, "v2", LongType, "value * 2")
     // merge updates value of id=2 and inserts id=4 — the merge's
     // column set is the config's (no v2 anywhere near it)
-    CdcPipeline.mergeAndPublish(spark, cfg(dir),
-      Seq((2L, "b", 200L, "u"), (4L, "d", 40L, "u"))
-        .toDF("id", "name", "value", "__op"), 2L)
+    val chg = Seq((2L, "b", 200L, "u"), (4L, "d", 40L, "u"))
+      .toDF("id", "name", "value", "__op")
+    CdcPipeline.mergeAndPublish(spark, cfg(dir), chg, CdcPipeline.summarize(cfg(dir), chg))
     val got = CdcPipeline.readSnapshot(spark, dir).get
       .select("id", "v2").as[(Long, Long)].collect().toMap
     assert(got === Map(1L -> 20L, 2L -> 400L, 3L -> 60L, 4L -> 80L))

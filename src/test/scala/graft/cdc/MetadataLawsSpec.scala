@@ -87,14 +87,15 @@ class MetadataLawsSpec extends AnyFunSuite {
             (id, p)
           }
           val dels = rows.keys.take(3).toSeq
+          val chg = changes(ups, dels)
           if (violate) {
             intercept[CdcPipeline.ConstraintViolationException] {
-              CdcPipeline.mergeAndPublish(spark, cfg, changes(ups, dels), 23L)
+              CdcPipeline.mergeAndPublish(spark, cfg, chg, CdcPipeline.summarize(cfg, chg))
             }
             assert(CdcPipeline.currentVersion(dir).get === verBefore,
               s"step $step: refused merge must not publish")
           } else {
-            CdcPipeline.mergeAndPublish(spark, cfg, changes(ups, dels), 23L)
+            CdcPipeline.mergeAndPublish(spark, cfg, chg, CdcPipeline.summarize(cfg, chg))
             ups.foreach { case (id, p) => rows(id) = p }
             dels.foreach(rows.remove)
           }

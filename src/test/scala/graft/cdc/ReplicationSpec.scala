@@ -29,7 +29,7 @@ class ReplicationSpec extends AnyFunSuite {
     val rows = ups.map { case (i, v) => (i, v, CdcEnvelope.Upsert) } ++
       dels.map(i => (i, 0L, CdcEnvelope.Delete))
     val df = rows.toDF("id", "v", CdcEnvelope.OpCol)
-    CdcPipeline.mergeAndPublish(spark, cfg(src), df, rows.size.toLong)
+    CdcPipeline.mergeAndPublish(spark, cfg(src), df, CdcPipeline.summarize(cfg(src), df))
   }
 
   private def rows(dir: String): Set[(Long, Long)] =

@@ -361,7 +361,8 @@ class CdcStreamSpec extends AnyFunSuite {
       (1L, "u", 300L, 8L, 300L, """{"k":12}""", 8L, 1.2)) // update 1
     val projected = dCfg.project(toDf(batch3))
     val changes = ChangeCompaction.compactForMerge(projected, Seq("user_id"))
-    CdcPipeline.mergeAndPublish(spark, dCfg, changes, changes.count(), batchId = 2)
+    CdcPipeline.mergeAndPublish(spark, dCfg, changes, CdcPipeline.summarize(dCfg, changes),
+      batchId = 2)
     assert(Scd2Store.lastAppliedSeq(dCfg) === -1L, "history untouched by the crashed attempt")
     // checkpoint replays batch 2: the pointer already carries batchId 2,
     // so committedBatch.exists(_ < batchId) is false — but older batches
@@ -587,7 +588,8 @@ class CdcStreamSpec extends AnyFunSuite {
     // simulate the crash window: batch 1's target merge commits, the
     // process dies before maintainRollups runs
     val changes = CdcStream.compactBatch(toDf(batch2), tCfg).cache()
-    try CdcPipeline.mergeAndPublish(spark, tCfg, changes, changes.count(), batchId = 1L)
+    try CdcPipeline.mergeAndPublish(spark, tCfg, changes, CdcPipeline.summarize(tCfg, changes),
+      batchId = 1L)
     finally changes.unpersist()
     val curV = CdcPipeline.currentVersion(tCfg.targetPath).get
     assert(CdcPipeline.rollupAsOfVersion(tCfg, "by_grp") === curV - 1,
