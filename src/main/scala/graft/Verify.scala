@@ -1,7 +1,10 @@
 package graft
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare. A query that
+  * throws writes no output; the dump goes on through every query and
+  * writes oracle_sql.json, then exits 1 naming each failed query on
+  * stderr. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
@@ -12,13 +15,15 @@ object Verify {
     // contract as Bench's); absent = the full driver surface
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    SparkEntry.queries
+    val failed = SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
+      .flatMap { case (name, fn) =>
+      try {
+        fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+        None
+      } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        Some(name)
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
@@ -37,5 +42,9 @@ object Verify {
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
+    if (failed.nonEmpty) {
+      System.err.println(s"[verify] ${failed.size} queries failed: ${failed.mkString(", ")}")
+      sys.exit(1)
+    }
   }
 }

@@ -154,7 +154,7 @@ final case class CdcTableConfig(
     numBuckets: Option[Int] = None,
     /** Rollups the pipeline maintains automatically after every merge
       * window / micro-batch (batch `run` and streaming
-      * `mergeBatchToTarget` both call `maintainRollups`).
+      * `mergeBatchToTarget` both apply through `CdcPipeline.apply`).
       */
     rollups: Seq[RollupSpec] = Nil,
     /** When set, every successful publish vacuums the target AND each

@@ -3,6 +3,7 @@ package graft.cdc
 import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, IntegerType, LongType, NumericType, StringType, StructField, StructType}
+import scala.jdk.CollectionConverters._
 
 /** One incremental merge run — the whole of the reference procedure
   * `PS_SP_ETL_MERGE_JOB` (bigquery_syntex_merge_sql/merge.sql) /
@@ -590,19 +591,110 @@ object CdcPipeline {
     next
   }
 
-  /** Per-bucket min/max of the declared stats columns, aggregated
-    * from the files just written under `dir` — reading the
-    * delta-sized output back (ONE extra scan+agg over delta bytes,
-    * none at all when `statsCols` is empty) instead of re-evaluating
-    * the merge lineage a second time. Supported column types: numeric
-    * and string; anything else (and all-NULL buckets) yields no entry
-    * = unknown = never pruned. Values serialize canonically
-    * (BigDecimal for numerics) so the driver-side prune decision is
-    * exact.
+  /** Per-bucket min/max of the declared stats columns of the files
+    * just written under `dir`. Integral (byte/short/int/long) and
+    * string columns come from the files' parquet footers, read on the
+    * driver with no Spark job ([[footerStats]]). Every other column,
+    * and one whose footers lack usable statistics, is aggregated from
+    * the written files by one scan (none when nothing is left over).
+    * Supported column types: numeric and string; anything else (and
+    * all-NULL buckets) yields no entry = unknown = never pruned.
+    * Values serialize canonically (BigDecimal for numerics) so the
+    * driver-side prune decision is exact.
     */
   private def bucketStats(spark: SparkSession, dir: String,
       statsCols: Seq[String]): Map[Int, Map[String, (String, String)]] = {
-    if (statsCols.isEmpty || writtenBuckets(dir).isEmpty) Map.empty
+    val buckets = writtenBuckets(dir)
+    if (statsCols.isEmpty || buckets.isEmpty) Map.empty
+    else {
+      val footers = buckets.toSeq.map(b => b -> StoreFs.footers(s"$dir/$BucketCol=$b"))
+      val fromFooters = statsCols.flatMap(c => footerStats(footers, c).map(c -> _)).toMap
+      val aggregated = aggregatedStats(spark, dir, statsCols.filterNot(fromFooters.contains))
+      buckets.map { b =>
+        b -> (fromFooters.flatMap { case (c, byBucket) => byBucket.get(b).map(c -> _) } ++
+          aggregated.getOrElse(b, Map.empty))
+      }.toMap.filter(_._2.nonEmpty)
+    }
+  }
+
+  /** One column's per-bucket (min, max) from parquet footers, or None
+    * when the aggregation must compute it: the column is not an
+    * integral or string column of one physical type in every file, or
+    * a column chunk with non-null values carries no min/max (parquet
+    * drops binary statistics over 4 KB). Per bucket, the min of the
+    * chunk minimums and the max of the chunk maximums, with strings
+    * compared in UTF-8 binary order, the order of Spark's min/max. A
+    * chunk whose null count equals its row count adds nothing, so an
+    * all-NULL bucket has no entry. Values are boxed as the Spark type
+    * the column reads as before [[statStr]], so the strings equal the
+    * aggregation's.
+    */
+  private def footerStats(
+      footers: Seq[(Int, Seq[org.apache.parquet.hadoop.metadata.ParquetMetadata])],
+      column: String): Option[Map[Int, (String, String)]] = {
+    import org.apache.parquet.io.api.Binary
+    import org.apache.parquet.schema.LogicalTypeAnnotation.{IntLogicalTypeAnnotation,
+      StringLogicalTypeAnnotation}
+    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.{BINARY, INT32, INT64}
+    val types = footers.flatMap(_._2).map { f =>
+      val schema = f.getFileMetaData.getSchema
+      Option.when(schema.containsField(column))(schema.getType(schema.getFieldIndex(column)))
+        .filter(_.isPrimitive).map { t =>
+          (t.asPrimitiveType.getPrimitiveTypeName, Option(t.getLogicalTypeAnnotation))
+        }
+    }.distinct
+    // bit width of the Spark integral type the column reads as; 0 = string
+    val width: Option[Int] = types match {
+      case Seq(Some((INT32, None))) => Some(32)
+      case Seq(Some((INT64, None))) => Some(64)
+      case Seq(Some((INT32 | INT64, Some(a: IntLogicalTypeAnnotation)))) if a.isSigned =>
+        Some(a.getBitWidth)
+      case Seq(Some((BINARY, Some(_: StringLogicalTypeAnnotation)))) => Some(0)
+      case _ => None
+    }
+    def key(v: Any): Comparable[Any] = (v match {
+      case b: Binary => org.apache.spark.unsafe.types.UTF8String.fromBytes(b.getBytes)
+      case n: Number => java.lang.Long.valueOf(n.longValue)
+    }).asInstanceOf[Comparable[Any]]
+    def boxed(v: Any): Any = v match {
+      case b: Binary => b.toStringUsingUTF8
+      case n: Number => width match {
+        case Some(8) => n.byteValue
+        case Some(16) => n.shortValue
+        case Some(32) => n.intValue
+        case _ => n.longValue
+      }
+    }
+    width.flatMap { _ =>
+      val perBucket = footers.map { case (b, fs) =>
+        val chunks = for {
+          f <- fs
+          block <- f.getBlocks.asScala
+          chunk <- block.getColumns.asScala if chunk.getPath.toDotString == column
+          s = chunk.getStatistics
+          if s == null || !s.isNumNullsSet || s.getNumNulls != block.getRowCount
+        } yield Option.when(s != null && s.hasNonNullValue)(
+          (s.genericGetMin: Any, s.genericGetMax: Any))
+        Option.when(!chunks.contains(None))(b -> chunks.flatten.reduceOption { (x, y) =>
+          (if (key(y._1).compareTo(key(x._1)) < 0) y._1 else x._1,
+            if (key(y._2).compareTo(key(x._2)) > 0) y._2 else x._2)
+        })
+      }
+      Option.when(!perBucket.contains(None))(perBucket.flatten.collect {
+        case (b, Some((lo, hi))) => b -> ((statStr(boxed(lo)), statStr(boxed(hi))))
+      }.toMap)
+    }
+  }
+
+  /** Per-bucket min/max of `statsCols` aggregated from the files under
+    * `dir` — reading the delta-sized output back (one scan+agg, none
+    * at all when `statsCols` is empty) instead of re-evaluating the
+    * write's lineage. Columns of other than numeric or string type get
+    * no entry.
+    */
+  private[cdc] def aggregatedStats(spark: SparkSession, dir: String,
+      statsCols: Seq[String]): Map[Int, Map[String, (String, String)]] =
+    if (statsCols.isEmpty) Map.empty
     else {
       val df = spark.read.parquet(dir) // BucketCol comes back as the partition col
       val cols = statsCols.filter(df.columns.contains).filter { c =>
@@ -627,7 +719,6 @@ object CdcPipeline {
           }.toMap.filter(_._2.nonEmpty)
       }
     }
-  }
 
   /** Canonical serialized form of a stat value: numerics through
     * BigDecimal (exact, parseable back for comparison), strings as-is.
@@ -3546,10 +3637,24 @@ object CdcPipeline {
       counts.zipWithIndex.map { case (nb, i) => nb -> row.getSeq[Int](i + 2).toSet }.toMap)
   }
 
+  /** A71: CHECK constraints gate the rows a merge of `changes` into
+    * cfg's target (currently at manifest `m`) INTRODUCES — upserts
+    * only, deletes carry no payload. Delta-sized by induction; zero
+    * jobs when none are declared. Throws
+    * [[ConstraintViolationException]] before anything is written.
+    */
+  private def gateConstraints(cfg: CdcTableConfig, changes: DataFrame, m: Manifest): Unit =
+    if (constraintsOf(m).nonEmpty)
+      enforceConstraints(m,
+        (if (changes.columns.contains(CdcEnvelope.OpCol))
+          changes.filter(col(CdcEnvelope.OpCol) =!= CdcEnvelope.Delete)
+        else changes).select(cfg.targetCols.filter(changes.columns.contains).map(col): _*),
+        cfg.targetPath)
+
   /** Merge compacted `changes` into cfg's target and publish the next
-    * version — the shared apply path of the batch pipeline and the
-    * streaming foreachBatch. With a bucketed target this reads and
-    * rewrites only the buckets the delta touches, taken from
+    * version — the merge step of [[apply]], which has already run
+    * [[gateConstraints]] on the same base (`gated`). With a bucketed
+    * target this reads and rewrites only the buckets the delta touches, taken from
     * `summary` (the [[summarize]] of `changes`), which refuses with
     * [[ConcurrentWriteException]] when the target's bucket count is
     * not one it was taken for. The summary's row count picks the
@@ -3563,7 +3668,7 @@ object CdcPipeline {
     */
   private[graft] def mergeAndPublish(spark: SparkSession, cfg: CdcTableConfig,
       changes: DataFrame, summary: ChangeSummary, batchId: Long = -1L,
-      swapNow: Boolean = true): MergeOutcome = {
+      swapNow: Boolean = true, gated: Boolean = false): MergeOutcome = {
     val deltaRows = summary.rows
     val targetCols = cfg.targetCols.map(col)
     // config evolution: a target column declared after the stored
@@ -3584,16 +3689,7 @@ object CdcPipeline {
       case Some(v) =>
         manifest(cfg.targetPath, v) match {
           case Some(m) =>
-            // A71: CHECK constraints gate the rows this merge
-            // INTRODUCES (upserts only — deletes carry no payload).
-            // Delta-sized by induction; zero jobs when none declared.
-            if (constraintsOf(m).nonEmpty)
-              enforceConstraints(m,
-                (if (changes.columns.contains(CdcEnvelope.OpCol))
-                  changes.filter(col(CdcEnvelope.OpCol) =!= CdcEnvelope.Delete)
-                else changes).select(
-                  cfg.targetCols.filter(changes.columns.contains).map(col): _*),
-                cfg.targetPath)
+            if (!gated) gateConstraints(cfg, changes, m)
             val touched = summary.touched(cfg.targetPath, m.numBuckets)
             val subset = readBuckets(spark, cfg.targetPath, m, touched)
             val updated = labeled(spark, "store.merge: matched keys") {
@@ -3773,18 +3869,22 @@ object CdcPipeline {
     lastCommittedBatch(rollupPath(cfg, name)).getOrElse(-1L)
 
   /** Bring every declared rollup up to the target's CURRENT version —
-    * called by the batch `run` and the streaming foreachBatch after
-    * (or instead of, on a replay) the target publish.
+    * called by [[apply]] after (or instead of, on a replay) the
+    * target publish, on the same thread as the merge.
     *
     * Crash safety: the rollup commit is its own atomic pointer swap
-    * carrying the target version it reflects. Every crash window
-    * converges on replay:
-    *   - crash before the target publish → nothing moved;
+    * carrying the target version it reflects. The steady-state SCD2
+    * history advance runs beside the merge and the rollups and
+    * commits to its own store, so it may land before, between or
+    * after them. Every crash window converges on replay:
+    *   - crash before the target publish → the target and rollups
+    *     did not move; the history may have advanced, and the replay
+    *     skips it by its idempotence key;
     *   - crash between target publish and rollup publish → the replay
     *     skips the merge (batchId guard) but sees the rollup trailing
     *     by one version and applies the delta against the PRE-merge
-    *     snapshot read by time travel (`readSnapshotAt(curV - 1)` —
-    *     the default vacuum keep-window holds it);
+    *     version read by time travel (the default vacuum keep-window
+    *     holds it);
     *   - replay of a fully-committed batch → rollup is current,
     *     nothing is touched (never double-applied).
     *
@@ -3794,10 +3894,12 @@ object CdcPipeline {
     * version (declared after the target existed, or its pre-state was
     * vacuumed), the state is recomputed from the current snapshot —
     * cost ∝ target, the always-correct repair path. The steady-state
-    * path costs ∝ |delta| + |state| only.
+    * path reads, of the pre-merge version, only the buckets `summary`
+    * says the changes touch (every row they can retire lives there),
+    * so its read of the pre-image is ∝ touched buckets, not target.
     */
   private[graft] def maintainRollups(spark: SparkSession, cfg: CdcTableConfig,
-      changes: DataFrame, deltaRows: Option[Long],
+      changes: DataFrame, summary: ChangeSummary,
       changesMatchCurrent: Boolean): Unit = {
     if (cfg.rollups.isEmpty) return
     val curV = currentVersion(cfg.targetPath).getOrElse(return)
@@ -3825,14 +3927,14 @@ object CdcPipeline {
               (stored.nonEmpty || lastCommittedBatch(dir).isEmpty)) {
             val preOpt =
               if (asOf < 0) Some(changes.select(cfg.targetCols.map(col): _*).filter(lit(false)))
-              else readSnapshotAt(spark, cfg.targetPath, asOf)
+              else readTouchedAt(spark, cfg.targetPath, asOf, summary)
             preOpt.map { pre =>
               val state0 = stored.getOrElse(
                 IncrementalAgg.fromSnapshot(
                   rs.derive(pre).filter(lit(false)), rs.groupCols, rs.measures))
               IncrementalAgg.applyDelta(state0, rs.derive(pre), rs.derive(changes),
                 cfg.pk, rs.groupCols, rs.measures,
-                rs.derive(readSnapshot(spark, cfg.targetPath).get), deltaRows)
+                rs.derive(readSnapshot(spark, cfg.targetPath).get), Some(summary.rows))
             }
           } else None
         val state1 = incremental.getOrElse(
@@ -3846,6 +3948,20 @@ object CdcPipeline {
       }
     }
   }
+
+  /** The buckets of `targetDir`'s version `version` that `summary`'s
+    * keys hash to — every row those changes can match. A version
+    * whose bucket count the summary lacks, or a pre-manifest flat
+    * version, reads whole. None when the version was vacuumed.
+    */
+  private def readTouchedAt(spark: SparkSession, targetDir: String, version: Long,
+      summary: ChangeSummary): Option[DataFrame] =
+    manifest(targetDir, version) match {
+      case Some(m) =>
+        val buckets = summary.bucketsByCount.getOrElse(m.numBuckets, m.buckets.keySet)
+        Some(applyVirtual(readBuckets(spark, targetDir, m, buckets), m))
+      case None => readSnapshotAt(spark, targetDir, version)
+    }
 
   /** Vacuum the target and every rollup store down to
     * `cfg.autoVacuumKeep` versions (no-op when unset). Keep is
@@ -3862,6 +3978,123 @@ object CdcPipeline {
       cfg.rollups.foreach(rs => vacuum(rollupPath(cfg, rs.name), k))
       cfg.scd2.foreach(_ => vacuum(Scd2Store.openPath(cfg), k))
     }
+
+  /** How one [[apply]] treats its changes. Each surface decides it on
+    * the driver from the pre-merge pointers, before anything is
+    * written, and keeps its own idempotence key and replay rules.
+    *
+    *  - `batchId`: recorded in the target pointer (streaming: the
+    *    micro-batch id; batch runs: -1).
+    *  - `seqKey`: the SCD2 history's idempotence key (batch: the
+    *    window end; streaming: the batch id).
+    *  - `targetFresh`: the target has not committed these changes, so
+    *    they are merged; false on a replay that found them committed.
+    *  - `changesMatchCurrent`: once merged, these changes produced the
+    *    target's current version (see [[maintainRollups]]).
+    *  - `targetExistedBefore`, `seqIsLoadTs`: see `Scd2Store.maintain`.
+    */
+  private[graft] final case class Replay(batchId: Long, seqKey: Long, targetFresh: Boolean,
+      changesMatchCurrent: Boolean, targetExistedBefore: Boolean, seqIsLoadTs: Boolean)
+
+  /** The one apply path of the batch [[run]] and the streaming
+    * micro-batch (`CdcStream.mergeBatchToTarget`): merge the compacted
+    * `changes` into the target and publish (when `r.targetFresh`),
+    * advance the rollups, advance the SCD2 history by the
+    * UNcompacted `projected` (every event keeps its slice), then
+    * vacuum. `summary` is the [[summarize]] of `changes`; `surface`
+    * prefixes each phase's job description (`<surface>: rollups`).
+    *
+    * The merge and the rollups form one chain on the calling thread:
+    * the rollups read the version the merge published. The
+    * steady-state history advance — its open store exists and has
+    * not applied `r.seqKey` — reads and writes only the history
+    * store, so it runs [[beside]] that chain, after `side`. Otherwise
+    * (no SCD2, a replayed key, or a first advance that creates the
+    * open store or bootstraps a late declaration from the post-merge
+    * target) `side` runs first and the history after the rollups.
+    * The CHECK-constraint gate runs before either branch, so a
+    * rejected merge writes nothing anywhere. Returns the merge outcome
+    * (None when the target was not fresh) and `side`'s result.
+    */
+  private[graft] def apply[T](spark: SparkSession, cfg: CdcTableConfig, projected: DataFrame,
+      changes: DataFrame, summary: ChangeSummary, r: Replay, surface: String)
+      (side: => T): (Option[MergeOutcome], T) = {
+    def phase[A](name: String)(body: => A): A = labeled(spark, s"$surface: $name")(body)
+    val historyBeside = cfg.scd2.nonEmpty &&
+      currentVersion(Scd2Store.openPath(cfg)).isDefined && Scd2Store.lastAppliedSeq(cfg) < r.seqKey
+    if (r.targetFresh) phase("merge+publish") {
+      currentVersion(cfg.targetPath).flatMap(manifest(cfg.targetPath, _))
+        .foreach(gateConstraints(cfg, changes, _))
+    }
+    def mergeThenRollups(): Option[MergeOutcome] = {
+      val outcome = Option.when(r.targetFresh)(phase("merge+publish") {
+        mergeAndPublish(spark, cfg, changes, summary, r.batchId, gated = true)
+      })
+      phase("rollups") {
+        maintainRollups(spark, cfg, changes, summary, r.changesMatchCurrent)
+      }
+      outcome
+    }
+    def history(): Unit = phase("scd2 advance") {
+      Scd2Store.maintain(spark, cfg, projected, summary, r.seqKey, r.targetExistedBefore,
+        r.seqIsLoadTs)
+    }
+    val result =
+      if (historyBeside) beside(spark) { val t = side; history(); t } (mergeThenRollups())
+      else {
+        val t = side
+        val outcome = mergeThenRollups()
+        history()
+        (outcome, t)
+      }
+    autoVacuum(cfg)
+    result
+  }
+
+  /** Spark local properties a [[beside]] worker starts with: the
+    * caller's job group, description, scheduler pool and job tags.
+    */
+  private val BranchProps = Seq("spark.jobGroup.id", "spark.job.description",
+    "spark.job.interruptOnCancel", "spark.scheduler.pool", "spark.job.tags")
+
+  /** Run `side` on one new thread while `main` runs on the calling
+    * thread, and return both results. The worker starts with the
+    * caller's active session and Spark local properties, so its jobs
+    * are grouped, labeled, pooled and cancelled with the caller's.
+    * Both branches have always finished when this returns or throws;
+    * a failure is rethrown as the one that happened first, with the
+    * other branch's failure suppressed.
+    */
+  private def beside[M, S](spark: SparkSession)(side: => S)(main: => M): (M, S) = {
+    val sc = spark.sparkContext
+    val props = BranchProps.map(k => k -> sc.getLocalProperty(k))
+    val first = new java.util.concurrent.atomic.AtomicReference[Throwable]()
+    def attempt[A](body: => A): Either[Throwable, A] =
+      try Right(body)
+      catch { case t: Throwable => first.compareAndSet(null, t); Left(t) }
+    var sideOut: Either[Throwable, S] = null
+    val worker = new Thread(() => {
+      SparkSession.setActiveSession(spark)
+      props.foreach { case (k, v) => sc.setLocalProperty(k, v) }
+      sideOut = attempt(side)
+    }, "graft-apply-side")
+    worker.setDaemon(true)
+    worker.start()
+    val mainOut = attempt(main)
+    var interrupted = false
+    while (worker.isAlive)
+      try worker.join()
+      catch { case _: InterruptedException => interrupted = true }
+    if (interrupted) Thread.currentThread().interrupt()
+    (mainOut, sideOut) match {
+      case (Right(m), Right(s)) => (m, s)
+      case _ =>
+        val err = first.get
+        Seq(mainOut, sideOut).collect { case Left(t) if t ne err => t }
+          .foreach(err.addSuppressed)
+        throw err
+    }
+  }
 
   /** Run one incremental merge for `cfg`, reading envelope rows from
     * `source` (already in CdcEnvelope shape), windowed to
@@ -3888,14 +4121,18 @@ object CdcPipeline {
       // window projection (JSON field extraction per row) feeds the
       // compaction, the merge AND the SCD2 history advance — without
       // the cache each consumer re-parses the window's props. Delta-
-      // sized (one window of changes), unpersisted in the finally.
-      val (projectedGated, nQuarantined) = gateExpectations(projectedRaw, cfg, nowUs)
+      // sized (one window of changes), unpersisted in the finally,
+      // which runs only after both apply branches have finished.
+      val (projectedGated, nQuarantined) = labeled(spark, "cdc.run: expectations") {
+        gateExpectations(projectedRaw, cfg, nowUs)
+      }
       projected = projectedGated.cache()
       changes = ChangeCompaction.compactForMerge(projected, cfg.pk).cache()
       // one aggregation job computes both op-split counts and the
       // touched buckets of the target and the SCD2 open store (and
-      // materializes the cache); the merge and the history advance
-      // reuse it instead of collecting their bucket sets again.
+      // materializes the cache); the merge, the rollups and the
+      // history advance reuse it instead of collecting their bucket
+      // sets again.
       val summary = labeled(spark, "cdc.run: op counts") {
         summarize(cfg, changes)
       }
@@ -3909,35 +4146,30 @@ object CdcPipeline {
       // With expectations the quarantine may have removed the extreme
       // rows, so the original window is aggregated as before.
       val boundsSrc = if (cfg.expectations.isEmpty) projected else win
-      val bounds = labeled(spark, "cdc.run: window bounds") {
-        boundsSrc.agg(min(col(CdcEnvelope.LoadTsCol)), max(col(CdcEnvelope.LoadTsCol))).collect()(0)
+      // The window end keys the history: a crash-replay of this window
+      // re-merges the target idempotently but must not re-apply
+      // history deltas. targetExistedBefore = a SUCCESS row predates
+      // this window (startUs > 0), so a crash-replay of the target-
+      // creating window still builds its history incrementally from
+      // the window env, not from a bootstrap. seqIsLoadTs: the window
+      // end IS a load_ts bound, so a replay whose scheduler passed
+      // fresh wall-clock (superset window, larger seqKey) applies only
+      // the not-yet-applied suffix. The window's changes always
+      // produce the next target version, so the rollups advance by
+      // delta (reference: the derived-table refresh inside the
+      // procedure, merge.sql:520–581). Only the job-log row needs the
+      // load_ts bounds, so they are taken on the history's branch.
+      val replay = Replay(batchId = -1L, seqKey = nowUs, targetFresh = true,
+        changesMatchCurrent = true, targetExistedBefore = startUs > 0, seqIsLoadTs = true)
+      val (merged, bounds) = apply(spark, cfg, projected, changes, summary, replay, "cdc.run") {
+        labeled(spark, "cdc.run: window bounds") {
+          boundsSrc.agg(min(col(CdcEnvelope.LoadTsCol)), max(col(CdcEnvelope.LoadTsCol)))
+            .collect()(0)
+        }
       }
+      val outcome = merged.get
       val (cdcStart, cdcEnd) =
         if (bounds.isNullAt(0)) (nowUs, nowUs) else (bounds.getLong(0), bounds.getLong(1))
-      val outcome = labeled(spark, "cdc.run: merge+publish") {
-        mergeAndPublish(spark, cfg, changes, summary)
-      }
-      // this window's changes produced the now-current version, so the
-      // declared rollups advance by delta (reference: the derived-table
-      // refresh inside the procedure, merge.sql:520–581)
-      labeled(spark, "cdc.run: rollups") {
-        maintainRollups(spark, cfg, changes, Some(summary.rows), changesMatchCurrent = true)
-      }
-      // the SCD2 history advances by the UNcompacted window (every
-      // event keeps its slice), keyed on the window end: a crash-
-      // replay of this window re-merges the target idempotently but
-      // must not re-apply history deltas. targetExistedBefore = a
-      // SUCCESS row predates this window (startUs > 0), so a crash-
-      // replay of the target-creating window still builds its history
-      // incrementally from the window env, not from a bootstrap.
-      // seqIsLoadTs: the window end IS a load_ts bound, so a replay
-      // whose scheduler passed fresh wall-clock (superset window,
-      // larger seqKey) applies only the not-yet-applied suffix.
-      labeled(spark, "cdc.run: scd2 advance") {
-        Scd2Store.maintain(spark, cfg, projected, summary, seqKey = nowUs,
-          targetExistedBefore = startUs > 0, seqIsLoadTs = true)
-      }
-      autoVacuum(cfg)
       // insert/update split: updated = upserts whose PK pre-existed
       // in the target; inserted = genuinely new PKs (the reference
       // logs both — merge.sql:520–534).

@@ -11,11 +11,14 @@ import org.apache.spark.sql.functions._
   * Maintains, per group, the distributive aggregate vector — row
   * count, long sum, non-null count (for avg), min/max, and mergeable
   * HLL sketches (for approximate distinct counts). The update cost is
-  * ∝ |delta| + |aggregate state|, never ∝ |fact table|: the only
-  * touch on the big snapshot is the same PK lookup the merge itself
-  * performs (broadcast the compacted keys, column-pruned to
-  * pk+group+value), and the state update is a join between two
-  * small-by-construction tables (adjustments ⟗ groups).
+  * ∝ |pre-merge rows passed in| + |delta| + |aggregate state|: the
+  * retire step semi-joins the `preMergeTarget` it is given with the
+  * broadcast compacted keys (column-pruned to pk+group+value), so it
+  * scans all of it. A caller keeps that ∝ delta by passing only the
+  * PK-hash buckets the keys touch, as the pipeline's rollup
+  * maintenance does (`CdcPipeline.maintainRollups`); the state update
+  * is a join between two small-by-construction tables (adjustments ⟗
+  * groups).
   *
   * Measure families, by delete behavior:
   *  - count / sum / avg-count are INVERTIBLE: a retired row subtracts
@@ -31,9 +34,9 @@ import org.apache.spark.sql.functions._
   *    support no removal at all — ANY retired row makes its group's
   *    sketch uncertain (the retired value may have been the last
   *    instance), so every group with a retirement rescans. Both
-  *    rescan sets are delta-bounded (broadcast semi join against the
-  *    post-merge snapshot); an insert-only window costs the same as
-  *    the sum/count path.
+  *    rescan sets are delta-bounded, found by a broadcast semi join
+  *    that scans the post-merge snapshot; an insert-only window costs
+  *    the same as the sum/count path.
   *
   * Reference anchor: the rollup views the reference refreshes after
   * each merge window (merge.sql:520–581 writes per-window counts to
@@ -113,14 +116,16 @@ object IncrementalAgg {
     * `changes` is the compacted change set (`compactForMerge` output:
     * one row per PK, `__op` retained, payload carrying the group and
     * value columns); `preMergeTarget` is the snapshot BEFORE this
-    * window's merge (the pipeline holds it anyway — the merge reads
-    * it too). Every changed PK retires its old contribution if the
+    * window's merge, or any part of it that holds every row of the
+    * changed PKs (the touched buckets), and is scanned whole. Every
+    * changed PK retires its old contribution if the
     * row existed (found by the same delta-sized key lookup the merge
     * does), and each upsert adds its new contribution — an update
     * that moves a row between groups decrements one group and
     * increments the other. Groups whose count reaches zero drop out.
     * `postMergeTarget` is only evaluated when a min/max/distinct
-    * measure forces a (delta-bounded) group rescan.
+    * measure forces a group rescan; the rescanned groups are
+    * delta-bounded, but finding their rows scans `postMergeTarget`.
     */
   def applyDelta(state: DataFrame, preMergeTarget: DataFrame, changes: DataFrame,
       pkCols: Seq[String], groupCols: Seq[String], m: Measures,

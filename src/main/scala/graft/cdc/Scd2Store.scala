@@ -382,10 +382,18 @@ object Scd2Store {
     }
 
   /** Advance the persisted history for one merge window / micro-batch
-    * — called by the batch `run` and the streaming foreachBatch AFTER
-    * the target publish. `env` is the window's PROJECTED (uncompacted)
-    * envelope: the history keeps every event's slice, not just the
-    * compacted newest-per-PK. `seqKey` is the window's idempotence key
+    * — called by `CdcPipeline.apply`, the apply path of the batch
+    * `run` and the streaming foreachBatch. Once the open store exists
+    * the advance reads and writes only this store, so it runs beside
+    * the target merge and the rollups and may commit before the
+    * target does; a crash that leaves the history ahead of the target
+    * converges on replay, which re-merges the target and skips the
+    * history by `seqKey`. A first advance (which creates the open
+    * store, or bootstraps a late declaration from the post-merge
+    * target) runs after the target publish. `env` is the window's
+    * PROJECTED (uncompacted) envelope: the history keeps every
+    * event's slice, not just the compacted newest-per-PK. `seqKey` is
+    * the window's idempotence key
     * (batch: the watermark window end; streaming: the batch id);
     * `targetExistedBefore` says prior windows were already merged
     * before this one (batch: a SUCCESS row predates this window;

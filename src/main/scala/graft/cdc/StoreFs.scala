@@ -349,6 +349,24 @@ private[graft] object StoreFs {
       out.result()
     }.getOrElse(Seq.empty)
 
+  /** The footers of the parquet data files directly in `dir` (not its
+    * subdirectories), read on the driver — metadata I/O only, zero
+    * Spark jobs. Empty when `dir` is missing.
+    */
+  def footers(dir: String): Seq[org.apache.parquet.hadoop.metadata.ParquetMetadata] = {
+    val p = new Path(dir)
+    val f = fs(p)
+    if (!f.exists(p)) Nil
+    else f.listStatus(p).toSeq
+      .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet") &&
+        !st.getPath.getName.startsWith(".") && !st.getPath.getName.startsWith("_"))
+      .map { st =>
+        val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf))
+        try r.getFooter finally r.close()
+      }
+  }
+
   /** Driver-side [min, max] of a long column across every parquet
     * file under `dir`, read from the file FOOTERS' column statistics
     * — metadata I/O only, zero Spark jobs. None when any chunk lacks

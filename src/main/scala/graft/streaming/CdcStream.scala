@@ -19,29 +19,33 @@ import graft.cdc.{CdcPipeline, CdcTableConfig, ChangeCompaction, PartialMerge, S
   */
 object CdcStream {
 
-  /** Compact + project one micro-batch of envelope rows and merge it
-    * into the versioned parquet target via the batch pipeline's
-    * bucketed `mergeAndPublish`: one pass over the compacted batch
-    * (cached and typically tiny) counts it and collects its touched
-    * PK-hash buckets, so the anti-join broadcasts the delta keys
-    * instead of shuffling the full-width target every micro-batch
-    * (ADVICE r2), and only those buckets are read and rewritten, in
-    * the target and in the SCD2 open store. Exactly-once: the checkpoint replays
-    * at-least-once, and the version pointer records the batchId that
-    * produced each committed version, so a replayed batch (same
-    * batchId, same data — file/Kafka sources are replayable) is
-    * skipped instead of re-merged. Returns true when the batch was
-    * applied, false when it was a replay of an already-committed
-    * batch.
+  /** Compact + project one micro-batch of envelope rows and apply it
+    * to the versioned parquet target through the batch pipeline's
+    * apply path (`CdcPipeline.apply`): one pass over the compacted
+    * batch (cached and typically tiny) counts it and collects its
+    * touched PK-hash buckets, so the anti-join broadcasts the delta
+    * keys instead of shuffling the full-width target every
+    * micro-batch (ADVICE r2), and only those buckets are read and
+    * rewritten, in the target and in the SCD2 open store.
+    * Exactly-once: the checkpoint replays at-least-once, and the
+    * version pointer records the batchId that produced each committed
+    * version, so a replayed batch (same batchId, same data —
+    * file/Kafka sources are replayable) is skipped instead of
+    * re-merged. Returns true when the batch was applied, false when
+    * it was a replay of an already-committed batch.
     *
-    * Declared `cfg.rollups` are maintained here too, AFTER the target
-    * publish, each under its own target-version idempotence key — see
-    * `CdcPipeline.maintainRollups` for the crash-window analysis. A
-    * replay that finds the target committed but a rollup trailing
-    * (crash between the two publishes) finishes the rollup from the
-    * time-traveled pre-merge snapshot instead of double-applying.
+    * Declared `cfg.rollups` advance after the target publish, each
+    * under its own target-version idempotence key, and the SCD2
+    * history under the batch id, beside the merge once its open store
+    * exists — see `CdcPipeline.maintainRollups` for the crash-window
+    * analysis. A replay that finds the target committed but a rollup
+    * or the history trailing (a crash between their publishes)
+    * finishes them without re-merging: the rollup from the
+    * time-traveled pre-merge version, instead of double-applying.
     */
   def mergeBatchToTarget(batch: DataFrame, batchId: Long, cfg: CdcTableConfig): Boolean = {
+    // every replay decision comes from the pointers as they stand
+    // before this batch writes anything
     val committedBatch = CdcPipeline.lastCommittedBatch(cfg.targetPath)
     val targetFresh = !committedBatch.exists(_ >= batchId)
     val curV = CdcPipeline.currentVersion(cfg.targetPath).getOrElse(-1L)
@@ -64,28 +68,28 @@ object CdcStream {
       val changes = ChangeCompaction.compactForMerge(projected, cfg.pk).cache()
       try {
         val summary = CdcPipeline.summarize(cfg, changes)
-        if (targetFresh)
-          CdcPipeline.mergeAndPublish(batch.sparkSession, cfg, changes, summary, batchId)
         // changesMatchCurrent: this batch produced the current version
         // (either just now, or before the crash being replayed — the
-        // pointer records which batch made it)
-        CdcPipeline.maintainRollups(batch.sparkSession, cfg, changes, Some(summary.rows),
-          changesMatchCurrent = targetFresh || committedBatch.contains(batchId))
-        // history advances on the UNcompacted batch, keyed on the
-        // batch id; targetExistedBefore = some OLDER batch built the
-        // target, so a replay of the creating batch still takes the
+        // pointer records which batch made it).
+        // targetExistedBefore = some OLDER batch built the target, so
+        // a replay of the creating batch still takes the history's
         // incremental-from-empty path, never a divergent bootstrap.
         // The pointer alone can't see older batches when the CRASHED
         // attempt of this very batch already published the target
-        // (committedBatch == batchId) — the store's version count
-        // can: the creating batch publishes v0, so any version > 0
-        // proves older batches ran, and a late declaration's replayed
-        // declaring batch still bootstraps instead of silently
-        // dropping every pre-declaration row (ADVICE r6).
-        Scd2Store.maintain(batch.sparkSession, cfg, projected, summary, seqKey = batchId,
-          targetExistedBefore = committedBatch.exists(_ < batchId) ||
-            CdcPipeline.currentVersion(cfg.targetPath).exists(_ > 0))
-        CdcPipeline.autoVacuum(cfg)
+        // (committedBatch == batchId) — the store's version count can:
+        // the creating batch publishes v0, so a version > 0 after this
+        // batch's merge proves older batches ran, and a late
+        // declaration's replayed declaring batch still bootstraps
+        // instead of silently dropping every pre-declaration row
+        // (ADVICE r6). A fresh batch publishes curV + 1, so that
+        // version is > 0 exactly when curV >= 0; a replay publishes
+        // nothing, so it is curV itself.
+        CdcPipeline.apply(batch.sparkSession, cfg, projected, changes, summary,
+          CdcPipeline.Replay(batchId = batchId, seqKey = batchId, targetFresh = targetFresh,
+            changesMatchCurrent = targetFresh || committedBatch.contains(batchId),
+            targetExistedBefore = committedBatch.exists(_ < batchId) ||
+              (if (targetFresh) curV >= 0 else curV > 0),
+            seqIsLoadTs = false), "cdc.stream")(())
         targetFresh
       } finally changes.unpersist()
     }

@@ -1,9 +1,7 @@
 package graft.cdc
 
 import java.nio.file.Files
-import java.util.concurrent.ConcurrentLinkedQueue
 import org.apache.spark.ListenerDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
@@ -25,26 +23,11 @@ class TouchedBucketsSpec extends AnyFunSuite {
   private def tmp(): String = Files.createTempDirectory("graft").toString
 
   /** `body`'s result and the descriptions of the Spark jobs it
-    * started; the listener bus is drained on both sides, so the list
-    * is exact.
+    * started (exact: see `ListenerDrain.jobsOf`).
     */
   private def jobsOf[T](body: => T): (T, Seq[String]) = {
-    val sc = spark.sparkContext
-    ListenerDrain(sc)
-    val seen = new ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit = {
-        seen.add(Option(js.properties)
-          .flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse(""))
-        ()
-      }
-    }
-    sc.addSparkListener(listener)
-    try {
-      val r = body
-      ListenerDrain(sc)
-      (r, seen.toArray(Array.empty[String]).toSeq)
-    } finally sc.removeSparkListener(listener)
+    val (r, jobs) = ListenerDrain.jobsOf(spark.sparkContext)(body)
+    (r, jobs.map(p => Option(p.getProperty("spark.job.description")).getOrElse("")))
   }
 
   private def rows(df: DataFrame): Set[Seq[Any]] = {
@@ -176,8 +159,7 @@ class TouchedBucketsSpec extends AnyFunSuite {
     val summary = CdcPipeline.summarize(crashed, changes)
     assert(summary.bucketsByCount === Map(4 -> hot))
     CdcPipeline.mergeAndPublish(spark, crashed, changes, summary)
-    CdcPipeline.maintainRollups(spark, crashed, changes, Some(summary.rows),
-      changesMatchCurrent = true)
+    CdcPipeline.maintainRollups(spark, crashed, changes, summary, changesMatchCurrent = true)
     Scd2Store.maintain(spark, crashed, projected, summary, seqKey = ends(1),
       targetExistedBefore = true, seqIsLoadTs = true)
     assert(CdcPipeline.run(spark, crashed, source, crashedLog, ends(2)).status === "SUCCESS")
