@@ -387,10 +387,9 @@ object GraftExtensions {
         val spark = active
         import graft.cdc.{CdcPipeline, MergeInto}
         import org.apache.spark.sql.functions.lit
-        val cur = CdcPipeline.currentVersion(path).getOrElse(
+        val m = CdcPipeline.currentManifest(path).getOrElse(
           throw new IllegalArgumentException(s"no graft store at $path"))
-        val m = CdcPipeline.manifest(path, cur).getOrElse(
-          throw new IllegalArgumentException(s"no manifest for v$cur at $path"))
+        val cur = m.readVersion
         val source = spark.sql(srcSql)
         val srcRows = source.count()
         // A71: CHECK constraints gate the introduced rows before the

@@ -40,7 +40,12 @@ import scala.jdk.CollectionConverters._
   * (merge.sql:403–436) on an immutable-file store, and the same
   * file-pruning shape Delta/Iceberg MERGE gets from data skipping.
   * The pointer swap stays a one-line atomic move, so readers see the
-  * old or the new manifest, never a torn state.
+  * old or the new manifest, never a torn state. Every reader and
+  * writer starts from [[currentManifest]] (pointer, then the manifest
+  * it names) and reaches files only through the store-layout
+  * functions ([[versionRoot]], [[bucketDir]], [[listedBuckets]]). A
+  * version without a manifest is absent to readers and refused by
+  * writers: there is no second, flat layout.
   *
   * Writer contract: every version-producing write commits through
   * one path ([[commit]]), which claims `v<base+1>` and re-checks that
@@ -95,11 +100,14 @@ object CdcPipeline {
     StructField("bucket", IntegerType), StructField("file", StringType),
     StructField("pos", LongType)))
 
-  /** Per-version manifest: bucket id → version directory (e.g. "v3")
-    * whose `_graft_bucket={id}` directory holds the bucket's current
-    * files. Absent ids are empty buckets. `schemaJson` pins the
-    * snapshot schema so carried-over buckets from before an additive
-    * schema evolution read with NULLs for the new columns.
+  /** Per-version manifest: bucket id → version ref (e.g. "v3", or an
+    * absolute version dir of another store for a bucket a shallow
+    * clone carries) whose bucket directory ([[bucketDir]] of
+    * [[versionRoot]]) holds the bucket's current files. Every version
+    * a reader can see has one; absent ids are empty buckets.
+    * `schemaJson` pins the snapshot schema so carried-over buckets
+    * from before an additive schema evolution read with NULLs for the
+    * new columns.
     *
     * `stats` (since r7) is the data-skipping index: per bucket, the
     * min/max of each declared stats column (numeric or string),
@@ -223,6 +231,22 @@ object CdcPipeline {
     }
   }
 
+  /** The pointer names a version with no manifest: the state [[fsck]]
+    * reports as `bad_pointer`. Readers and writers refuse it instead of
+    * serving or deriving from a partial table.
+    */
+  final class BadPointerException(val storeDir: String, val version: Long)
+    extends IllegalStateException(s"$storeDir: the pointer names v$version, which has " +
+      "no manifest (fsck: bad_pointer)")
+
+  /** The store's current manifest: the pointer, then the manifest it
+    * names. None when there is no store; throws [[BadPointerException]]
+    * when the pointer names a version without a manifest.
+    */
+  private[graft] def currentManifest(storeDir: String): Option[Manifest] =
+    currentVersion(storeDir).map(v =>
+      manifest(storeDir, v).getOrElse(throw new BadPointerException(storeDir, v)))
+
   private def statEnc(s: String): String =
     java.net.URLEncoder.encode(s, "UTF-8")
   private def statDec(s: String): String =
@@ -325,9 +349,8 @@ object CdcPipeline {
     * GC fact, not tampering).
     */
   def verifyChain(targetDir: String): Seq[ChainIssue] = {
-    val versions = StoreFs.listDirNames(targetDir).filter(_.matches("v\\d+"))
-      .map(_.stripPrefix("v").toLong)
-      .filter(v => StoreFs.exists(s"$targetDir/v$v/$ManifestFile")).sorted
+    val versions = versionDirs(targetDir)
+      .filter(v => StoreFs.exists(s"$targetDir/v$v/$ManifestFile"))
     val issues = Seq.newBuilder[ChainIssue]
     // version → recorded chain hash of the previous chained manifest
     var prev: Option[(Long, Option[String])] = None
@@ -536,12 +559,11 @@ object CdcPipeline {
       val srcDir = fromDir.getOrElse(targetDir)
       val kept = src.buckets.keySet -- e.rewritten
       def carriedRef(ref: String): String = {
-        val abs = if (ref.contains("/")) ref else s"$srcDir/$ref"
-        val local = abs.stripPrefix(s"$targetDir/")
-        if (local != abs && local.matches("v\\d+")) local else abs
+        val abs = versionRoot(srcDir, ref)
+        localRef(targetDir, abs).getOrElse(abs)
       }
       val buckets = src.buckets.collect { case (b, r) if kept(b) => b -> carriedRef(r) } ++
-        writtenBuckets(dir).map(_ -> s"v$next")
+        listedBuckets(dir).map(_._1 -> s"v$next")
       val stats = (src.stats.filter(kv => kept(kv._1)) ++ e.stats)
         .map { case (b, cs) => b -> (cs -- e.dropCols) }.filter(_._2.nonEmpty)
       val dropKeys = e.unset ++ e.dropCols.flatMap(c =>
@@ -604,13 +626,13 @@ object CdcPipeline {
     */
   private def bucketStats(spark: SparkSession, dir: String,
       statsCols: Seq[String]): Map[Int, Map[String, (String, String)]] = {
-    val buckets = writtenBuckets(dir)
+    val buckets = listedBuckets(dir)
     if (statsCols.isEmpty || buckets.isEmpty) Map.empty
     else {
-      val footers = buckets.toSeq.map(b => b -> StoreFs.footers(s"$dir/$BucketCol=$b"))
+      val footers = buckets.map { case (b, d) => b -> StoreFs.footers(d) }
       val fromFooters = statsCols.flatMap(c => footerStats(footers, c).map(c -> _)).toMap
       val aggregated = aggregatedStats(spark, dir, statsCols.filterNot(fromFooters.contains))
-      buckets.map { b =>
+      buckets.map { case (b, _) =>
         b -> (fromFooters.flatMap { case (c, byBucket) => byBucket.get(b).map(c -> _) } ++
           aggregated.getOrElse(b, Map.empty))
       }.toMap.filter(_._2.nonEmpty)
@@ -773,15 +795,59 @@ object CdcPipeline {
       .repartition(col(BucketCol))
       .write.partitionBy(BucketCol).mode(SaveMode.Overwrite).parquet(dir)
 
-  /** Bucket ids that actually produced files under `dir` (a bucket
-    * with no surviving rows writes no directory and drops out of the
-    * manifest).
+  // ── Store layout: the one way from a store to its files ─────────
+  // A manifest names each bucket's files by a version ref: "v3" is a
+  // version dir of the store itself, an absolute path (a bucket a
+  // shallow clone carries) is a version dir of another store. Refs,
+  // bucket dirs and bucket-dir names resolve only here (StoreLayoutSpec
+  // keeps every other file to that), so changing what a bucket entry
+  // names is a change to these functions and the manifest codec.
+
+  /** The version dir that `ref`, read from a manifest of the store at
+    * `storeDir`, names.
     */
-  private def writtenBuckets(dir: String): Set[Int] =
-    StoreFs.listDirNames(dir)
-      .filter(_.startsWith(BucketCol + "="))
-      .map(_.stripPrefix(BucketCol + "=").toInt)
-      .toSet
+  private[graft] def versionRoot(storeDir: String, ref: String): String =
+    if (ref.contains("/")) ref else s"$storeDir/$ref"
+
+  /** The inverse of [[versionRoot]]: the local ref ("v3") that names
+    * the version dir `root`, when it is one of `storeDir`'s own.
+    */
+  private def localRef(storeDir: String, root: String): Option[String] =
+    Some(root.stripPrefix(s"$storeDir/")).filter(r => r != root && r.matches("v\\d+"))
+
+  /** Bucket `b`'s directory under the version dir `root`. */
+  private[graft] def bucketDir(root: String, b: Int): String = s"$root/$BucketCol=$b"
+
+  /** A path glob over every bucket directory under `root`. */
+  private[graft] def bucketGlob(root: String): String = s"$root/$BucketCol=*"
+
+  /** The bucket directories under `root` that exist, as (bucket id,
+    * dir) in id order. A bucket with no surviving rows writes no
+    * directory, so a written version lists only its non-empty buckets.
+    */
+  private[graft] def listedBuckets(root: String): Seq[(Int, String)] =
+    StoreFs.listDirNames(root).filter(_.startsWith(s"$BucketCol="))
+      .map(n => n.stripPrefix(s"$BucketCol=").toInt -> s"$root/$n").sortBy(_._1)
+
+  /** Bucket id of a row read with [[DvFileCol]] (its file's last two
+    * path segments, `<bucket dir>/<file>`).
+    */
+  private def fileBucket: Column =
+    substring_index(substring_index(col(DvFileCol), "/", 1), "=", -1).cast("int")
+
+  /** Versions that have a directory in the store at `storeDir`, with
+    * or without a manifest, ascending.
+    */
+  private def versionDirs(storeDir: String): Seq[Long] =
+    StoreFs.listDirNames(storeDir).filter(_.matches("v\\d+")).map(_.stripPrefix("v").toLong).sorted
+
+  /** Every bucket of `m`, a manifest of the store at `storeDir`, as
+    * (bucket id, ref, bucket dir) in id order.
+    */
+  private def manifestBuckets(storeDir: String, m: Manifest): Seq[(Int, String, String)] =
+    m.buckets.toSeq.sortBy(_._1).map { case (b, ref) =>
+      (b, ref, bucketDir(versionRoot(storeDir, ref), b))
+    }
 
   /** Read the named buckets through the manifest (all buckets =
     * the full snapshot). The explicit schema keeps carried-over
@@ -805,13 +871,6 @@ object CdcPipeline {
     */
   private[graft] def readBucketsWithPos(spark: SparkSession, targetDir: String,
       m: Manifest, buckets: Set[Int]): DataFrame = {
-    // a manifest value is either a local version dir ("v3") or — for
-    // buckets carried in by a shallow clone — an absolute version dir
-    // of ANOTHER store ("/path/to/source/v3"); anything containing a
-    // separator resolves as-is
-    def path(b: Int, ver: String): String =
-      if (ver.contains("/")) s"$ver/$BucketCol=$b"
-      else s"$targetDir/$ver/$BucketCol=$b"
     val chosen = buckets.toSeq.sorted.flatMap(b => m.buckets.get(b).map(b -> _))
     if (chosen.isEmpty)
       spark.createDataFrame(spark.sparkContext.emptyRDD[Row], m.schema)
@@ -835,7 +894,7 @@ object CdcPipeline {
         .sortBy(_._1.mkString(","))
         .map { case (fills, grp) =>
           val scan = spark.read.schema(m.schema)
-            .parquet(grp.map { case (b, ver) => path(b, ver) }: _*)
+            .parquet(grp.map { case (b, ver) => bucketDir(versionRoot(targetDir, ver), b) }: _*)
             .select(col("*"),
               substring_index(col("_metadata.file_path"), "/", -2).as(DvFileCol),
               col("_metadata.row_index").as(DvPosCol))
@@ -866,12 +925,12 @@ object CdcPipeline {
   private val DefaultPrefix = "coldefault."
 
   private def refVersion(ver: String): Option[Long] = {
-    val tail = if (ver.contains("/")) ver.substring(ver.lastIndexOf('/') + 1) else ver
+    val tail = ver.substring(ver.lastIndexOf('/') + 1)
     if (tail.matches("v\\d+")) Some(tail.stripPrefix("v").toLong) else None
   }
 
   private def dvPath(targetDir: String, ref: String): String =
-    if (ref.contains("/")) s"$ref/$DvDir" else s"$targetDir/$ref/$DvDir"
+    s"${versionRoot(targetDir, ref)}/$DvDir"
 
   /** The manifest's deletion vector, pruned to `buckets` when given —
     * None when the version carries none.
@@ -884,13 +943,8 @@ object CdcPipeline {
     }
 
   def readSnapshot(spark: SparkSession, targetDir: String): Option[DataFrame] =
-    currentVersion(targetDir).map { v =>
-      manifest(targetDir, v) match {
-        case Some(m) =>
-          applyVirtual(readBuckets(spark, targetDir, m, m.buckets.keySet), m)
-        case None => spark.read.parquet(s"$targetDir/v$v") // pre-manifest layout
-      }
-    }
+    currentManifest(targetDir).map(m =>
+      applyVirtual(readBuckets(spark, targetDir, m, m.buckets.keySet), m))
 
   /** Append `m`'s virtual generated columns (A72) — one codegen'd
     * projection; identity when none declared. Applied by the PUBLIC
@@ -923,24 +977,18 @@ object CdcPipeline {
     */
   def readKeys(spark: SparkSession, targetDir: String, pkCols: Seq[String],
       keys: DataFrame): Option[DataFrame] =
-    currentVersion(targetDir).map { v =>
-      manifest(targetDir, v) match {
-        case Some(m) =>
-          // cast the caller's keys to the STORED PK types before
-          // hashing: Murmur3 of an INT differs from the same value as
-          // BIGINT, so an uncast mismatch would scan the wrong buckets
-          // and silently return nothing (ADVICE r5) — while the semi
-          // join alone would have coerced and still matched.
-          val storedType = m.schema.fields.map(f => f.name -> f.dataType).toMap
-          val typedKeys = keys.select(pkCols.map(c => storedType.get(c)
-            .map(t => col(c).cast(t).as(c)).getOrElse(col(c))): _*)
-          val touched = keyBuckets(typedKeys, pkCols, m.numBuckets)
-          applyVirtual(readBuckets(spark, targetDir, m, touched)
-            .join(broadcast(typedKeys), pkCols, "left_semi"), m)
-        case None => // pre-manifest flat layout: no pruning possible
-          spark.read.parquet(s"$targetDir/v$v")
-            .join(broadcast(keys.select(pkCols.map(col): _*)), pkCols, "left_semi")
-      }
+    currentManifest(targetDir).map { m =>
+      // cast the caller's keys to the STORED PK types before
+      // hashing: Murmur3 of an INT differs from the same value as
+      // BIGINT, so an uncast mismatch would scan the wrong buckets
+      // and silently return nothing (ADVICE r5) — while the semi
+      // join alone would have coerced and still matched.
+      val storedType = m.schema.fields.map(f => f.name -> f.dataType).toMap
+      val typedKeys = keys.select(pkCols.map(c => storedType.get(c)
+        .map(t => col(c).cast(t).as(c)).getOrElse(col(c))): _*)
+      val touched = keyBuckets(typedKeys, pkCols, m.numBuckets)
+      applyVirtual(readBuckets(spark, targetDir, m, touched)
+        .join(broadcast(typedKeys), pkCols, "left_semi"), m)
     }
 
   /** [[readKeys]] with the key set itself STORE-backed — the lookup
@@ -984,24 +1032,17 @@ object CdcPipeline {
     */
   def readRange(spark: SparkSession, targetDir: String, column: String,
       lo: Option[Any], hi: Option[Any]): Option[DataFrame] =
-    currentVersion(targetDir).map { v =>
-      val residual: DataFrame => DataFrame = df => {
-        val bounded = Seq(lo.map(col(column) >= lit(_)), hi.map(col(column) <= lit(_)))
-          .flatten.reduceOption(_ && _)
-        bounded.map(df.filter).getOrElse(df)
+    currentManifest(targetDir).map { m =>
+      val dt = m.schema.fields.find(_.name == column).map(_.dataType)
+      val keep = m.buckets.keySet.filter { b =>
+        m.stats.get(b).flatMap(_.get(column)) match {
+          case Some(st) if dt.isDefined => statOverlaps(dt.get, st, lo, hi)
+          case _ => true // unknown stats: must read
+        }
       }
-      manifest(targetDir, v) match {
-        case Some(m) =>
-          val dt = m.schema.fields.find(_.name == column).map(_.dataType)
-          val keep = m.buckets.keySet.filter { b =>
-            m.stats.get(b).flatMap(_.get(column)) match {
-              case Some(st) if dt.isDefined => statOverlaps(dt.get, st, lo, hi)
-              case _ => true // unknown stats: must read
-            }
-          }
-          residual(applyVirtual(readBuckets(spark, targetDir, m, keep), m))
-        case None => residual(spark.read.parquet(s"$targetDir/v$v"))
-      }
+      val df = applyVirtual(readBuckets(spark, targetDir, m, keep), m)
+      Seq(lo.map(col(column) >= lit(_)), hi.map(col(column) <= lit(_)))
+        .flatten.reduceOption(_ && _).fold(df)(df.filter)
     }
 
   // ── Secondary bloom-filter point-lookup index (A54) ──────────────
@@ -1034,7 +1075,7 @@ object CdcPipeline {
     */
   private final class SidecarIndex(val prefix: String, dir: String, ext: String) {
     def file(root: String, ref: String, column: String, b: Int): String =
-      (if (ref.contains("/")) ref else s"$root/$ref") + s"/$dir/${statEnc(column)}/$b.$ext"
+      s"${versionRoot(root, ref)}/$dir/${statEnc(column)}/$b.$ext"
     /** Copy `column`'s sidecars of `buckets` from version `ref` of
       * `fromRoot` into `v<next>` of `toRoot`, by driver I/O; missing
       * entries stay missing.
@@ -1069,7 +1110,7 @@ object CdcPipeline {
   def buildBloomIndex(spark: SparkSession, targetDir: String, column: String,
       expectedPerBucket: Long = 100000L, fpp: Double = 0.01,
       buckets: Option[Set[Int]] = None): Option[Long] =
-    currentVersion(targetDir).flatMap(v => manifest(targetDir, v)).map { m =>
+    currentManifest(targetDir).map { m =>
       val dt = m.schema.fields.find(_.name == column).map(_.dataType)
         .getOrElse(throw new IllegalArgumentException(s"no such column: $column"))
       val probe = dt match {
@@ -1081,12 +1122,10 @@ object CdcPipeline {
       val scanSet = buckets.map(_.intersect(m.buckets.keySet))
         .getOrElse(m.buckets.keySet)
       val snap = readBucketsWithPos(spark, targetDir, m, scanSet)
-      val bucket = substring_index(substring_index(col(DvFileCol), "/", 1), "=", -1)
-        .cast("int")
       val entries =
         if (scanSet.isEmpty) Array.empty[Row]
         else snap
-          .select(bucket.as("b"), probe.as("v"))
+          .select(fileBucket.as("b"), probe.as("v"))
           .groupBy("b")
           .agg(graft.functions.BloomBuildAgg(col("v"), expectedPerBucket, fpp).as("bf"))
           .collect()
@@ -1114,7 +1153,7 @@ object CdcPipeline {
   def readPoint(spark: SparkSession, targetDir: String, column: String,
       values: Seq[Any]): Option[DataFrame] = {
     require(values.nonEmpty, "readPoint needs at least one probe value")
-    currentVersion(targetDir).flatMap(v => manifest(targetDir, v)).map { m =>
+    currentManifest(targetDir).map { m =>
       // coerce probes to the STORED type — a string "42" probing a
       // bigint column must hash and compare as the long, not the text
       // (the SQL TVF hands everything over as strings)
@@ -1171,18 +1210,16 @@ object CdcPipeline {
   def buildNdvIndex(spark: SparkSession, targetDir: String, columns: Seq[String],
       buckets: Option[Set[Int]] = None): Option[Long] = {
     require(columns.nonEmpty, "buildNdvIndex needs at least one column")
-    currentVersion(targetDir).flatMap(v => manifest(targetDir, v)).map { m =>
+    currentManifest(targetDir).map { m =>
       columns.foreach(c => require(m.schema.fieldNames.contains(c),
         s"no such column: $c"))
       val scanSet = buckets.map(_.intersect(m.buckets.keySet))
         .getOrElse(m.buckets.keySet)
       val snap = readBucketsWithPos(spark, targetDir, m, scanSet)
-      val bucket = substring_index(substring_index(col(DvFileCol), "/", 1), "=", -1)
-        .cast("int")
       val entries =
         if (scanSet.isEmpty) Array.empty[Row]
         else snap
-          .groupBy(bucket.as("b"))
+          .groupBy(fileBucket.as("b"))
           .agg(hll_sketch_agg(col(columns.head)).as(columns.head),
             columns.tail.map(c => hll_sketch_agg(col(c)).as(c)): _*)
           .collect()
@@ -1235,7 +1272,7 @@ object CdcPipeline {
     */
   def ndvStats(spark: SparkSession, targetDir: String,
       column: String): Option[NdvReport] =
-    currentVersion(targetDir).flatMap(v => manifest(targetDir, v)).flatMap { m =>
+    currentManifest(targetDir).flatMap { m =>
       m.meta.get(Ndv.prefix + column).map { ref =>
         val present = m.buckets.keySet.toSeq.sorted.flatMap { b =>
           val p = Ndv.file(targetDir, ref, column, b)
@@ -1361,19 +1398,13 @@ object CdcPipeline {
     * pointer). Any version whose manifest survives `vacuum`'s
     * keep-window reads exactly as it was published — carried buckets
     * resolve through that version's own manifest, so later publishes
-    * never disturb it. None when the version was vacuumed or never
-    * existed.
+    * never disturb it. None when the version has no manifest: vacuumed,
+    * never existed, or lost its manifest (a version dir alone is never
+    * read).
     */
   def readSnapshotAt(spark: SparkSession, targetDir: String, version: Long): Option[DataFrame] =
-    currentVersion(targetDir).filter(version <= _).flatMap { _ =>
-      manifest(targetDir, version) match {
-        case Some(m) =>
-          Some(applyVirtual(readBuckets(spark, targetDir, m, m.buckets.keySet), m))
-        case None =>
-          val d = s"$targetDir/v$version"
-          if (StoreFs.exists(d)) Some(spark.read.parquet(d)) else None
-      }
-    }
+    currentVersion(targetDir).filter(version <= _).flatMap(_ => manifest(targetDir, version))
+      .map(m => applyVirtual(readBuckets(spark, targetDir, m, m.buckets.keySet), m))
 
   /** Time-travel by TIMESTAMP (A67 — Delta `TIMESTAMP AS OF` /
     * Iceberg snapshot-as-of-time on the bucketed store; the reference
@@ -1418,10 +1449,8 @@ object CdcPipeline {
     */
   def versionAsOfTime(targetDir: String, tsUs: Long): Option[Long] =
     currentVersion(targetDir).flatMap { cur =>
-      StoreFs.listDirNames(targetDir).filter(_.matches("v\\d+"))
-        .map(_.stripPrefix("v").toLong).filter(_ <= cur)
-        .filter(v => commitUsOf(targetDir, v).exists(_ <= tsUs))
-        .sorted.lastOption
+      versionDirs(targetDir).filter(v => v <= cur && commitUsOf(targetDir, v).exists(_ <= tsUs))
+        .lastOption
     }
 
   private def commitUsOf(targetDir: String, v: Long): Option[Long] =
@@ -1437,10 +1466,7 @@ object CdcPipeline {
     */
   def unplaceableVersions(targetDir: String): Seq[Long] =
     currentVersion(targetDir).map { cur =>
-      StoreFs.listDirNames(targetDir).filter(_.matches("v\\d+"))
-        .map(_.stripPrefix("v").toLong).filter(_ <= cur)
-        .filterNot(v => commitUsOf(targetDir, v).isDefined)
-        .sorted
+      versionDirs(targetDir).filter(v => v <= cur && commitUsOf(targetDir, v).isEmpty)
     }.getOrElse(Nil)
 
   /** Buckets whose content can differ between two manifests. A bucket
@@ -1525,7 +1551,9 @@ object CdcPipeline {
     * disagree on — total I/O ∝ what actually changed across the
     * range, never #steps × target. None when any version in the range
     * was vacuumed away (a partial feed would silently lie about the
-    * missing commits); an empty range is an empty feed.
+    * missing commits); an empty range is an empty feed. A current
+    * version without a manifest is not a vacuumed one: that throws
+    * [[BadPointerException]], as every reader of the current state does.
     */
   def readChangeFeed(spark: SparkSession, targetDir: String, pkCols: Seq[String],
       fromVersion: Long, toVersion: Long): Option[DataFrame] = {
@@ -1535,7 +1563,10 @@ object CdcPipeline {
       snapshotDiff(spark, targetDir, v, v + 1, pkCols)
         .map(_.withColumn("_commit_version", lit(v + 1)))
     }
-    if (steps.exists(_.isEmpty)) None
+    if (steps.exists(_.isEmpty)) {
+      currentManifest(targetDir) // throws when the gap is a lost current manifest
+      None
+    }
     else if (steps.isEmpty)
       manifest(targetDir, toVersion).map(m =>
         spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
@@ -1548,10 +1579,10 @@ object CdcPipeline {
 
   /** Publish `df` as the next FULL snapshot version and move the
     * pointer: every bucket is written and the manifest points them
-    * all at the new version. Used for first builds, full overwrites
-    * and legacy-layout migration; incremental runs go through
-    * `publishDelta`. Declared metadata carries like any other commit
-    * (INSERT OVERWRITE keeps constraints, generated columns and
+    * all at the new version. Used for first builds and full
+    * overwrites; incremental runs go through `publishDelta`. Declared
+    * metadata carries like any other commit (INSERT OVERWRITE keeps
+    * constraints, generated columns and
     * properties), except for `op = ReplaceOp`: CREATE OR REPLACE is a
     * redefinition and starts from empty metadata.
     */
@@ -1560,8 +1591,8 @@ object CdcPipeline {
       statsCols: Seq[String] = Nil, op: String = "publish",
       swapNow: Boolean = true): Long = {
     validatePk(targetDir, pkCols)
-    val base = currentVersion(targetDir).getOrElse(-1L)
-    val prev = manifest(targetDir, base)
+    val prev = currentManifest(targetDir)
+    val base = prev.fold(-1L)(_.readVersion)
     // Bucket count is fixed at first publish (a repartition-in-place
     // of the whole target would be needed to change it; ~parallelism
     // is the right default at any scale where this runs).
@@ -1627,7 +1658,7 @@ object CdcPipeline {
   def rebucket(spark: SparkSession, targetDir: String, pkCols: Seq[String],
       newBuckets: Int): Option[Long] = {
     require(newBuckets > 0, s"bucket count must be positive: $newBuckets")
-    currentVersion(targetDir).flatMap(v => manifest(targetDir, v)).map { m =>
+    currentManifest(targetDir).map { m =>
       val snap = readBuckets(spark, targetDir, m, m.buckets.keySet)
       commit(targetDir, m.readVersion, Some(m), "rebucket") { next =>
         val dir = s"$targetDir/v$next"
@@ -1670,17 +1701,26 @@ object CdcPipeline {
     */
   def dvStats(targetDir: String): Option[(Long, Long)] =
     for {
-      v <- currentVersion(targetDir)
-      m <- manifest(targetDir, v)
-      dvRef <- m.meta.get("dv")
-      (dvRows, _) <- StoreFs.footerRowsBytes(dvPath(targetDir, dvRef))
-      tableRows <- m.buckets.toSeq.sortBy(_._1).foldLeft(Option(0L)) {
-        case (acc, (b, ref)) =>
-          val root = if (ref.contains("/")) ref else s"$targetDir/$ref"
-          for (a <- acc; (r, _) <- StoreFs.footerRowsBytes(s"$root/$BucketCol=$b"))
-            yield a + r
-      }
+      m <- currentManifest(targetDir)
+      if m.meta.contains("dv")
+      dvRows <- footerDvRows(targetDir, m)
+      (tableRows, _) <- footerBucketTotals(targetDir, m)
     } yield (dvRows, tableRows)
+
+  /** (footer rows, bytes) summed over every bucket of `m`, a manifest
+    * of the store at `storeDir`; None on any unreadable footer.
+    */
+  private def footerBucketTotals(storeDir: String, m: Manifest): Option[(Long, Long)] =
+    manifestBuckets(storeDir, m).foldLeft(Option((0L, 0L))) { case (acc, (_, _, dir)) =>
+      for ((ar, ab) <- acc; (r, by) <- StoreFs.footerRowsBytes(dir)) yield (ar + r, ab + by)
+    }
+
+  /** Rows of `m`'s deletion vector from its footers: 0 without one,
+    * None when unreadable.
+    */
+  private def footerDvRows(storeDir: String, m: Manifest): Option[Long] =
+    m.meta.get("dv").fold(Option(0L))(ref =>
+      StoreFs.footerRowsBytes(dvPath(storeDir, ref)).map(_._1))
 
   /** Metadata-only `SELECT count(*)` (A61 — the count shortcut every
     * lakehouse serves from its log instead of a scan): rows of the
@@ -1704,21 +1744,10 @@ object CdcPipeline {
     */
   def footerTotals(targetDir: String): Option[(Long, Long)] =
     for {
-      v <- currentVersion(targetDir)
-      m <- manifest(targetDir, v)
-      totals <- m.buckets.toSeq.sortBy(_._1).foldLeft(Option((0L, 0L))) {
-        case (acc, (b, ref)) =>
-          val root = if (ref.contains("/")) ref else s"$targetDir/$ref"
-          for {
-            (ar, ab) <- acc
-            (r, by) <- StoreFs.footerRowsBytes(s"$root/$BucketCol=$b")
-          } yield (ar + r, ab + by)
-      }
-      dvRows <- m.meta.get("dv") match {
-        case None => Some(0L)
-        case Some(ref) => StoreFs.footerRowsBytes(dvPath(targetDir, ref)).map(_._1)
-      }
-    } yield (totals._1 - dvRows, totals._2)
+      m <- currentManifest(targetDir)
+      (rows, bytes) <- footerBucketTotals(targetDir, m)
+      dvRows <- footerDvRows(targetDir, m)
+    } yield (rows - dvRows, bytes)
 
   /** Fold the deletion vector into the data files (A56): OPTIMIZE
     * exactly the buckets the vector touches — every entry's bucket is
@@ -1730,8 +1759,7 @@ object CdcPipeline {
   def foldDv(spark: SparkSession, targetDir: String, pkCols: Seq[String],
       sortCols: Seq[String] = Nil): Option[Long] =
     for {
-      v <- currentVersion(targetDir)
-      m <- manifest(targetDir, v)
+      m <- currentManifest(targetDir)
       dv <- readDv(spark, targetDir, m, None)
       touched = dv.select("bucket").distinct().collect().map(_.getInt(0)).toSet
       next <- optimize(spark, targetDir, pkCols,
@@ -1806,7 +1834,7 @@ object CdcPipeline {
   private def deleteMoR(spark: SparkSession, targetDir: String, pkCols: Seq[String],
       hitFilter: DataFrame => DataFrame,
       autoFoldPct: Option[Int]): Option[(Long, Long)] =
-    currentVersion(targetDir).flatMap(v => manifest(targetDir, v)).map { m =>
+    currentManifest(targetDir).map { m =>
       val snap = readBucketsWithPos(spark, targetDir, m, m.buckets.keySet)
       // localCheckpoint: the hit set is both counted and written —
       // one scan, and the checkpoint pins the positions against
@@ -1816,7 +1844,7 @@ object CdcPipeline {
           col(DvFileCol).as("file"), col(DvPosCol).as("pos"))
         .localCheckpoint()
       val n = hits.count()
-      if (n == 0L) (currentVersion(targetDir).get, 0L)
+      if (n == 0L) (m.readVersion, 0L)
       else {
         val all = readDv(spark, targetDir, m, None).fold(hits)(_ unionByName hits)
         commit(targetDir, m.readVersion, Some(m), "delete_mor") { next =>
@@ -1880,14 +1908,14 @@ object CdcPipeline {
     */
   private def rewriteWhere(spark: SparkSession, targetDir: String, pkCols: Seq[String],
       predicate: Column, op: String)(rewrite: DataFrame => DataFrame): Option[(Long, Long)] =
-    currentVersion(targetDir).flatMap(v => manifest(targetDir, v)).map { m =>
+    currentManifest(targetDir).map { m =>
       val snap = readBuckets(spark, targetDir, m, m.buckets.keySet)
       // one job: matching buckets AND their match counts. Catalyst
       // prunes the scan to the predicate + PK columns.
       val hits = snap.filter(predicate)
         .groupBy(bucketExpr(pkCols, m.numBuckets).as("b")).count()
         .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-      if (hits.isEmpty) (currentVersion(targetDir).get, 0L)
+      if (hits.isEmpty) (m.readVersion, 0L)
       else {
         val touched = hits.keySet
         val subset = readBuckets(spark, targetDir, m, touched)
@@ -1973,7 +2001,7 @@ object CdcPipeline {
       buckets: Option[Set[Int]] = None): Option[Long] = {
     require(zCols.size >= 2 && zCols.size <= 4,
       s"zorder interleaves 2-4 dimensions, got ${zCols.size}")
-    currentVersion(targetDir).flatMap(v => manifest(targetDir, v)).flatMap { m =>
+    currentManifest(targetDir).flatMap { m =>
       val chosen = buckets.fold(m.buckets.keySet)(_ intersect m.buckets.keySet)
       val snap = readBuckets(spark, targetDir, m, chosen)
       optimizeBy(spark, targetDir, pkCols, Seq(zorderKey(snap, zCols)), zCols,
@@ -2019,7 +2047,7 @@ object CdcPipeline {
   private def optimizeBy(spark: SparkSession, targetDir: String, pkCols: Seq[String],
       sortExprs: Seq[Column], trackColsNew: Seq[String], maxRecordsPerFile: Long,
       buckets: Option[Set[Int]], opLabel: String = "optimize"): Option[Long] =
-    currentVersion(targetDir).flatMap(v => manifest(targetDir, v)).map { m =>
+    currentManifest(targetDir).map { m =>
       val chosen = buckets.fold(m.buckets.keySet)(_ intersect m.buckets.keySet)
       val snap = readBuckets(spark, targetDir, m, chosen)
       commit(targetDir, m.readVersion, Some(m), opLabel) { next =>
@@ -2063,7 +2091,7 @@ object CdcPipeline {
     require(drop.nonEmpty, "dropColumns needs at least one column")
     require(!drop.exists(pkCols.contains),
       s"cannot drop PK columns: ${drop.filter(pkCols.contains).mkString(",")}")
-    currentVersion(targetDir).flatMap(v => manifest(targetDir, v)).map { m =>
+    currentManifest(targetDir).map { m =>
       val schema = m.schema
       val missing = drop.filterNot(schema.fieldNames.contains)
       require(missing.isEmpty, s"no such columns: ${missing.mkString(",")}")
@@ -2116,7 +2144,7 @@ object CdcPipeline {
     */
   def addColumnWithDefault(spark: SparkSession, targetDir: String,
       name: String, dataType: DataType, default: Any): Option[Long] =
-    currentVersion(targetDir).flatMap(v => manifest(targetDir, v)).map { m =>
+    currentManifest(targetDir).map { m =>
       val schema = m.schema
       require(!schema.fieldNames.contains(name), s"column exists: $name")
       require(!virtualCols(m).exists(_._1 == name),
@@ -2142,7 +2170,7 @@ object CdcPipeline {
     */
   def renameColumn(spark: SparkSession, targetDir: String, pkCols: Seq[String],
       from0: String, to: String): Option[Long] = {
-    currentVersion(targetDir).flatMap(v => manifest(targetDir, v)).map { m =>
+    currentManifest(targetDir).map { m =>
       val schema = m.schema
       // resolve the source name case-insensitively, like Spark column
       // resolution — `from` below is the schema's actual spelling
@@ -2219,7 +2247,7 @@ object CdcPipeline {
     * SQL. Empty when the store doesn't exist or declares none.
     */
   def checkConstraints(targetDir: String): Map[String, String] =
-    currentVersion(targetDir).flatMap(v => manifest(targetDir, v))
+    currentManifest(targetDir)
       .map(constraintsOf).getOrElse(Map.empty)
 
   /** Lower-cased top-level column names a constraint predicate
@@ -2246,7 +2274,7 @@ object CdcPipeline {
       name: String, predicate: String): Option[Long] = {
     require(name.matches("[A-Za-z0-9_-]+"),
       s"constraint name must be path-safe: $name")
-    currentVersion(targetDir).flatMap(v => manifest(targetDir, v)).map { m =>
+    currentManifest(targetDir).map { m =>
       require(!constraintsOf(m).contains(name),
         s"constraint exists: $name (drop it first to redefine)")
       // write-time enforcement sees PHYSICAL rows only — a predicate
@@ -2272,7 +2300,7 @@ object CdcPipeline {
     * [[checkConstraints]]).
     */
   def dropCheckConstraint(targetDir: String, name: String): Option[Long] =
-    currentVersion(targetDir).flatMap(v => manifest(targetDir, v)).flatMap { m =>
+    currentManifest(targetDir).flatMap { m =>
       if (!constraintsOf(m).contains(name)) None
       else {
         Some(commit(targetDir, m.readVersion, Some(m), "drop-constraint") { _ =>
@@ -2299,7 +2327,7 @@ object CdcPipeline {
 
   /** Current table properties (empty when none or no store). */
   def tableProperties(targetDir: String): Map[String, String] =
-    currentVersion(targetDir).flatMap(v => manifest(targetDir, v))
+    currentManifest(targetDir)
       .map(propsOf).getOrElse(Map.empty)
 
   /** SET TBLPROPERTIES — metadata-only new version; last write wins
@@ -2311,7 +2339,7 @@ object CdcPipeline {
     require(props.nonEmpty, "no properties to set")
     props.keys.foreach(k => require(k.nonEmpty && !k.exists(_.isWhitespace),
       s"property key must be non-empty and whitespace-free: '$k'"))
-    currentVersion(targetDir).flatMap(v => manifest(targetDir, v)).map { m =>
+    currentManifest(targetDir).map { m =>
       commit(targetDir, m.readVersion, Some(m), "set-properties") { _ =>
         Edit(set = props.map { case (k, v) => PropPrefix + k -> statEnc(v) })
       }
@@ -2323,7 +2351,7 @@ object CdcPipeline {
     */
   def unsetTableProperties(targetDir: String,
       keys: Seq[String]): Option[Long] =
-    currentVersion(targetDir).flatMap(v => manifest(targetDir, v)).flatMap { m =>
+    currentManifest(targetDir).flatMap { m =>
       val present = propsOf(m).keySet.intersect(keys.toSet)
       if (present.isEmpty) None
       else {
@@ -2394,7 +2422,7 @@ object CdcPipeline {
     * Returns the file list, None when the store doesn't exist.
     */
   def generateSymlinkManifest(targetDir: String): Option[Seq[String]] =
-    currentVersion(targetDir).flatMap(v => manifest(targetDir, v)).map { m =>
+    currentManifest(targetDir).map { m =>
       require(!m.meta.contains("dv"),
         "cannot export a symlink manifest while a deletion vector is " +
           "outstanding: external readers would resurrect deleted rows — " +
@@ -2402,9 +2430,8 @@ object CdcPipeline {
       require(columnDefaults(m).isEmpty,
         "cannot export a symlink manifest with unmaterialized column " +
           "defaults: external readers would see NULL — OPTIMIZE first")
-      val files = m.buckets.toSeq.sortBy(_._1).flatMap { case (b, ref) =>
-        val root = if (ref.contains("/")) ref else s"$targetDir/$ref"
-        StoreFs.listFilePaths(s"$root/$BucketCol=$b", ".parquet").sorted
+      val files = manifestBuckets(targetDir, m).flatMap { case (_, _, dir) =>
+        StoreFs.listFilePaths(dir, ".parquet").sorted
       }
       val dir = s"$targetDir/_symlink_format_manifest"
       val tmp = s"$dir/.manifest.tmp"
@@ -2425,23 +2452,17 @@ object CdcPipeline {
     * reads data pages.
     */
   def describeDetail(spark: SparkSession, targetDir: String): Option[DataFrame] =
-    for {
-      v <- currentVersion(targetDir)
-      m <- manifest(targetDir, v)
-    } yield {
-      val per = m.buckets.toSeq.sortBy(_._1).map { case (b, ref) =>
-        val root = if (ref.contains("/")) ref else s"$targetDir/$ref"
-        val dir = s"$root/$BucketCol=$b"
-        val rb = StoreFs.footerRowsBytes(dir).getOrElse((0L, 0L))
-        (rb._1, rb._2, StoreFs.listFilePaths(dir, ".parquet").size.toLong)
+    currentManifest(targetDir).map { m =>
+      val v = m.readVersion
+      // (path, rows, bytes) per data file; an unreadable bucket counts 0
+      val files = manifestBuckets(targetDir, m).flatMap { case (_, _, dir) =>
+        StoreFs.footerPerFile(dir)
       }
-      val rows = per.map(_._1).sum
-      val dvRows = m.meta.get("dv")
-        .flatMap(r => StoreFs.footerRowsBytes(dvPath(targetDir, r)))
-        .map(_._1).getOrElse(0L)
+      val rows = files.map(_._2).sum
+      val dvRows = footerDvRows(targetDir, m).getOrElse(0L)
       val readable = (0L to v).count(manifest(targetDir, _).isDefined).toLong
       import spark.implicits._
-      Seq((v, m.numBuckets.toLong, per.map(_._3).sum, per.map(_._2).sum,
+      Seq((v, m.numBuckets.toLong, files.size.toLong, files.map(_._3).sum,
         rows, rows - dvRows, dvRows,
         m.schema.fields.length.toLong,
         constraintsOf(m).keys.toSeq.sorted.mkString(","),
@@ -2490,7 +2511,7 @@ object CdcPipeline {
     * (type, expression SQL). Empty when none / no store.
     */
   def generatedColumns(targetDir: String): Map[String, (DataType, String)] =
-    currentVersion(targetDir).flatMap(v => manifest(targetDir, v))
+    currentManifest(targetDir)
       .map(m => virtualCols(m).map { case (n, t, e) => n -> ((t, e)) }.toMap)
       .getOrElse(Map.empty)
 
@@ -2502,7 +2523,7 @@ object CdcPipeline {
     */
   def addGeneratedColumn(targetDir: String, name: String,
       dataType: DataType, exprSql: String): Option[Long] =
-    currentVersion(targetDir).flatMap(v => manifest(targetDir, v)).map { m =>
+    currentManifest(targetDir).map { m =>
       val phys = m.schema.fieldNames.map(_.toLowerCase(java.util.Locale.ROOT)).toSet
       require(!m.schema.fieldNames.contains(name), s"column exists: $name")
       require(!virtualCols(m).exists(_._1 == name),
@@ -2522,7 +2543,7 @@ object CdcPipeline {
     * store or the column doesn't exist.
     */
   def dropGeneratedColumn(targetDir: String, name: String): Option[Long] =
-    currentVersion(targetDir).flatMap(v => manifest(targetDir, v)).flatMap { m =>
+    currentManifest(targetDir).flatMap { m =>
       if (!virtualCols(m).exists(_._1 == name)) None
       else {
         Some(commit(targetDir, m.readVersion, Some(m), "drop-generated") { _ =>
@@ -2585,7 +2606,8 @@ object CdcPipeline {
     *    crashed writer; the next writer breaks it, fsck just surfaces
     *    it early.
     *  - `bad_pointer` (error): the `_VERSION` pointer exists but does
-    *    not parse, or points at a version with no manifest.
+    *    not parse, or points at a version with no manifest (every
+    *    reader and writer then refuses with [[BadPointerException]]).
     */
   def fsck(spark: SparkSession, targetDir: String,
       staleMs: Long = 15L * 60 * 1000): DataFrame = {
@@ -2600,8 +2622,7 @@ object CdcPipeline {
       if (manifest(targetDir, cur).isEmpty)
         report("error", "bad_pointer", s"v$cur",
           "pointer names a version with no readable manifest")
-      val versionDirs = StoreFs.listDirNames(targetDir).filter(_.matches("v\\d+"))
-      val versions = versionDirs.map(_.stripPrefix("v").toLong).sorted
+      val versions = versionDirs(targetDir)
       versions.filter(_ > cur).foreach(v =>
         report("warn", "orphan_inflight", s"v$v",
           "version dir above the pointer (in-flight or abandoned publish)"))
@@ -2612,8 +2633,7 @@ object CdcPipeline {
               "version dir with no readable manifest (died pre-manifest)")
           case Some(m) =>
             m.buckets.values.toSet[String].foreach { ref =>
-              val root = if (ref.contains("/")) ref else s"$targetDir/$ref"
-              if (!StoreFs.exists(root))
+              if (!StoreFs.exists(versionRoot(targetDir, ref)))
                 report("error", "dangling_ref", s"v$v",
                   s"manifest references missing dir $ref" +
                     (if (v == cur) " (CURRENT version — table is unreadable)" else ""))
@@ -2636,12 +2656,9 @@ object CdcPipeline {
           i.detail)
       }
       // clone pins: every version dir a pin lists must still exist
-      StoreFs.listFilePaths(s"$targetDir/$ClonesDir", "").foreach { pin =>
-        StoreFs.readString(pin).split("\n").filter(_.matches("v\\d+")).foreach { ref =>
-          if (!StoreFs.exists(s"$targetDir/$ref"))
-            report("error", "stale_pin", pin.substring(pin.lastIndexOf('/') + 1),
-              s"pin references missing dir $ref (pinned clone cannot read)")
-        }
+      clonePins(targetDir).foreach { case (pin, ref) =>
+        if (!StoreFs.exists(s"$targetDir/$ref"))
+          report("error", "stale_pin", pin, s"pin references missing dir $ref (pinned clone cannot read)")
       }
       val lock = s"$targetDir/_LOCK"
       if (StoreFs.exists(lock) &&
@@ -2690,10 +2707,9 @@ object CdcPipeline {
   def auditData(spark: SparkSession, targetDir: String,
       pkCols: Seq[String], sampleKeys: Int = 5): Option[DataFrame] = {
     import spark.implicits._
-    currentVersion(targetDir).flatMap(v => manifest(targetDir, v)).map { m =>
+    currentManifest(targetDir).map { m =>
       val snap = readBucketsWithPos(spark, targetDir, m, m.buckets.keySet)
-      val withBucket = snap.withColumn("_read_bucket",
-        regexp_extract(col(DvFileCol), s"$BucketCol=(\\d+)", 1).cast("int"))
+      val withBucket = snap.withColumn("_read_bucket", fileBucket)
       val mis = withBucket
         .filter(bucketExpr(pkCols, m.numBuckets) =!= col("_read_bucket"))
         .select(concat_ws("|", pkCols.map(col): _*).as("k"))
@@ -2768,8 +2784,7 @@ object CdcPipeline {
   def describeHistory(spark: SparkSession, targetDir: String): Option[DataFrame] =
     currentVersion(targetDir).map { cur =>
       import spark.implicits._
-      StoreFs.listDirNames(targetDir).filter(_.matches("v\\d+"))
-        .map(_.stripPrefix("v").toLong).filter(_ <= cur).sorted.reverse
+      versionDirs(targetDir).filter(_ <= cur).reverse
         .flatMap { v =>
           manifest(targetDir, v).map { m =>
             val own = m.buckets.values.count(_ == s"v$v")
@@ -2777,16 +2792,9 @@ object CdcPipeline {
             // totals over the version's referenced bucket dirs —
             // driver metadata I/O, zero Spark jobs; unreadable dirs
             // degrade the version's stats to NULL, never a guess
-            val sized = m.buckets.toSeq.map { case (b, ver) =>
-              val root = if (ver.contains("/")) ver else s"$targetDir/$ver"
-              StoreFs.footerRowsBytes(s"$root/$BucketCol=$b")
-            }
-            val (rows, bytes) =
-              if (sized.forall(_.isDefined))
-                (Some(sized.flatten.map(_._1).sum), Some(sized.flatten.map(_._2).sum))
-              else (None, None)
+            val sized = footerBucketTotals(targetDir, m)
             (v, m.meta.get("op"), m.meta.get("commit_us").map(_.toLong),
-              m.numBuckets, own, m.buckets.size - own, rows, bytes)
+              m.numBuckets, own, m.buckets.size - own, sized.map(_._1), sized.map(_._2))
           }
         }
         .toDF("version", "op", "commit_us", "num_buckets",
@@ -2944,7 +2952,7 @@ object CdcPipeline {
               .getOrElse(System.currentTimeMillis() * 1000L)
             val cutoff = now - age
             val maybeExpired =
-              currentVersion(targetDir).flatMap(manifest(targetDir, _))
+              currentManifest(targetDir)
                 .forall(m => m.buckets.keys.exists { b =>
                   m.stats.get(b).flatMap(_.get(c)) match {
                     case Some((lo, _)) =>
@@ -2969,12 +2977,9 @@ object CdcPipeline {
           case None => Set.empty
           case Some(limit) =>
             (for {
-              v <- currentVersion(targetDir).toSeq
-              m <- manifest(targetDir, v).toSeq
-              (b, ref) <- m.buckets.toSeq
-              root = if (ref.contains("/")) ref else s"$targetDir/$ref"
-              if StoreFs.listFilePaths(s"$root/$BucketCol=$b", ".parquet")
-                .size > limit
+              m <- currentManifest(targetDir).toSeq
+              (b, _, dir) <- manifestBuckets(targetDir, m)
+              if StoreFs.listFilePaths(dir, ".parquet").size > limit
             } yield b).toSet
         }
         val optV =
@@ -2992,8 +2997,7 @@ object CdcPipeline {
           case None => Nil
           case Some(pct) =>
             val degraded = for {
-              v <- currentVersion(targetDir).toSeq
-              m <- manifest(targetDir, v).toSeq
+              m <- currentManifest(targetDir).toSeq
               key <- m.meta.keys.filter(_.startsWith(Bloom.prefix)).toSeq.sorted
               column = key.stripPrefix(Bloom.prefix)
               missing = m.buckets.keySet.filter(b =>
@@ -3014,8 +3018,7 @@ object CdcPipeline {
           case None => Nil
           case Some(pct) =>
             val degraded = for {
-              v <- currentVersion(targetDir).toSeq
-              m <- manifest(targetDir, v).toSeq
+              m <- currentManifest(targetDir).toSeq
               key <- m.meta.keys.filter(_.startsWith(Ndv.prefix)).toSeq.sorted
               column = key.stripPrefix(Ndv.prefix)
               missing = m.buckets.keySet.filter(b =>
@@ -3041,7 +3044,7 @@ object CdcPipeline {
         // the table exportable
         val manifestFiles =
           if (!policy.symlinkManifest) None
-          else currentVersion(targetDir).flatMap(manifest(targetDir, _))
+          else currentManifest(targetDir)
             .filter(m => !m.meta.contains("dv") && columnDefaults(m).isEmpty)
             .flatMap(_ => generateSymlinkManifest(targetDir).map(_.size))
         MaintenanceReport(folded, frag, optV, bloomRebuilt, expired, vacuumed,
@@ -3062,19 +3065,14 @@ object CdcPipeline {
     * rows, so the listing refuses (fold first) rather than lie.
     */
   def describeFiles(spark: SparkSession, targetDir: String): Option[DataFrame] =
-    for {
-      v <- currentVersion(targetDir)
-      m <- manifest(targetDir, v)
-    } yield {
+    currentManifest(targetDir).map { m =>
       import spark.implicits._
       require(!m.meta.contains("dv"),
         "describeFiles counts footer rows; a deletion vector is " +
           "outstanding and live rows would overcount — fold it first " +
           "(foldDv / maintain)")
-      m.buckets.toSeq.sortBy(_._1).flatMap { case (b, ref) =>
-        val root = if (ref.contains("/")) ref else s"$targetDir/$ref"
-        StoreFs.footerPerFile(s"$root/$BucketCol=$b")
-          .sortBy(_._1).map { case (f, r, by) => (b, ref, f, r, by) }
+      manifestBuckets(targetDir, m).flatMap { case (b, ref, dir) =>
+        StoreFs.footerPerFile(dir).sortBy(_._1).map { case (f, r, by) => (b, ref, f, r, by) }
       }.toDF("bucket", "version_ref", "file", "rows", "bytes")
     }
 
@@ -3095,8 +3093,7 @@ object CdcPipeline {
       targetDir: String): Option[DataFrame] =
     currentVersion(targetDir).map { cur =>
       import spark.implicits._
-      val versions = StoreFs.listDirNames(targetDir).filter(_.matches("v\\d+"))
-        .map(_.stripPrefix("v").toLong).filter(_ <= cur).sorted
+      val versions = versionDirs(targetDir).filter(_ <= cur)
       val schemas = versions.flatMap(v =>
         manifest(targetDir, v).map(m =>
           v -> m.schema.fields.map(f => f.name -> f.dataType.simpleString).toMap))
@@ -3168,8 +3165,7 @@ object CdcPipeline {
     */
   def expireSnapshots(targetDir: String, olderThanUs: Long): Seq[Long] = {
     val cur = currentVersion(targetDir).getOrElse(return Nil)
-    val versions = StoreFs.listDirNames(targetDir).filter(_.matches("v\\d+"))
-      .map(_.stripPrefix("v").toLong).filterNot(_ > cur).sorted
+    val versions = versionDirs(targetDir).filter(_ <= cur)
     val kept = versions.filter { v =>
       v == cur || manifest(targetDir, v)
         .flatMap(_.meta.get("commit_us")).map(_.toLong)
@@ -3212,23 +3208,13 @@ object CdcPipeline {
     // tagged versions (A78) are named state: they and their carried
     // bucket references stay live — a tag must stay READABLE, not
     // merely listed — until dropTag
-    val tagged = taggedVersions(targetDir)
     val live: Set[String] =
-      keptVersions.map(v => s"v$v").toSet ++
-        keptVersions.flatMap(v =>
-          manifest(targetDir, v).map(_.buckets.values.toSet).getOrElse(Set.empty)) ++
-        tagged.map(v => s"v$v") ++
-        tagged.flatMap(v =>
-          manifest(targetDir, v).map(_.buckets.values.toSet).getOrElse(Set.empty)) ++
-        StoreFs.listFilePaths(s"$targetDir/$ClonesDir", "")
-          .flatMap(p => StoreFs.readString(p).split("\n"))
-          .filter(_.matches("v\\d+"))
-    StoreFs.listDirNames(targetDir)
-      .filter(_.matches("v\\d+"))
-      // never touch versions ABOVE the pointer: v{cur+1} may be an
-      // in-flight publish that hasn't swapped the pointer yet
-      .filterNot(_.stripPrefix("v").toLong > cur)
-      .filterNot(live)
+      (keptVersions ++ taggedVersions(targetDir)).flatMap(v =>
+        manifest(targetDir, v).fold(Set.empty[String])(_.buckets.values.toSet) + s"v$v").toSet ++
+        clonePins(targetDir).map(_._2)
+    // never touch versions ABOVE the pointer: v{cur+1} may be an
+    // in-flight publish that hasn't swapped the pointer yet
+    versionDirs(targetDir).filter(_ <= cur).map(v => s"v$v").filterNot(live)
   }
 
   /** Shared reclaim core of [[vacuum]]/[[expireSnapshots]]: delete
@@ -3242,6 +3228,13 @@ object CdcPipeline {
   }
 
   private val ClonesDir = "_clones"
+
+  /** (pin name, version dir) of every clone pin registered at `storeDir`. */
+  private def clonePins(storeDir: String): Seq[(String, String)] =
+    StoreFs.listFilePaths(s"$storeDir/$ClonesDir", "").flatMap { p =>
+      StoreFs.readString(p).split("\n").filter(_.matches("v\\d+"))
+        .map(p.substring(p.lastIndexOf('/') + 1) -> _)
+    }
 
   private def clonePinToken(destDir: String): String = {
     val md = java.security.MessageDigest.getInstance("MD5")
@@ -3267,14 +3260,13 @@ object CdcPipeline {
     * OWN pins, so dropping an intermediate clone's pin never exposes
     * a grand-clone to the original source's vacuum.
     * Refuses an existing dest. Returns the clone's version (0), None
-    * when the source has no manifest-layout snapshot.
+    * when the source has no store (or no manifest at `atVersion`).
     */
   def cloneSnapshot(sourceDir: String, destDir: String,
       deep: Boolean = false, atVersion: Option[Long] = None): Option[Long] = {
     require(!StoreFs.exists(s"$destDir/$VersionFile"),
       s"clone destination already holds a store: $destDir")
-    val v = atVersion.orElse(currentVersion(sourceDir)).getOrElse(return None)
-    manifest(sourceDir, v).map { m =>
+    atVersion.fold(currentManifest(sourceDir))(manifest(sourceDir, _)).map { m =>
       // a clone's version timeline restarts at v0, so the source's
       // "declaration version vs bucket-ref version" comparison that
       // resolves initial defaults (A57) becomes meaningless across
@@ -3290,9 +3282,8 @@ object CdcPipeline {
       // source's vacuum ever has to know the clone depends on them
       commit(destDir, -1L, Some(m), if (deep) "deep-clone" else "clone",
         fromDir = Some(sourceDir)) { _ =>
-        if (deep) m.buckets.foreach { case (b, ver) =>
-          val verDir = if (ver.contains("/")) ver else s"$sourceDir/$ver"
-          StoreFs.copyDir(s"$verDir/$BucketCol=$b", s"$destDir/v0/$BucketCol=$b")
+        if (deep) manifestBuckets(sourceDir, m).foreach { case (b, _, dir) =>
+          StoreFs.copyDir(dir, bucketDir(s"$destDir/v0", b))
         } else {
           // every store this clone's references resolve into gets a pin
           // keyed by THIS clone: source-local refs pin at sourceDir,
@@ -3300,15 +3291,11 @@ object CdcPipeline {
           // that owns them — so each clone stands on its own pins and
           // dropClonePin on an intermediate clone can never tear files
           // out from under a grand-clone (ADVICE r7)
-          m.buckets.values.toSeq.distinct
-            .groupBy(ver =>
-              if (ver.contains("/")) ver.substring(0, ver.lastIndexOf('/'))
-              else sourceDir)
-            .foreach { case (root, vers) =>
-              val names = vers.map(v =>
-                if (v.contains("/")) v.substring(v.lastIndexOf('/') + 1) else v)
-                .distinct.sorted
-              StoreFs.writeString(s"$root/$ClonesDir/${clonePinToken(destDir)}",
+          m.buckets.values.toSeq.distinct.map(versionRoot(sourceDir, _))
+            .groupBy(abs => abs.substring(0, abs.lastIndexOf('/')))
+            .foreach { case (store, roots) =>
+              val names = roots.map(r => r.substring(r.lastIndexOf('/') + 1)).distinct.sorted
+              StoreFs.writeString(s"$store/$ClonesDir/${clonePinToken(destDir)}",
                 names.mkString("\n"))
             }
         }
@@ -3335,8 +3322,7 @@ object CdcPipeline {
   def createLike(sourceDir: String, destDir: String): Option[Long] = {
     require(!StoreFs.exists(s"$destDir/$VersionFile"),
       s"createLike destination already holds a store: $destDir")
-    val v = currentVersion(sourceDir).getOrElse(return None)
-    manifest(sourceDir, v).map { m =>
+    currentManifest(sourceDir).map { m =>
       // every bucket "rewritten" to empty: no data, stats, DV or index
       // sidecars carry — only the declarations
       commit(destDir, -1L, Some(m), "create-like", fromDir = Some(sourceDir)) { _ =>
@@ -3404,8 +3390,7 @@ object CdcPipeline {
     val cur = currentVersion(targetDir).getOrElse(return None)
     if (version > cur) return None
     manifest(targetDir, version).flatMap { m =>
-      val refRoots = m.buckets.values.toSet[String]
-        .map(ver => if (ver.contains("/")) ver else s"$targetDir/$ver") ++
+      val refRoots = m.buckets.values.toSet[String].map(versionRoot(targetDir, _)) ++
         m.meta.get("dv").map(dvPath(targetDir, _)) // DV must survive too
       if (!refRoots.forall(StoreFs.exists)) None // vacuumed out from under us
       else {
@@ -3446,8 +3431,8 @@ object CdcPipeline {
     */
   def createTag(targetDir: String, name: String,
       version: Option[Long] = None): Option[Long] = {
-    val v = version.orElse(currentVersion(targetDir)).getOrElse(return None)
-    if (manifest(targetDir, v).isEmpty) return None
+    val v = version.fold(currentManifest(targetDir))(manifest(targetDir, _))
+      .getOrElse(return None).readVersion
     require(StoreFs.createExclusive(tagPath(targetDir, name), v.toString),
       s"tag '$name' already exists on $targetDir")
     Some(v)
@@ -3558,19 +3543,17 @@ object CdcPipeline {
         s"upstream $sourceDir moved to v$cur since the branch forked at " +
           s"v$forkV: fast-forward refused — re-branch from the new head " +
           "and replay")
-    val bv = currentVersion(branchDir).getOrElse(return None)
-    manifest(branchDir, bv).map { bm =>
+    currentManifest(branchDir).map { bm =>
       require(columnDefaults(bm).isEmpty,
         "cannot fast-forward a branch with unmaterialized column defaults" +
           ": OPTIMIZE the branch first")
-      val srcPrefix = s"$sourceDir/"
       commit(sourceDir, cur, Some(bm), "branch-publish", fromDir = Some(branchDir)) { next =>
         // buckets the branch wrote are copied (∝ branch delta); the
         // commit rewires the rest back to the upstream's own dirs
         bm.buckets.foreach { case (b, ref) =>
-          val abs = if (ref.contains("/")) ref else s"$branchDir/$ref"
-          if (!(abs.startsWith(srcPrefix) && abs.stripPrefix(srcPrefix).matches("v\\d+")))
-            StoreFs.copyDir(s"$abs/$BucketCol=$b", s"$sourceDir/v$next/$BucketCol=$b")
+          val abs = versionRoot(branchDir, ref)
+          if (localRef(sourceDir, abs).isEmpty)
+            StoreFs.copyDir(bucketDir(abs, b), bucketDir(s"$sourceDir/v$next", b))
         }
         Edit(set = Map("branch_of" -> branchDir))
       }
@@ -3624,8 +3607,7 @@ object CdcPipeline {
     * bucket sets again.
     */
   private[graft] def summarize(cfg: CdcTableConfig, changes: DataFrame): ChangeSummary = {
-    def bucketCount(dir: String): Option[Int] =
-      currentVersion(dir).flatMap(manifest(dir, _)).map(_.numBuckets)
+    def bucketCount(dir: String): Option[Int] = currentManifest(dir).map(_.numBuckets)
     val counts = (bucketCount(cfg.targetPath).toSeq ++
       cfg.scd2.flatMap(_ => bucketCount(Scd2Store.openPath(cfg)))).distinct
     val op = if (changes.columns.contains(CdcEnvelope.OpCol)) col(CdcEnvelope.OpCol)
@@ -3681,34 +3663,23 @@ object CdcPipeline {
         SnapshotMerge.merge(stored, changes, cfg.pk, Some(deltaRows))
       else SnapshotMerge.mergeEvolving(stored, changes, cfg.pk, Some(deltaRows)))
         .select(targetCols: _*)
-    currentVersion(cfg.targetPath) match {
+    currentManifest(cfg.targetPath) match {
       case None =>
         val merged = SnapshotMerge.fromHistory(changes, cfg.pk, cfg.targetCols)
         MergeOutcome(publish(merged, cfg.targetPath, cfg.pk, batchId, cfg.numBuckets,
           cfg.statsCols, swapNow = swapNow), 0L)
-      case Some(v) =>
-        manifest(cfg.targetPath, v) match {
-          case Some(m) =>
-            if (!gated) gateConstraints(cfg, changes, m)
-            val touched = summary.touched(cfg.targetPath, m.numBuckets)
-            val subset = readBuckets(spark, cfg.targetPath, m, touched)
-            val updated = labeled(spark, "store.merge: matched keys") {
-              SnapshotMerge
-                .matchedUpsertKeys(subset, changes, cfg.pk, Some(deltaRows)).count()
-            }
-            MergeOutcome(
-              publishDelta(mergeOnto(subset), cfg.targetPath, cfg.pk, m, touched, batchId,
-                cfg.statsCols, swapNow = swapNow),
-              updated)
-          case None => // pre-manifest flat snapshot: merge full, migrate layout
-            val target = spark.read.parquet(s"${cfg.targetPath}/v$v")
-            val updated = SnapshotMerge
-              .matchedUpsertKeys(target, changes, cfg.pk, Some(deltaRows)).count()
-            MergeOutcome(
-              publish(mergeOnto(target), cfg.targetPath, cfg.pk, batchId, cfg.numBuckets,
-                cfg.statsCols, swapNow = swapNow),
-              updated)
+      case Some(m) =>
+        if (!gated) gateConstraints(cfg, changes, m)
+        val touched = summary.touched(cfg.targetPath, m.numBuckets)
+        val subset = readBuckets(spark, cfg.targetPath, m, touched)
+        val updated = labeled(spark, "store.merge: matched keys") {
+          SnapshotMerge
+            .matchedUpsertKeys(subset, changes, cfg.pk, Some(deltaRows)).count()
         }
+        MergeOutcome(
+          publishDelta(mergeOnto(subset), cfg.targetPath, cfg.pk, m, touched, batchId,
+            cfg.statsCols, swapNow = swapNow),
+          updated)
     }
   }
 
@@ -3951,16 +3922,14 @@ object CdcPipeline {
 
   /** The buckets of `targetDir`'s version `version` that `summary`'s
     * keys hash to — every row those changes can match. A version
-    * whose bucket count the summary lacks, or a pre-manifest flat
-    * version, reads whole. None when the version was vacuumed.
+    * whose bucket count the summary lacks reads whole. None when the
+    * version has no manifest (vacuumed).
     */
   private def readTouchedAt(spark: SparkSession, targetDir: String, version: Long,
       summary: ChangeSummary): Option[DataFrame] =
-    manifest(targetDir, version) match {
-      case Some(m) =>
-        val buckets = summary.bucketsByCount.getOrElse(m.numBuckets, m.buckets.keySet)
-        Some(applyVirtual(readBuckets(spark, targetDir, m, buckets), m))
-      case None => readSnapshotAt(spark, targetDir, version)
+    manifest(targetDir, version).map { m =>
+      val buckets = summary.bucketsByCount.getOrElse(m.numBuckets, m.buckets.keySet)
+      applyVirtual(readBuckets(spark, targetDir, m, buckets), m)
     }
 
   /** Vacuum the target and every rollup store down to
@@ -4023,8 +3992,7 @@ object CdcPipeline {
     val historyBeside = cfg.scd2.nonEmpty &&
       currentVersion(Scd2Store.openPath(cfg)).isDefined && Scd2Store.lastAppliedSeq(cfg) < r.seqKey
     if (r.targetFresh) phase("merge+publish") {
-      currentVersion(cfg.targetPath).flatMap(manifest(cfg.targetPath, _))
-        .foreach(gateConstraints(cfg, changes, _))
+      currentManifest(cfg.targetPath).foreach(gateConstraints(cfg, changes, _))
     }
     def mergeThenRollups(): Option[MergeOutcome] = {
       val outcome = Option.when(r.targetFresh)(phase("merge+publish") {

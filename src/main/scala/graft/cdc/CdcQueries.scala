@@ -1384,8 +1384,7 @@ object CdcQueries {
     EventsCdc.merge(s, cfg, chg1) // v1
     val v2 = CdcPipeline.addColumnWithDefault(s, cfg.targetPath, "score",
       LongType, 7L).get
-    require(!StoreFs.listDirNames(s"${cfg.targetPath}/v$v2")
-      .exists(_.startsWith("_graft_bucket")),
+    require(CdcPipeline.listedBuckets(s"${cfg.targetPath}/v$v2").isEmpty,
       "ADD COLUMN must move zero data bytes")
     CdcPipeline.updateWhere(s, cfg.targetPath, pk, col("event_id") % 3 === 0,
       Map("score" -> (col("k") + lit(1L)))) // v3

@@ -140,7 +140,7 @@ object ChangeFeeds {
       spark.readStream
         .schema(h.schema)
         .option("pathGlobFilter", "*.parquet")
-        .parquet(s"${Scd2Store.closedPath(cfg)}/d*/${CdcPipeline.BucketCol}=*")
+        .parquet(CdcPipeline.bucketGlob(s"${Scd2Store.closedPath(cfg)}/d*"))
     }
 
   /** Continuous change-feed EXPORT (A65 — the missing half of the

@@ -68,12 +68,11 @@ object CopyInto {
     */
   def copyInto(spark: SparkSession, targetDir: String, pkCols: Seq[String],
       files: Seq[String], format: String = "parquet"): Result = {
-    val cur = CdcPipeline.currentVersion(targetDir).getOrElse(
+    val m = CdcPipeline.currentManifest(targetDir).getOrElse(
       throw new IllegalArgumentException(
         s"no graft store at $targetDir — COPY INTO needs an existing " +
           "store (bootstrap with publish/graft_create)"))
-    val m = CdcPipeline.manifest(targetDir, cur).getOrElse(
-      throw new IllegalStateException(s"no manifest for v$cur at $targetDir"))
+    val cur = m.readVersion
     val ledger = ledgerDir(targetDir)
     val seen = StoreFs.listFilePaths(ledger, ".mark")
       .map(p => p.substring(p.lastIndexOf('/') + 1).stripSuffix(".mark")).toSet

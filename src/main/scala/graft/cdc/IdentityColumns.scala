@@ -69,10 +69,8 @@ object IdentityColumns {
     require(step > 0, s"identity step must be positive, got $step")
     require(identitySpec(targetDir, name).isEmpty,
       s"identity column $name already declared at $targetDir")
-    val cur = CdcPipeline.currentVersion(targetDir).getOrElse(
+    val m = CdcPipeline.currentManifest(targetDir).getOrElse(
       throw new IllegalArgumentException(s"no graft store at $targetDir"))
-    val m = CdcPipeline.manifest(targetDir, cur).getOrElse(
-      throw new IllegalStateException(s"no manifest for v$cur"))
     val field = m.schema.fields.find(_.name == name).getOrElse(
       throw new IllegalArgumentException(
         s"identity column $name does not exist in the store schema — " +
@@ -99,8 +97,9 @@ object IdentityColumns {
     val spec = identitySpec(targetDir, name).getOrElse(
       throw new IllegalArgumentException(
         s"no identity column $name declared at $targetDir"))
-    val cur = CdcPipeline.currentVersion(targetDir).get
-    val m = CdcPipeline.manifest(targetDir, cur).get
+    val m = CdcPipeline.currentManifest(targetDir).getOrElse(
+      throw new IllegalArgumentException(s"no graft store at $targetDir"))
+    val cur = m.readVersion
     val touched = source
       .select(CdcPipeline.bucketExpr(pkCols, m.numBuckets).as("b"))
       .distinct().collect().map(_.getInt(0)).toSet

@@ -146,9 +146,8 @@ object JoinView {
     */
   def applyFactDelta(spark: SparkSession, spec: JoinViewSpec,
       changes: DataFrame, dim: DataFrame, deltaRows: Option[Long] = None): Long = {
-    val cur = CdcPipeline.currentVersion(spec.viewDir)
+    val m = CdcPipeline.currentManifest(spec.viewDir)
       .getOrElse(throw new IllegalStateException(s"no view at ${spec.viewDir} — bootstrap first"))
-    val m = CdcPipeline.manifest(spec.viewDir, cur).get
     val touched = changes
       .select(CdcPipeline.bucketExpr(spec.factPk, m.numBuckets).as("b"))
       .distinct().collect().map(_.getInt(0)).toSet
@@ -166,8 +165,8 @@ object JoinView {
       batchId = -1L, op = "join-view-fact")
     // index append: new pairs only (upserted rows' fk routing)
     val newPairs = fkPairs(changes.filter(col(CdcEnvelope.OpCol) =!= CdcEnvelope.Delete), spec)
-    val icur = CdcPipeline.currentVersion(indexDir(spec)).get
-    val im = CdcPipeline.manifest(indexDir(spec), icur).get
+    val im = CdcPipeline.currentManifest(indexDir(spec))
+      .getOrElse(throw new IllegalStateException("join view has no fk index"))
     val idxTouched = newPairs
       .select(CdcPipeline.bucketExpr(Seq(spec.fkCol), im.numBuckets).as("b"))
       .distinct().collect().map(_.getInt(0)).toSet
@@ -187,14 +186,13 @@ object JoinView {
     */
   def applyDimDelta(spark: SparkSession, spec: JoinViewSpec,
       dimChanges: DataFrame): Long = {
-    val cur = CdcPipeline.currentVersion(spec.viewDir)
+    val m = CdcPipeline.currentManifest(spec.viewDir)
       .getOrElse(throw new IllegalStateException(s"no view at ${spec.viewDir} — bootstrap first"))
-    val m = CdcPipeline.manifest(spec.viewDir, cur).get
     val fks = dimChanges.select(col(spec.dimPk).as(spec.fkCol)).distinct()
     val affectedBuckets = CdcPipeline.readKeys(spark, indexDir(spec), Seq(spec.fkCol), fks)
       .map(_.select(FactBucketCol).distinct().collect().map(_.getInt(0)).toSet)
       .getOrElse(throw new IllegalStateException("join view has no fk index"))
-    if (affectedBuckets.isEmpty) return cur // no referer anywhere: no-op
+    if (affectedBuckets.isEmpty) return m.readVersion // no referer anywhere: no-op
     val stored = CdcPipeline.readBuckets(spark, spec.viewDir, m, affectedBuckets)
     val keep = stored.join(broadcast(fks), Seq(spec.fkCol), "left_anti")
     val dimUps = dimChanges.filter(col(CdcEnvelope.OpCol) =!= CdcEnvelope.Delete)

@@ -115,13 +115,11 @@ object PartialMerge {
       }
       typed
     }
-    CdcPipeline.currentVersion(targetDir) match {
+    CdcPipeline.currentManifest(targetDir) match {
       case None =>
         CdcPipeline.publish(merge(env, emptyBase, pkCols, fields), targetDir,
           pkCols, batchId, numBuckets, statsCols)
-      case Some(v) =>
-        val m = CdcPipeline.manifest(targetDir, v).getOrElse(
-          throw new IllegalStateException(s"no manifest at $targetDir v$v"))
+      case Some(m) =>
         // The store's schema must be EXACTLY pk + declared fields
         // (r9 ADVICE): the subset pre-select below would otherwise
         // narrow a wider store before merge() could apply its

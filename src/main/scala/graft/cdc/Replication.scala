@@ -163,9 +163,8 @@ object Replication {
       dataCols: Seq[String]): Option[(Long, Long)] = {
     val changeRows = changes.count()
     if (changeRows == 0L) return None
-    val m = CdcPipeline.currentVersion(dstDir)
-      .flatMap(v => CdcPipeline.manifest(dstDir, v)).getOrElse(
-        throw new IllegalStateException(s"replica $dstDir lost its manifest"))
+    val m = CdcPipeline.currentManifest(dstDir).getOrElse(
+      throw new IllegalStateException(s"replica $dstDir has no store"))
     val touched = changes
       .select(CdcPipeline.bucketExpr(pkCols, m.numBuckets).as("b"))
       .distinct().collect().map(_.getInt(0)).toSet

@@ -76,8 +76,7 @@ object Scd2Store {
     * passthrough column's type is unknown until first written).
     */
   private def declaredType(cfg: CdcTableConfig, name: String): DataType =
-    CdcPipeline.currentVersion(cfg.targetPath)
-      .flatMap(v => CdcPipeline.manifest(cfg.targetPath, v))
+    CdcPipeline.currentManifest(cfg.targetPath)
       .flatMap(_.schema.fields.find(_.name == name).map(_.dataType))
       .orElse(cfg.fieldSpecs.find(_.as == name)
         .map(s => TypedProjection.outputType(s.rule)))
@@ -144,19 +143,14 @@ object Scd2Store {
       (v, g, dirs)
     }
 
-  /** Leaf `_graft_bucket=*` directories of the given closed dirs,
-    * optionally restricted to a bucket subset. Reading leaves (the
-    * same way `readBuckets` does) sidesteps multi-root partition
+  /** Leaf bucket directories of the given closed dirs, keeping the
+    * buckets `keep(closedDir)` admits (default: all). Reading leaves
+    * (the same way `readBuckets` does) sidesteps multi-root partition
     * inference entirely.
     */
-  private def closedLeafDirs(dirs: Seq[String], buckets: Option[Set[Int]]): Seq[String] =
-    dirs.flatMap { d =>
-      StoreFs.listDirNames(d)
-        .filter(_.startsWith(CdcPipeline.BucketCol + "="))
-        .filter(n => buckets.forall(_.contains(
-          n.stripPrefix(CdcPipeline.BucketCol + "=").toInt)))
-        .map(n => s"$d/$n")
-    }
+  private def closedLeafDirs(dirs: Seq[String],
+      keep: String => Int => Boolean = _ => _ => true): Seq[String] =
+    dirs.flatMap(d => CdcPipeline.listedBuckets(d).collect { case (b, leaf) if keep(d)(b) => leaf })
 
   /** Bucket count a closed dir was written with (its `_NB` marker;
     * dirs from before the marker existed fall back to the open
@@ -179,9 +173,7 @@ object Scd2Store {
     // metadata I/O, zero Spark jobs); fallback: a delta-sized
     // read-back aggregation. A dir without the sidecar is simply
     // never pruned.
-    val written = StoreFs.listDirNames(dir)
-      .exists(_.startsWith(CdcPipeline.BucketCol + "="))
-    if (written) {
+    if (CdcPipeline.listedBuckets(dir).nonEmpty) {
       val range = StoreFs.footerLongRange(dir, Scd2.To).orElse {
         val w = df.sparkSession.read.parquet(dir)
           .agg(min(col(Scd2.To)), max(col(Scd2.To))).collect()(0)
@@ -224,7 +216,7 @@ object Scd2Store {
         val cols = histCols(cfg, spec)
         val open = selectBackfilled(cfg,
           CdcPipeline.readSnapshot(spark, openPath(cfg)).get, cols)
-        val leaves = closedLeafDirs(committedClosedDirs(cfg, v), None)
+        val leaves = closedLeafDirs(committedClosedDirs(cfg, v))
         val closed =
           if (leaves.isEmpty) open.filter(lit(false))
           else spark.read.schema(open.schema).parquet(leaves: _*)
@@ -251,7 +243,7 @@ object Scd2Store {
           CdcPipeline.readSnapshot(spark, openPath(cfg)).get, cols)
         val dirs = committedClosedDirs(cfg, v).filter(d =>
           dirRange(d).forall { case (_, maxTo) => maxTo >= fromUs })
-        val leaves = closedLeafDirs(dirs, None)
+        val leaves = closedLeafDirs(dirs)
         val closed =
           if (leaves.isEmpty) open.filter(lit(false))
           else spark.read.schema(open.schema).parquet(leaves: _*)
@@ -316,11 +308,10 @@ object Scd2Store {
   def readKeys(spark: SparkSession, cfg: CdcTableConfig, keys: DataFrame,
       asOfUs: Option[Long] = None): Option[DataFrame] =
     cfg.scd2.flatMap { spec =>
-      CdcPipeline.currentVersion(openPath(cfg)).map { v =>
+      CdcPipeline.currentManifest(openPath(cfg)).map { m =>
         val cols = histCols(cfg, spec)
         val open = selectBackfilled(cfg,
           CdcPipeline.readKeys(spark, openPath(cfg), cfg.pk, keys).get, cols)
-        val m = CdcPipeline.manifest(openPath(cfg), v).get
         // same type-cast-before-hash contract as CdcPipeline.readKeys
         val storedType = m.schema.fields.map(f => f.name -> f.dataType).toMap
         val typedKeys = keys.select(cfg.pk.map(c => storedType.get(c)
@@ -328,19 +319,12 @@ object Scd2Store {
         // each closed dir records its own bucket count (`_NB`) — the
         // hash routing is per-dir, so lookups stay correct even if
         // the open store was rebucketed after some dirs were written
-        val dirs = committedClosedDirs(cfg, v)
+        val dirs = committedClosedDirs(cfg, m.readVersion)
         val countOf: Map[String, Int] = dirs.map(d => d -> dirBuckets(d, m.numBuckets)).toMap
         val touchedByCount: Map[Int, Set[Int]] = countOf.values.toSet.map { nb: Int =>
           nb -> CdcPipeline.keyBuckets(typedKeys, cfg.pk, nb)
         }.toMap
-        val bucketDirs = dirs.flatMap { d =>
-          val touched = touchedByCount(countOf(d))
-          StoreFs.listDirNames(d)
-            .filter(_.startsWith(CdcPipeline.BucketCol + "="))
-            .filter(n => touched.contains(
-              n.stripPrefix(CdcPipeline.BucketCol + "=").toInt))
-            .map(n => s"$d/$n")
-        }
+        val bucketDirs = closedLeafDirs(dirs, d => touchedByCount(countOf(d)))
         val closed =
           if (bucketDirs.isEmpty) open.filter(lit(false))
           else spark.read.schema(open.schema)
@@ -375,7 +359,7 @@ object Scd2Store {
           val n = d.substring(d.lastIndexOf('/') + 1)
           n.startsWith("d") && n.stripPrefix("d").toLong > sinceVersion
         }
-        val leaves = closedLeafDirs(dirs, None)
+        val leaves = closedLeafDirs(dirs)
         if (leaves.isEmpty) open.filter(lit(false))
         else spark.read.schema(open.schema).parquet(leaves: _*)
       }
@@ -490,7 +474,7 @@ object Scd2Store {
     // delta-sized: one row per PK in the window → broadcasts
     val firstEvt = env.groupBy(pk.map(col): _*)
       .agg(min(col(CdcEnvelope.TsCol)).as("_first_ts"))
-    CdcPipeline.currentVersion(op) match {
+    CdcPipeline.currentManifest(op) match {
       case None =>
         // first window of a target created WITH the declaration: the
         // window env IS the full change log so far
@@ -503,8 +487,8 @@ object Scd2Store {
           newSlices.filter(col(Scd2.To).isNull).select(cols.map(col): _*),
           op, pk, batchId = seqKey, buckets = Some(numBuckets))
         ()
-      case Some(v) =>
-        val m = CdcPipeline.manifest(op, v).get
+      case Some(m) =>
+        val v = m.readVersion
         // open-store I/O ∝ delta: only the buckets the window's PKs
         // hash to are read and rewritten
         val touched = summary.touched(op, m.numBuckets)
@@ -566,10 +550,10 @@ object Scd2Store {
   def compactClosed(spark: SparkSession, cfg: CdcTableConfig,
       dropClosedBeforeUs: Option[Long] = None): Int =
     cfg.scd2.map { spec =>
-      CdcPipeline.currentVersion(openPath(cfg)) match {
+      CdcPipeline.currentManifest(openPath(cfg)) match {
         case None => 0
-        case Some(v) =>
-          val live = committedClosedDirs(cfg, v).toSet
+        case Some(m) =>
+          val live = committedClosedDirs(cfg, m.readVersion).toSet
           // orphan sweep: dirs superseded by a previous compaction's
           // pointer swap (kept one generation as reader grace), plus
           // torn advancement dirs above the committed version (their
@@ -586,8 +570,7 @@ object Scd2Store {
             val cols = histCols(cfg, spec)
             val open = selectBackfilled(cfg,
               CdcPipeline.readSnapshot(spark, openPath(cfg)).get, cols)
-            val numBuckets = CdcPipeline.manifest(openPath(cfg), v).get.numBuckets
-            val leaves = closedLeafDirs(dirs, None)
+            val leaves = closedLeafDirs(dirs)
             val all0 =
               if (leaves.isEmpty) open.filter(lit(false))
               else spark.read.schema(open.schema).parquet(leaves: _*)
@@ -596,9 +579,9 @@ object Scd2Store {
               .getOrElse(all0)
             val (_, gen, _) = readGen(cfg)
             val combined = s"g${gen + 1}"
-            writeClosedDir(all, cfg.pk, numBuckets, s"${closedPath(cfg)}/$combined")
+            writeClosedDir(all, cfg.pk, m.numBuckets, s"${closedPath(cfg)}/$combined")
             val tmp = s"${closedPath(cfg)}/._GEN.tmp"
-            StoreFs.writeString(tmp, s"version=$v\ngen=${gen + 1}\ndirs=$combined\n")
+            StoreFs.writeString(tmp, s"version=${m.readVersion}\ngen=${gen + 1}\ndirs=$combined\n")
             StoreFs.atomicReplace(tmp, genPath(cfg))
             // inputs stay on disk as reader grace; the next
             // compaction's orphan sweep removes them

@@ -1,9 +1,13 @@
 package graft.cdc
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileContext, FileSystem, Options, Path}
+import org.apache.hadoop.fs.{FileContext, FileStatus, FileSystem, Options, Path}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.SparkSession
 import java.nio.charset.StandardCharsets
+import scala.jdk.CollectionConverters._
 
 /** Control-plane file operations of the versioned store (pointer,
   * manifest, vacuum, job-log compaction), on the Hadoop `FileSystem`
@@ -297,109 +301,80 @@ private[graft] object StoreFs {
       /* deleteSource = */ false, /* overwrite = */ true, conf)
   }
 
+  /** The one footer loop: every parquet data file under `dir` (a
+    * file path names just that file), recursively or only directly in
+    * it, with its footer read on the driver — metadata I/O only, zero
+    * Spark jobs. Hidden (`.`/`_`) files are skipped, as Spark's reader
+    * skips them. Throws when `dir` is missing or a footer is
+    * unreadable; each public walker below states its own degrade.
+    */
+  private def walkFooters[T](dir: String, recursive: Boolean)
+      (f: (FileStatus, ParquetMetadata) => T): Seq[T] = {
+    val p = new Path(dir)
+    val files =
+      if (recursive) {
+        val it = fs(p).listFiles(p, true)
+        Iterator.continually(it).takeWhile(_.hasNext).map(_.next(): FileStatus).toSeq
+      } else fs(p).listStatus(p).toSeq
+    files.filter { st =>
+      val n = st.getPath.getName
+      st.isFile && n.endsWith(".parquet") && !n.startsWith(".") && !n.startsWith("_")
+    }.map { st =>
+      val r = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf))
+      val footer = try r.getFooter finally r.close()
+      f(st, footer)
+    }
+  }
+
+  private def footerRows(f: ParquetMetadata): Long =
+    f.getBlocks.asScala.map(_.getRowCount).sum
+
   /** (row count, data bytes) of every parquet file under `dir`,
     * recursively — row counts from the footers' block metadata, bytes
-    * from the file listing; driver metadata I/O, zero Spark jobs.
-    * None when anything is unreadable (callers degrade to NULL, never
-    * guess).
+    * from the file listing. None when anything is unreadable (callers
+    * degrade to NULL, never guess).
     */
   def footerRowsBytes(dir: String): Option[(Long, Long)] =
     scala.util.Try {
-      val p = new Path(dir)
-      val it = fs(p).listFiles(p, true)
-      var rows = 0L
-      var bytes = 0L
-      while (it.hasNext) {
-        val st = it.next()
-        if (st.isFile && st.getPath.getName.endsWith(".parquet")) {
-          bytes += st.getLen
-          val in = org.apache.parquet.hadoop.util.HadoopInputFile
-            .fromPath(st.getPath, conf)
-          val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-          try r.getFooter.getBlocks.forEach(b => rows += b.getRowCount)
-          finally r.close()
-        }
-      }
-      (rows, bytes)
+      val per = walkFooters(dir, recursive = true)((st, f) => (footerRows(f), st.getLen))
+      (per.map(_._1).sum, per.map(_._2).sum)
     }.toOption
 
   /** Per-FILE (absolute path, footer row count, bytes) of every
     * parquet file under `dir`, recursively — the per-file granularity
-    * under [[footerRowsBytes]]'s totals. Driver metadata I/O, zero
-    * Spark jobs; unreadable trees yield empty (callers degrade to an
-    * absent listing, never guess).
+    * under [[footerRowsBytes]]'s totals. Unreadable trees yield empty
+    * (callers degrade to an absent listing, never guess).
     */
   def footerPerFile(dir: String): Seq[(String, Long, Long)] =
-    scala.util.Try {
-      val p = new Path(dir)
-      val it = fs(p).listFiles(p, true)
-      val out = Seq.newBuilder[(String, Long, Long)]
-      while (it.hasNext) {
-        val st = it.next()
-        if (st.isFile && st.getPath.getName.endsWith(".parquet")) {
-          val in = org.apache.parquet.hadoop.util.HadoopInputFile
-            .fromPath(st.getPath, conf)
-          val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-          var rows = 0L
-          try r.getFooter.getBlocks.forEach(b => rows += b.getRowCount)
-          finally r.close()
-          out += ((st.getPath.toString, rows, st.getLen))
-        }
-      }
-      out.result()
-    }.getOrElse(Seq.empty)
+    scala.util.Try(walkFooters(dir, recursive = true) { (st, f) =>
+      (st.getPath.toString, footerRows(f), st.getLen)
+    }).getOrElse(Seq.empty)
 
   /** The footers of the parquet data files directly in `dir` (not its
-    * subdirectories), read on the driver — metadata I/O only, zero
-    * Spark jobs. Empty when `dir` is missing.
+    * subdirectories). Empty when `dir` is missing.
     */
-  def footers(dir: String): Seq[org.apache.parquet.hadoop.metadata.ParquetMetadata] = {
-    val p = new Path(dir)
-    val f = fs(p)
-    if (!f.exists(p)) Nil
-    else f.listStatus(p).toSeq
-      .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet") &&
-        !st.getPath.getName.startsWith(".") && !st.getPath.getName.startsWith("_"))
-      .map { st =>
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-          org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf))
-        try r.getFooter finally r.close()
-      }
-  }
+  def footers(dir: String): Seq[ParquetMetadata] =
+    if (!exists(dir)) Nil else walkFooters(dir, recursive = false)((_, f) => f)
 
   /** Driver-side [min, max] of a long column across every parquet
-    * file under `dir`, read from the file FOOTERS' column statistics
-    * — metadata I/O only, zero Spark jobs. None when any chunk lacks
-    * usable stats (caller falls back to an aggregation).
+    * file under `dir`, read from the file FOOTERS' column statistics.
+    * None when any chunk lacks usable stats (caller falls back to an
+    * aggregation).
     */
   def footerLongRange(dir: String, column: String): Option[(Long, Long)] =
     scala.util.Try {
-      val p = new Path(dir)
-      val it = fs(p).listFiles(p, true)
-      var lo = Long.MaxValue
-      var hi = Long.MinValue
-      var any = false
-      while (it.hasNext) {
-        val st = it.next()
-        if (st.isFile && st.getPath.getName.endsWith(".parquet")) {
-          val in = org.apache.parquet.hadoop.util.HadoopInputFile
-            .fromPath(st.getPath, conf)
-          val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-          try r.getFooter.getBlocks.forEach { b =>
-            b.getColumns.forEach { c =>
-              if (c.getPath.toDotString == column) {
-                val s = c.getStatistics
-                require(s != null && !s.isEmpty && s.hasNonNullValue,
-                  s"no usable stats for $column")
-                lo = math.min(lo, s.genericGetMin.asInstanceOf[Number].longValue)
-                hi = math.max(hi, s.genericGetMax.asInstanceOf[Number].longValue)
-                any = true
-              }
-            }
-          } finally r.close()
+      val chunks = walkFooters(dir, recursive = true) { (_, f) =>
+        for {
+          b <- f.getBlocks.asScala
+          c <- b.getColumns.asScala if c.getPath.toDotString == column
+        } yield {
+          val s = c.getStatistics
+          require(s != null && !s.isEmpty && s.hasNonNullValue, s"no usable stats for $column")
+          (s.genericGetMin.asInstanceOf[Number].longValue,
+            s.genericGetMax.asInstanceOf[Number].longValue)
         }
-      }
-      require(any, s"no parquet stats for $column under $dir")
-      (lo, hi)
+      }.flatten
+      require(chunks.nonEmpty, s"no parquet stats for $column under $dir")
+      (chunks.map(_._1).min, chunks.map(_._2).max)
     }.toOption
 }

@@ -293,10 +293,8 @@ object GraftSqlDdl {
       AttributeReference("comment", org.apache.spark.sql.types.StringType,
         nullable = true)())
     override def run(spark: SparkSession): Seq[Row] = {
-      val cur = CdcPipeline.currentVersion(path).getOrElse(
+      val m = CdcPipeline.currentManifest(path).getOrElse(
         throw new IllegalArgumentException(s"no graft store at $path"))
-      val m = CdcPipeline.manifest(path, cur).getOrElse(
-        throw new IllegalArgumentException(s"unreadable manifest at $path"))
       val cols = m.schema.fields.toSeq.map(f =>
         Row(f.name, f.dataType.sql.toLowerCase, null))
       if (!extended) cols
@@ -306,7 +304,7 @@ object GraftSqlDdl {
         Row("Primary Key",
           CdcPipeline.pkColumns(path).map(_.mkString(",")).getOrElse(""), null),
         Row("Buckets", m.numBuckets.toString, null),
-        Row("Current Version", cur.toString, null)) ++
+        Row("Current Version", m.readVersion.toString, null)) ++
         CdcPipeline.tableProperties(path).toSeq.sortBy(_._1)
           .map { case (k, v) => Row(s"Property: $k", v, null) } ++
         CdcPipeline.checkConstraints(path).toSeq.sortBy(_._1)
@@ -321,10 +319,8 @@ object GraftSqlDdl {
       AttributeReference("col_name", org.apache.spark.sql.types.StringType,
         nullable = false)())
     override def run(spark: SparkSession): Seq[Row] = {
-      val cur = CdcPipeline.currentVersion(path).getOrElse(
+      CdcPipeline.currentManifest(path).getOrElse(
         throw new IllegalArgumentException(s"no graft store at $path"))
-      CdcPipeline.manifest(path, cur).getOrElse(
-        throw new IllegalArgumentException(s"unreadable manifest at $path"))
         .schema.fieldNames.toSeq.map(Row(_))
     }
   }
@@ -346,8 +342,8 @@ object GraftSqlDdl {
     override val output: Seq[Attribute] = Seq(longAttr("version"))
     override def run(spark: SparkSession): Seq[Row] = {
       val df = GraftBridge.dataFrame(spark, query.plan)
-      CdcPipeline.currentVersion(path) match {
-        case Some(_) =>
+      CdcPipeline.currentManifest(path) match {
+        case Some(m) =>
           val pk = CdcPipeline.pkColumns(path).getOrElse(
             throw new IllegalArgumentException(s"no _PK sidecar at $path"))
           pkProp.foreach(p => require(
@@ -357,8 +353,6 @@ object GraftSqlDdl {
               "pk-hash-addressed; use a new table + CLONE/rebucket instead"))
           pk.foreach(k => require(df.columns.contains(k),
             s"REPLACE query must produce the PK column '$k'"))
-          val m = CdcPipeline.manifest(path,
-            CdcPipeline.currentVersion(path).get).get
           val v = CdcPipeline.publish(df, path, pk,
             buckets = Some(buckets.getOrElse(m.numBuckets)), op = CdcPipeline.ReplaceOp)
           Seq(Row(v))
@@ -431,8 +425,7 @@ object GraftSqlDdl {
     override def run(spark: SparkSession): Seq[Row] = {
       val target =
         if (!allColumns) cols
-        else CdcPipeline.currentVersion(path)
-          .flatMap(v => CdcPipeline.manifest(path, v))
+        else CdcPipeline.currentManifest(path)
           .map(_.schema.fieldNames.toSeq)
           .getOrElse(throw new IllegalArgumentException(
             s"no graft store at $path"))
@@ -455,10 +448,8 @@ object GraftSqlDdl {
       AttributeReference("createtab_stmt", org.apache.spark.sql.types.StringType,
         nullable = false)())
     override def run(spark: SparkSession): Seq[Row] = {
-      val cur = CdcPipeline.currentVersion(path).getOrElse(
+      val m = CdcPipeline.currentManifest(path).getOrElse(
         throw new IllegalArgumentException(s"no graft store at $path"))
-      val m = CdcPipeline.manifest(path, cur).getOrElse(
-        throw new IllegalArgumentException(s"unreadable manifest v$cur at $path"))
       val cols = m.schema.fields
         .map(f => s"  ${f.name} ${f.dataType.sql}").mkString(",\n")
       val pk = CdcPipeline.pkColumns(path).map(_.mkString(",")).getOrElse("")

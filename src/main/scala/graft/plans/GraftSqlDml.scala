@@ -297,10 +297,9 @@ object GraftSqlDml {
     override def run(spark: SparkSession): Seq[Row] = {
       import org.apache.spark.sql.functions.{col, lit}
       val pk = pkOf(path)
-      val cur = CdcPipeline.currentVersion(path).getOrElse(
+      val m = CdcPipeline.currentManifest(path).getOrElse(
         throw new IllegalArgumentException(s"no graft store at $path"))
-      val m = CdcPipeline.manifest(path, cur).getOrElse(
-        throw new IllegalArgumentException(s"no manifest for v$cur at $path"))
+      val cur = m.readVersion
       val stored = m.schema.fields.map(f => f.name -> f.dataType).toMap
       val tgtCols = m.schema.fieldNames.toSeq
       val q0 = GraftBridge.dataFrame(spark, query.plan)
@@ -433,10 +432,9 @@ object GraftSqlDml {
         s"MERGE ON columns (${onCols.mkString(", ")}) must equal the " +
           s"store PK (${pk.mkString(", ")}) at $path — the bucket " +
           "layout is pk-hash-addressed")
-      val cur = CdcPipeline.currentVersion(path).getOrElse(
+      val m = CdcPipeline.currentManifest(path).getOrElse(
         throw new IllegalArgumentException(s"no graft store at $path"))
-      val m = CdcPipeline.manifest(path, cur).getOrElse(
-        throw new IllegalArgumentException(s"no manifest for v$cur at $path"))
+      val cur = m.readVersion
       val source = GraftBridge.dataFrame(spark, sourcePlan.plan)
       val srcCols = source.columns.toSet
       val srcRows = source.count()

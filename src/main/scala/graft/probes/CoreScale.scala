@@ -153,7 +153,7 @@ object CoreScale {
       }
       def withGrp(df: org.apache.spark.sql.DataFrame) =
         df.withColumn("grp", pmod(col("user_id"), lit(1024L)))
-      val m = CdcPipeline.manifest(tdir, CdcPipeline.currentVersion(tdir).get).get
+      val m = CdcPipeline.currentManifest(tdir).get
       val state0 = IncrementalAgg.fromSnapshot(
         withGrp(CdcPipeline.readSnapshot(spark, tdir).get), Seq("grp"), "value")
         .localCheckpoint(true)
@@ -368,8 +368,7 @@ object CoreScale {
       }
       val init = du(s"$tdir/_scd2/closed/d0") + du(s"$tdir/_scd2/open/v0")
       val adv = du(s"$tdir/_scd2/closed/d1") + du(s"$tdir/_scd2/open/v1")
-      val openBuckets = Option(new java.io.File(s"$tdir/_scd2/open/v1").listFiles())
-        .toSeq.flatten.count(f => f.isDirectory && f.getName.startsWith("_graft_bucket="))
+      val openBuckets = CdcPipeline.listedBuckets(s"$tdir/_scd2/open/v1").size
       println(f"[stress] scd2 advancement wrote ${adv / 1e3}%.0f KB ($openBuckets/64 open buckets) vs initial history ${init / 1e6}%.1f MB (${100.0 * adv / init}%.2f%%)")
 
       // r7: the layout-maintenance half (VERDICT r6 #7). More small
@@ -624,11 +623,10 @@ object CoreScale {
         .collect().map(r => (r.getLong(0), r.getLong(1)))
       val keyPred = keys.map { case (u, p) =>
         col("user_id") === u && col(CdcEnvelope.PosCol) === p }.reduce(_ || _)
-      val vBefore = CdcPipeline.currentVersion(dir).get
+      val mPrev = CdcPipeline.currentManifest(dir).get
       val (vAfter, nDel) = time("deleteWhere: 3 specific PKs out of 10M") {
         CdcPipeline.deleteWhere(spark, dir, pk, keyPred).get
       }
-      val mPrev = CdcPipeline.manifest(dir, vBefore).get
       val mNext = CdcPipeline.manifest(dir, vAfter).get
       val rewritten = mNext.buckets.count { case (bk, v) => !mPrev.buckets.get(bk).contains(v) }
       println(s"[stress] deleteWhere: $nDel rows deleted, $rewritten/64 buckets rewritten")
@@ -663,14 +661,12 @@ object CoreScale {
       time(s"join view fact delta (${delta.count()} rows)") {
         graft.cdc.JoinView.applyFactDelta(spark, spec, delta, dim, Some(100L))
       }
-      val vBefore = graft.cdc.CdcPipeline.currentVersion(dir).get
+      val mPrev = graft.cdc.CdcPipeline.currentManifest(dir).get
       time("join view dim delta (1 rare fk, 1 referer)") {
         graft.cdc.JoinView.applyDimDelta(spark, spec,
           Seq((3L, "HOT", "u")).toDF("dk", "seg", "__op"))
       }
-      val mPrev = graft.cdc.CdcPipeline.manifest(dir, vBefore).get
-      val mNext = graft.cdc.CdcPipeline.manifest(dir,
-        graft.cdc.CdcPipeline.currentVersion(dir).get).get
+      val mNext = graft.cdc.CdcPipeline.currentManifest(dir).get
       val rewrote = mNext.buckets.count { case (bk, v) => !mPrev.buckets.get(bk).contains(v) }
       println(s"[stress] join view dim delta rewrote $rewrote/64 buckets")
       assert(rewrote <= 2, s"single-referer dim delta must be bucket-pruned: $rewrote")
@@ -743,7 +739,7 @@ object CoreScale {
       val (_, tFull) = secs(P.buildBloomIndex(spark, dir, "tag",
         expectedPerBucket = math.max(1000L, n / 32)).get)
       println(f"[stress] bloom full build (${n / 1e6}%.1f M rows / 64 buckets): $tFull%.2f s")
-      val m = P.manifest(dir, P.currentVersion(dir).get).get
+      val m = P.currentManifest(dir).get
       val chg = P.readBuckets(spark, dir, m, Set(1, 2, 3))
         .withColumn("tag", concat(col("tag"), lit("-x")))
       P.publishDelta(chg, dir, Seq("id"), m, Set(1, 2, 3), batchId = -1L)
@@ -756,7 +752,7 @@ object CoreScale {
       assert(tHeal < tFull * 0.5,
         f"3/64 heal must cost a fraction of the full build: $tHeal%.2f vs $tFull%.2f")
       val probe = P.readBuckets(spark, dir,
-        P.manifest(dir, P.currentVersion(dir).get).get, Set(1))
+        P.currentManifest(dir).get, Set(1))
         .select("id", "tag").limit(1).collect()(0)
       val found = P.readPoint(spark, dir, "tag", Seq(probe.getString(1))).get
       assert(found.inputFiles.length <
@@ -841,7 +837,7 @@ object CoreScale {
       P.publish(facts, dir, Seq("id"), buckets = Some(64))
       val (_, tDecl) = secs(P.addCheckConstraint(spark, dir, "nonneg_v", "v >= 0").get)
       println(f"[stress] constraint declaration scan (${n / 1e6}%.1f M rows): $tDecl%.2f s")
-      val m = P.manifest(dir, P.currentVersion(dir).get).get
+      val m = P.currentManifest(dir).get
       val delta = spark.range(0, 10000).select(col("id"),
         (col("id") % 1000L).as("v"))
       val (_, tEnf) = secs(P.enforceConstraints(m, delta, dir))

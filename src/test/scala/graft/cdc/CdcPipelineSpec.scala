@@ -164,37 +164,61 @@ class CdcPipelineSpec extends AnyFunSuite {
       ("active", TypedProjection.BitToInt)))
   }
 
-  test("a pre-manifest flat target migrates to the bucketed layout on its next merge") {
+  test("a version without a manifest is absent to readers and refused by writers") {
     import spark.implicits._
     val target = tmp(); val log = tmp()
-    val c = cfg(target)
-    // hand-build the r2-era layout: flat parquet under v0 + pointer,
-    // NO manifest
-    val legacy = Seq((1L, 10L, 1L, 1.0), (2L, 20L, 2L, 2.0))
-      .toDF("user_id", "k", "event_id", "value")
-    legacy.write.parquet(s"$target/v0")
-    java.nio.file.Files.writeString(java.nio.file.Paths.get(target, "_VERSION"), "0 -1")
-    assert(CdcPipeline.readSnapshot(spark, target).get.count() === 2L)
-
-    // a delta run against the legacy target: full merge + migration
-    val delta = Seq((2L, "u", 200L, 10L, 1500L, """{"k":21}""", 10L, 2.5))
-      .toDF("user_id", CdcEnvelope.OpCol, CdcEnvelope.TsCol, CdcEnvelope.PosCol,
+    val c = cfg(target).copy(numBuckets = Some(8))
+    def env(rows: Seq[(Long, String, Long, Long, Long, String, Long, Double)]) =
+      rows.toDF("user_id", CdcEnvelope.OpCol, CdcEnvelope.TsCol, CdcEnvelope.PosCol,
         CdcEnvelope.LoadTsCol, CdcEnvelope.DataCol, "event_id", "value")
-    val r = CdcPipeline.run(spark, c, delta, log, 2000L)
-    assert(r.status === "SUCCESS" && r.updated === 1L && r.inserted === 0L)
-    // v1 is bucketed with a manifest now
-    assert(CdcPipeline.manifest(target, r.version).nonEmpty, "migrated to manifest layout")
-    val snap = CdcPipeline.readSnapshot(spark, target).get
-      .orderBy("user_id").select("user_id", "k").as[(Long, Long)].collect().toSeq
-    assert(snap === Seq((1L, 10L), (2L, 21L)))
+    val initial = (1L to 100L).map(u => (u, "u", 100L, u, 100L, s"""{"k":$u}""", u, 1.0))
+    CdcPipeline.run(spark, c, env(initial), log, 1000L) // v0: 8 buckets
+    Seq(7L, 8L).zipWithIndex.foreach { case (u, i) => // v1, v2: one bucket each
+      CdcPipeline.run(spark, c, env(Seq((u, "u", 200L + i, 500L + i, 1100L + i,
+        s"""{"k":${1000 + u}}""", 500L + i, 2.0))), log, 2000L + i * 1000L)
+    }
+    val m2 = CdcPipeline.manifest(target, 2L).get
+    assert(m2.buckets.values.count(_ != "v2") >= 6, "v2 must carry most buckets")
+    def lose(v: Long): Unit = Files.delete(java.nio.file.Paths.get(s"$target/v$v/_MANIFEST"))
 
-    // and the run AFTER migration takes the incremental path
-    val delta2 = Seq((3L, "u", 300L, 11L, 2500L, """{"k":30}""", 11L, 3.0))
-      .toDF("user_id", CdcEnvelope.OpCol, CdcEnvelope.TsCol, CdcEnvelope.PosCol,
-        CdcEnvelope.LoadTsCol, CdcEnvelope.DataCol, "event_id", "value")
-    val r2 = CdcPipeline.run(spark, c, delta2, log, 3000L)
-    assert(r2.inserted === 1L)
-    assert(CdcPipeline.readSnapshot(spark, target).get.count() === 3L)
+    // an older version without a manifest is absent to time travel,
+    // while the current one still reads whole
+    lose(1L)
+    assert(CdcPipeline.readSnapshotAt(spark, target, 1L).isEmpty)
+    assert(CdcPipeline.readSnapshot(spark, target).get.count() === 100L)
+
+    // the current version without a manifest: every reader and writer
+    // refuses with the one error instead of serving a partial table
+    lose(2L)
+    def refuses(what: String)(body: => Any): Unit = {
+      val e = intercept[Throwable](body)
+      val chain = Iterator.iterate(e)(_.getCause).takeWhile(_ != null).toSeq
+      assert(chain.exists(_.isInstanceOf[CdcPipeline.BadPointerException]),
+        s"$what must refuse with BadPointerException, got $e")
+      assert(e.getMessage.contains("bad_pointer") || chain.exists(_.getMessage.contains("bad_pointer")))
+    }
+    val keys = Seq(7L).toDF("user_id")
+    refuses("readSnapshot")(CdcPipeline.readSnapshot(spark, target).map(_.count()))
+    refuses("readKeys")(CdcPipeline.readKeys(spark, target, c.pk, keys).map(_.count()))
+    refuses("readRange")(
+      CdcPipeline.readRange(spark, target, "k", Some(1L), Some(50L)).map(_.count()))
+    refuses("readChangeFeed")(
+      CdcPipeline.readChangeFeed(spark, target, c.pk, 0L, 2L).map(_.count()))
+    refuses("JoinView")(JoinView.applyFactDelta(spark,
+      JoinView.JoinViewSpec(target, c.pk, "k", "dk", Seq("seg")),
+      Seq((7L, 1L, "u")).toDF("user_id", "k", CdcEnvelope.OpCol), Seq((1L, "a")).toDF("dk", "seg")))
+    refuses("IdentityColumns")(IdentityColumns.declare(spark, target, "event_id"))
+    refuses("SQL graft.{path}")(spark.sql(s"SELECT count(*) FROM graft.`$target`").collect())
+
+    val watermark = JobLog.lastWatermark(spark, log, c)
+    val delta = env(Seq((9L, "u", 300L, 600L, 4100L, """{"k":9}""", 600L, 3.0)))
+    refuses("run")(CdcPipeline.run(spark, c, delta, log, 5000L))
+    assert(CdcPipeline.currentVersion(target) === Some(2L), "run must publish nothing")
+    assert(!Files.exists(java.nio.file.Paths.get(s"$target/v3")))
+    assert(JobLog.read(spark, log).get.filter(col("run_status") === "FAILED").count() === 1L)
+    assert(JobLog.lastWatermark(spark, log, c) === watermark, "a refused run keeps the watermark")
+    refuses("CdcStream micro-batch")(graft.streaming.CdcStream.mergeBatchToTarget(delta, 0L, c))
+    assert(CdcPipeline.currentVersion(target) === Some(2L))
   }
 
   test("vacuum deletes unreachable versions but keeps every carried-bucket reference") {

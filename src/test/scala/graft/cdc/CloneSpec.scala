@@ -132,4 +132,48 @@ class CloneSpec extends AnyFunSuite {
     }
     assert(CdcPipeline.cloneSnapshot(tmp(), s"$dst/c2") === None)
   }
+
+  test("footer walkers read a shallow clone and a clone of a clone like their source") {
+    val src = tmp(); val c1 = tmp() + "/clone"; val c2 = tmp() + "/clone2"
+    CdcPipeline.publish(fixture(4000, 8), src, Seq("id"), buckets = Some(8))
+    // several files per bucket, so the small-file trigger has work
+    CdcPipeline.optimize(spark, src, Seq("id"), Seq("v"), maxRecordsPerFile = 120)
+    assert(CdcPipeline.cloneSnapshot(src, c1) === Some(0L))
+    assert(CdcPipeline.cloneSnapshot(c1, c2) === Some(0L))
+    val stores = Seq(src, c1, c2)
+    def same[T](what: String)(f: String => T): Unit = {
+      val got = stores.map(f)
+      assert(got.distinct.size === 1, s"$what differs across source, clone, clone of clone: $got")
+    }
+    def detail(dir: String) = CdcPipeline.describeDetail(spark, dir).get
+      .select("num_files", "bytes", "footer_rows", "live_rows").head().toSeq
+    def files(dir: String) = CdcPipeline.describeFiles(spark, dir).get
+      .select("bucket", "file", "rows", "bytes").collect().map(_.toSeq).toSeq
+    def history(dir: String) = CdcPipeline.describeHistory(spark, dir).get
+      .orderBy(col("version").desc).select("rows", "bytes").head().toSeq
+
+    same("fastCount")(CdcPipeline.fastCount)
+    same("footerTotals")(CdcPipeline.footerTotals)
+    same("describeDetail")(detail)
+    same("describeFiles")(files)
+    same("describeHistory")(history)
+    same("generateSymlinkManifest")(CdcPipeline.generateSymlinkManifest)
+    assert(detail(c2).head.asInstanceOf[Long] > 8L, "fixture must have several files per bucket")
+    assert(CdcPipeline.fastCount(c2) === Some(4000L))
+
+    // the same merge-on-read delete on each store: each has its own
+    // vector over the same (source-owned) files
+    stores.foreach(d => CdcPipeline.deleteWhereMoR(spark, d, Seq("id"), col("id") % 7 === 0))
+    same("dvStats")(CdcPipeline.dvStats)
+    same("fastCount after MoR")(CdcPipeline.fastCount)
+    same("footerTotals after MoR")(CdcPipeline.footerTotals)
+    same("describeDetail after MoR")(detail)
+    assert(CdcPipeline.dvStats(c2).exists(_._1 > 0L))
+
+    val triggered = stores.map(d => CdcPipeline.maintain(spark, d, Seq("id"),
+      CdcPipeline.MaintenancePolicy(dvFoldPct = None, smallFilesPerBucket = Some(4),
+        keepVersions = None, bloomRebuildPct = None, ndvRebuildPct = None)).get.optimizedBuckets)
+    assert(triggered.distinct.size === 1 && triggered.head.nonEmpty,
+      s"maintain's small-file trigger differs or is empty: $triggered")
+  }
 }
