@@ -389,7 +389,6 @@ object GraftExtensions {
         import org.apache.spark.sql.functions.lit
         val m = CdcPipeline.currentManifest(path).getOrElse(
           throw new IllegalArgumentException(s"no graft store at $path"))
-        val cur = m.readVersion
         val source = spark.sql(srcSql)
         val srcRows = source.count()
         // A71: CHECK constraints gate the introduced rows before the
@@ -400,13 +399,10 @@ object GraftExtensions {
               .col(graft.cdc.CdcEnvelope.OpCol) =!= lit("d"))
               .drop(graft.cdc.CdcEnvelope.OpCol)
           else source, path)
-        val touched = source
-          .select(CdcPipeline.bucketExpr(pk, m.numBuckets).as("b"))
-          .distinct().collect().map(_.getInt(0)).toSet
+        val touched = CdcPipeline.bucketSet(source, CdcPipeline.bucketExpr(pk, m.numBuckets))
         val v =
-          if (touched.isEmpty) cur
-          else {
-            val subset = CdcPipeline.readBuckets(spark, path, m, touched)
+          if (touched.isEmpty) m.readVersion
+          else CdcPipeline.rewriteBuckets(spark, path, pk, m, touched, "sql-merge") { subset =>
             val hasOp = source.columns.contains(graft.cdc.CdcEnvelope.OpCol)
             val opCol = MergeInto.src(graft.cdc.CdcEnvelope.OpCol)
             val mi0 = MergeInto(subset, source, pk).sourceRows(srcRows)
@@ -420,8 +416,7 @@ object GraftExtensions {
             // UPDATE/INSERT column maps (updateAll/insertAll map only
             // TARGET columns, so nothing references it except the
             // clause conditions above)
-            CdcPipeline.publishDelta(mi.run(), path, pk, m, touched,
-              batchId = -1L, op = "sql-merge")
+            mi.run()
           }
         import spark.implicits._
         plan(Seq((v, srcRows)).toDF("version", "source_rows"))

@@ -35,10 +35,12 @@ import scala.jdk.CollectionConverters._
   *   3. writes ONLY those buckets into the new version,
   *   4. writes a manifest carrying every untouched bucket forward
   *      by reference.
-  * Read and write I/O are both ∝ delta (bucket granularity), not
-  * target size — the cost profile of the reference's MERGE
-  * (merge.sql:403–436) on an immutable-file store, and the same
-  * file-pruning shape Delta/Iceberg MERGE gets from data skipping.
+  * Steps 2–4 are one function, [[rewriteBuckets]], that every keyed
+  * write goes through. Read and write I/O are both ∝ delta (bucket
+  * granularity), not target size — the cost profile of the
+  * reference's MERGE (merge.sql:403–436) on an immutable-file store,
+  * and the file-pruning shape Delta/Iceberg MERGE gets from data
+  * skipping.
   * The pointer swap stays a one-line atomic move, so readers see the
   * old or the new manifest, never a torn state. Every reader and
   * writer starts from [[currentManifest]] (pointer, then the manifest
@@ -247,6 +249,14 @@ object CdcPipeline {
     currentVersion(storeDir).map(v =>
       manifest(storeDir, v).getOrElse(throw new BadPointerException(storeDir, v)))
 
+  /** The manifest of `version` if that version is committed: at or
+    * below the pointer. A staged commit above the pointer (a Txn
+    * awaiting its swap) is not a version yet, so time travel, tags,
+    * clones, restore and the change feed all see None for it.
+    */
+  private[graft] def committedManifest(storeDir: String, version: Long): Option[Manifest] =
+    currentVersion(storeDir).filter(version <= _).flatMap(_ => manifest(storeDir, version))
+
   private def statEnc(s: String): String =
     java.net.URLEncoder.encode(s, "UTF-8")
   private def statDec(s: String): String =
@@ -412,6 +422,15 @@ object CdcPipeline {
   private[graft] def keyBuckets(keys: DataFrame, pkCols: Seq[String],
       numBuckets: Int): Set[Int] =
     keys.select(bucketExpr(pkCols, numBuckets)).as[Int](Encoders.scalaInt).collect().toSet
+
+  /** The distinct values of the int column `bucket` over `df`, from one
+    * `collect_set` aggregation (a task holds at most one entry per id).
+    * Every bucket set but [[keyBuckets]]' and [[summarize]]'s comes from
+    * here. The group key is a constant, not global, so over an empty
+    * input AQE drops the final stage and the set costs one job.
+    */
+  private[graft] def bucketSet(df: DataFrame, bucket: Column): Set[Int] =
+    df.groupBy(lit(true)).agg(collect_set(bucket)).collect().flatMap(_.getSeq[Int](1)).toSet
 
   private def swapPointer(targetDir: String, version: Long, batchId: Long): Unit = {
     val tmp = s"$targetDir/.$VersionFile.tmp"
@@ -1403,7 +1422,7 @@ object CdcPipeline {
     * read).
     */
   def readSnapshotAt(spark: SparkSession, targetDir: String, version: Long): Option[DataFrame] =
-    currentVersion(targetDir).filter(version <= _).flatMap(_ => manifest(targetDir, version))
+    committedManifest(targetDir, version)
       .map(m => applyVirtual(readBuckets(spark, targetDir, m, m.buckets.keySet), m))
 
   /** Time-travel by TIMESTAMP (A67 — Delta `TIMESTAMP AS OF` /
@@ -1495,8 +1514,7 @@ object CdcPipeline {
           spark.createDataFrame(spark.sparkContext.emptyRDD[Row], dvSchema))
       val a = dvOf(from)
       val b = dvOf(to)
-      a.exceptAll(b).unionAll(b.exceptAll(a))
-        .select("bucket").distinct().collect().map(_.getInt(0)).toSet
+      bucketSet(a.exceptAll(b).unionAll(b.exceptAll(a)), col("bucket"))
     }
 
   /** Change feed between two committed versions (the CDF/
@@ -1514,7 +1532,7 @@ object CdcPipeline {
     */
   def snapshotDiff(spark: SparkSession, targetDir: String, fromVersion: Long,
       toVersion: Long, pkCols: Seq[String]): Option[DataFrame] =
-    (manifest(targetDir, fromVersion), manifest(targetDir, toVersion)) match {
+    (committedManifest(targetDir, fromVersion), committedManifest(targetDir, toVersion)) match {
       case (Some(mf), Some(mt)) =>
         val touched = changedBuckets(mf, mt) ++ dvChangedBuckets(spark, targetDir, mf, mt)
         val before = readBuckets(spark, targetDir, mf, touched)
@@ -1568,7 +1586,7 @@ object CdcPipeline {
       None
     }
     else if (steps.isEmpty)
-      manifest(targetDir, toVersion).map(m =>
+      committedManifest(targetDir, toVersion).map(m =>
         spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
           m.schema.add(CdcEnvelope.OpCol, StringType).add("_commit_version", LongType)))
     else Some(steps.flatten.reduce(_ unionByName _))
@@ -1580,7 +1598,7 @@ object CdcPipeline {
   /** Publish `df` as the next FULL snapshot version and move the
     * pointer: every bucket is written and the manifest points them
     * all at the new version. Used for first builds and full
-    * overwrites; incremental runs go through `publishDelta`. Declared
+    * overwrites; incremental runs go through [[rewriteBuckets]]. Declared
     * metadata carries like any other commit (INSERT OVERWRITE keeps
     * constraints, generated columns and
     * properties), except for `op = ReplaceOp`: CREATE OR REPLACE is a
@@ -1612,29 +1630,39 @@ object CdcPipeline {
     }
   }
 
-  /** Publish a merge that only recomputed `touched` buckets: write
-    * those, carry every other bucket forward by manifest reference.
-    * Publish I/O ∝ delta, not target. `prev` is the manifest the
-    * delta was derived from; the commit refuses if the pointer moved
-    * past it ([[ConcurrentWriteException]] — the caller re-derives,
-    * e.g. under [[retryOnConflict]]).
+  /** The one keyed delta write: read the `touched` buckets of `m` (the
+    * manifest the write derives from) once, hand them to `f`, write
+    * `f`'s rows as those buckets of the next version, carry every other
+    * bucket by reference, and commit. Publish I/O ∝ delta, not target.
+    * `f` runs before the version claim, so its eager work (a count, a
+    * check, a side write) precedes the commit. The commit refuses a
+    * moved pointer ([[ConcurrentWriteException]]; re-derive, e.g. under
+    * [[retryOnConflict]]) and rows written to a bucket outside
+    * `touched`, whose stored rows were never read and would be lost.
+    * An empty `touched` still commits a version.
     */
-  private[graft] def publishDelta(mergedSubset: DataFrame, targetDir: String,
-      pkCols: Seq[String], prev: Manifest, touched: Set[Int], batchId: Long,
-      statsCols: Seq[String] = Nil, op: String = "merge",
-      swapNow: Boolean = true): Long = {
+  private[graft] def rewriteBuckets(spark: SparkSession, targetDir: String,
+      pkCols: Seq[String], m: Manifest, touched: Set[Int], op: String = "merge",
+      batchId: Long = -1L, statsCols: Seq[String] = Nil, swapNow: Boolean = true)
+      (f: DataFrame => DataFrame): Long = {
+    val rows = f(readBuckets(spark, targetDir, m, touched))
     validatePk(targetDir, pkCols)
-    commit(targetDir, prev.readVersion, Some(prev), op, swapNow = swapNow,
+    commit(targetDir, m.readVersion, Some(m), op, swapNow = swapNow,
         batchId = batchId) { next =>
       val dir = s"$targetDir/v$next"
-      labeled(mergedSubset.sparkSession, "store.publishDelta: bucket write") {
-        writeBuckets(mergedSubset, pkCols, prev.numBuckets, dir)
+      labeled(spark, "store.rewriteBuckets: bucket write") {
+        writeBuckets(rows, pkCols, m.numBuckets, dir)
       }
+      val stray = listedBuckets(dir).map(_._1).filterNot(touched)
+      if (stray.nonEmpty) throw new IllegalStateException(
+        s"$op on $targetDir wrote bucket(s) ${stray.mkString(", ")} outside the " +
+          s"touched set ${touched.toSeq.sorted.mkString("{", ", ", "}")}: their stored " +
+          "rows were never read, so the commit would drop them")
       recordPk(targetDir, pkCols)
       Edit(rewritten = touched,
-        stats = labeled(mergedSubset.sparkSession, "store.publishDelta: bucket stats") {
-          bucketStats(mergedSubset.sparkSession, dir, statsCols)
-        }, schemaJson = Some(mergedSubset.schema.json))
+        stats = labeled(spark, "store.rewriteBuckets: bucket stats") {
+          bucketStats(spark, dir, statsCols)
+        }, schemaJson = Some(rows.schema.json))
     }
   }
 
@@ -1682,7 +1710,7 @@ object CdcPipeline {
     * nothing. A bucket whose every row matches drops out of the
     * manifest entirely. Returns (new version, deleted-row count) —
     * (current version, 0) for a no-match predicate. None when the
-    * target doesn't exist (or predates the manifest layout).
+    * target doesn't exist.
     *
     * This is the GDPR/retention path ("erase user X", "drop rows
     * older than Y") the CDC merge can't express: a merge needs a
@@ -1761,7 +1789,7 @@ object CdcPipeline {
     for {
       m <- currentManifest(targetDir)
       dv <- readDv(spark, targetDir, m, None)
-      touched = dv.select("bucket").distinct().collect().map(_.getInt(0)).toSet
+      touched = bucketSet(dv, col("bucket"))
       next <- optimize(spark, targetDir, pkCols,
         if (sortCols.nonEmpty) sortCols else pkCols, buckets = Some(touched))
     } yield next
@@ -1853,7 +1881,7 @@ object CdcPipeline {
           // blooms stay valid over a superset — just extra FPs; NDV
           // sketches over a superset become upper bounds, so the sketch
           // of every bucket this delete hits DROPS instead
-          Edit(deletedFrom = hits.select("bucket").distinct().collect().map(_.getInt(0)).toSet,
+          Edit(deletedFrom = bucketSet(hits, col("bucket")),
             set = Map("dv" -> s"v$next"))
         }
         // A56 fold policy: once the accumulated vector crosses
@@ -1917,17 +1945,17 @@ object CdcPipeline {
         .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
       if (hits.isEmpty) (m.readVersion, 0L)
       else {
-        val touched = hits.keySet
-        val subset = readBuckets(spark, targetDir, m, touched)
-        val rewritten = rewrite(subset)
-        // A71: an UPDATE introduces new cell values — enforce the
-        // table's CHECK constraints on the rewritten subset before
-        // publishing (unmodified rows pass by induction; the agg
-        // rides the subset already being rewritten). DELETEs only
-        // remove rows and skip the check.
-        if (op == "update") enforceConstraints(m, rewritten, targetDir)
-        val next = publishDelta(rewritten, targetDir, pkCols, m, touched,
-          batchId = -1L, trackedStats(m), op = op)
+        val next = rewriteBuckets(spark, targetDir, pkCols, m, hits.keySet, op,
+            statsCols = trackedStats(m)) { subset =>
+          val rewritten = rewrite(subset)
+          // A71: an UPDATE introduces new cell values — enforce the
+          // table's CHECK constraints on the rewritten subset before
+          // publishing (unmodified rows pass by induction; the agg
+          // rides the subset already being rewritten). DELETEs only
+          // remove rows and skip the check.
+          if (op == "update") enforceConstraints(m, rewritten, targetDir)
+          rewritten
+        }
         (next, hits.values.sum)
       }
     }
@@ -3266,7 +3294,7 @@ object CdcPipeline {
       deep: Boolean = false, atVersion: Option[Long] = None): Option[Long] = {
     require(!StoreFs.exists(s"$destDir/$VersionFile"),
       s"clone destination already holds a store: $destDir")
-    atVersion.fold(currentManifest(sourceDir))(manifest(sourceDir, _)).map { m =>
+    atVersion.fold(currentManifest(sourceDir))(committedManifest(sourceDir, _)).map { m =>
       // a clone's version timeline restarts at v0, so the source's
       // "declaration version vs bucket-ref version" comparison that
       // resolves initial defaults (A57) becomes meaningless across
@@ -3386,25 +3414,22 @@ object CdcPipeline {
     * is a committed no-op marker (still publishes, so the intent is
     * in the history). Returns the NEW version number.
     */
-  def restoreSnapshot(targetDir: String, version: Long): Option[Long] = {
-    val cur = currentVersion(targetDir).getOrElse(return None)
-    if (version > cur) return None
-    manifest(targetDir, version).flatMap { m =>
+  def restoreSnapshot(targetDir: String, version: Long): Option[Long] =
+    committedManifest(targetDir, version).flatMap { m =>
       val refRoots = m.buckets.values.toSet[String].map(versionRoot(targetDir, _)) ++
         m.meta.get("dv").map(dvPath(targetDir, _)) // DV must survive too
       if (!refRoots.forall(StoreFs.exists)) None // vacuumed out from under us
       else {
         // restore derives from an OLD manifest by design; its base is
-        // the CURRENT pointer captured at entry (A66 claim-then-check).
-        // Declarations restore WITH the state: the rolled-back
-        // version's constraint set (not the abandoned head's) is what
-        // its data provably satisfies
-        Some(commit(targetDir, cur, Some(m), "restore") { _ =>
+        // the CURRENT pointer (A66 claim-then-check). Declarations
+        // restore WITH the state: the rolled-back version's constraint
+        // set (not the abandoned head's) is what its data provably
+        // satisfies
+        Some(commit(targetDir, currentVersion(targetDir).get, Some(m), "restore") { _ =>
           Edit(set = Map("restore_of" -> version.toString))
         })
       }
     }
-  }
 
   // ==== A78: named refs — tags, branches, write-audit-publish ====
 
@@ -3431,7 +3456,7 @@ object CdcPipeline {
     */
   def createTag(targetDir: String, name: String,
       version: Option[Long] = None): Option[Long] = {
-    val v = version.fold(currentManifest(targetDir))(manifest(targetDir, _))
+    val v = version.fold(currentManifest(targetDir))(committedManifest(targetDir, _))
       .getOrElse(return None).readVersion
     require(StoreFs.createExclusive(tagPath(targetDir, name), v.toString),
       s"tag '$name' already exists on $targetDir")
@@ -3670,16 +3695,17 @@ object CdcPipeline {
           cfg.statsCols, swapNow = swapNow), 0L)
       case Some(m) =>
         if (!gated) gateConstraints(cfg, changes, m)
-        val touched = summary.touched(cfg.targetPath, m.numBuckets)
-        val subset = readBuckets(spark, cfg.targetPath, m, touched)
-        val updated = labeled(spark, "store.merge: matched keys") {
-          SnapshotMerge
-            .matchedUpsertKeys(subset, changes, cfg.pk, Some(deltaRows)).count()
+        var updated = 0L
+        val v = rewriteBuckets(spark, cfg.targetPath, cfg.pk, m,
+            summary.touched(cfg.targetPath, m.numBuckets), batchId = batchId,
+            statsCols = cfg.statsCols, swapNow = swapNow) { subset =>
+          updated = labeled(spark, "store.merge: matched keys") {
+            SnapshotMerge
+              .matchedUpsertKeys(subset, changes, cfg.pk, Some(deltaRows)).count()
+          }
+          mergeOnto(subset)
         }
-        MergeOutcome(
-          publishDelta(mergeOnto(subset), cfg.targetPath, cfg.pk, m, touched, batchId,
-            cfg.statsCols, swapNow = swapNow),
-          updated)
+        MergeOutcome(v, updated)
     }
   }
 

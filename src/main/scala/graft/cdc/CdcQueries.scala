@@ -304,7 +304,7 @@ object CdcQueries {
   // bigquery_syntex_merge_sql/merge.sql:403–436) instead of the
   // graft_merge procedure TVF. The parser injected by GraftExtensions
   // rewrites the parsed MergeIntoTable onto the A38 MergeInto builder
-  // + publishDelta; the store PK comes from the `_PK` sidecar, and
+  // + rewriteBuckets; the store PK comes from the `_PK` sidecar, and
   // the ON clause is validated against it. Same DuckDB oracle as
   // cdc_merge/cdc_sql_merge — parser veneer, TVF veneer, and Scala
   // path must be bit-identical.
@@ -904,9 +904,7 @@ object CdcQueries {
     require(r1.mode == "incremental" && r1.srcVersion == 1L,
       s"expected an incremental replay to src v1, got $r1")
     val m = CdcPipeline.manifest(dstDir, r1.dstVersion).get
-    val expectTouched = chg1
-      .select(CdcPipeline.bucketExpr(pk, m.numBuckets).as("b"))
-      .distinct().count()
+    val expectTouched = CdcPipeline.bucketSet(chg1, CdcPipeline.bucketExpr(pk, m.numBuckets)).size
     require(m.buckets.values.count(_ == s"v${r1.dstVersion}") <= expectTouched,
       "the incremental replicate commit must rewrite ONLY buckets holding " +
         "changed keys (rewrite I/O ∝ delta, never the replica)")

@@ -97,17 +97,11 @@ object CopyInto {
 
     CdcPipeline.enforceConstraints(m, source, targetDir)
     val rows = source.count()
-    val touched = source
-      .select(CdcPipeline.bucketExpr(pkCols, m.numBuckets).as("b"))
-      .distinct().collect().map(_.getInt(0)).toSet
+    val touched = CdcPipeline.bucketSet(source, CdcPipeline.bucketExpr(pkCols, m.numBuckets))
     val v =
       if (touched.isEmpty) cur
-      else {
-        val subset = CdcPipeline.readBuckets(spark, targetDir, m, touched)
-        val merged = MergeInto(subset, source, pkCols)
-          .whenMatchedUpdateAll().whenNotMatchedInsertAll().run()
-        CdcPipeline.publishDelta(merged, targetDir, pkCols, m, touched,
-          batchId = -1L, op = "copy-into")
+      else CdcPipeline.rewriteBuckets(spark, targetDir, pkCols, m, touched, "copy-into") {
+        MergeInto(_, source, pkCols).whenMatchedUpdateAll().whenNotMatchedInsertAll().run()
       }
     // Markers last (see object doc: crash before these re-merges the
     // identical rows — state-idempotent; crash after never re-reads).

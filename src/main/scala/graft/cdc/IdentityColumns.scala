@@ -99,32 +99,30 @@ object IdentityColumns {
         s"no identity column $name declared at $targetDir"))
     val m = CdcPipeline.currentManifest(targetDir).getOrElse(
       throw new IllegalArgumentException(s"no graft store at $targetDir"))
-    val cur = m.readVersion
-    val touched = source
-      .select(CdcPipeline.bucketExpr(pkCols, m.numBuckets).as("b"))
-      .distinct().collect().map(_.getInt(0)).toSet
-    if (touched.isEmpty) return (cur, 0L)
-    val subset = CdcPipeline.readBuckets(spark, targetDir, m, touched)
-      .localCheckpoint()
-    val existing = subset.select((pkCols :+ name).map(col): _*)
-    val withId = source.join(existing, pkCols, "left")
-    val fresh = withId.filter(col(name).isNull).drop(name).localCheckpoint()
-    val nNew = fresh.count()
-    // RESERVE first (see object doc): a crash past this line burns
-    // the range instead of ever re-issuing it.
-    if (nNew > 0)
-      write(targetDir, name, spec.copy(highWater = spec.highWater + spec.step * nNew))
-    val freshIdd =
-      if (nNew == 0) fresh.withColumn(name, lit(null).cast(LongType)).limit(0)
-      else graft.ops.Packing.materializePositions(fresh, pkCols.map(col))
-        .withColumn(name, lit(spec.highWater) + lit(spec.step) * (col("pos") + 1))
-        .drop("pos")
-    val matched = withId.filter(col(name).isNotNull)
-    val source2 = matched.unionByName(freshIdd.select(matched.columns.map(col): _*))
-    val merged = MergeInto(subset, source2, pkCols)
-      .whenMatchedUpdateAll().whenNotMatchedInsertAll().run()
-    val v = CdcPipeline.publishDelta(merged, targetDir, pkCols, m, touched,
-      batchId = -1L, op = "merge-identity")
+    val touched = CdcPipeline.bucketSet(source, CdcPipeline.bucketExpr(pkCols, m.numBuckets))
+    if (touched.isEmpty) return (m.readVersion, 0L)
+    var nNew = 0L
+    val v = CdcPipeline.rewriteBuckets(spark, targetDir, pkCols, m, touched,
+        "merge-identity") { stored =>
+      val subset = stored.localCheckpoint()
+      val existing = subset.select((pkCols :+ name).map(col): _*)
+      val withId = source.join(existing, pkCols, "left")
+      val fresh = withId.filter(col(name).isNull).drop(name).localCheckpoint()
+      nNew = fresh.count()
+      // RESERVE first (see object doc): a crash past this line burns
+      // the range instead of ever re-issuing it.
+      if (nNew > 0)
+        write(targetDir, name, spec.copy(highWater = spec.highWater + spec.step * nNew))
+      val freshIdd =
+        if (nNew == 0) fresh.withColumn(name, lit(null).cast(LongType)).limit(0)
+        else graft.ops.Packing.materializePositions(fresh, pkCols.map(col))
+          .withColumn(name, lit(spec.highWater) + lit(spec.step) * (col("pos") + 1))
+          .drop("pos")
+      val matched = withId.filter(col(name).isNotNull)
+      val source2 = matched.unionByName(freshIdd.select(matched.columns.map(col): _*))
+      MergeInto(subset, source2, pkCols)
+        .whenMatchedUpdateAll().whenNotMatchedInsertAll().run()
+    }
     (v, nNew)
   }
 }

@@ -148,10 +148,8 @@ object JoinView {
       changes: DataFrame, dim: DataFrame, deltaRows: Option[Long] = None): Long = {
     val m = CdcPipeline.currentManifest(spec.viewDir)
       .getOrElse(throw new IllegalStateException(s"no view at ${spec.viewDir} — bootstrap first"))
-    val touched = changes
-      .select(CdcPipeline.bucketExpr(spec.factPk, m.numBuckets).as("b"))
-      .distinct().collect().map(_.getInt(0)).toSet
-    val stored = CdcPipeline.readBuckets(spark, spec.viewDir, m, touched)
+    val touched = CdcPipeline.bucketSet(changes,
+      CdcPipeline.bucketExpr(spec.factPk, m.numBuckets))
     // deletes carry no payload worth enriching; upserts join the dim.
     // The op column rides along so SnapshotMerge applies both.
     val ups = enrich(changes.filter(col(CdcEnvelope.OpCol) =!= CdcEnvelope.Delete)
@@ -160,22 +158,17 @@ object JoinView {
     val dels = changes.filter(col(CdcEnvelope.OpCol) === CdcEnvelope.Delete)
       .select(spec.factPk.map(col) :+ col(CdcEnvelope.OpCol): _*)
     val changeSet = ups.unionByName(dels, allowMissingColumns = true)
-    val merged = SnapshotMerge.merge(stored, changeSet, spec.factPk, deltaRows)
-    val v = CdcPipeline.publishDelta(merged, spec.viewDir, spec.factPk, m, touched,
-      batchId = -1L, op = "join-view-fact")
+    val v = CdcPipeline.rewriteBuckets(spark, spec.viewDir, spec.factPk, m, touched,
+      "join-view-fact")(SnapshotMerge.merge(_, changeSet, spec.factPk, deltaRows))
     // index append: new pairs only (upserted rows' fk routing)
     val newPairs = fkPairs(changes.filter(col(CdcEnvelope.OpCol) =!= CdcEnvelope.Delete), spec)
     val im = CdcPipeline.currentManifest(indexDir(spec))
       .getOrElse(throw new IllegalStateException("join view has no fk index"))
-    val idxTouched = newPairs
-      .select(CdcPipeline.bucketExpr(Seq(spec.fkCol), im.numBuckets).as("b"))
-      .distinct().collect().map(_.getInt(0)).toSet
-    if (idxTouched.nonEmpty) {
-      val idxStored = CdcPipeline.readBuckets(spark, indexDir(spec), im, idxTouched)
-      CdcPipeline.publishDelta(idxStored.unionByName(newPairs).distinct(),
-        indexDir(spec), Seq(spec.fkCol), im, idxTouched,
-        batchId = -1L, op = "join-view-index")
-    }
+    val idxTouched = CdcPipeline.bucketSet(newPairs,
+      CdcPipeline.bucketExpr(Seq(spec.fkCol), im.numBuckets))
+    if (idxTouched.nonEmpty)
+      CdcPipeline.rewriteBuckets(spark, indexDir(spec), Seq(spec.fkCol), im, idxTouched,
+        "join-view-index")(_.unionByName(newPairs).distinct())
     v
   }
 
@@ -190,18 +183,19 @@ object JoinView {
       .getOrElse(throw new IllegalStateException(s"no view at ${spec.viewDir} — bootstrap first"))
     val fks = dimChanges.select(col(spec.dimPk).as(spec.fkCol)).distinct()
     val affectedBuckets = CdcPipeline.readKeys(spark, indexDir(spec), Seq(spec.fkCol), fks)
-      .map(_.select(FactBucketCol).distinct().collect().map(_.getInt(0)).toSet)
+      .map(CdcPipeline.bucketSet(_, col(FactBucketCol)))
       .getOrElse(throw new IllegalStateException("join view has no fk index"))
     if (affectedBuckets.isEmpty) return m.readVersion // no referer anywhere: no-op
-    val stored = CdcPipeline.readBuckets(spark, spec.viewDir, m, affectedBuckets)
-    val keep = stored.join(broadcast(fks), Seq(spec.fkCol), "left_anti")
     val dimUps = dimChanges.filter(col(CdcEnvelope.OpCol) =!= CdcEnvelope.Delete)
       .drop(CdcEnvelope.OpCol)
-    val refreshed = enrich(
-      stored.join(broadcast(fks), Seq(spec.fkCol), "left_semi")
-        .drop(spec.dimCols: _*),
-      dimUps, spec)
-    CdcPipeline.publishDelta(keep.unionByName(refreshed), spec.viewDir, spec.factPk,
-      m, affectedBuckets, batchId = -1L, op = "join-view-dim")
+    CdcPipeline.rewriteBuckets(spark, spec.viewDir, spec.factPk, m, affectedBuckets,
+        "join-view-dim") { stored =>
+      val keep = stored.join(broadcast(fks), Seq(spec.fkCol), "left_anti")
+      val refreshed = enrich(
+        stored.join(broadcast(fks), Seq(spec.fkCol), "left_semi")
+          .drop(spec.dimCols: _*),
+        dimUps, spec)
+      keep.unionByName(refreshed)
+    }
   }
 }

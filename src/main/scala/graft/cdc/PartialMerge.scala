@@ -123,7 +123,7 @@ object PartialMerge {
         // The store's schema must be EXACTLY pk + declared fields
         // (r9 ADVICE): the subset pre-select below would otherwise
         // narrow a wider store before merge() could apply its
-        // documented refusal — publishDelta then commits the
+        // documented refusal — the delta write then commits the
         // narrowed schema, and the undeclared columns silently
         // vanish from reads (lost for good once their buckets
         // rewrite). Refuse loudly instead; a wider target needs its
@@ -135,13 +135,11 @@ object PartialMerge {
             s"must cover the target's schema exactly " +
             s"(${storeCols.toSeq.sorted.mkString(",")} at $targetDir) — " +
             "undeclared columns would be dropped from the published schema")
-        val touched = env
-          .select(CdcPipeline.bucketExpr(pkCols, m.numBuckets).as("b"))
-          .distinct().collect().map(_.getInt(0)).toSet
-        val subset = CdcPipeline.readBuckets(spark, targetDir, m, touched)
-          .select((pkCols ++ fields.map(_.as)).map(col): _*)
-        CdcPipeline.publishDelta(merge(env, subset, pkCols, fields), targetDir,
-          pkCols, m, touched, batchId, statsCols)
+        val touched = CdcPipeline.bucketSet(env, CdcPipeline.bucketExpr(pkCols, m.numBuckets))
+        CdcPipeline.rewriteBuckets(spark, targetDir, pkCols, m, touched, batchId = batchId,
+            statsCols = statsCols) { stored =>
+          merge(env, stored.select((pkCols ++ fields.map(_.as)).map(col): _*), pkCols, fields)
+        }
     }
   }
 }

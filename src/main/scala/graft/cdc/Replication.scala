@@ -165,22 +165,21 @@ object Replication {
     if (changeRows == 0L) return None
     val m = CdcPipeline.currentManifest(dstDir).getOrElse(
       throw new IllegalStateException(s"replica $dstDir has no store"))
-    val touched = changes
-      .select(CdcPipeline.bucketExpr(pkCols, m.numBuckets).as("b"))
-      .distinct().collect().map(_.getInt(0)).toSet
-    val subset = CdcPipeline.readBuckets(spark, dstDir, m, touched)
-    // additive source schema evolution flows through: a feed carrying
-    // columns the replica has never seen routes via mergeEvolving
-    // (old replica rows read NULL, the published schema widens)
-    val merged =
-      if (dataCols.forall(subset.columns.contains) &&
-          subset.columns.forall(dataCols.contains))
-        SnapshotMerge.merge(subset, changes, pkCols, Some(changeRows))
-      else
-        SnapshotMerge.mergeEvolving(subset,
-          changes.drop("_commit_version"), pkCols, Some(changeRows))
-    val v = CdcPipeline.publishDelta(merged.select(dataCols.map(col): _*),
-      dstDir, pkCols, m, touched, batchId = -1L, op = "replicate")
+    val touched = CdcPipeline.bucketSet(changes, CdcPipeline.bucketExpr(pkCols, m.numBuckets))
+    val v = CdcPipeline.rewriteBuckets(spark, dstDir, pkCols, m, touched,
+        "replicate") { subset =>
+      // additive source schema evolution flows through: a feed carrying
+      // columns the replica has never seen routes via mergeEvolving
+      // (old replica rows read NULL, the published schema widens)
+      val merged =
+        if (dataCols.forall(subset.columns.contains) &&
+            subset.columns.forall(dataCols.contains))
+          SnapshotMerge.merge(subset, changes, pkCols, Some(changeRows))
+        else
+          SnapshotMerge.mergeEvolving(subset,
+            changes.drop("_commit_version"), pkCols, Some(changeRows))
+      merged.select(dataCols.map(col): _*)
+    }
     Some((v, changeRows))
   }
 

@@ -491,32 +491,31 @@ object Scd2Store {
         val v = m.readVersion
         // open-store I/O ∝ delta: only the buckets the window's PKs
         // hash to are read and rewritten
-        val touched = summary.touched(op, m.numBuckets)
-        val openSubset = CdcPipeline.readBuckets(spark, op, m, touched)
-        // ADDITIVE schema evolution: a payload column declared after
-        // the store existed is absent from the stored open slices —
-        // allowMissingColumns unions backfill it with NULL (the same
-        // contract the versioned store's pinned-schema reads give
-        // carried pre-evolution buckets), and the post-union select
-        // pins the new column order. Type changes are not supported.
-        // the window's first event closes its PK's current slice
-        val closedNow = openSubset.drop(Scd2.To)
-          .join(broadcast(firstEvt), pk)
-          .withColumnRenamed("_first_ts", Scd2.To)
-        val newClosed = newSlices.filter(col(Scd2.To).isNotNull).select(cols.map(col): _*)
-        // closed/d<v+1> BEFORE the open publish: the open store's
-        // pointer swap to version v+1 is what makes it visible
-        writeClosedDir(
-          newClosed.unionByName(closedNow, allowMissingColumns = true)
-            .select(cols.map(col): _*),
-          pk, m.numBuckets, s"${closedPath(cfg)}/d${v + 1}")
-        val stillOpen = openSubset
-          .join(broadcast(firstEvt.select(pk.map(col): _*)), pk, "left_anti")
-        val newOpen = newSlices.filter(col(Scd2.To).isNull).select(cols.map(col): _*)
-        CdcPipeline.publishDelta(
+        CdcPipeline.rewriteBuckets(spark, op, pk, m, summary.touched(op, m.numBuckets),
+            batchId = seqKey) { openSubset =>
+          // ADDITIVE schema evolution: a payload column declared after
+          // the store existed is absent from the stored open slices —
+          // allowMissingColumns unions backfill it with NULL (the same
+          // contract the versioned store's pinned-schema reads give
+          // carried pre-evolution buckets), and the post-union select
+          // pins the new column order. Type changes are not supported.
+          // the window's first event closes its PK's current slice
+          val closedNow = openSubset.drop(Scd2.To)
+            .join(broadcast(firstEvt), pk)
+            .withColumnRenamed("_first_ts", Scd2.To)
+          val newClosed = newSlices.filter(col(Scd2.To).isNotNull).select(cols.map(col): _*)
+          // closed/d<v+1> BEFORE the open publish: the open store's
+          // pointer swap to version v+1 is what makes it visible
+          writeClosedDir(
+            newClosed.unionByName(closedNow, allowMissingColumns = true)
+              .select(cols.map(col): _*),
+            pk, m.numBuckets, s"${closedPath(cfg)}/d${v + 1}")
+          val stillOpen = openSubset
+            .join(broadcast(firstEvt.select(pk.map(col): _*)), pk, "left_anti")
+          val newOpen = newSlices.filter(col(Scd2.To).isNull).select(cols.map(col): _*)
           newOpen.unionByName(stillOpen, allowMissingColumns = true)
-            .select(cols.map(col): _*),
-          op, pk, m, touched, batchId = seqKey)
+            .select(cols.map(col): _*)
+        }
         ()
     }
   }

@@ -44,7 +44,8 @@ import graft.cdc.{CdcEnvelope, CdcPipeline, MergeInto}
   *
   * Scale: identical to the TVF path — touched buckets from source
   * keys, delta-sized subset read, one-join-one-projection MergeInto
-  * plan, `publishDelta` carrying untouched buckets by reference.
+  * plan, `CdcPipeline.rewriteBuckets` carrying untouched buckets by
+  * reference.
   */
 class GraftSqlParser(delegate: ParserInterface) extends ParserInterface {
   override def parsePlan(sqlText: String): LogicalPlan =
@@ -299,7 +300,6 @@ object GraftSqlDml {
       val pk = pkOf(path)
       val m = CdcPipeline.currentManifest(path).getOrElse(
         throw new IllegalArgumentException(s"no graft store at $path"))
-      val cur = m.readVersion
       val stored = m.schema.fields.map(f => f.name -> f.dataType).toMap
       val tgtCols = m.schema.fieldNames.toSeq
       val q0 = GraftBridge.dataFrame(spark, query.plan)
@@ -332,13 +332,10 @@ object GraftSqlDml {
         Seq(Row(v, n))
       } else {
         val srcRows = source.count()
-        val touched = source
-          .select(CdcPipeline.bucketExpr(pk, m.numBuckets).as("b"))
-          .distinct().collect().map(_.getInt(0)).toSet
+        val touched = CdcPipeline.bucketSet(source, CdcPipeline.bucketExpr(pk, m.numBuckets))
         val v =
-          if (touched.isEmpty) cur
-          else {
-            val subset = CdcPipeline.readBuckets(spark, path, m, touched)
+          if (touched.isEmpty) m.readVersion
+          else CdcPipeline.rewriteBuckets(spark, path, pk, m, touched, "sql-insert") { subset =>
             val dup = subset.join(
               org.apache.spark.sql.functions.broadcast(
                 source.select(pk.map(col): _*)), pk, "left_semi")
@@ -347,10 +344,8 @@ object GraftSqlDml {
               s"INSERT INTO $path: duplicate key " +
                 s"(${pk.mkString(",")}) = (${dup.headOption.map(_.toSeq.mkString(",")).getOrElse("")}) " +
                 "already exists — use MERGE INTO to upsert")
-            val merged = MergeInto(subset, source, pk).sourceRows(srcRows)
+            MergeInto(subset, source, pk).sourceRows(srcRows)
               .whenNotMatchedInsertAll().run()
-            CdcPipeline.publishDelta(merged, path, pk, m, touched,
-              batchId = -1L, op = "sql-insert")
           }
         Seq(Row(v, srcRows))
       }
@@ -359,7 +354,7 @@ object GraftSqlDml {
 
   /** MERGE INTO graft.{path} — executes through the A38 [[MergeInto]]
     * builder with the statement's clauses in ANSI order, then
-    * `publishDelta` (touched buckets only). Returns
+    * `CdcPipeline.rewriteBuckets` (touched buckets only). Returns
     * (version, source_rows), matching the graft_merge TVF.
     */
   final case class GraftMergeCommand(path: String, targetAlias: Option[String],
@@ -434,7 +429,6 @@ object GraftSqlDml {
           "layout is pk-hash-addressed")
       val m = CdcPipeline.currentManifest(path).getOrElse(
         throw new IllegalArgumentException(s"no graft store at $path"))
-      val cur = m.readVersion
       val source = GraftBridge.dataFrame(spark, sourcePlan.plan)
       val srcCols = source.columns.toSet
       val srcRows = source.count()
@@ -444,9 +438,7 @@ object GraftSqlDml {
       // whose effects land only in source-keyed buckets) would
       // silently skip rows the clause must see — widen to all buckets.
       val bySrc = bySourceActions.actions.nonEmpty
-      val srcBuckets = source
-        .select(CdcPipeline.bucketExpr(pk, m.numBuckets).as("b"))
-        .distinct().collect().map(_.getInt(0)).toSet
+      val srcBuckets = CdcPipeline.bucketSet(source, CdcPipeline.bucketExpr(pk, m.numBuckets))
       // By-source merges widen to manifest ∪ source buckets, not the
       // manifest alone: into an EMPTY store (zero manifest buckets —
       // right after TRUNCATE or a full-sync that deleted every row)
@@ -456,13 +448,12 @@ object GraftSqlDml {
         if (bySrc) m.buckets.keySet.toSet ++ srcBuckets
         else srcBuckets
       val v =
-        if (touched.isEmpty) cur
-        else {
-          val subset0 = CdcPipeline.readBuckets(spark, path, m, touched)
+        if (touched.isEmpty) m.readVersion
+        else CdcPipeline.rewriteBuckets(spark, path, pk, m, touched, "sql-merge") { subset0 =>
           // MERGE WITH SCHEMA EVOLUTION (Delta's surface): source
           // columns the target lacks are ADDED — the subset widens
           // with NULL-typed columns before the merge, so UPDATE SET */
-          // INSERT * carry them, and publishDelta commits the widened
+          // INSERT * carry them, and the write commits the widened
           // schema (carried buckets read the new columns as NULL —
           // the A19/A57 additive-evolution machinery). Without the
           // flag, unknown source columns are simply ignored (the
@@ -483,8 +474,7 @@ object GraftSqlDml {
           // subset (arbitrary SET expressions can violate them even
           // when every source row is clean)
           CdcPipeline.enforceConstraints(m, merged, path)
-          CdcPipeline.publishDelta(merged, path, pk, m, touched,
-            batchId = -1L, op = "sql-merge")
+          merged
         }
       Seq(Row(v, srcRows))
     }

@@ -162,9 +162,8 @@ object CoreScale {
       val delta = ChangeCompaction.compactForMerge(
         facts.filter(col("pk") < 10), Seq("pk")).localCheckpoint(true)
       val dRows = delta.count()
-      val deltaBuckets = delta
-        .select(CdcPipeline.bucketExpr(Seq("pk"), m.numBuckets).as("b"))
-        .distinct().collect().map(_.getInt(0)).toSet
+      val deltaBuckets = CdcPipeline.bucketSet(delta,
+        CdcPipeline.bucketExpr(Seq("pk"), m.numBuckets))
       val preSlice = withGrp(CdcPipeline.readBuckets(spark, tdir, m, deltaBuckets))
       time(s"ivm applyDelta, $dRows-key delta (pre-target = ${deltaBuckets.size}/${m.numBuckets} buckets)") {
         IncrementalAgg.applyDelta(state0, preSlice, withGrp(delta),
@@ -740,9 +739,8 @@ object CoreScale {
         expectedPerBucket = math.max(1000L, n / 32)).get)
       println(f"[stress] bloom full build (${n / 1e6}%.1f M rows / 64 buckets): $tFull%.2f s")
       val m = P.currentManifest(dir).get
-      val chg = P.readBuckets(spark, dir, m, Set(1, 2, 3))
-        .withColumn("tag", concat(col("tag"), lit("-x")))
-      P.publishDelta(chg, dir, Seq("id"), m, Set(1, 2, 3), batchId = -1L)
+      P.rewriteBuckets(spark, dir, Seq("id"), m, Set(1, 2, 3))(
+        _.withColumn("tag", concat(col("tag"), lit("-x"))))
       val (rep, tHeal) = secs(P.maintain(spark, dir, Seq("id"),
         P.MaintenancePolicy(dvFoldPct = None, smallFilesPerBucket = None,
           keepVersions = None, bloomRebuildPct = Some(1),

@@ -42,10 +42,8 @@ class CloneSpec extends AnyFunSuite {
 
     // divergence: rewrite bucket 2 on the CLONE only
     val m0 = CdcPipeline.manifest(dst, 0).get
-    val newB2 = CdcPipeline.readSnapshot(spark, dst).get
-      .filter(pmod(hash(col("id")), lit(8)) === 2)
-      .withColumn("v", col("v") + 500000L)
-    CdcPipeline.publishDelta(newB2, dst, Seq("id"), m0, Set(2), batchId = -1L)
+    CdcPipeline.rewriteBuckets(spark, dst, Seq("id"), m0, Set(2))(
+      _.withColumn("v", col("v") + 500000L))
     val afterSrc = rows(src)
     val afterDst = rows(dst)
     assert(afterSrc !== afterDst, "clone writes must not leak into the source")

@@ -29,10 +29,8 @@ class DescribeFilesSpec extends AnyFunSuite {
 
     // a delta on bucket 2 fragments it; the other buckets carry v0 refs
     val m0 = P.manifest(dir, 0).get
-    val delta = P.readSnapshot(spark, dir).get
-      .filter(pmod(hash(col("id")), lit(4)) === 2)
-      .withColumn("v", col("v") + 100L)
-    P.publishDelta(delta, dir, Seq("id"), m0, Set(2), batchId = -1L) // v1
+    P.rewriteBuckets(spark, dir, Seq("id"), m0, Set(2))( // v1
+      _.withColumn("v", col("v") + 100L))
     val f1 = P.describeFiles(spark, dir).get.cache()
     assert(f1.agg(sum("rows")).head().getLong(0) === 4000L,
       "carried + rewritten files still total the table")

@@ -21,6 +21,12 @@ class ErasureSpec extends AnyFunSuite {
 
   private def tmp(): String = Files.createTempDirectory("graft").toString
 
+  /** Every bucket id of `m`'s layout: an append may land in a bucket
+    * the queue has no rows in yet, and a keyed write names every
+    * bucket it writes.
+    */
+  private def allBuckets(m: CdcPipeline.Manifest): Set[Int] = (0 until m.numBuckets).toSet
+
   test("exactly-once effect across batches, cursor loss, and retries") {
     val target = tmp(); val queue = tmp()
     // target: 300 rows over 30 users, PK = row id, subject = user
@@ -36,10 +42,8 @@ class ErasureSpec extends AnyFunSuite {
 
     // batch 1: erase users 3 and 7
     val m = CdcPipeline.manifest(queue, CdcPipeline.currentVersion(queue).get).get
-    CdcPipeline.publishDelta(
-      CdcPipeline.readSnapshot(spark, queue).get.unionByName(
-        Seq((1L, 3L), (2L, 7L)).toDF("req_id", "user_id")),
-      queue, Seq("req_id"), m, m.buckets.keySet, batchId = -1L)
+    CdcPipeline.rewriteBuckets(spark, queue, Seq("req_id"), m, allBuckets(m))(
+      _.unionByName(Seq((1L, 3L), (2L, 7L)).toDF("req_id", "user_id")))
     val Some((nReq, nRows)) = Erasure.apply(spark, queue, Seq("req_id"), "user_id",
       target, Seq("id"), "user_id")
     assert(nReq === 2 && nRows === 20)
@@ -67,10 +71,8 @@ class ErasureSpec extends AnyFunSuite {
     // batch 2 erases only its own subject
     val vQueueBefore = CdcPipeline.currentVersion(queue).get
     val m2 = CdcPipeline.manifest(queue, vQueueBefore).get
-    CdcPipeline.publishDelta(
-      CdcPipeline.readSnapshot(spark, queue).get.unionByName(
-        Seq((3L, 11L)).toDF("req_id", "user_id")),
-      queue, Seq("req_id"), m2, m2.buckets.keySet, batchId = -1L)
+    CdcPipeline.rewriteBuckets(spark, queue, Seq("req_id"), m2, allBuckets(m2))(
+      _.unionByName(Seq((3L, 11L)).toDF("req_id", "user_id")))
     val Some((r2, n2)) = Erasure.apply(spark, queue, Seq("req_id"), "user_id",
       target, Seq("id"), "user_id")
     assert(r2 === 1 && n2 === 10)
@@ -106,11 +108,9 @@ class ErasureSpec extends AnyFunSuite {
     // enqueue 10,000 subjects (users 0..9999) in one batch — the
     // scale an isin literal list cannot carry (r9 verdict #5)
     val m = CdcPipeline.manifest(queue, CdcPipeline.currentVersion(queue).get).get
-    CdcPipeline.publishDelta(
-      CdcPipeline.readSnapshot(spark, queue).get.unionByName(
-        spark.range(0, 10000).select((col("id") + 1).as("req_id"),
-          col("id").as("user_id"))),
-      queue, Seq("req_id"), m, m.buckets.keySet, batchId = -1L)
+    CdcPipeline.rewriteBuckets(spark, queue, Seq("req_id"), m, allBuckets(m))(
+      _.unionByName(spark.range(0, 10000).select((col("id") + 1).as("req_id"),
+        col("id").as("user_id"))))
     val dataFilesBefore =
       CdcPipeline.readSnapshot(spark, target).get.inputFiles.toSet
     val Some((nReq, nRows)) = Erasure.apply(spark, queue, Seq("req_id"), "user_id",

@@ -181,7 +181,7 @@ class MetadataLawsSpec extends AnyFunSuite {
   //                               dflt constr virt prop dv bloom ndv stats
   private val table: Seq[(String, Seq[Law])] = Seq(
     "publish"          -> Seq(D, C, C, C, P, P, P, P),
-    "publishDelta"     -> Seq(C, C, C, C, P, P, P, P),
+    "rewriteBuckets"   -> Seq(C, C, C, C, P, P, P, P),
     "rebucket"         -> Seq(D, C, C, C, P, P, P, P),
     "delete"           -> Seq(C, C, C, C, P, P, P, P),
     "update"           -> Seq(C, C, C, C, P, P, P, P),
@@ -255,11 +255,10 @@ class MetadataLawsSpec extends AnyFunSuite {
       case "publish" =>
         val m = head(dir)
         CdcPipeline.publish(CdcPipeline.readBuckets(spark, dir, m, m.buckets.keySet), dir, pk)
-      case "publishDelta" =>
+      case "rewriteBuckets" =>
         val m = head(dir)
-        val b = m.buckets.keys.min
-        CdcPipeline.publishDelta(CdcPipeline.readBuckets(spark, dir, m, Set(b))
-          .withColumn("payload", col("payload") + 1L), dir, pk, m, Set(b), batchId = -1L)
+        CdcPipeline.rewriteBuckets(spark, dir, pk, m, Set(m.buckets.keys.min))(
+          _.withColumn("payload", col("payload") + 1L))
       case "rebucket" => CdcPipeline.rebucket(spark, dir, pk, 4)
       case "delete" => CdcPipeline.deleteWhere(spark, dir, pk, col("id") === 5L)
       case "update" =>

@@ -69,8 +69,8 @@ class StatsPruneSpec extends AnyFunSuite {
     val newB5 = CdcPipeline.readSnapshot(spark, dir).get
       .filter(pmod(hash(col("id")), lit(16)) === 5)
       .withColumn("v", col("v") + 94000L)
-    CdcPipeline.publishDelta(newB5, dir, Seq("id"), m0, Set(5), batchId = -1L,
-      statsCols = Seq("v"))
+    CdcPipeline.rewriteBuckets(spark, dir, Seq("id"), m0, Set(5),
+      statsCols = Seq("v"))(_ => newB5)
 
     // old bucket-5 range now matches nothing and scans nothing
     val ghost = CdcPipeline.readRange(spark, dir, "v", Some(5000L), Some(5999L)).get
@@ -103,10 +103,8 @@ class StatsPruneSpec extends AnyFunSuite {
 
     // a delta WITH stats refreshes only its bucket; the rest stay unknown
     val m0 = CdcPipeline.manifest(dir, 0).get
-    val newB2 = CdcPipeline.readSnapshot(spark, dir).get
-      .filter(pmod(hash(col("id")), lit(8)) === 2)
-    CdcPipeline.publishDelta(newB2, dir, Seq("id"), m0, Set(2), batchId = -1L,
-      statsCols = Seq("v"))
+    CdcPipeline.rewriteBuckets(spark, dir, Seq("id"), m0, Set(2),
+      statsCols = Seq("v"))(identity)
     val partial = CdcPipeline.readRange(spark, dir, "v", Some(6000L), Some(6999L)).get
     val touched = touchedBucketDirs(partial)
     assert(!touched.contains(2), "bucket 2 has fresh stats and is out of range")

@@ -5,8 +5,8 @@ import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 
 /** Guards the one way from a store to its files (the store-layout
-  * section of [[CdcPipeline]] and [[StoreFs]]), by scanning
-  * src/main/scala with comments stripped:
+  * section of [[CdcPipeline]] and [[StoreFs]]) and the one keyed write
+  * back, by scanning src/main/scala with comments stripped:
   *
   *  - a manifest ref resolves (`contains("/")`) only in `versionRoot`;
   *  - a bucket directory name is built or parsed only in `bucketDir`,
@@ -15,10 +15,15 @@ import scala.jdk.CollectionConverters._
   *  - the current manifest is read only through `currentManifest` (no
   *    pointer read whose version then feeds `manifest(dir, v)`), except
   *    by `fsck`, whose job is to report that pair disagreeing;
-  *  - parquet footers are opened in one loop, `StoreFs.walkFooters`.
+  *  - parquet footers are opened in one loop, `StoreFs.walkFooters`;
+  *  - a touched-bucket rewrite goes through `rewriteBuckets`, and a
+  *    bucket set is aggregated only by `bucketSet` (no
+  *    `distinct().collect()`, and the `cdc_replicate` gate's expected
+  *    rewrite is a `bucketSet` too).
   *
-  * When a bucket entry comes to name something else, the change is
-  * then made in those functions and the manifest codec only.
+  * When a bucket entry comes to name something else, or a keyed write
+  * comes to land differently, the change is then made in those
+  * functions and the manifest codec only.
   */
 class StoreLayoutSpec extends AnyFunSuite {
   private val root = Paths.get("src/main/scala")
@@ -42,14 +47,16 @@ class StoreLayoutSpec extends AnyFunSuite {
 
   private val DefRe = "\\bdef\\s+(\\w+)".r
 
-  /** (file:line, enclosing def) of every line matching `re`. */
+  /** (file:line, enclosing def) of every match of `re`, which may span
+    * lines.
+    */
   private def hits(re: scala.util.matching.Regex): Seq[(String, String)] =
     sources.flatMap { case (file, text) =>
-      var enclosing = "<object>"
-      text.split("\n", -1).toSeq.zipWithIndex.flatMap { case (line, i) =>
-        DefRe.findAllMatchIn(line).foreach(m => enclosing = m.group(1))
-        Option.when(re.findFirstIn(line).isDefined)(s"$file:${i + 1}" -> enclosing)
-      }
+      val defs = DefRe.findAllMatchIn(text).toSeq
+      re.findAllMatchIn(text).map { m =>
+        val fn = defs.takeWhile(_.start < m.start).lastOption.fold("<object>")(_.group(1))
+        s"$file:${text.substring(0, m.start).count(_ == '\n') + 1}" -> fn
+      }.toSeq.distinct
     }
 
   private def outside(re: scala.util.matching.Regex, allowed: Set[String]): Seq[String] =
@@ -119,5 +126,20 @@ class StoreLayoutSpec extends AnyFunSuite {
         case (at, fn) if !(at.startsWith("graft/cdc/StoreFs.scala:") && fn == "walkFooters") =>
           s"$at (in $fn)"
       })
+  }
+
+  test("every keyed rewrite goes through rewriteBuckets and every bucket set through bucketSet") {
+    report("publishDelta", hits("""\bpublishDelta\b""".r).map(_._1))
+    report("distinct().collect() outside bucketSet",
+      outside("""distinct\(\)\s*\.collect\(""".r, Set("bucketSet")))
+  }
+
+  test("the cdc_replicate gate sizes its expected rewrite with bucketSet") {
+    val text = sources.collectFirst { case ("graft/cdc/CdcQueries.scala", t) => t }.get
+    val start = text.indexOf("def cdcReplicate(")
+    assert(start >= 0, "cdcReplicate not found in CdcQueries")
+    val body = text.substring(start, text.indexOf("\n  def ", start + 1))
+    assert(body.contains("bucketSet("), "cdc_replicate must count buckets with bucketSet")
+    assert(!body.contains("distinct().count()"), "cdc_replicate still counts distinct buckets")
   }
 }

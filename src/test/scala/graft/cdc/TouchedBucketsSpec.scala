@@ -171,6 +171,28 @@ class TouchedBucketsSpec extends AnyFunSuite {
       .columns.map(col): _*)))
   }
 
+  test("a keyed write that lands a row outside its touched buckets is refused and loses nothing") {
+    val dir = tmp()
+    CdcPipeline.publish(spark.range(0, 400).select(col("id"), lit(0L).as("v")), dir,
+      Seq("id"), buckets = Some(8))
+    val bucket = CdcPipeline.bucketExpr(Seq("id"), 8)
+    def bucket5 = rows(CdcPipeline.readSnapshot(spark, dir).get.filter(bucket === 5))
+    val before = bucket5
+    val stray = spark.range(0, 400).filter(bucket === 5).head().longValue
+    val err = intercept[IllegalStateException] {
+      CdcPipeline.rewriteBuckets(spark, dir, Seq("id"), manifestAt(dir), Set(2))(
+        _.unionByName(Seq((stray, 1L)).toDF("id", "v")))
+    }
+    assert(err.getMessage.contains("outside the touched set"))
+    assert(CdcPipeline.currentVersion(dir) === Some(0L))
+    assert(!StoreFs.exists(s"$dir/v1"), "the refused commit leaves no version dir")
+    assert(before.size > 1 && bucket5 === before, "bucket 5 keeps every stored row")
+    // the claim was released: the same write inside its set commits v1
+    assert(CdcPipeline.rewriteBuckets(spark, dir, Seq("id"), manifestAt(dir), Set(2))(
+      _.withColumn("v", lit(1L))) === 1L)
+    assert(bucket5 === before)
+  }
+
   test("a summary taken before a rebucket is refused as a stale base") {
     val c = cfg(tmp()); val log = tmp()
     assert(CdcPipeline.run(spark, c, source, log, ends(0)).status === "SUCCESS")

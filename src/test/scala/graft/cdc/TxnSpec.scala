@@ -61,6 +61,23 @@ class TxnSpec extends AnyFunSuite {
     assert(Txn.recover(coord) === Seq.empty, "recovery is idempotent")
   }
 
+  test("a staged version is refused by tags, clones, the diff and the change feed") {
+    val (dir, dst) = (tmp(), tmp() + "/clone")
+    CdcPipeline.publish(fx(20, "v0"), dir, Seq("id"), buckets = Some(4))
+    assert(CdcPipeline.publish(fx(20, "staged"), dir, Seq("id"), swapNow = false) === 1L)
+    assert(CdcPipeline.createTag(dir, "t", Some(1L)) === None)
+    assert(CdcPipeline.cloneSnapshot(dir, dst, atVersion = Some(1L)) === None)
+    assert(CdcPipeline.snapshotDiff(spark, dir, 0L, 1L, Seq("id")) === None)
+    assert(CdcPipeline.readChangeFeed(spark, dir, Seq("id"), 0L, 1L) === None)
+    // the staged v1 is thrown away and a different v1 commits: a tag
+    // taken now names the committed rows
+    CdcPipeline.abortStaged(dir, 1L)
+    assert(CdcPipeline.publish(fx(20, "v1"), dir, Seq("id")) === 1L)
+    assert(CdcPipeline.createTag(dir, "t", Some(1L)) === Some(1L))
+    assert(CdcPipeline.readSnapshotAtTag(spark, dir, "t").get
+      .select("tag").distinct().collect().map(_.getString(0)).toSeq === Seq("v1"))
+  }
+
   test("abort before intent reclaims the staged versions") {
     val (a, coord) = (tmp(), tmp())
     CdcPipeline.publish(fx(50, "a0"), a, Seq("id"), buckets = Some(4))
