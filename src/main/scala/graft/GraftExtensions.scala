@@ -416,8 +416,8 @@ object GraftExtensions {
             // UPDATE/INSERT column maps (updateAll/insertAll map only
             // TARGET columns, so nothing references it except the
             // clause conditions above)
-            mi.run()
-          }
+            CdcPipeline.KeyedDelta.Content(mi.run())
+          }.version
         import spark.implicits._
         plan(Seq((v, srcRows)).toDF("version", "source_rows"))
       }),

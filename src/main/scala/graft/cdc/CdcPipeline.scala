@@ -27,20 +27,22 @@ import scala.jdk.CollectionConverters._
   * versioned-parquet swap rewrites the whole snapshot per run. The
   * target is therefore laid out as `numBuckets` PK-hash buckets
   * (directories `v{n}/_graft_bucket={b}`), and each version carries a
-  * manifest mapping every bucket to the version directory holding its
-  * current files. A merge then
+  * manifest mapping every bucket to its segments (the version
+  * directories holding its files) and its deletion vector. A merge then
   *   1. computes the delta's touched bucket set (≤ numBuckets ids,
   *      collected driver-side),
-  *   2. reads ONLY those buckets as the merge's target side,
-  *   3. writes ONLY those buckets into the new version,
-  *   4. writes a manifest carrying every untouched bucket forward
-  *      by reference.
+  *   2. finds, in ONLY those buckets, the positions of the stored rows
+  *      the delta replaces or deletes,
+  *   3. writes the delta's rows as one new segment of their buckets
+  *      and the positions as those buckets' deletion vectors,
+  *   4. writes a manifest carrying every other segment and vector
+  *      forward by reference.
   * Steps 2–4 are one function, [[rewriteBuckets]], that every keyed
-  * write goes through. Read and write I/O are both ∝ delta (bucket
-  * granularity), not target size — the cost profile of the
-  * reference's MERGE (merge.sql:403–436) on an immutable-file store,
-  * and the file-pruning shape Delta/Iceberg MERGE gets from data
-  * skipping.
+  * write goes through (merge-on-read, with a fixed fold policy that
+  * rewrites a bucket as one segment). Write I/O is ∝ the delta's rows
+  * and read I/O ∝ touched buckets, not target size — the cost profile
+  * of the reference's MERGE (merge.sql:403–436), which changes matched
+  * rows in place, on an immutable-file store.
   * The pointer swap stays a one-line atomic move, so readers see the
   * old or the new manifest, never a torn state. Every reader and
   * writer starts from [[currentManifest]] (pointer, then the manifest
@@ -83,37 +85,57 @@ object CdcPipeline {
   private val PkFile = "_PK"
   private[graft] val BucketCol = "_graft_bucket"
 
-  /** Deletion-vector sidecar (A53): `<version dir>/_dv` holds one
-    * parquet row per MERGE-ON-READ-deleted row position — (bucket,
-    * data-file NAME, row index within that file). The owning
-    * manifest advertises it via `meta("dv") = <version ref>` (same
-    * "v7"-or-absolute resolution as bucket refs). The file key is the
-    * final TWO path segments (`_graft_bucket=N/part-….parquet`), not
-    * the full path, so a store survives being relocated — and not the
-    * bare name, because the dynamic-partition writer reuses one task
-    * UUID for every bucket dir it writes, making bare names COLLIDE
-    * across buckets. The bucket column lets readers prune the vector
-    * to the buckets they scan.
+  /** Deletion vectors (A53), per bucket: `<version dir>/_dv/<b>.parquet`
+    * holds one row per row position of bucket `b` that version deleted
+    * — (data-file key, row index within that file) — written and read
+    * on the driver ([[StoreFs.writePositions]]). The manifest lists each
+    * bucket's vector files by version ref (`dv.<b>=v5,v7`, the same
+    * "v7"-or-absolute resolution as segment refs); the bucket's vector
+    * is their union (disjoint: a write only ever deletes live rows). A
+    * commit writes only the positions it deletes, for the buckets it
+    * changes, and carries every other file by reference. The
+    * file key is the final TWO path segments
+    * (`_graft_bucket=N/part-….parquet`), not the full path, so a store
+    * survives being relocated — and not the bare name, because the
+    * dynamic-partition writer reuses one task UUID for every bucket dir
+    * it writes, making bare names COLLIDE across buckets.
     */
   private val DvDir = "_dv"
   private val DvFileCol = "__graft_dv_file"
   private val DvPosCol = "__graft_dv_pos"
-  private val dvSchema = StructType(Seq(
-    StructField("bucket", IntegerType), StructField("file", StringType),
-    StructField("pos", LongType)))
 
-  /** Per-version manifest: bucket id → version ref (e.g. "v3", or an
-    * absolute version dir of another store for a bucket a shallow
-    * clone carries) whose bucket directory ([[bucketDir]] of
-    * [[versionRoot]]) holds the bucket's current files. Every version
-    * a reader can see has one; absent ids are empty buckets.
+  /** Merge-on-read fold policy of [[rewriteBuckets]], fixed: a bucket
+    * is rewritten as one segment (copy-on-write) once it holds
+    * `MaxSegments` segments, or once its deletion vector would cover
+    * more than `MaxDvPct` percent of its footer rows. Bounds a read's
+    * fan-in per bucket and the position lists the driver holds.
+    */
+  private[graft] val MaxSegments = 8
+  private[graft] val MaxDvPct = 20
+
+  /** Per-version manifest: bucket id → the bucket's segments, oldest
+    * first. A segment is a version ref (e.g. "v3", or an absolute
+    * version dir of another store for a bucket a shallow clone
+    * carries) whose bucket directory ([[bucketDir]] of [[versionRoot]])
+    * holds some of the bucket's rows; the bucket is the union of its
+    * segments minus its deletion vector (`dvs`: bucket id → the refs
+    * of the version dirs holding that bucket's vector files, oldest
+    * first). A merge-on-read write appends a segment and a vector file;
+    * a copy-on-write rewrite replaces the list with one segment and
+    * drops the vector. The codec writes `bucket.3=v2,v7` and
+    * `dv.3=v5,v7`; a
+    * one-ref entry is a one-segment bucket. Every version a reader can
+    * see has one; absent ids are empty buckets. Entries are decoded
+    * only here, in [[segmentDirs]] and in the other store-layout
+    * functions (StoreLayoutSpec).
     * `schemaJson` pins the snapshot schema so carried-over buckets
     * from before an additive schema evolution read with NULLs for the
     * new columns.
     *
     * `stats` (since r7) is the data-skipping index: per bucket, the
     * min/max of each declared stats column (numeric or string),
-    * recomputed whenever a bucket is rewritten and carried by
+    * recomputed whenever a bucket is rewritten, widened by a new
+    * segment's footer stats when one is appended, and carried by
     * reference with the bucket otherwise — so like the bucket
     * pointers themselves, maintenance I/O is ∝ delta. A missing
     * (bucket, column) entry means UNKNOWN (pre-stats version,
@@ -121,7 +143,7 @@ object CdcPipeline {
     * that bucket — pruning degrades, never lies.
     */
   private[graft] final case class Manifest(
-      numBuckets: Int, schemaJson: String, buckets: Map[Int, String],
+      numBuckets: Int, schemaJson: String, buckets: Map[Int, Seq[String]],
       stats: Map[Int, Map[String, (String, String)]] = Map.empty,
       /** Commit metadata (since r8): `op` = which operation produced
         * this version (bootstrap/merge/rebucket/optimize/zorder/
@@ -135,7 +157,13 @@ object CdcPipeline {
         * it so delta publishes can verify their base is still the
         * current version at commit time (the A66 stale-base check).
         */
-      readVersion: Long = -1L) {
+      readVersion: Long = -1L,
+      dvs: Map[Int, Seq[String]] = Map.empty,
+      /** The manifest's recorded `chain.hash` ("" when constructed in
+        * memory or written before the chain): names this exact
+        * committed state, so reads key their resolved scans by it.
+        */
+      chain: String = "") {
     def schema: StructType = DataType.fromJson(schemaJson).asInstanceOf[StructType]
   }
 
@@ -205,15 +233,20 @@ object CdcPipeline {
     else {
       var nb = 0
       var schema = ""
-      val bs = Map.newBuilder[Int, String]
+      var chain = ""
+      val bs = Map.newBuilder[Int, Seq[String]]
+      val dvs = Map.newBuilder[Int, Seq[String]]
       val st = scala.collection.mutable.Map[Int, Map[String, (String, String)]]()
       val me = Map.newBuilder[String, String]
       StoreFs.readString(p).split("\n").foreach { l =>
         l.split("=", 2) match {
           case Array("numBuckets", v) => nb = v.toInt
           case Array("schema", v) => schema = v
+          case Array(ChainHashKey, v) => chain = v
           case Array(k, v) if k.startsWith("bucket.") =>
-            bs += (k.stripPrefix("bucket.").toInt -> v)
+            bs += (k.stripPrefix("bucket.").toInt -> v.split(",").toSeq)
+          case Array(k, v) if k.startsWith("dv.") =>
+            dvs += (k.stripPrefix("dv.").toInt -> v.split(",").toSeq)
           case Array(k, v) if k.startsWith("meta.") =>
             me += (statDec(k.stripPrefix("meta.")) -> statDec(v))
           case Array(k, v) if k.startsWith("stats.") =>
@@ -229,7 +262,7 @@ object CdcPipeline {
         }
       }
       Some(Manifest(nb, schema, bs.result(), st.toMap, me.result(),
-        readVersion = version))
+        readVersion = version, dvs = dvs.result(), chain = chain))
     }
   }
 
@@ -266,7 +299,12 @@ object CdcPipeline {
     val sb = new StringBuilder
     sb.append(s"numBuckets=${m.numBuckets}\n")
     sb.append(s"schema=${m.schemaJson}\n")
-    m.buckets.toSeq.sortBy(_._1).foreach { case (b, v) => sb.append(s"bucket.$b=$v\n") }
+    m.buckets.toSeq.sortBy(_._1).foreach { case (b, segs) =>
+      sb.append(s"bucket.$b=${segs.mkString(",")}\n")
+    }
+    m.dvs.toSeq.sortBy(_._1).foreach { case (b, refs) =>
+      sb.append(s"dv.$b=${refs.mkString(",")}\n")
+    }
     m.stats.toSeq.sortBy(_._1).foreach { case (b, cols) =>
       cols.toSeq.sortBy(_._1).foreach { case (c, (lo, hi)) =>
         sb.append(s"stats.$b.${statEnc(c)}=${statEnc(lo)} ${statEnc(hi)}\n")
@@ -495,21 +533,35 @@ object CdcPipeline {
     * this; [[commit]] builds the manifest.
     *
     *  - `rewritten`: buckets whose files the op replaced or emptied.
-    *    They lose their stats, bloom/NDV sidecars and DV entries (the
-    *    rewrite read them DV-applied, so the entries are folded).
-    *    Buckets the op wrote into `v<next>` point there; every other
-    *    bucket of `from` carries by reference.
-    *  - `stats`: fresh stats of the rewritten buckets.
+    *    They lose their stats, bloom/NDV sidecars and deletion vector
+    *    (the rewrite read them DV-applied, so the vector is folded).
+    *    Buckets the op wrote into `v<next>` point there alone; every
+    *    other bucket of `from` carries by reference.
+    *  - `appended`: buckets whose rows the op wrote into `v<next>` as
+    *    one more segment (merge-on-read): they keep their carried
+    *    segments, gain `v<next>`, and lose their bloom/NDV sidecars,
+    *    which do not cover the new rows.
+    *  - `segments` / `dvs`: explicit segment and vector-file lists that
+    *    override the above (a branch publish re-points a bucket at the
+    *    upstream's own files plus the ones it copied into `v<next>`).
+    *  - `stats`: fresh stats of the rewritten buckets, widened stats of
+    *    the appended ones.
     *  - `deletedFrom`: buckets that lost rows to a deletion vector
     *    without a rewrite. Superset-safe indexes (stats, bloom) stay;
-    *    NDV sketches, which would overcount, drop.
+    *    NDV sketches, which would overcount, drop. A vector file the op
+    *    wrote to `v<next>/_dv/<b>.parquet` joins bucket `b`'s carried
+    *    vector files when `b` is here, and is its whole vector
+    *    otherwise; every other kept bucket keeps its vector files.
     *  - `set` / `unset`: op-specific meta edits, applied last. An op
-    *    that sets `dv` or an index key owns what lies under it, and
-    *    commit carries nothing there.
+    *    that sets an index key owns what lies under it, and commit
+    *    carries nothing there.
     *  - `dropCols`: columns whose stats, default and indexes go.
     */
   private final case class Edit(
       rewritten: Set[Int] = Set.empty,
+      appended: Set[Int] = Set.empty,
+      segments: Map[Int, Seq[String]] = Map.empty,
+      dvs: Map[Int, Seq[String]] = Map.empty,
       stats: Map[Int, Map[String, (String, String)]] = Map.empty,
       deletedFrom: Set[Int] = Set.empty,
       set: Map[String, String] = Map.empty,
@@ -543,15 +595,15 @@ object CdcPipeline {
     *     sidecars are pruned to the carried buckets, but an index's
     *     meta key survives with zero sidecars: it declares the index,
     *     which readers treat as all-must-read and [[maintain]]'s rebuild
-    *     trigger needs to see (r8 verdict #2). The DV is folded for
-    *     rewritten buckets and copied by a metadata-only commit. The
-    *     op's [[Edit]] applies on top.
+    *     trigger needs to see (r8 verdict #2). Segment lists and
+    *     per-bucket deletion vectors carry by reference, like the
+    *     buckets; a rewritten bucket's vector is dropped. The op's
+    *     [[Edit]] applies on top.
     *  5. Write the chain-hashed manifest, then swap the pointer, or
     *     leave the commit staged with its claim held when `swapNow`
     *     is false (Txn).
     *
-    * Only the DV fold of a rewriting commit over a DV'd store runs a
-    * Spark job; everything else is driver metadata I/O.
+    * The commit itself runs no Spark job: it is driver metadata I/O.
     */
   private def commit(targetDir: String, base: Long, from: Option[Manifest], op: String,
       fromDir: Option[String] = None, swapNow: Boolean = true, batchId: Long = -1L)
@@ -577,13 +629,21 @@ object CdcPipeline {
       val src = from.getOrElse(Manifest(0, "", Map.empty))
       val srcDir = fromDir.getOrElse(targetDir)
       val kept = src.buckets.keySet -- e.rewritten
-      def carriedRef(ref: String): String = {
+      val carriedRef = (ref: String) => {
         val abs = versionRoot(srcDir, ref)
         localRef(targetDir, abs).getOrElse(abs)
       }
-      val buckets = src.buckets.collect { case (b, r) if kept(b) => b -> carriedRef(r) } ++
-        listedBuckets(dir).map(_._1 -> s"v$next")
-      val stats = (src.stats.filter(kv => kept(kv._1)) ++ e.stats)
+      val carried = src.buckets.collect { case (b, segs) if kept(b) => b -> segs.map(carriedRef) }
+      val written = listedBuckets(dir).map(_._1).toSet
+      val grown = written intersect e.appended
+      val buckets = carried ++ written.toSeq.map(b =>
+        b -> ((if (grown(b)) carried.getOrElse(b, Nil) else Nil) :+ s"v$next")) ++ e.segments
+      val carriedDvs = src.dvs.collect { case (b, refs) if kept(b) => b -> refs.map(carriedRef) }
+      // a vector file written for a bucket that lost rows without a
+      // rewrite joins the bucket's carried files; any other replaces them
+      val dvs = carriedDvs ++ writtenDvs(dir).map(b =>
+        b -> ((if (e.deletedFrom(b)) carriedDvs.getOrElse(b, Nil) else Nil) :+ s"v$next")) ++ e.dvs
+      val stats = (src.stats.filter(kv => kept(kv._1) && !grown(kv._1)) ++ e.stats)
         .map { case (b, cs) => b -> (cs -- e.dropCols) }.filter(_._2.nonEmpty)
       val dropKeys = e.unset ++ e.dropCols.flatMap(c =>
         Seq(DefaultPrefix + statEnc(c), Bloom.prefix + c, Ndv.prefix + c))
@@ -596,32 +656,15 @@ object CdcPipeline {
         (key, ref) <- src.meta.toSeq.sorted
         if key.startsWith(idx.prefix) && !e.set.contains(key) && !dropKeys(key)
       } yield {
-        val keep = if (idx == Ndv) kept -- e.deletedFrom else kept
+        val keep = if (idx == Ndv) kept -- grown -- e.deletedFrom else kept -- grown
         idx.carry(srcDir, ref, key.stripPrefix(idx.prefix), keep, targetDir, next)
         key -> s"v$next"
       }
-      // a commit's DV always lives in its own version dir (so vacuum
-      // can never orphan it): a metadata-only commit copies it (it is
-      // small); a rewrite keeps only the carried buckets' entries
-      val dv = src.meta.get("dv").filterNot(_ => e.set.contains("dv")).flatMap { ref =>
-        val dst = s"$dir/$DvDir"
-        if (e.rewritten.isEmpty) {
-          StoreFs.copyDir(dvPath(srcDir, ref), dst)
-          Some("dv" -> s"v$next")
-        } else if (kept.isEmpty) None
-        else {
-          val keep = readDv(SparkSession.active, srcDir, src, Some(kept)).get.localCheckpoint()
-          if (keep.isEmpty) None
-          else {
-            keep.coalesce(1).write.mode(SaveMode.Overwrite).parquet(dst)
-            Some("dv" -> s"v$next")
-          }
-        }
-      }
       writeManifest(targetDir, next, Manifest(e.numBuckets.getOrElse(src.numBuckets),
         e.schemaJson.getOrElse(src.schemaJson), buckets, stats,
-        (declared ++ indexes ++ dv) -- dropKeys ++ e.set +
-          ("op" -> op) + ("commit_us" -> (System.currentTimeMillis() * 1000L).toString)))
+        (declared ++ indexes) -- dropKeys ++ e.set +
+          ("op" -> op) + ("commit_us" -> (System.currentTimeMillis() * 1000L).toString),
+        dvs = dvs))
     } catch {
       case t: Throwable =>
         releaseClaim(targetDir, next)
@@ -799,20 +842,18 @@ object CdcPipeline {
     * (repartitioned on the bucket id so each bucket's rows co-locate
     * into a task before the partitioned write).
     */
-  // r15 NEGATIVE RESULT, reverted: a size-gated coalesce(1) fast path
-  // for sub-16MB deltas (skip the bucket exchange + per-bucket write
-  // tasks) measured only a marginal win (~0.2-0.5 s/gate, at the box's
-  // noise floor) and made TxnSpec's N-concurrent-writers serialization
-  // test fail 1-in-3 ISOLATED runs (a lost update: final count 700 vs
-  // 600) where the pre-change tree passes 4/4 — the write-path change
-  // interacts with the claim/stale-base race in a way a bench win this
-  // small does not justify chasing. The shuffle path below is the
-  // r13-hardened behavior.
+  // `oneTask` writes every bucket from one task with no exchange: only
+  // for rows known to be delta-sized (a merge-on-read segment of a
+  // change set the driver already holds positions for). A size-gated
+  // coalesce(1) for whole-bucket rewrites was tried in r15 and reverted
+  // (marginal win; the N-concurrent-writers spec then lost an update
+  // 1 run in 3, before one commit path closed that race).
   private[graft] def writeBuckets(df: DataFrame, pkCols: Seq[String], numBuckets: Int,
-      dir: String): Unit =
-    df.withColumn(BucketCol, bucketExpr(pkCols, numBuckets))
-      .repartition(col(BucketCol))
+      dir: String, oneTask: Boolean = false): Unit = {
+    val keyed = df.withColumn(BucketCol, bucketExpr(pkCols, numBuckets))
+    (if (oneTask) keyed.coalesce(1) else keyed.repartition(col(BucketCol)))
       .write.partitionBy(BucketCol).mode(SaveMode.Overwrite).parquet(dir)
+  }
 
   // ── Store layout: the one way from a store to its files ─────────
   // A manifest names each bucket's files by a version ref: "v3" is a
@@ -860,13 +901,76 @@ object CdcPipeline {
   private def versionDirs(storeDir: String): Seq[Long] =
     StoreFs.listDirNames(storeDir).filter(_.matches("v\\d+")).map(_.stripPrefix("v").toLong).sorted
 
-  /** Every bucket of `m`, a manifest of the store at `storeDir`, as
-    * (bucket id, ref, bucket dir) in id order.
+  /** Every segment of every bucket of `m`, a manifest of the store at
+    * `storeDir`, as (bucket id, ref, bucket dir), in id order and each
+    * bucket's segments oldest first.
     */
   private def manifestBuckets(storeDir: String, m: Manifest): Seq[(Int, String, String)] =
-    m.buckets.toSeq.sortBy(_._1).map { case (b, ref) =>
-      (b, ref, bucketDir(versionRoot(storeDir, ref), b))
+    m.buckets.toSeq.sortBy(_._1).flatMap { case (b, segs) =>
+      segs.map(ref => (b, ref, bucketDir(versionRoot(storeDir, ref), b)))
     }
+
+  /** The segment directories of bucket `b` of `m`, oldest first (none
+    * for an empty bucket).
+    */
+  private[graft] def segmentDirs(storeDir: String, m: Manifest, b: Int): Seq[String] =
+    m.buckets.getOrElse(b, Nil).map(ref => bucketDir(versionRoot(storeDir, ref), b))
+
+  /** Every version ref `m` names: each bucket's segments and each
+    * bucket's deletion vector — what keeps a version dir live.
+    */
+  private def manifestRefs(m: Manifest): Set[String] =
+    m.buckets.values.flatten.toSet ++ m.dvs.values.flatten
+
+  /** The buckets of `m` that hold a segment written by the version
+    * `ref` names (for a version's own ref: the buckets it wrote).
+    */
+  private[graft] def bucketsWrittenAt(m: Manifest, ref: String): Set[Int] =
+    m.buckets.collect { case (b, segs) if segs.contains(ref) => b }.toSet
+
+  /** Bucket `b`'s deletion-vector file in the version dir `ref` names. */
+  private def dvFile(storeDir: String, ref: String, b: Int): String =
+    s"${versionRoot(storeDir, ref)}/$DvDir/$b.parquet"
+
+  /** Every deletion vector of `m`, a manifest of the store at
+    * `storeDir`, as (bucket id, ref, file) in id order.
+    */
+  private def dvFiles(storeDir: String, m: Manifest): Seq[(Int, String, String)] =
+    m.dvs.toSeq.sortBy(_._1).flatMap { case (b, refs) =>
+      refs.map(ref => (b, ref, dvFile(storeDir, ref, b)))
+    }
+
+  /** The buckets whose deletion vector a write left under the version
+    * dir `root`.
+    */
+  private def writtenDvs(root: String): Seq[Int] =
+    StoreFs.listFilePaths(s"$root/$DvDir", ".parquet")
+      .map(p => p.substring(p.lastIndexOf('/') + 1).stripSuffix(".parquet"))
+      .filter(_.matches("\\d+")).map(_.toInt).sorted
+
+  /** Deleted row positions of `buckets` in `m`: data-file key → sorted
+    * row indexes, read on the driver from each bucket's vector (no
+    * Spark job). Empty when none of them has a vector.
+    */
+  private def dvPositions(storeDir: String, m: Manifest,
+      buckets: Set[Int]): Map[String, Array[Long]] =
+    buckets.toSeq.sorted.flatMap(b => m.dvs.getOrElse(b, Nil).flatMap(ref =>
+      StoreFs.readPositions(dvFile(storeDir, ref, b))))
+      .groupMap(_._1)(_._2).map { case (f, ps) => f -> ps.toArray.sorted }
+
+  /** Write bucket `b`'s vector (`positions`: file key → row indexes)
+    * into the version dir `root`, on the driver.
+    */
+  private def writeDv(root: String, b: Int, positions: Map[String, Array[Long]]): Unit =
+    StoreFs.writePositions(s"$root/$DvDir/$b.parquet",
+      positions.toSeq.sortBy(_._1).flatMap { case (f, ps) => ps.sorted.map(f -> _) })
+
+  /** `a` ∪ `b` as position maps. */
+  private def unionPositions(a: Map[String, Array[Long]],
+      b: Map[String, Array[Long]]): Map[String, Array[Long]] =
+    (a.keySet ++ b.keySet).map(f =>
+      f -> (a.getOrElse(f, Array.empty[Long]) ++ b.getOrElse(f, Array.empty[Long])).distinct.sorted
+    ).toMap
 
   /** Read the named buckets through the manifest (all buckets =
     * the full snapshot). The explicit schema keeps carried-over
@@ -878,25 +982,55 @@ object CdcPipeline {
     readBucketsWithPos(spark, targetDir, m, buckets).drop(DvFileCol, DvPosCol)
 
   /** [[readBuckets]] plus the file-position identity of every row
-    * ([[DvFileCol]], [[DvPosCol]] — parquet file name + row index),
-    * with the manifest's deletion vector (if any) already ANTI-JOINED
-    * away: every reader path therefore sees merge-on-read deletes
-    * without knowing they exist. The DV side broadcasts (it is small
-    * by the A53 contract — large delete fractions belong on the
-    * copy-on-write path) and is pruned to the scanned buckets. When
-    * the manifest carries no DV the position columns are unreferenced
-    * after [[readBuckets]]' drop, so Catalyst never materializes
-    * `_metadata` and the plan is byte-identical to the pre-A53 one.
+    * ([[DvFileCol]], [[DvPosCol]] — data-file key + row index). Every
+    * segment of each bucket is scanned, and the buckets' deletion
+    * vectors are applied inside the scan: the driver reads them (no
+    * Spark job) into a per-file position filter that ships with the
+    * tasks, so every reader path sees merge-on-read deletes without
+    * knowing they exist, and a read of a store with vectors starts the
+    * same jobs as a read of one without. When the chosen buckets have
+    * no vector the position columns are unreferenced after
+    * [[readBuckets]]' drop, so Catalyst never materializes `_metadata`.
     */
   private[graft] def readBucketsWithPos(spark: SparkSession, targetDir: String,
       m: Manifest, buckets: Set[Int]): DataFrame = {
-    val chosen = buckets.toSeq.sorted.flatMap(b => m.buckets.get(b).map(b -> _))
+    def scan = scanSegments(spark, targetDir, m, buckets, dvPositions(targetDir, m, buckets))
+    if (m.chain.isEmpty) scan
+    else {
+      val key = (spark, targetDir, m.chain, buckets)
+      scans.synchronized(Option(scans.get(key))).getOrElse {
+        val df = scan
+        scans.synchronized(scans.put(key, df))
+        df
+      }
+    }
+  }
+
+  /** Resolved scans of committed versions, by (session, store, the
+    * manifest's chain hash, buckets): a committed version's segments
+    * and vectors never change, so a repeated read of one (the serving
+    * path's common case) skips the file listing and the vector reads.
+    * Bounded; the least recently used scan goes first.
+    */
+  private val scans = new java.util.LinkedHashMap[(SparkSession, String, String, Set[Int]), DataFrame](
+      64, 0.75f, true) {
+    override def removeEldestEntry(
+        e: java.util.Map.Entry[(SparkSession, String, String, Set[Int]), DataFrame]): Boolean =
+      size > 256
+  }
+
+  /** Every segment of `buckets` in `m`, with the rows at `deleted`
+    * positions (file key → sorted row indexes) filtered out.
+    */
+  private def scanSegments(spark: SparkSession, targetDir: String, m: Manifest,
+      buckets: Set[Int], deleted: Map[String, Array[Long]]): DataFrame = {
+    val chosen = buckets.toSeq.sorted.flatMap(b => m.buckets.getOrElse(b, Nil).map(b -> _))
     if (chosen.isEmpty)
       spark.createDataFrame(spark.sparkContext.emptyRDD[Row], m.schema)
         .withColumn(DvFileCol, lit(null).cast(StringType))
         .withColumn(DvPosCol, lit(null).cast(LongType))
     else {
-      // initial-default fill (A57): group the chosen buckets by WHICH
+      // initial-default fill (A57): group the chosen segments by WHICH
       // declared defaults apply to them (ref version < declaration
       // version ⇒ the file predates the column and its NULL means
       // "absent", not "explicitly null") — one scan per group,
@@ -921,12 +1055,11 @@ object CdcPipeline {
             df.withColumn(c, coalesce(col(c), lit(d).cast(types(c))))
           }
         }.reduce(_ unionByName _)
-      readDv(spark, targetDir, m, Some(buckets)) match {
-        case Some(dv) =>
-          base.join(
-            broadcast(dv.select(col("file").as(DvFileCol), col("pos").as(DvPosCol))),
-            Seq(DvFileCol, DvPosCol), "left_anti")
-        case None => base
+      if (deleted.isEmpty) base
+      else {
+        val live = udf((file: String, pos: Long) =>
+          deleted.get(file).forall(ps => java.util.Arrays.binarySearch(ps, pos) < 0))
+        base.filter(live(col(DvFileCol), col(DvPosCol)))
       }
     }
   }
@@ -947,19 +1080,6 @@ object CdcPipeline {
     val tail = ver.substring(ver.lastIndexOf('/') + 1)
     if (tail.matches("v\\d+")) Some(tail.stripPrefix("v").toLong) else None
   }
-
-  private def dvPath(targetDir: String, ref: String): String =
-    s"${versionRoot(targetDir, ref)}/$DvDir"
-
-  /** The manifest's deletion vector, pruned to `buckets` when given —
-    * None when the version carries none.
-    */
-  private def readDv(spark: SparkSession, targetDir: String, m: Manifest,
-      buckets: Option[Set[Int]]): Option[DataFrame] =
-    m.meta.get("dv").map { ref =>
-      val df = spark.read.schema(dvSchema).parquet(dvPath(targetDir, ref))
-      buckets.fold(df)(bs => df.filter(col("bucket").isin(bs.toSeq: _*)))
-    }
 
   def readSnapshot(spark: SparkSession, targetDir: String): Option[DataFrame] =
     currentManifest(targetDir).map(m =>
@@ -1257,7 +1377,7 @@ object CdcPipeline {
         }
         // Zero-cardinality sentinel (r9 ADVICE): a SCANNED bucket can
         // legitimately produce no sketch — fully DV-deleted (no rows
-        // survive the anti-join) or an all-NULL column (hll_sketch_agg
+        // survive the position filter) or an all-NULL column (hll_sketch_agg
         // → null). Without a file, coverage never reaches full and
         // maintain()'s ndvRebuildPct trigger re-runs the heal on every
         // pass, committing a version each time without converging. An
@@ -1488,34 +1608,17 @@ object CdcPipeline {
       versionDirs(targetDir).filter(v => v <= cur && commitUsOf(targetDir, v).isEmpty)
     }.getOrElse(Nil)
 
-  /** Buckets whose content can differ between two manifests. A bucket
-    * carried by reference points at the SAME immutable files in both
-    * versions, so it cannot have changed — the diff only ever reads
-    * buckets the intervening merges touched.
+  /** Buckets whose content can differ between two manifests: their
+    * segment lists or their deletion-vector refs disagree. A bucket
+    * carried by reference points at the SAME immutable files and the
+    * same vector in both versions, so it cannot have changed — the
+    * diff only ever reads buckets the intervening writes touched, and
+    * finding them is a manifest comparison that starts no job (a
+    * merge-on-read delete changes only a vector ref).
     */
   private[graft] def changedBuckets(from: Manifest, to: Manifest): Set[Int] =
-    (from.buckets.keySet ++ to.buckets.keySet)
-      .filter(b => from.buckets.get(b) != to.buckets.get(b))
-
-  /** Buckets whose VISIBLE content can differ between two manifests
-    * even though their bucket references are identical: a
-    * merge-on-read delete (A53) changes no files, only the deletion
-    * vector, so the diff must also read every bucket whose DV entries
-    * differ between the two versions. One tiny job over the two
-    * (small-by-contract) vectors; empty when the refs match (the
-    * common no-DV case short-circuits without any I/O).
-    */
-  private def dvChangedBuckets(spark: SparkSession, targetDir: String,
-      from: Manifest, to: Manifest): Set[Int] =
-    if (from.meta.get("dv") == to.meta.get("dv")) Set.empty
-    else {
-      def dvOf(m: Manifest): DataFrame =
-        readDv(spark, targetDir, m, None).getOrElse(
-          spark.createDataFrame(spark.sparkContext.emptyRDD[Row], dvSchema))
-      val a = dvOf(from)
-      val b = dvOf(to)
-      bucketSet(a.exceptAll(b).unionAll(b.exceptAll(a)), col("bucket"))
-    }
+    (from.buckets.keySet ++ to.buckets.keySet ++ from.dvs.keySet ++ to.dvs.keySet)
+      .filter(b => from.buckets.get(b) != to.buckets.get(b) || from.dvs.get(b) != to.dvs.get(b))
 
   /** Change feed between two committed versions (the CDF/
     * `table_changes` analogue of the versioned store): one row per PK
@@ -1534,7 +1637,7 @@ object CdcPipeline {
       toVersion: Long, pkCols: Seq[String]): Option[DataFrame] =
     (committedManifest(targetDir, fromVersion), committedManifest(targetDir, toVersion)) match {
       case (Some(mf), Some(mt)) =>
-        val touched = changedBuckets(mf, mt) ++ dvChangedBuckets(spark, targetDir, mf, mt)
+        val touched = changedBuckets(mf, mt)
         val before = readBuckets(spark, targetDir, mf, touched)
         val after = readBuckets(spark, targetDir, mt, touched)
         val cols = mt.schema.fieldNames.toSeq
@@ -1630,10 +1733,62 @@ object CdcPipeline {
     }
   }
 
-  /** The one keyed delta write: read the `touched` buckets of `m` (the
-    * manifest the write derives from) once, hand them to `f`, write
-    * `f`'s rows as those buckets of the next version, carry every other
-    * bucket by reference, and commit. Publish I/O ∝ delta, not target.
+  /** What a keyed write ([[rewriteBuckets]]) changes in its touched
+    * buckets.
+    */
+  private[graft] sealed trait KeyedDelta
+  private[graft] object KeyedDelta {
+    /** `rows` replace the stored rows of their PKs, and the stored rows
+      * of the PKs in `deleted` (PK columns only) go.
+      */
+    final case class Upserts(rows: DataFrame, deleted: Option[DataFrame] = None)
+      extends KeyedDelta
+    /** The stored rows of the PKs in `keys` (PK columns only) go, and
+      * `rows`, whose PKs are all among `keys`, are written: an upsert
+      * that needs no replaced-row count, so `rows` are not read to find
+      * the positions.
+      */
+    final case class Replace(rows: DataFrame, keys: DataFrame) extends KeyedDelta
+    /** `rows` carry only PKs the store does not hold (the caller has
+      * checked), so no stored row goes.
+      */
+    final case class Inserts(rows: DataFrame) extends KeyedDelta
+    /** `rows` are the touched buckets' whole new content: each touched
+      * bucket is rewritten as one segment (copy-on-write).
+      */
+    final case class Content(rows: DataFrame) extends KeyedDelta
+  }
+
+  /** A committed keyed write: its version, and how many stored rows
+    * the new rows of an [[KeyedDelta.Upserts]] replaced (a merge's
+    * records_updated).
+    */
+  private[graft] final case class KeyedWrite(version: Long, replaced: Long)
+
+  private val UpCol = "__graft_up"
+
+  /** The one keyed delta write, merge-on-read. `f` gets the `touched`
+    * buckets of `m` (the manifest the write derives from, DV-applied)
+    * and returns the keyed delta. For [[KeyedDelta.Upserts]] one pass
+    * over the touched buckets (`store.merge: matched keys`) collects
+    * the positions of the stored rows whose PKs the delta names, and
+    * how many of them new rows replace. The delta's rows are then
+    * written as one new segment of each bucket they land in
+    * (`store.rewriteBuckets: bucket write`), and each bucket that lost
+    * rows gets a new deletion vector — its old one plus the positions,
+    * written by the driver. Every other bucket carries by reference, so
+    * write I/O ∝ the delta, not the buckets it touches. A bucket's
+    * stats are its old stats widened by the new segment's footer stats.
+    *
+    * Fold: a touched bucket is instead rewritten as one segment (its
+    * stored rows minus the replaced ones, plus its new rows; the vector
+    * goes) when it already holds [[MaxSegments]] segments or its vector
+    * would pass [[MaxDvPct]] percent of its footer rows; every touched
+    * bucket is when `deltaRows` (the change set's size, when the caller
+    * knows it) passes `SnapshotMerge.LargeDeltaRows`, where the
+    * positions would not fit the driver, or when `f` returns
+    * [[KeyedDelta.Content]].
+    *
     * `f` runs before the version claim, so its eager work (a count, a
     * check, a side write) precedes the commit. The commit refuses a
     * moved pointer ([[ConcurrentWriteException]]; re-derive, e.g. under
@@ -1643,15 +1798,111 @@ object CdcPipeline {
     */
   private[graft] def rewriteBuckets(spark: SparkSession, targetDir: String,
       pkCols: Seq[String], m: Manifest, touched: Set[Int], op: String = "merge",
-      batchId: Long = -1L, statsCols: Seq[String] = Nil, swapNow: Boolean = true)
-      (f: DataFrame => DataFrame): Long = {
-    val rows = f(readBuckets(spark, targetDir, m, touched))
+      batchId: Long = -1L, statsCols: Seq[String] = Nil, swapNow: Boolean = true,
+      deltaRows: Option[Long] = None)
+      (f: DataFrame => KeyedDelta): KeyedWrite = {
+    val oldDv = touched.toSeq.map(b => b -> dvPositions(targetDir, m, Set(b))).toMap
+    val allDv = oldDv.values.foldLeft(Map.empty[String, Array[Long]])(_ ++ _)
+    val delta = f(scanSegments(spark, targetDir, m, touched, allDv).drop(DvFileCol, DvPosCol))
     validatePk(targetDir, pkCols)
-    commit(targetDir, m.readVersion, Some(m), op, swapNow = swapNow,
+    val large = deltaRows.exists(_ > SnapshotMerge.LargeDeltaRows)
+    def keysOf(df: DataFrame, up: Boolean): DataFrame =
+      df.select(pkCols.map(col) :+ lit(up).as(UpCol): _*)
+    def dvRows(b: Int): Long = oldDv(b).values.map(_.length.toLong).sum
+    // the fold policy, for bucket `b` losing `lost` more rows
+    def mustFold(b: Int, lost: Long): Boolean =
+      segmentDirs(targetDir, m, b).size >= MaxSegments ||
+        dvFiles(targetDir, m).count(_._1 == b) >= MaxSegments ||
+        (dvRows(b) + lost > 0 &&
+          (dvRows(b) + lost) * 100 > MaxDvPct.toLong * segmentRows(targetDir, m, b))
+    // the stored rows of `buckets` minus `deleted`, plus `rows`, in
+    // `rows`' columns: the content of buckets rewritten as one segment
+    def folded(rows: DataFrame, buckets: Set[Int], deleted: Map[String, Array[Long]]) =
+      if (buckets.isEmpty) rows
+      else rows.unionByName(scanSegments(spark, targetDir, m, buckets, deleted)
+        .drop(DvFileCol, DvPosCol), allowMissingColumns = true).select(rows.columns.map(col): _*)
+    type Lost = Map[Int, Map[String, Array[Long]]]
+    // the pass that finds the positions of the stored rows whose PKs
+    // `keys` names, by bucket, and how many of them a new row replaces.
+    // It is analyzed here, on the calling thread, so that running it on
+    // another thread resolves no function: a caller inside SQL analysis
+    // (a table function) holds the session catalog's lock.
+    def positions(keys: DataFrame): () => (Lost, Long) = {
+      val hinted = if (deltaRows.isDefined) broadcast(keys) else keys.hint("shuffle_hash")
+      val pass = scanSegments(spark, targetDir, m, touched, allDv)
+        .select(pkCols.map(col) ++ Seq(fileBucket.as("_b"), col(DvFileCol), col(DvPosCol)): _*)
+        .join(hinted, pkCols)
+        .select(col("_b"), col(DvFileCol), col(DvPosCol), col(UpCol))
+      pass.queryExecution.assertAnalyzed()
+      () => {
+        val hits = labeled(spark, "store.merge: matched keys")(pass.collect())
+        (hits.groupBy(_.getInt(0)).map { case (b, rs) =>
+          b -> rs.groupMap(_.getString(1))(_.getLong(2)).map { case (f, ps) => f -> ps.distinct.sorted }
+        }, hits.filter(_.getBoolean(3)).map(r => (r.getString(1), r.getLong(2))).distinct.length.toLong)
+      }
+    }
+    // (content to write, buckets rewritten as one segment, the other
+    // buckets' newly deleted positions and the replaced-row count when
+    // known now, or the pass that finds them beside the write)
+    type Plan = (DataFrame, Set[Int], (Lost, Long), Option[() => (Lost, Long)])
+    // `rows` replace the stored rows of `keys`; `counted`: count the
+    // replaced rows in the large-delta path too
+    def upsert(rows: DataFrame, keys: DataFrame, counted: Boolean): Plan =
+      if (large) {
+        val stored = scanSegments(spark, targetDir, m, touched, allDv).drop(DvFileCol, DvPosCol)
+        val replaced = if (!counted) 0L else labeled(spark, "store.merge: matched keys") {
+          stored.select(pkCols.map(col): _*)
+            .join(rows.select(pkCols.map(col): _*).hint("shuffle_hash"), pkCols, "left_semi")
+            .count()
+        }
+        val kept = stored.join(keys.select(pkCols.map(col): _*).hint("shuffle_hash"),
+          pkCols, "left_anti")
+        (rows.unionByName(kept, allowMissingColumns = true).select(rows.columns.map(col): _*),
+          touched, (Map.empty, replaced), None)
+      } else if (deltaRows.exists(n => touched.forall(b => !mustFold(b, n)))) {
+        // no bucket folds even if every change lands in it: the rows
+        // are the whole write, and the positions pass runs beside it
+        (rows, Set.empty, (Map.empty, 0L), Some(positions(keys)))
+      } else {
+        val (lost, replaced) = positions(keys)()
+        val fold = touched.filter(b => mustFold(b, lost.get(b).fold(0L)(_.values.map(_.length.toLong).sum)))
+        val dropped = fold.foldLeft(allDv)((acc, b) => unionPositions(acc, lost.getOrElse(b, Map.empty)))
+        (folded(rows, fold, dropped), fold, (lost -- fold, replaced), None)
+      }
+    val (content, fold, known, findBeside): Plan = delta match {
+      case KeyedDelta.Content(rows) => (rows, touched, (Map.empty, 0L), None)
+      case KeyedDelta.Inserts(rows0) =>
+        val rows = alignTypes(rows0, m.schema)
+        val fold = touched.filter(mustFold(_, 0L))
+        (folded(rows, fold, allDv), fold, (Map.empty, 0L), None)
+      case KeyedDelta.Upserts(rows0, deleted) =>
+        val rows = alignTypes(rows0, m.schema)
+        upsert(rows, deleted.fold(keysOf(rows, up = true))(d =>
+          keysOf(rows, up = true).unionByName(keysOf(d, up = false))), counted = true)
+      case KeyedDelta.Replace(rows, keys) =>
+        upsert(alignTypes(rows, m.schema), keysOf(keys, up = false), counted = false)
+    }
+    var (lost, replaced) = known
+    val version = commit(targetDir, m.readVersion, Some(m), op, swapNow = swapNow,
         batchId = batchId) { next =>
       val dir = s"$targetDir/v$next"
-      labeled(spark, "store.rewriteBuckets: bucket write") {
-        writeBuckets(rows, pkCols, m.numBuckets, dir)
+      def write(): Unit = labeled(spark, "store.rewriteBuckets: bucket write") {
+        writeBuckets(content, pkCols, m.numBuckets, dir,
+          oneTask = fold.isEmpty && deltaRows.isDefined && !large)
+      }
+      def writeDvs(): Unit = lost.foreach { case (b, ps) => writeDv(dir, b, ps) }
+      findBeside match {
+        case Some(find) =>
+          // the vectors are written beside the segment write too
+          beside(spark) {
+            val (l, r) = find()
+            lost = l
+            replaced = r
+            writeDvs()
+          }(write())
+        case None =>
+          write()
+          writeDvs()
       }
       val stray = listedBuckets(dir).map(_._1).filterNot(touched)
       if (stray.nonEmpty) throw new IllegalStateException(
@@ -1659,12 +1910,64 @@ object CdcPipeline {
           s"touched set ${touched.toSeq.sorted.mkString("{", ", ", "}")}: their stored " +
           "rows were never read, so the commit would drop them")
       recordPk(targetDir, pkCols)
-      Edit(rewritten = touched,
-        stats = labeled(spark, "store.rewriteBuckets: bucket stats") {
-          bucketStats(spark, dir, statsCols)
-        }, schemaJson = Some(rows.schema.json))
+      val appended = touched -- fold
+      val fresh = labeled(spark, "store.rewriteBuckets: bucket stats") {
+        bucketStats(spark, dir, statsCols)
+      }
+      Edit(rewritten = fold, appended = appended, deletedFrom = lost.keySet,
+        stats = fresh.map { case (b, st) =>
+          b -> (if (appended(b) && m.buckets.contains(b))
+            widenStats(m.schema, m.stats.getOrElse(b, Map.empty), st) else st)
+        }.filter(_._2.nonEmpty),
+        schemaJson = Some(content.schema.json))
     }
+    KeyedWrite(version, replaced)
   }
+
+  /** Footer rows of bucket `b`'s segments in `m`: the fold check's
+    * denominator. A committed segment dir is written once, so its count
+    * is read once per process and kept (bounded); a count gone stale
+    * (the dir deleted and written again) could only move a fold.
+    */
+  private def segmentRows(storeDir: String, m: Manifest, b: Int): Long =
+    segmentDirs(storeDir, m, b).map { d =>
+      Option(segmentRowCounts.get(d)).map(_.longValue).getOrElse {
+        val n = StoreFs.footerRowsBytes(d).fold(0L)(_._1)
+        if (segmentRowCounts.size < 100000) segmentRowCounts.put(d, n)
+        n
+      }
+    }.sum
+
+  private val segmentRowCounts = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
+
+  /** `rows` with each column the stored `schema` also has cast to its
+    * stored type, so a new segment reads like the segments beside it.
+    */
+  private def alignTypes(rows: DataFrame, schema: StructType): DataFrame = {
+    val stored = schema.fields.map(f => f.name -> f.dataType).toMap
+    if (rows.schema.fields.forall(f => stored.get(f.name).forall(_ == f.dataType))) rows
+    else rows.select(rows.schema.fields.toSeq.map(f =>
+      stored.get(f.name).filter(_ != f.dataType)
+        .fold(col(f.name))(t => col(f.name).cast(t).as(f.name))): _*)
+  }
+
+  /** A bucket's stats after a segment with stats `added` joins rows
+    * whose stats were `old`: per column the wider range, kept only
+    * where both sides know it (a side without an entry is unknown or
+    * all-NULL, and widening against it could lie).
+    */
+  private def widenStats(schema: StructType, old: Map[String, (String, String)],
+      added: Map[String, (String, String)]): Map[String, (String, String)] =
+    old.keySet.intersect(added.keySet).flatMap { c =>
+      schema.fields.find(_.name == c).map(_.dataType).map { dt =>
+        val (ol, oh) = old(c)
+        val (al, ah) = added(c)
+        // statOverlaps compares one stat string against a value; a
+        // range [x, x] overlaps (-inf, v] iff x <= v
+        def le(a: String, b: String): Boolean = statOverlaps(dt, (a, a), None, Some(b))
+        c -> ((if (le(ol, al)) ol else al, if (le(ah, oh)) oh else ah))
+      }
+    }.toMap
 
   /** Columns the manifest's stats index tracks — what a rewrite of
     * some buckets recomputes for them.
@@ -1700,7 +2003,9 @@ object CdcPipeline {
   }
 
   /** Predicate DELETE (A41) — the Delta `DELETE FROM … WHERE` shape
-    * on the bucketed store: ONE column-pruned scan of the snapshot
+    * on the bucketed store, copy-on-write by contract
+    * ([[deleteWhereMoR]] is the merge-on-read delete): ONE
+    * column-pruned scan of the snapshot
     * finds the buckets that actually contain matching rows (and their
     * match counts — the same find-touched-files pass Delta's DELETE
     * runs), then ONLY those buckets are read full-width, filtered,
@@ -1718,7 +2023,9 @@ object CdcPipeline {
     */
   def deleteWhere(spark: SparkSession, targetDir: String, pkCols: Seq[String],
       predicate: Column): Option[(Long, Long)] =
-    rewriteWhere(spark, targetDir, pkCols, predicate, "delete")(_.filter(!predicate))
+    rewriteWhere(spark, targetDir, pkCols, predicate, "delete") { (_, subset) =>
+      KeyedDelta.Content(subset.filter(!predicate))
+    }
 
   /** (deletion-vector rows, table rows) of the current version, both
     * from parquet FOOTERS — driver metadata I/O, zero Spark jobs
@@ -1730,7 +2037,7 @@ object CdcPipeline {
   def dvStats(targetDir: String): Option[(Long, Long)] =
     for {
       m <- currentManifest(targetDir)
-      if m.meta.contains("dv")
+      if m.dvs.nonEmpty
       dvRows <- footerDvRows(targetDir, m)
       (tableRows, _) <- footerBucketTotals(targetDir, m)
     } yield (dvRows, tableRows)
@@ -1743,12 +2050,13 @@ object CdcPipeline {
       for ((ar, ab) <- acc; (r, by) <- StoreFs.footerRowsBytes(dir)) yield (ar + r, ab + by)
     }
 
-  /** Rows of `m`'s deletion vector from its footers: 0 without one,
-    * None when unreadable.
+  /** Rows of `m`'s deletion vectors from their footers: 0 without
+    * any, None when one is unreadable.
     */
   private def footerDvRows(storeDir: String, m: Manifest): Option[Long] =
-    m.meta.get("dv").fold(Option(0L))(ref =>
-      StoreFs.footerRowsBytes(dvPath(storeDir, ref)).map(_._1))
+    dvFiles(storeDir, m).foldLeft(Option(0L)) { case (acc, (_, _, file)) =>
+      for (a <- acc; (r, _) <- StoreFs.footerRowsBytes(file)) yield a + r
+    }
 
   /** Metadata-only `SELECT count(*)` (A61 — the count shortcut every
     * lakehouse serves from its log instead of a scan): rows of the
@@ -1777,21 +2085,21 @@ object CdcPipeline {
       dvRows <- footerDvRows(targetDir, m)
     } yield (rows - dvRows, bytes)
 
-  /** Fold the deletion vector into the data files (A56): OPTIMIZE
-    * exactly the buckets the vector touches — every entry's bucket is
-    * rewritten from a DV-applied read, so the commit's fold retires the whole
-    * vector and the read-side anti-join cost disappears. Rewrite I/O
-    * ∝ affected buckets, clustering by `sortCols` (default: the PK).
-    * Returns the folding version; None when there is no vector.
+  /** Fold the deletion vectors into the data files (A56): OPTIMIZE
+    * exactly the buckets that have one (a manifest read, no job) —
+    * each is rewritten as one segment from a DV-applied read, so the
+    * commit retires every vector and the read-side position filter
+    * disappears. Rewrite I/O ∝ affected buckets, clustering by
+    * `sortCols` (default: the PK). Returns the folding version; None
+    * when there is no vector.
     */
   def foldDv(spark: SparkSession, targetDir: String, pkCols: Seq[String],
       sortCols: Seq[String] = Nil): Option[Long] =
     for {
       m <- currentManifest(targetDir)
-      dv <- readDv(spark, targetDir, m, None)
-      touched = bucketSet(dv, col("bucket"))
+      if m.dvs.nonEmpty
       next <- optimize(spark, targetDir, pkCols,
-        if (sortCols.nonEmpty) sortCols else pkCols, buckets = Some(touched))
+        if (sortCols.nonEmpty) sortCols else pkCols, buckets = Some(m.dvs.keySet))
     } yield next
 
   /** MERGE-ON-READ predicate DELETE (A53) — the Delta
@@ -1806,24 +2114,25 @@ object CdcPipeline {
     * over every bucket, trickle retention) where copy-on-write
     * rewrites the whole table to drop 0.1% of it.
     *
-    * Every reader path applies the vector transparently
+    * Every reader path applies the vectors transparently
     * ([[readBucketsWithPos]]): snapshots, key/range reads, time
     * travel, diffs, merges and clones all see the rows as gone.
     * Successive MoR deletes accumulate — each commit rewrites the
-    * (small) accumulated vector into its own version dir, so a
-    * version's DV is always self-contained and vacuum can never
-    * orphan it. The read-side anti-join cost persists until a
-    * rewriting op folds the vector into the files: any merge or
-    * [[optimize]] folds rewritten buckets' entries, full rewrites
-    * ([[rebucket]], [[renameColumn]], `optimize` over all buckets)
-    * clear it entirely. Manifest bucket STATS are untouched — a DV
-    * only removes rows, so recorded min/max stay conservative
-    * supersets and pruning degrades, never lies.
+    * vectors of the buckets it hits (old entries plus new) into its
+    * own version dir and carries every other bucket's by reference;
+    * the liveness walk keeps every referenced vector. The read-side
+    * filter persists until a rewriting op folds a bucket's vector into
+    * its files: [[optimize]] and copy-on-write rewrites fold rewritten
+    * buckets' vectors, full rewrites ([[rebucket]], [[renameColumn]],
+    * `optimize` over all buckets) clear them all. Manifest bucket
+    * STATS are untouched — a DV only removes rows, so recorded min/max
+    * stay conservative supersets and pruning degrades, never lies.
     *
     * Returns (new version, deleted-row count) — (current version, 0)
     * and no new version for a no-match predicate. None when the
-    * target doesn't exist. The accumulated vector coalesces to one
-    * file per commit: by contract it stays far smaller than the data
+    * target doesn't exist. The positions are collected to the driver,
+    * which writes each hit bucket's vector: by contract they stay far
+    * smaller than the data
     * (a delete fraction worth more than a few percent of the table
     * should take the copy-on-write path and pay the rewrite once).
     * `autoFoldPct` enforces that contract automatically (A56): when
@@ -1864,30 +2173,29 @@ object CdcPipeline {
       autoFoldPct: Option[Int]): Option[(Long, Long)] =
     currentManifest(targetDir).map { m =>
       val snap = readBucketsWithPos(spark, targetDir, m, m.buckets.keySet)
-      // localCheckpoint: the hit set is both counted and written —
-      // one scan, and the checkpoint pins the positions against
-      // recomputation racing a concurrent compaction
+      // one collect: the positions are delta-sized by contract, and the
+      // driver holds them to write the hit buckets' vectors
       val hits = hitFilter(snap)
-        .select(bucketExpr(pkCols, m.numBuckets).as("bucket"),
-          col(DvFileCol).as("file"), col(DvPosCol).as("pos"))
-        .localCheckpoint()
-      val n = hits.count()
+        .select(fileBucket, col(DvFileCol), col(DvPosCol)).collect()
+      val n = hits.length.toLong
       if (n == 0L) (m.readVersion, 0L)
       else {
-        val all = readDv(spark, targetDir, m, None).fold(hits)(_ unionByName hits)
+        val lost = hits.groupBy(_.getInt(0)).map { case (b, rs) =>
+          b -> rs.groupMap(_.getString(1))(_.getLong(2)).map { case (f, ps) => f -> ps.sorted }
+        }
         commit(targetDir, m.readVersion, Some(m), "delete_mor") { next =>
-          all.coalesce(1).write.mode(SaveMode.Overwrite)
-            .parquet(s"$targetDir/v$next/$DvDir")
+          // only this delete's positions are written, one file per hit
+          // bucket; every earlier vector file carries by reference
+          lost.foreach { case (b, ps) => writeDv(s"$targetDir/v$next", b, ps) }
           // blooms stay valid over a superset — just extra FPs; NDV
           // sketches over a superset become upper bounds, so the sketch
           // of every bucket this delete hits DROPS instead
-          Edit(deletedFrom = bucketSet(hits, col("bucket")),
-            set = Map("dv" -> s"v$next"))
+          Edit(deletedFrom = lost.keySet)
         }
-        // A56 fold policy: once the accumulated vector crosses
+        // A56 fold policy: once the accumulated vectors cross
         // `autoFoldPct` percent of the table (both row counts from
         // footers — free), pay the bucket rewrite NOW and retire the
-        // read-side anti-join. Unreadable footers skip the fold —
+        // read-side filter. Unreadable footers skip the fold —
         // maintenance degrades to explicit foldDv, never guesses.
         autoFoldPct.foreach { pct =>
           dvStats(targetDir).foreach { case (dvRows, tableRows) =>
@@ -1900,13 +2208,13 @@ object CdcPipeline {
     }
 
   /** Predicate UPDATE (A41) — `UPDATE … SET col = expr WHERE pred`:
-    * same affected-bucket discovery and delta-publish as
-    * [[deleteWhere]]; matching rows take the SET expressions (cast to
-    * the column's stored type — assignments must not drift the
-    * schema), non-matching rows in rewritten buckets pass through
-    * bit-identical. SET must not touch PK columns: that's a
-    * delete+insert (the row would change buckets), which MERGE
-    * expresses and in-place rewrite must refuse.
+    * the same affected-bucket discovery as [[deleteWhere]], then a
+    * merge-on-read write: the matching rows, with the SET expressions
+    * applied (cast to the column's stored type — assignments must not
+    * drift the schema), become a new segment of their buckets and
+    * their old images join the buckets' deletion vectors. SET must not
+    * touch PK columns: that's a delete+insert (the row would change
+    * buckets), which MERGE expresses and in-place rewrite must refuse.
     */
   def updateWhere(spark: SparkSession, targetDir: String, pkCols: Seq[String],
       predicate: Column, set: Map[String, Column]): Option[(Long, Long)] = {
@@ -1914,7 +2222,7 @@ object CdcPipeline {
     require(!set.keys.exists(pkCols.contains),
       s"SET must not assign PK columns (${set.keys.filter(pkCols.contains).mkString(",")}): " +
         "a PK change re-routes the row's bucket — express it as delete+insert via MERGE")
-    rewriteWhere(spark, targetDir, pkCols, predicate, "update") { subset =>
+    rewriteWhere(spark, targetDir, pkCols, predicate, "update") { (m, subset) =>
       val types = subset.schema.fields.map(f => f.name -> f.dataType).toMap
       // a SET key that is not a stored column would silently no-op
       // (and a virtual generated column, A72, is COMPUTED — assigning
@@ -1923,19 +2231,24 @@ object CdcPipeline {
       require(unknown.isEmpty,
         s"SET targets non-stored column(s): ${unknown.toSeq.sorted.mkString(",")}" +
           " (generated columns are computed on read — update their inputs)")
-      subset.select(subset.columns.toIndexedSeq.map { c =>
-        set.get(c).map(e => when(predicate, e.cast(types(c))).otherwise(col(c)).as(c))
-          .getOrElse(col(c))
+      val updated = subset.filter(predicate).select(subset.columns.toIndexedSeq.map { c =>
+        set.get(c).map(e => e.cast(types(c)).as(c)).getOrElse(col(c))
       }: _*)
+      // A71: an UPDATE introduces new cell values — enforce the
+      // table's CHECK constraints on the updated rows before
+      // publishing (unmodified rows pass by induction)
+      enforceConstraints(m, updated, targetDir)
+      KeyedDelta.Upserts(updated)
     }
   }
 
-  /** Shared affected-bucket rewrite: find matching buckets + counts
-    * in one scan, apply `rewrite` to exactly those buckets, publish
-    * the rest by reference.
+  /** Shared affected-bucket write: find matching buckets + counts in
+    * one scan, hand exactly those buckets to `delta`, publish the rest
+    * by reference.
     */
   private def rewriteWhere(spark: SparkSession, targetDir: String, pkCols: Seq[String],
-      predicate: Column, op: String)(rewrite: DataFrame => DataFrame): Option[(Long, Long)] =
+      predicate: Column, op: String)
+      (delta: (Manifest, DataFrame) => KeyedDelta): Option[(Long, Long)] =
     currentManifest(targetDir).map { m =>
       val snap = readBuckets(spark, targetDir, m, m.buckets.keySet)
       // one job: matching buckets AND their match counts. Catalyst
@@ -1945,18 +2258,9 @@ object CdcPipeline {
         .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
       if (hits.isEmpty) (m.readVersion, 0L)
       else {
-        val next = rewriteBuckets(spark, targetDir, pkCols, m, hits.keySet, op,
-            statsCols = trackedStats(m)) { subset =>
-          val rewritten = rewrite(subset)
-          // A71: an UPDATE introduces new cell values — enforce the
-          // table's CHECK constraints on the rewritten subset before
-          // publishing (unmodified rows pass by induction; the agg
-          // rides the subset already being rewritten). DELETEs only
-          // remove rows and skip the check.
-          if (op == "update") enforceConstraints(m, rewritten, targetDir)
-          rewritten
-        }
-        (next, hits.values.sum)
+        val w = rewriteBuckets(spark, targetDir, pkCols, m, hits.keySet, op,
+          statsCols = trackedStats(m), deltaRows = Some(hits.values.sum))(delta(m, _))
+        (w.version, hits.values.sum)
       }
     }
 
@@ -2451,7 +2755,7 @@ object CdcPipeline {
     */
   def generateSymlinkManifest(targetDir: String): Option[Seq[String]] =
     currentManifest(targetDir).map { m =>
-      require(!m.meta.contains("dv"),
+      require(m.dvs.isEmpty,
         "cannot export a symlink manifest while a deletion vector is " +
           "outstanding: external readers would resurrect deleted rows — " +
           "fold it first (foldDv / maintain)")
@@ -2615,10 +2919,13 @@ object CdcPipeline {
     *
     * Findings (empty result = healthy):
     *  - `dangling_ref` (error): a readable version's manifest
-    *    references a version dir that no longer exists — reads of
-    *    that version will fail; if it is the CURRENT version the
-    *    table is down. The restore/vacuum pairing prevents this; a
-    *    manual delete or a foreign vacuum does not.
+    *    names a segment (a bucket dir of some version) that no longer
+    *    exists — reads of that version will fail; if it is the CURRENT
+    *    version the table is down. The restore/vacuum pairing prevents
+    *    this; a manual delete or a foreign vacuum does not.
+    *  - `dangling_dv` (error): a readable version's manifest names a
+    *    bucket's deletion vector that no longer exists — its deleted
+    *    rows would resurface.
     *  - `torn_version` (warn): a version dir at-or-below the pointer
     *    with no readable manifest — a publish that died between
     *    writeBuckets and writeManifest; invisible to readers,
@@ -2660,16 +2967,16 @@ object CdcPipeline {
             report("warn", "torn_version", s"v$v",
               "version dir with no readable manifest (died pre-manifest)")
           case Some(m) =>
-            m.buckets.values.toSet[String].foreach { ref =>
-              if (!StoreFs.exists(versionRoot(targetDir, ref)))
+            manifestBuckets(targetDir, m).foreach { case (b, ref, dir) =>
+              if (!StoreFs.exists(dir))
                 report("error", "dangling_ref", s"v$v",
-                  s"manifest references missing dir $ref" +
+                  s"manifest references missing segment $ref of bucket $b" +
                     (if (v == cur) " (CURRENT version — table is unreadable)" else ""))
             }
-            m.meta.get("dv").foreach { ref =>
-              if (!StoreFs.exists(dvPath(targetDir, ref)))
+            dvFiles(targetDir, m).foreach { case (b, ref, file) =>
+              if (!StoreFs.exists(file))
                 report("error", "dangling_dv", s"v$v",
-                  s"manifest advertises deletion vector $ref/$DvDir but it is missing" +
+                  s"manifest advertises bucket $b's deletion vector in $ref but it is missing" +
                     (if (v == cur) " (CURRENT version — deleted rows would resurface)"
                      else ""))
             }
@@ -2736,7 +3043,10 @@ object CdcPipeline {
       pkCols: Seq[String], sampleKeys: Int = 5): Option[DataFrame] = {
     import spark.implicits._
     currentManifest(targetDir).map { m =>
-      val snap = readBucketsWithPos(spark, targetDir, m, m.buckets.keySet)
+      // what is on disk now, not a resolved scan of this version: the
+      // audit looks for files that should not be there
+      val all = m.buckets.keySet
+      val snap = scanSegments(spark, targetDir, m, all, dvPositions(targetDir, m, all))
       val withBucket = snap.withColumn("_read_bucket", fileBucket)
       val mis = withBucket
         .filter(bucketExpr(pkCols, m.numBuckets) =!= col("_read_bucket"))
@@ -2802,9 +3112,10 @@ object CdcPipeline {
     * (bootstrap `publish`, incremental `merge`, `rebucket`,
     * `optimize`/`zorder`, predicate `delete`/`update`, `clone`/
     * `deep-clone`), its wall-clock commit time, and the
-    * rewritten/carried bucket split (the write-amplification record:
-    * a healthy incremental target shows small `rewritten` counts on
-    * every merge). Driver metadata only — reads the version
+    * rewritten/carried bucket split (`rewritten` = buckets the version
+    * wrote a segment to; the write-amplification record: a healthy
+    * incremental target shows small `rewritten` counts on every
+    * merge), and its live rows and bytes from the footers. Driver metadata only — reads the version
     * manifests, zero Spark jobs; versions older than the vacuum
     * window drop out, pre-metadata versions read with NULL op/time.
     * The Delta `DESCRIBE HISTORY` / Iceberg snapshots-table surface.
@@ -2815,12 +3126,16 @@ object CdcPipeline {
       versionDirs(targetDir).filter(_ <= cur).reverse
         .flatMap { v =>
           manifest(targetDir, v).map { m =>
-            val own = m.buckets.values.count(_ == s"v$v")
+            val own = bucketsWrittenAt(m, s"v$v").size
             // snapshot size from parquet FOOTERS (A45, late r8): row/byte
-            // totals over the version's referenced bucket dirs —
-            // driver metadata I/O, zero Spark jobs; unreadable dirs
-            // degrade the version's stats to NULL, never a guess
-            val sized = footerBucketTotals(targetDir, m)
+            // totals over the version's segments, rows net of its
+            // deletion vectors — driver metadata I/O, zero Spark jobs;
+            // unreadable files degrade the version's stats to NULL,
+            // never a guess
+            val sized = for {
+              (rows, bytes) <- footerBucketTotals(targetDir, m)
+              dvRows <- footerDvRows(targetDir, m)
+            } yield (rows - dvRows, bytes)
             (v, m.meta.get("op"), m.meta.get("commit_us").map(_.toLong),
               m.numBuckets, own, m.buckets.size - own, sized.map(_._1), sized.map(_._2))
           }
@@ -3006,8 +3321,9 @@ object CdcPipeline {
           case Some(limit) =>
             (for {
               m <- currentManifest(targetDir).toSeq
-              (b, _, dir) <- manifestBuckets(targetDir, m)
-              if StoreFs.listFilePaths(dir, ".parquet").size > limit
+              b <- m.buckets.keySet.toSeq
+              if segmentDirs(targetDir, m, b)
+                .map(StoreFs.listFilePaths(_, ".parquet").size).sum > limit
             } yield b).toSet
         }
         val optV =
@@ -3073,7 +3389,7 @@ object CdcPipeline {
         val manifestFiles =
           if (!policy.symlinkManifest) None
           else currentManifest(targetDir)
-            .filter(m => !m.meta.contains("dv") && columnDefaults(m).isEmpty)
+            .filter(m => m.dvs.isEmpty && columnDefaults(m).isEmpty)
             .flatMap(_ => generateSymlinkManifest(targetDir).map(_.size))
         MaintenanceReport(folded, frag, optV, bloomRebuilt, expired, vacuumed,
           manifestFiles, ttlDeleted, ndvRebuilt)
@@ -3095,7 +3411,7 @@ object CdcPipeline {
   def describeFiles(spark: SparkSession, targetDir: String): Option[DataFrame] =
     currentManifest(targetDir).map { m =>
       import spark.implicits._
-      require(!m.meta.contains("dv"),
+      require(m.dvs.isEmpty,
         "describeFiles counts footer rows; a deletion vector is " +
           "outstanding and live rows would overcount — fold it first " +
           "(foldDv / maintain)")
@@ -3147,8 +3463,9 @@ object CdcPipeline {
   /** Garbage-collect version directories no longer reachable: a
     * version dir is LIVE iff it is the current version, one of the
     * `keepVersions` most recent (time-travel/reader grace window), or
-    * referenced by the current manifest (a carried bucket keeps its
-    * old version dir alive indefinitely — reference counting is the
+    * named by a kept manifest — as a segment of some bucket or as a
+    * bucket's deletion vector (a carried segment keeps its old
+    * version dir alive indefinitely — reference counting is the
     * manifest itself). The reference's MERGE mutates in place and
     * needs no GC; an immutable-file target does — this is the VACUUM
     * analogue, and without it every delta run leaks the superseded
@@ -3226,9 +3543,9 @@ object CdcPipeline {
 
   /** Shared liveness walk of [[vacuum]]/[[expireSnapshots]]/
     * [[vacuumPreview]]: every version dir at or below the pointer
-    * that is neither in `keptVersions`, nor referenced by a kept
-    * manifest's carried buckets, nor listed by a registered clone
-    * pin. Pure — the reclaimers delete what this returns, the
+    * that is neither in `keptVersions`, nor named by a kept
+    * manifest's segments or deletion vectors, nor listed by a
+    * registered clone pin. Pure — the reclaimers delete what this returns, the
     * dry run only reports it.
     */
   private def reclaimable(targetDir: String, cur: Long,
@@ -3238,7 +3555,7 @@ object CdcPipeline {
     // merely listed — until dropTag
     val live: Set[String] =
       (keptVersions ++ taggedVersions(targetDir)).flatMap(v =>
-        manifest(targetDir, v).fold(Set.empty[String])(_.buckets.values.toSet) + s"v$v").toSet ++
+        manifest(targetDir, v).fold(Set.empty[String])(manifestRefs) + s"v$v").toSet ++
         clonePins(targetDir).map(_._2)
     // never touch versions ABOVE the pointer: v{cur+1} may be an
     // in-flight publish that hasn't swapped the pointer yet
@@ -3303,15 +3620,17 @@ object CdcPipeline {
       require(columnDefaults(m).isEmpty,
         s"cannot clone a store with unmaterialized column defaults " +
           s"(${columnDefaults(m).map(_._1).mkString(",")}): OPTIMIZE first")
-      // the commit carries every bucket as an absolute reference into
-      // the source, and COPIES the source's deletion vector and index
-      // sidecars into the clone's own v0 — they are small, and a
-      // self-contained copy means neither the pin machinery nor the
-      // source's vacuum ever has to know the clone depends on them
+      // the commit carries every segment and every deletion vector as
+      // an absolute reference into the source (a shallow clone pins
+      // them all below), and COPIES the index sidecars into the clone's
+      // own v0; a deep clone copies segments and vectors into v0
       commit(destDir, -1L, Some(m), if (deep) "deep-clone" else "clone",
         fromDir = Some(sourceDir)) { _ =>
-        if (deep) manifestBuckets(sourceDir, m).foreach { case (b, _, dir) =>
-          StoreFs.copyDir(dir, bucketDir(s"$destDir/v0", b))
+        if (deep) {
+          manifestBuckets(sourceDir, m).foreach { case (b, _, dir) =>
+            StoreFs.copyFilesInto(dir, bucketDir(s"$destDir/v0", b))
+          }
+          m.dvs.keySet.foreach(b => writeDv(s"$destDir/v0", b, dvPositions(sourceDir, m, Set(b))))
         } else {
           // every store this clone's references resolve into gets a pin
           // keyed by THIS clone: source-local refs pin at sourceDir,
@@ -3319,7 +3638,7 @@ object CdcPipeline {
           // that owns them — so each clone stands on its own pins and
           // dropClonePin on an intermediate clone can never tear files
           // out from under a grand-clone (ADVICE r7)
-          m.buckets.values.toSeq.distinct.map(versionRoot(sourceDir, _))
+          manifestRefs(m).toSeq.map(versionRoot(sourceDir, _))
             .groupBy(abs => abs.substring(0, abs.lastIndexOf('/')))
             .foreach { case (store, roots) =>
               val names = roots.map(r => r.substring(r.lastIndexOf('/') + 1)).distinct.sorted
@@ -3416,9 +3735,10 @@ object CdcPipeline {
     */
   def restoreSnapshot(targetDir: String, version: Long): Option[Long] =
     committedManifest(targetDir, version).flatMap { m =>
-      val refRoots = m.buckets.values.toSet[String].map(versionRoot(targetDir, _)) ++
-        m.meta.get("dv").map(dvPath(targetDir, _)) // DV must survive too
-      if (!refRoots.forall(StoreFs.exists)) None // vacuumed out from under us
+      // every segment and every deletion vector must survive
+      val refs = manifestBuckets(targetDir, m).map(_._3) ++
+        dvFiles(targetDir, m).map(_._3)
+      if (!refs.forall(StoreFs.exists)) None // vacuumed out from under us
       else {
         // restore derives from an OLD manifest by design; its base is
         // the CURRENT pointer (A66 claim-then-check). Declarations
@@ -3573,14 +3893,26 @@ object CdcPipeline {
         "cannot fast-forward a branch with unmaterialized column defaults" +
           ": OPTIMIZE the branch first")
       commit(sourceDir, cur, Some(bm), "branch-publish", fromDir = Some(branchDir)) { next =>
-        // buckets the branch wrote are copied (∝ branch delta); the
-        // commit rewires the rest back to the upstream's own dirs
-        bm.buckets.foreach { case (b, ref) =>
-          val abs = versionRoot(branchDir, ref)
-          if (localRef(sourceDir, abs).isEmpty)
-            StoreFs.copyDir(bucketDir(abs, b), bucketDir(s"$sourceDir/v$next", b))
+        // segments and vector files the branch wrote are copied into
+        // v<next> (∝ branch delta; a bucket's branch files land in one
+        // dir and one vector file); the commit rewires the rest back to
+        // the upstream's own dirs
+        val upstream = (ref: String) => localRef(sourceDir, versionRoot(branchDir, ref))
+        val regrown = bm.buckets.collect { case (b, segs) if segs.exists(upstream(_).isEmpty) =>
+          segs.filter(upstream(_).isEmpty).foreach(ref =>
+            StoreFs.copyFilesInto(bucketDir(versionRoot(branchDir, ref), b),
+              bucketDir(s"$sourceDir/v$next", b)))
+          b -> (segs.flatMap(upstream) :+ s"v$next")
         }
-        Edit(set = Map("branch_of" -> branchDir))
+        val branchDvs = dvFiles(branchDir, bm).filter(f => upstream(f._2).isEmpty).groupBy(_._1)
+        branchDvs.foreach { case (b, files) =>
+          writeDv(s"$sourceDir/v$next", b, files.flatMap(f => StoreFs.readPositions(f._3))
+            .groupMap(_._1)(_._2).map { case (f, ps) => f -> ps.toArray })
+        }
+        val redv = branchDvs.keySet.map(b =>
+          b -> (dvFiles(branchDir, bm).filter(_._1 == b).map(_._2).flatMap(upstream) :+ s"v$next")
+        ).toMap
+        Edit(set = Map("branch_of" -> branchDir), segments = regrown, dvs = redv)
       }
     }
   }
@@ -3661,33 +3993,22 @@ object CdcPipeline {
   /** Merge compacted `changes` into cfg's target and publish the next
     * version — the merge step of [[apply]], which has already run
     * [[gateConstraints]] on the same base (`gated`). With a bucketed
-    * target this reads and rewrites only the buckets the delta touches, taken from
-    * `summary` (the [[summarize]] of `changes`), which refuses with
-    * [[ConcurrentWriteException]] when the target's bucket count is
-    * not one it was taken for. The summary's row count picks the
-    * merge join strategy, so a typical small delta broadcasts its key
-    * set and the target side is never shuffled. Also computes the
-    * records_updated split: upsert PKs already present in the
-    * pre-merge target (the reference MERGE's matched-update count,
-    * merge.sql:520–534) — evaluated against the touched-bucket
-    * subset, which contains every possibly-matching PK by
-    * construction.
+    * target this is one merge-on-read [[rewriteBuckets]] over the
+    * buckets the delta touches, taken from `summary` (the [[summarize]]
+    * of `changes`), which refuses with [[ConcurrentWriteException]]
+    * when the target's bucket count is not one it was taken for: the
+    * upserts become a new segment of their buckets and the stored rows
+    * of every changed key join its bucket's deletion vector, so the
+    * target is never shuffled or rewritten. The summary's row count
+    * picks the key-set join strategy (a typical small delta
+    * broadcasts) and the fold policy. The records_updated split —
+    * upsert PKs already present in the pre-merge target, the reference
+    * MERGE's matched-update count (merge.sql:520–534) — is the
+    * replaced-row count of the same pass.
     */
   private[graft] def mergeAndPublish(spark: SparkSession, cfg: CdcTableConfig,
       changes: DataFrame, summary: ChangeSummary, batchId: Long = -1L,
-      swapNow: Boolean = true, gated: Boolean = false): MergeOutcome = {
-    val deltaRows = summary.rows
-    val targetCols = cfg.targetCols.map(col)
-    // config evolution: a target column declared after the stored
-    // snapshot was written (the reference picks up upstream column
-    // adds by re-reading INFORMATION_SCHEMA every run —
-    // merge.sql:179–219) routes through the schema-evolving merge, so
-    // untouched stored rows take NULL and the published schema widens
-    def mergeOnto(stored: DataFrame): DataFrame =
-      (if (cfg.targetCols.forall(stored.columns.contains))
-        SnapshotMerge.merge(stored, changes, cfg.pk, Some(deltaRows))
-      else SnapshotMerge.mergeEvolving(stored, changes, cfg.pk, Some(deltaRows)))
-        .select(targetCols: _*)
+      swapNow: Boolean = true, gated: Boolean = false): MergeOutcome =
     currentManifest(cfg.targetPath) match {
       case None =>
         val merged = SnapshotMerge.fromHistory(changes, cfg.pk, cfg.targetCols)
@@ -3695,19 +4016,20 @@ object CdcPipeline {
           cfg.statsCols, swapNow = swapNow), 0L)
       case Some(m) =>
         if (!gated) gateConstraints(cfg, changes, m)
-        var updated = 0L
-        val v = rewriteBuckets(spark, cfg.targetPath, cfg.pk, m,
+        // config evolution: a target column declared after the stored
+        // snapshot was written (the reference picks up upstream column
+        // adds by re-reading INFORMATION_SCHEMA every run —
+        // merge.sql:179–219) is simply in the new segment: the
+        // published schema widens and older segments read it as NULL
+        val w = rewriteBuckets(spark, cfg.targetPath, cfg.pk, m,
             summary.touched(cfg.targetPath, m.numBuckets), batchId = batchId,
-            statsCols = cfg.statsCols, swapNow = swapNow) { subset =>
-          updated = labeled(spark, "store.merge: matched keys") {
-            SnapshotMerge
-              .matchedUpsertKeys(subset, changes, cfg.pk, Some(deltaRows)).count()
-          }
-          mergeOnto(subset)
+            statsCols = cfg.statsCols, swapNow = swapNow, deltaRows = Some(summary.rows)) { _ =>
+          val isDelete = col(CdcEnvelope.OpCol) === lit(CdcEnvelope.Delete)
+          KeyedDelta.Upserts(changes.filter(!isDelete).select(cfg.targetCols.map(col): _*),
+            Some(changes.filter(isDelete).select(cfg.pk.map(col): _*)))
         }
-        MergeOutcome(v, updated)
+        MergeOutcome(w.version, w.replaced)
     }
-  }
 
   /** Apply cfg's write-time expectations ([[Expectations]], A39) to a
     * projected change window/micro-batch: gates the UPSERT rows

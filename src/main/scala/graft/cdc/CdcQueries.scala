@@ -905,7 +905,7 @@ object CdcQueries {
       s"expected an incremental replay to src v1, got $r1")
     val m = CdcPipeline.manifest(dstDir, r1.dstVersion).get
     val expectTouched = CdcPipeline.bucketSet(chg1, CdcPipeline.bucketExpr(pk, m.numBuckets)).size
-    require(m.buckets.values.count(_ == s"v${r1.dstVersion}") <= expectTouched,
+    require(CdcPipeline.bucketsWrittenAt(m, s"v${r1.dstVersion}").size <= expectTouched,
       "the incremental replicate commit must rewrite ONLY buckets holding " +
         "changed keys (rewrite I/O ∝ delta, never the replica)")
     CdcPipeline.readSnapshot(s, dstDir).get
@@ -1187,7 +1187,7 @@ object CdcQueries {
   // predates the deletes) and only append row positions; the served
   // snapshot must nevertheless hash-match the oracle's plain filters
   // over the recomputed state. One compare covering position capture,
-  // vector accumulation across commits, and the read-side anti-join.
+  // vector accumulation across commits, and the read-side position filter.
   /** A64 gate: the one-call maintenance driver on a real store — v0
     * publish, v1 incremental merge, deliberate fragmentation (A40's
     * maxRecordsPerFile), a ~50% MoR delete, then ONE `maintain` pass:
@@ -1258,9 +1258,9 @@ object CdcQueries {
     require(n2 > 0 && n3 > 0, "fixture must exercise both vector commits")
     Seq(v2, v3).foreach { v =>
       val m = CdcPipeline.manifest(cfg.targetPath, v).get
-      require(m.buckets.values.forall(r => r == "v0" || r == "v1"),
-        s"v$v must carry every bucket by reference (merge-on-read), got " +
-          m.buckets.values.toSet.mkString(","))
+      require(CdcPipeline.bucketsWrittenAt(m, s"v$v").isEmpty,
+        s"v$v must carry every bucket by reference (merge-on-read), but wrote buckets " +
+          CdcPipeline.bucketsWrittenAt(m, s"v$v").toSeq.sorted.mkString(","))
     }
     CdcPipeline.readSnapshot(s, cfg.targetPath).get
       .select("user_id", "k", "event_id", "value")

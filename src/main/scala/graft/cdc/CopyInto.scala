@@ -18,8 +18,8 @@ import org.apache.spark.sql.functions._
   *    identities persist as one marker file each under
   *    `_ingested/<md5>.mark`; the skip decision is ONE ledger
   *    listing, never per-file round trips.
-  *  - rows from fresh files UPSERT by PK through the A38 MergeInto
-  *    builder (duplicate in-batch PKs are refused — two landed files
+  *  - rows from fresh files UPSERT by PK as one merge-on-read keyed
+  *    write (duplicate in-batch PKs are refused — two landed files
   *    claiming the same key in one copy has no defined winner), CHECK
   *    constraints gate the batch (A71 induction), touched buckets
   *    come from the SOURCE keys so publish I/O stays ∝ ingested
@@ -100,9 +100,16 @@ object CopyInto {
     val touched = CdcPipeline.bucketSet(source, CdcPipeline.bucketExpr(pkCols, m.numBuckets))
     val v =
       if (touched.isEmpty) cur
-      else CdcPipeline.rewriteBuckets(spark, targetDir, pkCols, m, touched, "copy-into") {
-        MergeInto(_, source, pkCols).whenMatchedUpdateAll().whenNotMatchedInsertAll().run()
-      }
+      else CdcPipeline.rewriteBuckets(spark, targetDir, pkCols, m, touched, "copy-into",
+          deltaRows = Some(rows)) { _ =>
+        // the rows replace the stored rows of their keys (UPDATE SET * /
+        // INSERT *); the same ANSI duplicate-key refusal as MERGE
+        val dup = source.groupBy(pkCols.map(col): _*).count()
+          .filter(col("count") > 1).limit(1).collect()
+        require(dup.isEmpty, s"COPY INTO source has duplicate keys on (${pkCols.mkString(", ")}): " +
+          dup.head.toSeq.init.mkString(", "))
+        CdcPipeline.KeyedDelta.Upserts(source)
+      }.version
     // Markers last (see object doc: crash before these re-merges the
     // identical rows — state-idempotent; crash after never re-reads).
     fresh.foreach { case (f, bytes, k) =>

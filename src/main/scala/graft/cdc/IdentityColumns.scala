@@ -120,9 +120,9 @@ object IdentityColumns {
           .drop("pos")
       val matched = withId.filter(col(name).isNotNull)
       val source2 = matched.unionByName(freshIdd.select(matched.columns.map(col): _*))
-      MergeInto(subset, source2, pkCols)
-        .whenMatchedUpdateAll().whenNotMatchedInsertAll().run()
-    }
+      // every row replaces its PK's stored row (UPDATE SET * / INSERT *)
+      CdcPipeline.KeyedDelta.Upserts(source2.select(subset.columns.map(col): _*))
+    }.version
     (v, nNew)
   }
 }

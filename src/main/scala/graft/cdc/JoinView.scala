@@ -150,25 +150,26 @@ object JoinView {
       .getOrElse(throw new IllegalStateException(s"no view at ${spec.viewDir} — bootstrap first"))
     val touched = CdcPipeline.bucketSet(changes,
       CdcPipeline.bucketExpr(spec.factPk, m.numBuckets))
-    // deletes carry no payload worth enriching; upserts join the dim.
-    // The op column rides along so SnapshotMerge applies both.
+    // deletes carry no payload worth enriching; upserts join the dim
     val ups = enrich(changes.filter(col(CdcEnvelope.OpCol) =!= CdcEnvelope.Delete)
       .drop(CdcEnvelope.OpCol), dim, spec)
-      .withColumn(CdcEnvelope.OpCol, lit("u"))
     val dels = changes.filter(col(CdcEnvelope.OpCol) === CdcEnvelope.Delete)
-      .select(spec.factPk.map(col) :+ col(CdcEnvelope.OpCol): _*)
-    val changeSet = ups.unionByName(dels, allowMissingColumns = true)
     val v = CdcPipeline.rewriteBuckets(spark, spec.viewDir, spec.factPk, m, touched,
-      "join-view-fact")(SnapshotMerge.merge(_, changeSet, spec.factPk, deltaRows))
+        "join-view-fact", deltaRows = deltaRows) { stored =>
+      CdcPipeline.KeyedDelta.Upserts(ups.select(stored.columns.map(col): _*),
+        Some(dels.select(spec.factPk.map(col): _*)))
+    }.version
     // index append: new pairs only (upserted rows' fk routing)
     val newPairs = fkPairs(changes.filter(col(CdcEnvelope.OpCol) =!= CdcEnvelope.Delete), spec)
     val im = CdcPipeline.currentManifest(indexDir(spec))
       .getOrElse(throw new IllegalStateException("join view has no fk index"))
     val idxTouched = CdcPipeline.bucketSet(newPairs,
       CdcPipeline.bucketExpr(Seq(spec.fkCol), im.numBuckets))
+    // the index holds (fk, bucket) pairs, several per fk: it is not
+    // keyed by its bucketing column, so its buckets are rewritten whole
     if (idxTouched.nonEmpty)
       CdcPipeline.rewriteBuckets(spark, indexDir(spec), Seq(spec.fkCol), im, idxTouched,
-        "join-view-index")(_.unionByName(newPairs).distinct())
+        "join-view-index")(s => CdcPipeline.KeyedDelta.Content(s.unionByName(newPairs).distinct()))
     v
   }
 
@@ -190,12 +191,12 @@ object JoinView {
       .drop(CdcEnvelope.OpCol)
     CdcPipeline.rewriteBuckets(spark, spec.viewDir, spec.factPk, m, affectedBuckets,
         "join-view-dim") { stored =>
-      val keep = stored.join(broadcast(fks), Seq(spec.fkCol), "left_anti")
+      // the referencing rows, re-enriched, replace themselves
       val refreshed = enrich(
         stored.join(broadcast(fks), Seq(spec.fkCol), "left_semi")
           .drop(spec.dimCols: _*),
         dimUps, spec)
-      keep.unionByName(refreshed)
-    }
+      CdcPipeline.KeyedDelta.Upserts(refreshed.select(stored.columns.map(col): _*))
+    }.version
   }
 }

@@ -138,8 +138,11 @@ object PartialMerge {
         val touched = CdcPipeline.bucketSet(env, CdcPipeline.bucketExpr(pkCols, m.numBuckets))
         CdcPipeline.rewriteBuckets(spark, targetDir, pkCols, m, touched, batchId = batchId,
             statsCols = statsCols) { stored =>
-          merge(env, stored.select((pkCols ++ fields.map(_.as)).map(col): _*), pkCols, fields)
-        }
+          // a field-wise patch of the stored rows: the touched buckets'
+          // whole content, rewritten copy-on-write
+          CdcPipeline.KeyedDelta.Content(
+            merge(env, stored.select((pkCols ++ fields.map(_.as)).map(col): _*), pkCols, fields))
+        }.version
     }
   }
 }

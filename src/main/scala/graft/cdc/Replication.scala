@@ -167,19 +167,14 @@ object Replication {
       throw new IllegalStateException(s"replica $dstDir has no store"))
     val touched = CdcPipeline.bucketSet(changes, CdcPipeline.bucketExpr(pkCols, m.numBuckets))
     val v = CdcPipeline.rewriteBuckets(spark, dstDir, pkCols, m, touched,
-        "replicate") { subset =>
+        "replicate", deltaRows = Some(changeRows)) { _ =>
       // additive source schema evolution flows through: a feed carrying
-      // columns the replica has never seen routes via mergeEvolving
-      // (old replica rows read NULL, the published schema widens)
-      val merged =
-        if (dataCols.forall(subset.columns.contains) &&
-            subset.columns.forall(dataCols.contains))
-          SnapshotMerge.merge(subset, changes, pkCols, Some(changeRows))
-        else
-          SnapshotMerge.mergeEvolving(subset,
-            changes.drop("_commit_version"), pkCols, Some(changeRows))
-      merged.select(dataCols.map(col): _*)
-    }
+      // columns the replica has never seen lands them in the new
+      // segment (old replica rows read NULL, the published schema widens)
+      val isDelete = col(CdcEnvelope.OpCol) === CdcEnvelope.Delete
+      CdcPipeline.KeyedDelta.Upserts(changes.filter(!isDelete).select(dataCols.map(col): _*),
+        Some(changes.filter(isDelete).select(pkCols.map(col): _*)))
+    }.version
     Some((v, changeRows))
   }
 

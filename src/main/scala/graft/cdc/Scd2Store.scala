@@ -462,6 +462,16 @@ object Scd2Store {
     ()
   }
 
+  /** Apply one window's events `env` to the history: the window's
+    * closed slices, plus the open slice each window PK had until its
+    * first event here, land in `closed/d<v+1>`; the window's open
+    * slices become the open store's next version. Over an existing
+    * open store that is one merge-on-read `CdcPipeline.rewriteBuckets`
+    * over the buckets `summary` names: the new open slices are a new
+    * segment and every window PK's stored open slice joins its
+    * bucket's deletion vector, so the open store's write is ∝ the
+    * window, not its buckets. A first window publishes the open store.
+    */
   private def advance(spark: SparkSession, cfg: CdcTableConfig, spec: Scd2Spec,
       env: DataFrame, summary: CdcPipeline.ChangeSummary, seqKey: Long): Unit = {
     val pk = cfg.pk
@@ -489,10 +499,13 @@ object Scd2Store {
         ()
       case Some(m) =>
         val v = m.readVersion
-        // open-store I/O ∝ delta: only the buckets the window's PKs
-        // hash to are read and rewritten
+        // open-store I/O ∝ delta: the buckets the window's PKs hash to
+        // are read for the slices this window closes, and the write is
+        // merge-on-read — the window's open slices become a new segment
+        // and every window PK's stored open slice joins its bucket's
+        // deletion vector
         CdcPipeline.rewriteBuckets(spark, op, pk, m, summary.touched(op, m.numBuckets),
-            batchId = seqKey) { openSubset =>
+            batchId = seqKey, deltaRows = Some(summary.rows)) { openSubset =>
           // ADDITIVE schema evolution: a payload column declared after
           // the store existed is absent from the stored open slices —
           // allowMissingColumns unions backfill it with NULL (the same
@@ -510,11 +523,9 @@ object Scd2Store {
             newClosed.unionByName(closedNow, allowMissingColumns = true)
               .select(cols.map(col): _*),
             pk, m.numBuckets, s"${closedPath(cfg)}/d${v + 1}")
-          val stillOpen = openSubset
-            .join(broadcast(firstEvt.select(pk.map(col): _*)), pk, "left_anti")
-          val newOpen = newSlices.filter(col(Scd2.To).isNull).select(cols.map(col): _*)
-          newOpen.unionByName(stillOpen, allowMissingColumns = true)
-            .select(cols.map(col): _*)
+          CdcPipeline.KeyedDelta.Replace(
+            newSlices.filter(col(Scd2.To).isNull).select(cols.map(col): _*),
+            firstEvt.select(pk.map(col): _*))
         }
         ()
     }

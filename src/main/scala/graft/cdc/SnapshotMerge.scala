@@ -75,32 +75,6 @@ object SnapshotMerge {
     target.select(pkCols.map(col): _*).join(keys, pkCols, "left_semi")
   }
 
-  /** Schema-evolving merge: `changes` may carry payload columns the
-    * target has never seen (the reference re-reads
-    * INFORMATION_SCHEMA every run and splices the current column
-    * list into its dynamic SQL — merge.sql:179–219 — so columns
-    * added upstream flow through on the next run). Existing target
-    * rows take NULL for the new columns; dropped columns are NOT
-    * removed (additive evolution only, parquet-friendly). Same join
-    * strategy as `merge`.
-    */
-  def mergeEvolving(target: DataFrame, changes: DataFrame, pkCols: Seq[String],
-      deltaRows: Option[Long] = None): DataFrame = {
-    val meta = Set(CdcEnvelope.OpCol, CdcEnvelope.TsCol, CdcEnvelope.PosCol,
-      CdcEnvelope.LoadTsCol, CdcEnvelope.DataCol)
-    val keys = changes.select(pkCols.map(col): _*)
-    val changedKeys = deltaRows match {
-      case Some(nr) if nr <= LargeDeltaRows => broadcast(keys)
-      case _ => keys.hint("shuffle_hash")
-    }
-    val upserts = changes
-      .filter(col(CdcEnvelope.OpCol) =!= lit(CdcEnvelope.Delete))
-      .select(changes.columns.toIndexedSeq.filterNot(meta.contains).map(col): _*)
-    target
-      .join(changedKeys, pkCols, "left_anti")
-      .unionByName(upserts, allowMissingColumns = true)
-  }
-
   /** Build a first snapshot from history alone: newest change per
     * key, dropping keys whose newest change is a delete.
     */

@@ -2,6 +2,7 @@ package graft.cdc
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileContext, FileStatus, FileSystem, Options, Path}
+import org.apache.parquet.ParquetReadOptions
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.metadata.ParquetMetadata
 import org.apache.parquet.hadoop.util.HadoopInputFile
@@ -291,25 +292,103 @@ private[graft] object StoreFs {
     if (!f.exists(p)) 0L else f.getContentSummary(p).getLength
   }
 
-  /** Recursive directory copy (deep-clone path) — Hadoop `FileUtil`
-    * so it works across schemes, including src and dst on different
-    * filesystems.
+  private val positionsSchema = org.apache.parquet.schema.MessageTypeParser.parseMessageType(
+    "message positions { required binary file (UTF8); required int64 pos; }")
+
+  /** Write (file key, row index) pairs as one parquet file at `path`
+    * from the driver — a deletion vector is delta-sized, so it costs no
+    * Spark job. Overwrites.
     */
-  def copyDir(src: String, dst: String): Unit = {
+  def writePositions(path: String, positions: Seq[(String, Long)]): Unit = {
+    import org.apache.parquet.hadoop.ParquetFileWriter
+    import org.apache.parquet.hadoop.metadata.CompressionCodecName
+    val w = org.apache.parquet.hadoop.example.ExampleParquetWriter
+      .builder(new Path(path)).withConf(conf).withType(positionsSchema)
+      .withWriteMode(ParquetFileWriter.Mode.OVERWRITE)
+      .withCompressionCodec(CompressionCodecName.SNAPPY).build()
+    val f = new org.apache.parquet.example.data.simple.SimpleGroupFactory(positionsSchema)
+    try positions.foreach { case (file, pos) =>
+      w.write(f.newGroup().append("file", file).append("pos", pos))
+    } finally w.close()
+  }
+
+  /** The (file key, row index) pairs [[writePositions]] wrote, read on
+    * the driver. Every read path reads the vectors of the buckets it
+    * scans, so the pairs are kept (bounded) by (path, length,
+    * modification time): one status call instead of a parquet open on
+    * a repeated read, and a rewritten file is read again.
+    */
+  def readPositions(path: String): Seq[(String, Long)] = {
+    val p = new Path(path)
+    val st = fs(p).getFileStatus(p)
+    val key = (path, st.getLen, st.getModificationTime)
+    Option(positionsRead.get(key)).getOrElse {
+      val pairs = walkFooters(path, recursive = false) { (_, r) =>
+        val schema = r.getFooter.getFileMetaData.getSchema
+        val io = new org.apache.parquet.io.ColumnIOFactory().getColumnIO(schema)
+        Iterator.continually(r.readNextRowGroup()).takeWhile(_ != null).flatMap { rg =>
+          val rows = io.getRecordReader(rg,
+            new org.apache.parquet.example.data.simple.convert.GroupRecordConverter(schema))
+          (0L until rg.getRowCount).map { _ =>
+            val g = rows.read()
+            g.getString("file", 0) -> g.getLong("pos", 0)
+          }
+        }.toVector
+      }.flatten
+      if (positionsRead.size >= 4096) positionsRead.clear()
+      positionsRead.put(key, pairs)
+      pairs
+    }
+  }
+
+  private val positionsRead =
+    new java.util.concurrent.ConcurrentHashMap[(String, Long, Long), Seq[(String, Long)]]()
+
+  /** Copy every file directly in `src` into the directory `dst`
+    * (created if missing), keeping names, with Hadoop `FileUtil` so it
+    * works across schemes (deep clones, branch publishes). Several
+    * segments of one bucket land in one bucket dir: their file names,
+    * which carry their write's job id, stay distinct and keep
+    * deletion-vector keys valid.
+    */
+  def copyFilesInto(src: String, dst: String): Unit = {
     val s = new Path(src); val d = new Path(dst)
-    org.apache.hadoop.fs.FileUtil.copy(fs(s), s, fs(d), d,
-      /* deleteSource = */ false, /* overwrite = */ true, conf)
+    val sfs = fs(s); val dfs = fs(d)
+    dfs.mkdirs(d)
+    val files = sfs.listStatus(s).filter(st => st.isFile && !st.getPath.getName.startsWith("."))
+    files.foreach { st =>
+      org.apache.hadoop.fs.FileUtil.copy(sfs, st.getPath, dfs, new Path(d, st.getPath.getName),
+        /* deleteSource = */ false, /* overwrite = */ true, conf)
+    }
+  }
+
+  /** Read options for the driver's parquet opens, built once per
+    * Hadoop configuration: building them copies every property of the
+    * configuration, which costs more than reading a small file's
+    * footer.
+    */
+  @volatile private var readOptions: (Configuration, ParquetReadOptions) = (null, null)
+
+  private def optionsFor(c: Configuration): ParquetReadOptions = {
+    val (seen, opts) = readOptions
+    if (seen eq c) opts
+    else {
+      val built = org.apache.parquet.HadoopReadOptions.builder(c).build()
+      readOptions = (c, built)
+      built
+    }
   }
 
   /** The one footer loop: every parquet data file under `dir` (a
     * file path names just that file), recursively or only directly in
-    * it, with its footer read on the driver — metadata I/O only, zero
-    * Spark jobs. Hidden (`.`/`_`) files are skipped, as Spark's reader
-    * skips them. Throws when `dir` is missing or a footer is
-    * unreadable; each public walker below states its own degrade.
+    * it, opened on the driver — `f` reads its footer (metadata I/O
+    * only, zero Spark jobs) or, for a deletion vector, its rows. Hidden
+    * (`.`/`_`) files are skipped, as Spark's reader skips them. Throws
+    * when `dir` is missing or a footer is unreadable; each public
+    * walker below states its own degrade.
     */
   private def walkFooters[T](dir: String, recursive: Boolean)
-      (f: (FileStatus, ParquetMetadata) => T): Seq[T] = {
+      (f: (FileStatus, ParquetFileReader) => T): Seq[T] = {
     val p = new Path(dir)
     val files =
       if (recursive) {
@@ -320,9 +399,9 @@ private[graft] object StoreFs {
       val n = st.getPath.getName
       st.isFile && n.endsWith(".parquet") && !n.startsWith(".") && !n.startsWith("_")
     }.map { st =>
-      val r = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf))
-      val footer = try r.getFooter finally r.close()
-      f(st, footer)
+      val c = conf
+      val r = ParquetFileReader.open(HadoopInputFile.fromStatus(st, c), optionsFor(c))
+      try f(st, r) finally r.close()
     }
   }
 
@@ -336,7 +415,7 @@ private[graft] object StoreFs {
     */
   def footerRowsBytes(dir: String): Option[(Long, Long)] =
     scala.util.Try {
-      val per = walkFooters(dir, recursive = true)((st, f) => (footerRows(f), st.getLen))
+      val per = walkFooters(dir, recursive = true)((st, r) => (footerRows(r.getFooter), st.getLen))
       (per.map(_._1).sum, per.map(_._2).sum)
     }.toOption
 
@@ -346,15 +425,15 @@ private[graft] object StoreFs {
     * (callers degrade to an absent listing, never guess).
     */
   def footerPerFile(dir: String): Seq[(String, Long, Long)] =
-    scala.util.Try(walkFooters(dir, recursive = true) { (st, f) =>
-      (st.getPath.toString, footerRows(f), st.getLen)
+    scala.util.Try(walkFooters(dir, recursive = true) { (st, r) =>
+      (st.getPath.toString, footerRows(r.getFooter), st.getLen)
     }).getOrElse(Seq.empty)
 
   /** The footers of the parquet data files directly in `dir` (not its
     * subdirectories). Empty when `dir` is missing.
     */
   def footers(dir: String): Seq[ParquetMetadata] =
-    if (!exists(dir)) Nil else walkFooters(dir, recursive = false)((_, f) => f)
+    if (!exists(dir)) Nil else walkFooters(dir, recursive = false)((_, r) => r.getFooter)
 
   /** Driver-side [min, max] of a long column across every parquet
     * file under `dir`, read from the file FOOTERS' column statistics.
@@ -363,9 +442,9 @@ private[graft] object StoreFs {
     */
   def footerLongRange(dir: String, column: String): Option[(Long, Long)] =
     scala.util.Try {
-      val chunks = walkFooters(dir, recursive = true) { (_, f) =>
+      val chunks = walkFooters(dir, recursive = true) { (_, r) =>
         for {
-          b <- f.getBlocks.asScala
+          b <- r.getFooter.getBlocks.asScala
           c <- b.getColumns.asScala if c.getPath.toDotString == column
         } yield {
           val s = c.getStatistics

@@ -344,9 +344,8 @@ object GraftSqlDml {
               s"INSERT INTO $path: duplicate key " +
                 s"(${pk.mkString(",")}) = (${dup.headOption.map(_.toSeq.mkString(",")).getOrElse("")}) " +
                 "already exists — use MERGE INTO to upsert")
-            MergeInto(subset, source, pk).sourceRows(srcRows)
-              .whenNotMatchedInsertAll().run()
-          }
+            CdcPipeline.KeyedDelta.Inserts(source)
+          }.version
         Seq(Row(v, srcRows))
       }
     }
@@ -474,8 +473,10 @@ object GraftSqlDml {
           // subset (arbitrary SET expressions can violate them even
           // when every source row is clean)
           CdcPipeline.enforceConstraints(m, merged, path)
-          merged
-        }
+          // arbitrary clauses (by-source ones included) yield the
+          // touched buckets' whole content: rewritten copy-on-write
+          CdcPipeline.KeyedDelta.Content(merged)
+        }.version
       Seq(Row(v, srcRows))
     }
 

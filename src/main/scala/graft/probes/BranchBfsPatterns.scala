@@ -39,8 +39,8 @@ object BranchBfsPatterns {
       val (_, tFork) = secs { P.createBranch(dir, br, "wap").get }
       val m0 = P.manifest(br, 0).get
       val (_, tWrite) = secs {
-        P.rewriteBuckets(spark, br, Seq("id"), m0, Set(3, 17))(
-          _.withColumn("v", col("v") + 1000000L))
+        P.rewriteBuckets(spark, br, Seq("id"), m0, Set(3, 17))(s =>
+          P.KeyedDelta.Content(s.withColumn("v", col("v") + 1000000L)))
       }
       val (v1, tPub) = secs { P.publishBranch(br).get }
       println(f"[stress] branch WAP on ${n / 1e6}%.1f M rows/64 buckets: " +

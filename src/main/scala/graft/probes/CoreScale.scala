@@ -466,9 +466,10 @@ object CoreScale {
     // 0.1% delete that TOUCHES EVERY BUCKET costs a full rewrite on
     // the copy-on-write path but only a position sidecar on the MoR
     // path (bytes ratio printed); the DV-applied read pays the
-    // anti-join + `_metadata` materialization — measured ~5x on a
-    // bare count(*) (the worst case: the vector-free count is nearly
-    // I/O-free) and proportionally less on payload-bearing reads;
+    // position filter + `_metadata` materialization (measured ~5x on a
+    // bare count(*) with the earlier anti-join — the worst case: the
+    // vector-free count is nearly I/O-free — and proportionally less
+    // on payload-bearing reads);
     // OPTIMIZE retires the cost. The bloom index prunes a secondary
     // point probe to ~1/64 of the files.
     locally {
@@ -627,7 +628,7 @@ object CoreScale {
         CdcPipeline.deleteWhere(spark, dir, pk, keyPred).get
       }
       val mNext = CdcPipeline.manifest(dir, vAfter).get
-      val rewritten = mNext.buckets.count { case (bk, v) => !mPrev.buckets.get(bk).contains(v) }
+      val rewritten = CdcPipeline.changedBuckets(mPrev, mNext).size
       println(s"[stress] deleteWhere: $nDel rows deleted, $rewritten/64 buckets rewritten")
       assert(nDel == 3 && rewritten <= 3,
         s"rewrite must be bounded by the keys' buckets: $rewritten")
@@ -666,7 +667,7 @@ object CoreScale {
           Seq((3L, "HOT", "u")).toDF("dk", "seg", "__op"))
       }
       val mNext = graft.cdc.CdcPipeline.currentManifest(dir).get
-      val rewrote = mNext.buckets.count { case (bk, v) => !mPrev.buckets.get(bk).contains(v) }
+      val rewrote = graft.cdc.CdcPipeline.changedBuckets(mPrev, mNext).size
       println(s"[stress] join view dim delta rewrote $rewrote/64 buckets")
       assert(rewrote <= 2, s"single-referer dim delta must be bucket-pruned: $rewrote")
       StoreFs.deleteRecursive(dir)
@@ -739,8 +740,8 @@ object CoreScale {
         expectedPerBucket = math.max(1000L, n / 32)).get)
       println(f"[stress] bloom full build (${n / 1e6}%.1f M rows / 64 buckets): $tFull%.2f s")
       val m = P.currentManifest(dir).get
-      P.rewriteBuckets(spark, dir, Seq("id"), m, Set(1, 2, 3))(
-        _.withColumn("tag", concat(col("tag"), lit("-x"))))
+      P.rewriteBuckets(spark, dir, Seq("id"), m, Set(1, 2, 3))(s =>
+        P.KeyedDelta.Content(s.withColumn("tag", concat(col("tag"), lit("-x")))))
       val (rep, tHeal) = secs(P.maintain(spark, dir, Seq("id"),
         P.MaintenancePolicy(dvFoldPct = None, smallFilesPerBucket = None,
           keepVersions = None, bloomRebuildPct = Some(1),

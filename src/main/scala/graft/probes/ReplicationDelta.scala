@@ -40,7 +40,7 @@ object ReplicationDelta {
       P.mergeAndPublish(spark, cfg, delta, P.summarize(cfg, delta)) // src v1
       val (r1, tInc) = secs { Replication.replicate(spark, src, dst, Seq("id")).get }
       val m1 = P.manifest(dst, r1.dstVersion).get
-      val rewritten = m1.buckets.values.count(_ == s"v${r1.dstVersion}")
+      val rewritten = P.bucketsWrittenAt(m1, s"v${r1.dstVersion}").size
       val incBytes = StoreFs.treeBytes(s"$dst/v${r1.dstVersion}")
       assert(r1.mode == "incremental" && rewritten <= 5,
         s"5-key replication must rewrite <=5 buckets, got $rewritten")
@@ -84,7 +84,7 @@ object ReplicationDelta {
       }
       val m0 = P.manifest(dir, 0L).get
       val m1 = P.manifest(dir, v1).get
-      val rewritten = m1.buckets.count { case (b, ref) => m0.buckets.get(b) != Some(ref) }
+      val rewritten = P.changedBuckets(m0, m1).size
       assert(rewritten <= 5, s"5-PK patch rewrote $rewritten buckets")
       val patchBytes = StoreFs.treeBytes(s"$dir/v$v1")
       val bootBytes = StoreFs.treeBytes(s"$dir/v0")

@@ -12,9 +12,10 @@ import graft.cdc.{CdcPipeline, CdcTableConfig, ChangeCompaction, PartialMerge, S
   * exactly-once from the checkpoint + idempotent versioned publish
   * (the batchId-keyed publish skips a batch that already committed).
   *
-  * Scale: each micro-batch shuffles only its own events (compaction)
-  * plus the anti-join against the snapshot — identical plan shapes to
-  * the batch pipeline, so the same §5 properties hold; watermarking
+  * Scale: each micro-batch shuffles only its own events (compaction);
+  * its merge finds the replaced rows' positions in the touched buckets
+  * and writes the batch's rows as a new segment — identical plan
+  * shapes to the batch pipeline, so the same §5 properties hold; watermarking
   * bounds state for the stateful-dedup variant.
   */
 object CdcStream {
@@ -23,10 +24,11 @@ object CdcStream {
     * to the versioned parquet target through the batch pipeline's
     * apply path (`CdcPipeline.apply`): one pass over the compacted
     * batch (cached and typically tiny) counts it and collects its
-    * touched PK-hash buckets, so the anti-join broadcasts the delta
-    * keys instead of shuffling the full-width target every
-    * micro-batch (ADVICE r2), and only those buckets are read and
-    * rewritten, in the target and in the SCD2 open store.
+    * touched PK-hash buckets, so the merge's matched-keys pass
+    * broadcasts the delta keys instead of shuffling the full-width
+    * target every micro-batch (ADVICE r2), and only those buckets are
+    * read, in the target and in the SCD2 open store; each gains a
+    * segment and a deletion vector (merge-on-read).
     * Exactly-once: the checkpoint replays at-least-once, and the
     * version pointer records the batchId that produced each committed
     * version, so a replayed batch (same batchId, same data —

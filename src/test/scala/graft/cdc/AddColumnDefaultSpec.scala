@@ -46,7 +46,7 @@ class AddColumnDefaultSpec extends AnyFunSuite {
       .withColumn("score",
         when(col("id") % 10 === 0, lit(null).cast(LongType))
           .otherwise(col("id") * 100L))
-    CdcPipeline.rewriteBuckets(spark, dir, Seq("id"), m, Set(0))(_ => b0)
+    CdcPipeline.rewriteBuckets(spark, dir, Seq("id"), m, Set(0))(_ => CdcPipeline.KeyedDelta.Content(b0))
     val after = CdcPipeline.readSnapshot(spark, dir).get
     val bucket0Ids = b0.select("id").collect().map(_.getLong(0)).toSet
     val nulls = after.filter(col("score").isNull).select("id").collect()

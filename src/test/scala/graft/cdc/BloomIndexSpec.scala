@@ -84,8 +84,8 @@ class BloomIndexSpec extends AnyFunSuite {
     CdcPipeline.buildBloomIndex(spark, dir, "tag", expectedPerBucket = 1000L).get
     // rewrite bucket 2 with CHANGED tags — the stale filter would lie
     val m = CdcPipeline.manifest(dir, CdcPipeline.currentVersion(dir).get).get
-    val v = CdcPipeline.rewriteBuckets(spark, dir, Seq("id"), m, Set(2))(
-      _.withColumn("tag", concat(col("tag"), lit("-x"))))
+    val v = CdcPipeline.rewriteBuckets(spark, dir, Seq("id"), m, Set(2))(s =>
+      CdcPipeline.KeyedDelta.Content(s.withColumn("tag", concat(col("tag"), lit("-x"))))).version
     val m2 = CdcPipeline.manifest(dir, v).get
     assert(m2.meta.contains("bloom.tag"), "carried entries must survive")
     // bucket 2's entry is gone → must-read → the NEW tag is findable
@@ -117,8 +117,8 @@ class BloomIndexSpec extends AnyFunSuite {
     val before = (0 until B).map(b => b -> sidecar(vFull, b)).toMap
     // rewrite buckets 1 and 4 with changed tags (their entries drop)
     val m = CdcPipeline.manifest(dir, CdcPipeline.currentVersion(dir).get).get
-    CdcPipeline.rewriteBuckets(spark, dir, Seq("id"), m, Set(1, 4))(
-      _.withColumn("tag", concat(col("tag"), lit("-r"))))
+    CdcPipeline.rewriteBuckets(spark, dir, Seq("id"), m, Set(1, 4))(s =>
+      CdcPipeline.KeyedDelta.Content(s.withColumn("tag", concat(col("tag"), lit("-r")))))
     // repair ONLY the degraded buckets
     val vRep = CdcPipeline.buildBloomIndex(spark, dir, "tag",
       expectedPerBucket = 1000L, buckets = Some(Set(1, 4))).get
@@ -152,16 +152,16 @@ class BloomIndexSpec extends AnyFunSuite {
 
     // healthy index: below-threshold degradation (1/8 buckets) must NOT fire
     val m0 = CdcPipeline.manifest(dir, CdcPipeline.currentVersion(dir).get).get
-    CdcPipeline.rewriteBuckets(spark, dir, Seq("id"), m0, Set(0))(
-      _.withColumn("tag", concat(col("tag"), lit("-y"))))
+    CdcPipeline.rewriteBuckets(spark, dir, Seq("id"), m0, Set(0))(s =>
+      CdcPipeline.KeyedDelta.Content(s.withColumn("tag", concat(col("tag"), lit("-y")))))
     val rHealthy = CdcPipeline.maintain(spark, dir, Seq("id"), policy).get
     assert(rHealthy.bloomRebuilt.isEmpty,
       s"12.5% missing must stay under the 30% trigger: $rHealthy")
 
     // nightly-merge degradation: rewrite 3 more buckets (4/8 = 50% missing)
     val m1 = CdcPipeline.manifest(dir, CdcPipeline.currentVersion(dir).get).get
-    CdcPipeline.rewriteBuckets(spark, dir, Seq("id"), m1, Set(1, 2, 3))(
-      _.withColumn("tag", concat(col("tag"), lit("-z"))))
+    CdcPipeline.rewriteBuckets(spark, dir, Seq("id"), m1, Set(1, 2, 3))(s =>
+      CdcPipeline.KeyedDelta.Content(s.withColumn("tag", concat(col("tag"), lit("-z")))))
     val r = CdcPipeline.maintain(spark, dir, Seq("id"), policy).get
     assert(r.bloomRebuilt === Seq("tag"), s"50% missing must rebuild: $r")
     // pruning restored: a selective probe reads a strict file subset,
@@ -186,8 +186,8 @@ class BloomIndexSpec extends AnyFunSuite {
     // declaration (r8 verdict #2 — the degradation used to become
     // permanent and invisible here) and maintain must still rebuild
     val m2 = CdcPipeline.manifest(dir, vIdle).get
-    CdcPipeline.rewriteBuckets(spark, dir, Seq("id"), m2, m2.buckets.keySet)(
-      _.withColumn("tag", concat(col("tag"), lit("-w"))))
+    CdcPipeline.rewriteBuckets(spark, dir, Seq("id"), m2, m2.buckets.keySet)(s =>
+      CdcPipeline.KeyedDelta.Content(s.withColumn("tag", concat(col("tag"), lit("-w")))))
     val mAfter = CdcPipeline.manifest(dir, CdcPipeline.currentVersion(dir).get).get
     assert(mAfter.meta.contains("bloom.tag"),
       "a 100%-rewrite publish must keep the index declaration")

@@ -103,15 +103,18 @@ class CdcCoreSpec extends AnyFunSuite {
     assert(got === Map("a" -> (2L, 50L), "c" -> (1L, 21L)), "group b must die, c must be born")
   }
 
-  test("mergeEvolving: new payload columns appear, old rows take NULL") {
-    val target = Seq((1, 10.0), (2, 20.0)).toDF("id", "v")
-    // changes carry a NEW column v2 the target has never seen
-    val changes = Seq(
-      (2, "u", 100L, 1L, 100L, """{"k":2}""", 21.0, "x2"),
-      (3, "u", 100L, 2L, 100L, """{"k":3}""", 30.0, "x3"))
-      .toDF("id", CdcEnvelope.OpCol, CdcEnvelope.TsCol, CdcEnvelope.PosCol,
-        CdcEnvelope.LoadTsCol, CdcEnvelope.DataCol, "v", "v2")
-    val got = SnapshotMerge.mergeEvolving(target, changes, Seq("id"))
+  test("schema-evolving merge: new payload columns appear, old rows take NULL") {
+    val dir = java.nio.file.Files.createTempDirectory("graft").toString
+    CdcPipeline.publish(Seq((1, 10.0), (2, 20.0)).toDF("id", "v"), dir, Seq("id"),
+      buckets = Some(2))
+    // the config declares a column v2 the stored target has never seen
+    val cfg = CdcTableConfig(cdcTable = "t", sourcePath = "t", targetDb = "g",
+      targetTable = "evolve", targetPath = dir, pk = Seq("id"), fieldSpecs = Nil,
+      passthrough = Seq("v", "v2"), numBuckets = Some(2))
+    val changes = Seq((2, "u", 21.0, "x2"), (3, "u", 30.0, "x3"))
+      .toDF("id", CdcEnvelope.OpCol, "v", "v2")
+    CdcPipeline.mergeAndPublish(spark, cfg, changes, CdcPipeline.summarize(cfg, changes))
+    val got = CdcPipeline.readSnapshot(spark, dir).get
     assert(got.columns.toSeq === Seq("id", "v", "v2"))
     val rows = got.select("id", "v", "v2").as[(Int, Double, Option[String])]
       .collect().map { case (i, v, v2) => i -> (v, v2) }.toMap

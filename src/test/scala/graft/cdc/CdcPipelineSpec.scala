@@ -178,7 +178,7 @@ class CdcPipelineSpec extends AnyFunSuite {
         s"""{"k":${1000 + u}}""", 500L + i, 2.0))), log, 2000L + i * 1000L)
     }
     val m2 = CdcPipeline.manifest(target, 2L).get
-    assert(m2.buckets.values.count(_ != "v2") >= 6, "v2 must carry most buckets")
+    assert(m2.buckets.values.count(!_.contains("v2")) >= 6, "v2 must carry most buckets")
     def lose(v: Long): Unit = Files.delete(java.nio.file.Paths.get(s"$target/v$v/_MANIFEST"))
 
     // an older version without a manifest is absent to time travel,
@@ -710,7 +710,7 @@ class CdcPipelineSpec extends AnyFunSuite {
     val v = CdcPipeline.rebucket(spark, target, Seq("user_id"), 16).get
     val m = CdcPipeline.manifest(target, v).get
     assert(m.numBuckets === 16)
-    assert(m.buckets.values.forall(_ === s"v$v"), "a rebucket is a full rewrite")
+    assert(m.buckets.values.forall(_ === Seq(s"v$v")), "a rebucket is a full rewrite")
     assert(rows() === before, "rebucketing must not change the table")
     // the next incremental run publishes deltas against the NEW layout
     CdcPipeline.run(spark, c, env, log, w2)

@@ -42,8 +42,8 @@ class CloneSpec extends AnyFunSuite {
 
     // divergence: rewrite bucket 2 on the CLONE only
     val m0 = CdcPipeline.manifest(dst, 0).get
-    CdcPipeline.rewriteBuckets(spark, dst, Seq("id"), m0, Set(2))(
-      _.withColumn("v", col("v") + 500000L))
+    CdcPipeline.rewriteBuckets(spark, dst, Seq("id"), m0, Set(2))(s =>
+      CdcPipeline.KeyedDelta.Content(s.withColumn("v", col("v") + 500000L)))
     val afterSrc = rows(src)
     val afterDst = rows(dst)
     assert(afterSrc !== afterDst, "clone writes must not leak into the source")

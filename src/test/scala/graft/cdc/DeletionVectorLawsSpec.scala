@@ -7,8 +7,10 @@ import java.nio.file.Files
 import scala.util.Random
 
 /** A53/A56 randomized MODEL test: a seeded random interleaving of
-  * merge-on-read deletes, copy-on-write deletes, predicate updates,
-  * and partial OPTIMIZEs runs against both the real store and a
+  * merge-on-read deletes, copy-on-write deletes, merge-on-read
+  * predicate updates and merges (new segments plus per-bucket
+  * vectors), vector folds and partial OPTIMIZEs runs against both the
+  * real store and a
   * driver-side Map model; after EVERY step the served snapshot must
   * equal the model exactly, and at the end every historical version
   * must still time-travel to its recorded model state. This is the
@@ -33,6 +35,10 @@ class DeletionVectorLawsSpec extends AnyFunSuite {
     val df0 = spark.range(0, n).select(col("id"), (col("id") % 97).as("grp"),
       (col("id") * 10L).as("payload"))
     CdcPipeline.publish(df0, dir, Seq("id"), buckets = Some(B))
+    val cfg = CdcTableConfig(cdcTable = "t", sourcePath = "t", targetDb = "g",
+      targetTable = "dvlaws", targetPath = dir, pk = Seq("id"), fieldSpecs = Nil,
+      passthrough = Seq("grp", "payload"), numBuckets = Some(B))
+    import spark.implicits._
 
     def snapshot(): Map[Long, Long] =
       CdcPipeline.readSnapshot(spark, dir).get
@@ -43,9 +49,10 @@ class DeletionVectorLawsSpec extends AnyFunSuite {
     val history = scala.collection.mutable.Map[Long, Map[Long, Long]](
       0L -> model.toMap)
 
-    (1 to 14).foreach { step =>
+    var (merges, folds) = (0, 0)
+    (1 to 24).foreach { step =>
       val g = rnd.nextInt(97)
-      rnd.nextInt(4) match {
+      rnd.nextInt(6) match {
         case 0 => // merge-on-read delete of one grp
           CdcPipeline.deleteWhereMoR(spark, dir, Seq("id"), col("grp") === g)
           model.filterInPlace((id, _) => id % 97 != g)
@@ -61,12 +68,26 @@ class DeletionVectorLawsSpec extends AnyFunSuite {
           if (subset.nonEmpty)
             CdcPipeline.optimize(spark, dir, Seq("id"), Seq("grp"),
               buckets = Some(subset))
+        case 4 => // merge-on-read merge: distinct upserts (some new) + deletes
+          val ups = rnd.shuffle((0L until n + 200).toList).take(40).map(_ -> rnd.nextInt(1000).toLong)
+          val dels = rnd.shuffle(model.keys.toList.sorted).filterNot(ups.map(_._1).toSet)
+            .take(5)
+          val chg = (ups.map { case (id, p) => (id, id % 97, Option(p), "u") } ++
+            dels.map(id => (id, id % 97, Option.empty[Long], "d")))
+            .toDF("id", "grp", "payload", "__op")
+          CdcPipeline.mergeAndPublish(spark, cfg, chg, CdcPipeline.summarize(cfg, chg))
+          ups.foreach { case (id, p) => model(id) = p }
+          dels.foreach(model.remove)
+          merges += 1
+        case 5 => // fold every vector into its bucket (a no-op without one)
+          if (CdcPipeline.foldDv(spark, dir, Seq("id")).nonEmpty) folds += 1
       }
       val v = CdcPipeline.currentVersion(dir).get
       history(v) = model.toMap
       assert(snapshot() === model.toMap, s"step $step (version $v) diverged")
     }
 
+    assert(merges > 0 && folds > 0, s"the interleaving ran $merges merges, $folds folds")
     // every committed version still time-travels to its model state
     history.toSeq.sortBy(_._1).foreach { case (v, expected) =>
       val got = CdcPipeline.readSnapshotAt(spark, dir, v).get

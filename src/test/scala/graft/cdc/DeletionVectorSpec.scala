@@ -50,10 +50,10 @@ class DeletionVectorSpec extends AnyFunSuite {
     // the MoR version rewrote NOTHING: all bucket refs still point at
     // v0 and its version dir holds only the vector
     val m1 = CdcPipeline.manifest(mor, vMor).get
-    assert(m1.buckets.values.toSet === Set("v0"))
+    assert(m1.buckets.values.toSet === Set(Seq("v0")))
     assert(StoreFs.listDirNames(s"$mor/v$vMor") === Seq("_dv"))
     // while the CoW version rewrote the touched buckets
-    assert(CdcPipeline.manifest(cow, vCow).get.buckets.values.exists(_ == s"v$vCow"))
+    assert(CdcPipeline.manifest(cow, vCow).get.buckets.values.exists(_ == Seq(s"v$vCow")))
 
     // reader paths: keys and ranges see through the vector
     val gone = CdcPipeline.readKeys(spark, mor, Seq("id"),
@@ -94,13 +94,13 @@ class DeletionVectorSpec extends AnyFunSuite {
     // rewrite ONLY bucket 3 (same-content rewrite): its DV entries
     // must fold into the new files, every other bucket's must carry
     val m = CdcPipeline.manifest(dir, CdcPipeline.currentVersion(dir).get).get
-    val v = CdcPipeline.rewriteBuckets(spark, dir, Seq("id"), m, Set(3))(identity)
+    val v = CdcPipeline.rewriteBuckets(spark, dir, Seq("id"), m, Set(3))(CdcPipeline.KeyedDelta.Content(_)).version
     assert(rows(dir) === before, "a same-content bucket rewrite must not change rows")
     val m2 = CdcPipeline.manifest(dir, v).get
-    assert(m2.meta.contains("dv"), "entries for carried buckets must survive")
+    assert(m2.dvs.nonEmpty && !m2.dvs.contains(3), "entries for carried buckets must survive")
     // folding everything retires the vector: OPTIMIZE over all buckets
     val vOpt = CdcPipeline.optimize(spark, dir, Seq("id"), Seq("grp")).get
-    assert(!CdcPipeline.manifest(dir, vOpt).get.meta.contains("dv"),
+    assert(CdcPipeline.manifest(dir, vOpt).get.dvs.isEmpty,
       "a full rewrite must clear the vector")
     assert(rows(dir) === before)
     assert(CdcPipeline.fsck(spark, dir).filter(col("severity") === "error").count() === 0)
@@ -114,7 +114,9 @@ class DeletionVectorSpec extends AnyFunSuite {
     val dst = tmp() + "/clone"
     assert(CdcPipeline.cloneSnapshot(dir, dst) === Some(0L))
     assert(rows(dst) === rows(dir))
-    assert(CdcPipeline.manifest(dst, 0).get.meta("dv") === "v0")
+    // the clone carries the source's vectors by reference (pinned)
+    val cm = CdcPipeline.manifest(dst, 0).get
+    assert(cm.dvs.nonEmpty && cm.dvs.values.forall(_ == Seq(s"$dir/v$v1")))
     // restore to the pre-delete version: rows come back, diff says 'i'
     val vR = CdcPipeline.restoreSnapshot(dir, 0).get
     assert(CdcPipeline.readSnapshot(spark, dir).get.count() === 1000)
@@ -123,8 +125,8 @@ class DeletionVectorSpec extends AnyFunSuite {
     // restore back to the deleted state: the DV follows the restore
     val vR2 = CdcPipeline.restoreSnapshot(dir, v1).get
     assert(CdcPipeline.readSnapshot(spark, dir).get.count() === 800)
-    assert(CdcPipeline.manifest(dir, vR2).get.meta("dv") === s"v$vR2",
-      "a restored vector must live in the restoring version's own dir")
+    assert(CdcPipeline.manifest(dir, vR2).get.dvs === CdcPipeline.manifest(dir, v1).get.dvs,
+      "a restore carries the restored version's vectors by reference")
   }
 
   test("A56: dvStats from footers; auto-fold fires at the threshold, not below") {
@@ -133,7 +135,7 @@ class DeletionVectorSpec extends AnyFunSuite {
     // 5% delete under a 10% policy: vector stays
     val (v1, _) = CdcPipeline.deleteWhereMoR(spark, dir, Seq("id"),
       col("id") < 100, autoFoldPct = Some(10)).get
-    assert(CdcPipeline.manifest(dir, v1).get.meta.contains("dv"),
+    assert(CdcPipeline.manifest(dir, v1).get.dvs.nonEmpty,
       "under-threshold delete must keep the vector")
     val (dvRows, tableRows) = CdcPipeline.dvStats(dir).get
     assert(dvRows === 100L && tableRows === 2000L)
@@ -143,7 +145,7 @@ class DeletionVectorSpec extends AnyFunSuite {
       col("id") >= 1800, autoFoldPct = Some(10)).get
     assert(n2 === 200)
     val m2 = CdcPipeline.manifest(dir, v2).get
-    assert(!m2.meta.contains("dv"), "crossing the threshold must fold the vector")
+    assert(m2.dvs.isEmpty, "crossing the threshold must fold the vector")
     assert(m2.meta("op") === "optimize")
     assert(CdcPipeline.dvStats(dir).isEmpty)
     assert(CdcPipeline.readSnapshot(spark, dir).get.count() === 1700)
@@ -160,21 +162,22 @@ class DeletionVectorSpec extends AnyFunSuite {
     val before = rows(dir)
     val v = CdcPipeline.foldDv(spark, dir, Seq("id")).get
     val m = CdcPipeline.manifest(dir, v).get
-    val rewritten = m.buckets.values.count(_ == s"v$v")
+    val rewritten = CdcPipeline.bucketsWrittenAt(m, s"v$v").size
     assert(rewritten <= 2, s"fold must touch only the DV's buckets, rewrote $rewritten")
-    assert(!m.meta.contains("dv"))
+    assert(m.dvs.isEmpty)
     assert(rows(dir) === before)
   }
 
   test("metadata-only column drop preserves the vector; fsck flags a torn one") {
     val dir = tmp()
     CdcPipeline.publish(fixture(1000), dir, Seq("id"), buckets = Some(B))
-    CdcPipeline.deleteWhereMoR(spark, dir, Seq("id"), col("id") < 300).get
+    val (v1, _) = CdcPipeline.deleteWhereMoR(spark, dir, Seq("id"), col("id") < 300).get
     val v = CdcPipeline.dropColumns(spark, dir, Seq("id"), Seq("payload")).get
     assert(CdcPipeline.readSnapshot(spark, dir).get.count() === 700)
-    assert(CdcPipeline.manifest(dir, v).get.meta("dv") === s"v$v")
-    // tear the advertised vector out: fsck must report it
-    StoreFs.deleteRecursive(s"$dir/v$v/_dv")
+    val dvs = CdcPipeline.manifest(dir, v).get.dvs
+    assert(dvs.nonEmpty && dvs.values.forall(_ == Seq(s"v$v1")), "a metadata commit carries the vectors")
+    // tear the advertised vectors out: fsck must report them
+    StoreFs.deleteRecursive(s"$dir/v$v1/_dv")
     val errs = CdcPipeline.fsck(spark, dir)
       .filter(col("check") === "dangling_dv").collect()
     assert(errs.nonEmpty && errs.forall(_.getAs[String]("severity") == "error"))

@@ -30,7 +30,7 @@ class DescribeFilesSpec extends AnyFunSuite {
     // a delta on bucket 2 fragments it; the other buckets carry v0 refs
     val m0 = P.manifest(dir, 0).get
     P.rewriteBuckets(spark, dir, Seq("id"), m0, Set(2))( // v1
-      _.withColumn("v", col("v") + 100L))
+      s => P.KeyedDelta.Content(s.withColumn("v", col("v") + 100L)))
     val f1 = P.describeFiles(spark, dir).get.cache()
     assert(f1.agg(sum("rows")).head().getLong(0) === 4000L,
       "carried + rewritten files still total the table")

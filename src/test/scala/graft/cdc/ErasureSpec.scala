@@ -42,8 +42,8 @@ class ErasureSpec extends AnyFunSuite {
 
     // batch 1: erase users 3 and 7
     val m = CdcPipeline.manifest(queue, CdcPipeline.currentVersion(queue).get).get
-    CdcPipeline.rewriteBuckets(spark, queue, Seq("req_id"), m, allBuckets(m))(
-      _.unionByName(Seq((1L, 3L), (2L, 7L)).toDF("req_id", "user_id")))
+    CdcPipeline.rewriteBuckets(spark, queue, Seq("req_id"), m, allBuckets(m))(s =>
+      CdcPipeline.KeyedDelta.Content(s.unionByName(Seq((1L, 3L), (2L, 7L)).toDF("req_id", "user_id"))))
     val Some((nReq, nRows)) = Erasure.apply(spark, queue, Seq("req_id"), "user_id",
       target, Seq("id"), "user_id")
     assert(nReq === 2 && nRows === 20)
@@ -52,7 +52,7 @@ class ErasureSpec extends AnyFunSuite {
     assert(left.filter(col("user_id").isin(3L, 7L)).count() === 0)
     // the erase was merge-on-read: target's latest version carries all buckets
     val tm = CdcPipeline.manifest(target, CdcPipeline.currentVersion(target).get).get
-    assert(tm.meta.contains("dv") && tm.meta("op") === "delete_mor")
+    assert(tm.dvs.nonEmpty && tm.meta("op") === "delete_mor")
 
     // nothing new: no re-application
     assert(Erasure.apply(spark, queue, Seq("req_id"), "user_id",
@@ -71,8 +71,8 @@ class ErasureSpec extends AnyFunSuite {
     // batch 2 erases only its own subject
     val vQueueBefore = CdcPipeline.currentVersion(queue).get
     val m2 = CdcPipeline.manifest(queue, vQueueBefore).get
-    CdcPipeline.rewriteBuckets(spark, queue, Seq("req_id"), m2, allBuckets(m2))(
-      _.unionByName(Seq((3L, 11L)).toDF("req_id", "user_id")))
+    CdcPipeline.rewriteBuckets(spark, queue, Seq("req_id"), m2, allBuckets(m2))(s =>
+      CdcPipeline.KeyedDelta.Content(s.unionByName(Seq((3L, 11L)).toDF("req_id", "user_id"))))
     val Some((r2, n2)) = Erasure.apply(spark, queue, Seq("req_id"), "user_id",
       target, Seq("id"), "user_id")
     assert(r2 === 1 && n2 === 10)
@@ -108,9 +108,9 @@ class ErasureSpec extends AnyFunSuite {
     // enqueue 10,000 subjects (users 0..9999) in one batch — the
     // scale an isin literal list cannot carry (r9 verdict #5)
     val m = CdcPipeline.manifest(queue, CdcPipeline.currentVersion(queue).get).get
-    CdcPipeline.rewriteBuckets(spark, queue, Seq("req_id"), m, allBuckets(m))(
-      _.unionByName(spark.range(0, 10000).select((col("id") + 1).as("req_id"),
-        col("id").as("user_id"))))
+    CdcPipeline.rewriteBuckets(spark, queue, Seq("req_id"), m, allBuckets(m))(s =>
+      CdcPipeline.KeyedDelta.Content(s.unionByName(spark.range(0, 10000).select((col("id") + 1).as("req_id"),
+        col("id").as("user_id")))))
     val dataFilesBefore =
       CdcPipeline.readSnapshot(spark, target).get.inputFiles.toSet
     val Some((nReq, nRows)) = Erasure.apply(spark, queue, Seq("req_id"), "user_id",
@@ -121,7 +121,7 @@ class ErasureSpec extends AnyFunSuite {
     assert(left.filter(col("user_id") < 10000).count() === 0L)
     // merge-on-read: the DATA files are untouched (DV sidecar only)
     val tm = CdcPipeline.manifest(target, CdcPipeline.currentVersion(target).get).get
-    assert(tm.meta.contains("dv") && tm.meta("op") === "delete_mor")
+    assert(tm.dvs.nonEmpty && tm.meta("op") === "delete_mor")
     // the post-erase read adds the DV sidecar to its scan — the DATA
     // files themselves must be exactly the pre-erase set
     assert(left.inputFiles.filterNot(_.contains("/_dv/")).toSet === dataFilesBefore,

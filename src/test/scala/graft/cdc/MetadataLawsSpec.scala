@@ -175,35 +175,41 @@ class MetadataLawsSpec extends AnyFunSuite {
   private case object Refused extends Law
 
   private val families =
-    Seq("coldefault", "constraint", "colvirt", "prop", "dv", "bloom", "ndv", "stats")
+    Seq("coldefault", "constraint", "colvirt", "prop", "dv", "bloom", "ndv", "stats", "segments")
 
   private val C = Carried; private val P = Pruned; private val D = Dropped
-  //                               dflt constr virt prop dv bloom ndv stats
+  // `update` is merge-on-read: its bucket keeps its vector (plus the
+  // replaced row) and gains a segment, whose rows no sidecar covers.
+  // The fixture holds a multi-segment bucket with a vector, so every
+  // kind runs over one (the segments family: CARRIED = every bucket's
+  // segments resolve to the same dirs; PRUNED = a bucket keeps them,
+  // gains one segment of the op's version, or is rewritten into it).
+  //                               dflt constr virt prop dv bloom ndv stats segs
   private val table: Seq[(String, Seq[Law])] = Seq(
-    "publish"          -> Seq(D, C, C, C, P, P, P, P),
-    "rewriteBuckets"   -> Seq(C, C, C, C, P, P, P, P),
-    "rebucket"         -> Seq(D, C, C, C, P, P, P, P),
-    "delete"           -> Seq(C, C, C, C, P, P, P, P),
-    "update"           -> Seq(C, C, C, C, P, P, P, P),
-    "delete-mor"       -> Seq(C, C, C, C, C, C, P, C),
-    "optimize"         -> Seq(C, C, C, C, P, P, P, P),
-    "zorder"           -> Seq(C, C, C, C, P, P, P, P),
-    "bloom-index"      -> Seq(C, C, C, C, C, C, C, C),
-    "ndv-index"        -> Seq(C, C, C, C, C, C, C, C),
-    "add-column"       -> Seq(C, C, C, C, C, C, C, C),
-    "drop-columns"     -> Seq(C, C, C, C, C, C, C, C),
-    "rename-column"    -> Seq(D, C, C, C, P, P, P, P),
-    "add-constraint"   -> Seq(C, C, C, C, C, C, C, C),
-    "drop-constraint"  -> Seq(C, C, C, C, C, C, C, C),
-    "set-properties"   -> Seq(C, C, C, C, C, C, C, C),
-    "unset-properties" -> Seq(C, C, C, C, C, C, C, C),
-    "add-generated"    -> Seq(C, C, C, C, C, C, C, C),
-    "drop-generated"   -> Seq(C, C, C, C, C, C, C, C),
-    "restore"          -> Seq(C, C, C, C, C, C, C, C),
-    "clone"            -> Seq(Refused, C, C, C, C, C, C, C),
-    "deep-clone"       -> Seq(Refused, C, C, C, C, C, C, C),
-    "create-like"      -> Seq(D, C, C, C, D, P, P, D),
-    "branch-publish"   -> Seq(Refused, C, C, C, C, C, C, C))
+    "publish"          -> Seq(D, C, C, C, P, P, P, P, P),
+    "rewriteBuckets"   -> Seq(C, C, C, C, P, P, P, P, P),
+    "rebucket"         -> Seq(D, C, C, C, P, P, P, P, P),
+    "delete"           -> Seq(C, C, C, C, P, P, P, P, P),
+    "update"           -> Seq(C, C, C, C, C, P, P, P, P),
+    "delete-mor"       -> Seq(C, C, C, C, C, C, P, C, C),
+    "optimize"         -> Seq(C, C, C, C, P, P, P, P, P),
+    "zorder"           -> Seq(C, C, C, C, P, P, P, P, P),
+    "bloom-index"      -> Seq(C, C, C, C, C, C, C, C, C),
+    "ndv-index"        -> Seq(C, C, C, C, C, C, C, C, C),
+    "add-column"       -> Seq(C, C, C, C, C, C, C, C, C),
+    "drop-columns"     -> Seq(C, C, C, C, C, C, C, C, C),
+    "rename-column"    -> Seq(D, C, C, C, P, P, P, P, P),
+    "add-constraint"   -> Seq(C, C, C, C, C, C, C, C, C),
+    "drop-constraint"  -> Seq(C, C, C, C, C, C, C, C, C),
+    "set-properties"   -> Seq(C, C, C, C, C, C, C, C, C),
+    "unset-properties" -> Seq(C, C, C, C, C, C, C, C, C),
+    "add-generated"    -> Seq(C, C, C, C, C, C, C, C, C),
+    "drop-generated"   -> Seq(C, C, C, C, C, C, C, C, C),
+    "restore"          -> Seq(C, C, C, C, C, C, C, C, C),
+    "clone"            -> Seq(Refused, C, C, C, C, C, C, C, C),
+    "deep-clone"       -> Seq(Refused, C, C, C, C, C, C, C, P),
+    "create-like"      -> Seq(D, C, C, C, D, P, P, D, D),
+    "branch-publish"   -> Seq(Refused, C, C, C, C, C, C, C, C))
 
   /** Keys an op edits on purpose (they are its job, not a carry). */
   private val edited: Map[String, Set[String]] = Map(
@@ -232,6 +238,8 @@ class MetadataLawsSpec extends AnyFunSuite {
         (col("id") * 10L).as("payload"), (col("id") % 3).as("extra")),
       dir, Seq("id"), buckets = Some(8), statsCols = Seq("payload", "grp"))
     CdcPipeline.deleteWhereMoR(spark, dir, Seq("id"), col("id") % 50 === 1L)
+    // a merge-on-read update: its bucket holds two segments and a vector
+    CdcPipeline.updateWhere(spark, dir, Seq("id"), col("id") === 10L, Map("payload" -> lit(101L)))
     CdcPipeline.addCheckConstraint(spark, dir, "c1", "payload >= 0")
     CdcPipeline.addCheckConstraint(spark, dir, "c2", "id >= 0")
     CdcPipeline.addGeneratedColumn(dir, "g1", LongType, "payload * 2 + 1")
@@ -257,8 +265,8 @@ class MetadataLawsSpec extends AnyFunSuite {
         CdcPipeline.publish(CdcPipeline.readBuckets(spark, dir, m, m.buckets.keySet), dir, pk)
       case "rewriteBuckets" =>
         val m = head(dir)
-        CdcPipeline.rewriteBuckets(spark, dir, pk, m, Set(m.buckets.keys.min))(
-          _.withColumn("payload", col("payload") + 1L))
+        CdcPipeline.rewriteBuckets(spark, dir, pk, m, Set(m.buckets.keys.min))(s =>
+          CdcPipeline.KeyedDelta.Content(s.withColumn("payload", col("payload") + 1L))).version
       case "rebucket" => CdcPipeline.rebucket(spark, dir, pk, 4)
       case "delete" => CdcPipeline.deleteWhere(spark, dir, pk, col("id") === 5L)
       case "update" =>
@@ -298,10 +306,13 @@ class MetadataLawsSpec extends AnyFunSuite {
   private final class Snap(val dir: String, val m: CdcPipeline.Manifest) {
     def root(ref: String): String = if (ref.contains("/")) ref else s"$dir/$ref"
     def family(prefix: String): Map[String, String] = m.meta.filter(_._1.startsWith(prefix))
-    lazy val dv: Set[(Int, String, Long)] = m.meta.get("dv").fold(Set.empty[(Int, String, Long)]) {
-      ref => spark.read.parquet(s"${root(ref)}/_dv").select("bucket", "file", "pos")
-        .as[(Int, String, Long)].collect().toSet
-    }
+    lazy val dv: Set[(Int, String, Long)] = m.dvs.toSeq.flatMap { case (b, refs) =>
+      refs.flatMap(ref =>
+        StoreFs.readPositions(s"${root(ref)}/_dv/$b.parquet").map { case (f, p) => (b, f, p) })
+    }.toSet
+    /** Each bucket's segments, as the dirs they resolve to. */
+    def segments: Map[Int, Seq[String]] = m.buckets.map { case (b, segs) => b -> segs.map(root) }
+    def own: String = root(s"v${m.readVersion}")
     /** Buckets holding a sidecar of the `payload` index; None = no key. */
     def sidecars(kind: String, ext: String): Option[Set[Int]] =
       m.meta.get(s"$kind.payload").map(ref => m.buckets.keySet.filter(b =>
@@ -328,10 +339,20 @@ class MetadataLawsSpec extends AnyFunSuite {
       case "dv" => law match {
         case Carried => expect(before.dv.nonEmpty && before.dv.subsetOf(after.dv),
           s"${before.dv.size} rows -> ${after.dv.size}")
-        case Pruned => expect(after.dv == before.dv.filter(r => sameRef(r._1)) &&
-          after.m.meta.contains("dv") == after.dv.nonEmpty, s"${after.dv.size} rows")
-        case _ => expect(!after.m.meta.contains("dv"), "dv still advertised")
+        case Pruned => expect(after.dv == before.dv.filter(r => sameRef(r._1)),
+          s"${after.dv.size} rows")
+        case _ => expect(after.m.dvs.isEmpty, "dv still advertised")
       }
+      case "segments" =>
+        val (had, has) = (before.segments, after.segments)
+        law match {
+          case Carried => expect(had.values.exists(_.size > 1) && has == had, s"$had -> $has")
+          case Pruned => expect(has.forall { case (b, segs) =>
+            had.get(b).contains(segs) || segs == Seq(after.own) ||
+              had.get(b).exists(_ :+ after.own == segs)
+          }, s"$had -> $has")
+          case _ => expect(has.isEmpty, s"still $has")
+        }
       case "bloom" | "ndv" =>
         val ext = if (family == "bloom") "bf" else "hll"
         val had = before.sidecars(family, ext)

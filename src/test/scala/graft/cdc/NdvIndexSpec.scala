@@ -46,8 +46,8 @@ class NdvIndexSpec extends AnyFunSuite {
 
     // rewrite buckets {1, 5}: their entries must DROP, the rest carry
     val m = CdcPipeline.manifest(dir, CdcPipeline.currentVersion(dir).get).get
-    CdcPipeline.rewriteBuckets(spark, dir, Seq("id"), m, Set(1, 5))(
-      _.withColumn("k", col("k") + 5000L))
+    CdcPipeline.rewriteBuckets(spark, dir, Seq("id"), m, Set(1, 5))(s =>
+      CdcPipeline.KeyedDelta.Content(s.withColumn("k", col("k") + 5000L)))
 
     val degraded = CdcPipeline.ndvStats(spark, dir, "k").get
     assert(degraded.coveredBuckets === 6 && degraded.totalBuckets === 8,
@@ -70,8 +70,8 @@ class NdvIndexSpec extends AnyFunSuite {
     CdcPipeline.publish(fixture(20000), dir, Seq("id"), buckets = Some(8))
     CdcPipeline.buildNdvIndex(spark, dir, Seq("k"))
     val m = CdcPipeline.manifest(dir, CdcPipeline.currentVersion(dir).get).get
-    CdcPipeline.rewriteBuckets(spark, dir, Seq("id"), m, Set(0, 2, 3, 6))(
-      _.withColumn("k", col("k") + 9000L))
+    CdcPipeline.rewriteBuckets(spark, dir, Seq("id"), m, Set(0, 2, 3, 6))(s =>
+      CdcPipeline.KeyedDelta.Content(s.withColumn("k", col("k") + 9000L)))
     assert(CdcPipeline.ndvStats(spark, dir, "k").get.coveredBuckets === 4)
 
     // 4/8 = 50% missing > 30% policy → heal fires

@@ -37,8 +37,8 @@ class RefsSpec extends AnyFunSuite {
     val rewrites = Seq(Set(0, 1), Set(2, 3), Set(1), Set(1))
     rewrites.zipWithIndex.foreach { case (bs, i) =>
       val m = CdcPipeline.manifest(src, CdcPipeline.currentVersion(src).get).get
-      CdcPipeline.rewriteBuckets(spark, src, Seq("id"), m, bs)(
-        _.withColumn("v", col("v") + (i + 1) * 100000L))
+      CdcPipeline.rewriteBuckets(spark, src, Seq("id"), m, bs)(s =>
+        CdcPipeline.KeyedDelta.Content(s.withColumn("v", col("v") + (i + 1) * 100000L)))
     }
     assert(CdcPipeline.currentVersion(src) === Some(4L))
     // vacuum keeps only the last 2 versions — plus the tagged v0 and
@@ -70,8 +70,8 @@ class RefsSpec extends AnyFunSuite {
 
     // WRITE: rewrite bucket 3 on the branch only
     val m0 = CdcPipeline.manifest(br, 0).get
-    CdcPipeline.rewriteBuckets(spark, br, Seq("id"), m0, Set(3))(
-      _.withColumn("v", col("v") + 900000L))
+    CdcPipeline.rewriteBuckets(spark, br, Seq("id"), m0, Set(3))(s =>
+      CdcPipeline.KeyedDelta.Content(s.withColumn("v", col("v") + 900000L)))
     assert(rows(src) === before, "branch writes must not leak upstream")
 
     // AUDIT: the branch is a full store — fsck is clean
@@ -123,7 +123,7 @@ class RefsSpec extends AnyFunSuite {
     // clean writes land; source unaffected throughout
     CdcPipeline.rewriteBuckets(spark, dst, Seq("id"), CdcPipeline.manifest(dst, 0).get,
       Set(0, 1, 2, 3, 4, 5, 6, 7))(
-      _ => spark.range(0, 4).select(col("id"), (col("id") * 10L).as("v")))
+      _ => CdcPipeline.KeyedDelta.Content(spark.range(0, 4).select(col("id"), (col("id") * 10L).as("v"))))
     assert(CdcPipeline.readSnapshot(spark, dst).get.count() === 4L)
     assert(CdcPipeline.readSnapshot(spark, src).get.count() === 1000L)
     // refuses to clobber
@@ -137,8 +137,8 @@ class RefsSpec extends AnyFunSuite {
     assert(CdcPipeline.createBranch(src, br, "stale") === Some(0L))
     // a concurrent upstream commit lands after the fork
     val m = CdcPipeline.manifest(src, 0).get
-    CdcPipeline.rewriteBuckets(spark, src, Seq("id"), m, Set(0))(
-      _.withColumn("v", col("v") + 111L))
+    CdcPipeline.rewriteBuckets(spark, src, Seq("id"), m, Set(0))(s =>
+      CdcPipeline.KeyedDelta.Content(s.withColumn("v", col("v") + 111L)))
     intercept[CdcPipeline.ConcurrentWriteException] {
       CdcPipeline.publishBranch(br)
     }

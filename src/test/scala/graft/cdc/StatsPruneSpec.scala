@@ -70,7 +70,7 @@ class StatsPruneSpec extends AnyFunSuite {
       .filter(pmod(hash(col("id")), lit(16)) === 5)
       .withColumn("v", col("v") + 94000L)
     CdcPipeline.rewriteBuckets(spark, dir, Seq("id"), m0, Set(5),
-      statsCols = Seq("v"))(_ => newB5)
+      statsCols = Seq("v"))(_ => CdcPipeline.KeyedDelta.Content(newB5))
 
     // old bucket-5 range now matches nothing and scans nothing
     val ghost = CdcPipeline.readRange(spark, dir, "v", Some(5000L), Some(5999L)).get
@@ -104,7 +104,7 @@ class StatsPruneSpec extends AnyFunSuite {
     // a delta WITH stats refreshes only its bucket; the rest stay unknown
     val m0 = CdcPipeline.manifest(dir, 0).get
     CdcPipeline.rewriteBuckets(spark, dir, Seq("id"), m0, Set(2),
-      statsCols = Seq("v"))(identity)
+      statsCols = Seq("v"))(CdcPipeline.KeyedDelta.Content(_))
     val partial = CdcPipeline.readRange(spark, dir, "v", Some(6000L), Some(6999L)).get
     val touched = touchedBucketDirs(partial)
     assert(!touched.contains(2), "bucket 2 has fresh stats and is out of range")

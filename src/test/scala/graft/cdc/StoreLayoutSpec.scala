@@ -19,7 +19,10 @@ import scala.jdk.CollectionConverters._
   *  - a touched-bucket rewrite goes through `rewriteBuckets`, and a
   *    bucket set is aggregated only by `bucketSet` (no
   *    `distinct().collect()`, and the `cdc_replicate` gate's expected
-  *    rewrite is a `bucketSet` too).
+  *    rewrite is a `bucketSet` too);
+  *  - a bucket entry (its segment list) and a bucket's deletion-vector
+  *    ref are decoded only by the manifest codec and the store-layout
+  *    functions.
   *
   * When a bucket entry comes to name something else, or a keyed write
   * comes to land differently, the change is then made in those
@@ -132,6 +135,29 @@ class StoreLayoutSpec extends AnyFunSuite {
     report("publishDelta", hits("""\bpublishDelta\b""".r).map(_._1))
     report("distinct().collect() outside bucketSet",
       outside("""distinct\(\)\s*\.collect\(""".r, Set("bucketSet")))
+  }
+
+  test("bucket entries and deletion-vector refs are decoded only by the codec and the layout functions") {
+    // reading a segment list or a vector ref out of a manifest; ids
+    // alone (`keySet`, `contains`, `size`, `isEmpty`) are not decoding
+    val decode = ("""\.buckets\s*(\(|\.\s*(values|get|getOrElse|apply|toSeq|toList|foreach|map|""" +
+      """flatMap|collect|count|filter|exists|forall|iterator|head|find|foldLeft)\b)|""" +
+      """\.dvs\s*(\(|\.\s*(values|get|getOrElse|apply|toSeq|toList|foreach|map|flatMap|""" +
+      """collect|count|filter|exists|forall|iterator|head|find|foldLeft)\b)""").r
+    // the enclosing member of the object, not a helper nested in it
+    val memberRe = "(?m)^  (?:(?:private|final|override)(?:\\[\\w+\\])? )*def\\s+(\\w+)".r
+    val allowed = Set("manifest", "writeManifest", "commit", "manifestBuckets", "segmentDirs",
+      "manifestRefs", "bucketsWrittenAt", "dvFiles", "dvPositions", "scanSegments",
+      "changedBuckets", "publishBranch")
+    val found = sources.flatMap { case (file, text) =>
+      val members = memberRe.findAllMatchIn(text).toSeq
+      decode.findAllMatchIn(text).toSeq.flatMap { m =>
+        val fn = members.takeWhile(_.start < m.start).lastOption.fold("<object>")(_.group(1))
+        Option.when(!allowed(fn))(
+          s"$file:${text.substring(0, m.start).count(_ == '\n') + 1} (in $fn)")
+      }
+    }
+    report("segment list or vector ref decoded outside the layout functions", found)
   }
 
   test("the cdc_replicate gate sizes its expected rewrite with bucketSet") {

@@ -30,8 +30,8 @@ class SymlinkManifestSpec extends AnyFunSuite {
       dir, Seq("id"), buckets = Some(8))
     // delta publish so some buckets carry by cross-version reference
     val m0 = CdcPipeline.manifest(dir, 0L).get
-    CdcPipeline.rewriteBuckets(spark, dir, Seq("id"), m0, Set(1, 2))(
-      _.withColumn("v", col("v") + 1000L))
+    CdcPipeline.rewriteBuckets(spark, dir, Seq("id"), m0, Set(1, 2))(s =>
+      CdcPipeline.KeyedDelta.Content(s.withColumn("v", col("v") + 1000L)))
 
     val files = CdcPipeline.generateSymlinkManifest(dir).get
     val listed = StoreFs.readString(s"$dir/_symlink_format_manifest/manifest")

@@ -116,6 +116,29 @@ class TouchedBucketsSpec extends AnyFunSuite {
     assert(hist.filter(col(Scd2.To).isNotNull).count() > 0, "closed slices are looked up too")
   }
 
+  test("deletion vectors cost no job: key reads match a vector-free store, the diff starts none") {
+    val data = spark.range(0, 400).select(col("id"), (col("id") * 10).as("v"))
+    val withDv = tmp(); val plain = tmp()
+    CdcPipeline.publish(data, withDv, Seq("id"), buckets = Some(8))
+    CdcPipeline.deleteWhereMoR(spark, withDv, Seq("id"), col("id") % 5 === 0)
+    CdcPipeline.publish(data.filter(col("id") % 5 =!= 0), plain, Seq("id"), buckets = Some(8))
+    assert(CdcPipeline.currentManifest(withDv).get.dvs.nonEmpty)
+    assert(CdcPipeline.currentManifest(plain).get.dvs.isEmpty)
+    val keys = Seq(3L, 5L, 77L, 1000L)
+    def lookup(dir: String) = jobsOf(
+      CdcPipeline.readKeys(spark, dir, Seq("id"), keys.toDF("id")).get.collect())
+    val (a, jobsA) = lookup(withDv)
+    val (b, jobsB) = lookup(plain)
+    assert(a.map(_.toSeq).toSet === b.map(_.toSeq).toSet)
+    assert(a.map(_.getLong(0)).toSet === Set(3L, 77L))
+    assert(jobsA.size === jobsB.size, s"with vectors: $jobsA; without: $jobsB")
+    // from a version without vectors to one with: the diff finds its
+    // buckets from the two manifests
+    val (diff, diffJobs) = jobsOf(CdcPipeline.snapshotDiff(spark, withDv, 0L, 1L, Seq("id")).get)
+    assert(diffJobs.isEmpty, s"snapshotDiff started jobs before its scans: $diffJobs")
+    assert(diff.count() === 80L)
+  }
+
   test("readKeys returns the full-scan semi join for int, long, string and two-column keys") {
     val base = spark.range(0, 300)
     val cases: Seq[(String, Seq[String], DataFrame, DataFrame)] = Seq(
@@ -180,16 +203,16 @@ class TouchedBucketsSpec extends AnyFunSuite {
     val before = bucket5
     val stray = spark.range(0, 400).filter(bucket === 5).head().longValue
     val err = intercept[IllegalStateException] {
-      CdcPipeline.rewriteBuckets(spark, dir, Seq("id"), manifestAt(dir), Set(2))(
-        _.unionByName(Seq((stray, 1L)).toDF("id", "v")))
+      CdcPipeline.rewriteBuckets(spark, dir, Seq("id"), manifestAt(dir), Set(2))(s =>
+        CdcPipeline.KeyedDelta.Content(s.unionByName(Seq((stray, 1L)).toDF("id", "v"))))
     }
     assert(err.getMessage.contains("outside the touched set"))
     assert(CdcPipeline.currentVersion(dir) === Some(0L))
     assert(!StoreFs.exists(s"$dir/v1"), "the refused commit leaves no version dir")
     assert(before.size > 1 && bucket5 === before, "bucket 5 keeps every stored row")
     // the claim was released: the same write inside its set commits v1
-    assert(CdcPipeline.rewriteBuckets(spark, dir, Seq("id"), manifestAt(dir), Set(2))(
-      _.withColumn("v", lit(1L))) === 1L)
+    assert(CdcPipeline.rewriteBuckets(spark, dir, Seq("id"), manifestAt(dir), Set(2))(s =>
+      CdcPipeline.KeyedDelta.Content(s.withColumn("v", lit(1L)))).version === 1L)
     assert(bucket5 === before)
   }
 

@@ -258,6 +258,50 @@ class TxnSpec extends AnyFunSuite {
     assert(fin.select("tag").distinct.collect().map(_.getString(0)).toSeq === Seq("b"))
   }
 
+  test("a merge-on-read merge racing a vector fold: one commits, the other refuses, no row is lost") {
+    import spark.implicits._
+    val cfgOf = (dir: String) => CdcTableConfig(cdcTable = "t", sourcePath = "t", targetDb = "g",
+      targetTable = "race", targetPath = dir, pk = Seq("id"), fieldSpecs = Nil,
+      passthrough = Seq("tag"), numBuckets = Some(4))
+    def chg(ups: Seq[Long], tag: String, dels: Seq[Long]) =
+      (ups.map(id => (id, Option(tag), "u")) ++ dels.map(id => (id, Option.empty[String], "d")))
+        .toDF("id", "tag", CdcEnvelope.OpCol)
+    def merge(dir: String, c: org.apache.spark.sql.DataFrame) =
+      CdcPipeline.mergeAndPublish(spark, cfgOf(dir), c, CdcPipeline.summarize(cfgOf(dir), c))
+    def fold(dir: String) = CdcPipeline.foldDv(spark, dir, Seq("id"))
+    def rows(dir: String): Map[Long, String] =
+      CdcPipeline.readSnapshot(spark, dir).get.select("id", "tag").as[(Long, String)].collect().toMap
+    // a store with vectors: ids 0..199 tagged "base", then a merge-on-read merge
+    def store(): String = {
+      val dir = tmp()
+      CdcPipeline.publish(fx(200, "base"), dir, Seq("id"), buckets = Some(4))
+      merge(dir, chg(Seq(1L, 2L, 3L), "m1", Seq(4L)))
+      assert(CdcPipeline.currentManifest(dir).get.dvs.nonEmpty)
+      dir
+    }
+    val m1 = (0L until 200L).map(_ -> "base").toMap ++ Seq(1L, 2L, 3L).map(_ -> "m1") - 4L
+    val m2 = m1 ++ Seq(5L, 300L).map(_ -> "m2") - 6L
+    val c2 = chg(Seq(5L, 300L), "m2", Seq(6L))
+
+    // the fold lands while the merge takes its claim: the merge refuses
+    val a = store()
+    intercept[CdcPipeline.ConcurrentWriteException](race(fold(a))(merge(a, c2)))
+    assert(CdcPipeline.currentManifest(a).get.dvs.isEmpty, "the fold stands")
+    assert(rows(a) === m1)
+    CdcPipeline.retryOnConflict(maxRetries = 3, backoffMs = 10L)(merge(a, c2))
+    assert(rows(a) === m2)
+
+    // the merge lands while the fold takes its claim: the fold refuses
+    val b = store()
+    intercept[CdcPipeline.ConcurrentWriteException](race(merge(b, c2))(fold(b)))
+    assert(rows(b) === m2)
+    CdcPipeline.retryOnConflict(maxRetries = 3, backoffMs = 10L)(fold(b))
+    assert(CdcPipeline.currentManifest(b).get.dvs.isEmpty)
+    assert(rows(b) === m2)
+    Seq(a, b).foreach(d =>
+      assert(CdcPipeline.fsck(spark, d).filter(col("severity") === "error").count() === 0L))
+  }
+
   test("sweep drops only aged completed pairs") {
     val (a, coord) = (tmp(), tmp())
     CdcPipeline.publish(fx(20, "a0"), a, Seq("id"), buckets = Some(2))

@@ -424,8 +424,9 @@ class CdcStreamSpec extends AnyFunSuite {
 
   test("micro-batch merge broadcasts the delta keys instead of shuffling the target") {
     // ADVICE r2: the streaming path must pass the delta count so a
-    // small micro-batch takes the broadcast anti-join, leaving the
-    // target un-shuffled. mergeBatchToTarget IS the foreachBatch body.
+    // small micro-batch broadcasts its keys into the merge's matched-keys
+    // pass, leaving the target un-shuffled. mergeBatchToTarget IS the
+    // foreachBatch body.
     val mCfg = cfg.copy(targetPath = Files.createTempDirectory("graft-tgt-mb").toString)
     assert(CdcStream.mergeBatchToTarget(toDf(batch1), 0L, mCfg))
 
@@ -440,10 +441,11 @@ class CdcStreamSpec extends AnyFunSuite {
     spark.listenerManager.register(listener)
     try {
       assert(CdcStream.mergeBatchToTarget(toDf(batch2), 1L, mCfg))
-      // listener delivery is async — poll for the merge's write plan
+      // listener delivery is async — poll for the merge's matched-keys
+      // plan (its key set carries the upsert marker column)
       val deadline = System.currentTimeMillis() + 30000
       def mergePlan: Option[String] =
-        plans.synchronized { plans.find(_.contains("LeftAnti")).map(identity) }
+        plans.synchronized { plans.find(_.contains("__graft_up")).map(identity) }
       while (mergePlan.isEmpty && System.currentTimeMillis() < deadline) Thread.sleep(100)
       val p = mergePlan.getOrElse(fail("no merge plan captured within 30s"))
       assert(p.contains("BroadcastHashJoin"), p)
