@@ -470,6 +470,32 @@ object CdcPipeline {
   private[graft] def bucketSet(df: DataFrame, bucket: Column): Set[Int] =
     df.groupBy(lit(true)).agg(collect_set(bucket)).collect().flatMap(_.getSeq[Int](1)).toSet
 
+  /** A keyed batch's row count and PK-hash bucket set. */
+  private[graft] final case class KeyedBatch(rows: Long, buckets: Set[Int])
+
+  /** [[KeyedBatch]] of `batch`, refusing a batch that repeats a PK: two
+    * rows for one key have no defined result (the ANSI MERGE rule), and
+    * a keyed write would store both. One aggregation — rows per key,
+    * then their sum, the most repeated key and the keys' buckets — so
+    * the check costs no job beyond the count and the bucket set the
+    * write needs anyway. Every caller that hands [[rewriteBuckets]] rows
+    * it did not compact itself (SQL INSERT, COPY INTO, the identity
+    * merge) sizes its batch here; `what` names the batch in the error.
+    */
+  private[graft] def keyedBatch(batch: DataFrame, pkCols: Seq[String], numBuckets: Int,
+      what: String): KeyedBatch = {
+    val perKey = batch.groupBy(pkCols.map(col): _*).agg(count(lit(1)).as("n"))
+    perKey.groupBy(lit(true))
+      .agg(sum(col("n")), max(col("n")), max_by(struct(pkCols.map(col): _*), col("n")),
+        collect_set(bucketExpr(pkCols, numBuckets)))
+      .collect().headOption.fold(KeyedBatch(0L, Set.empty)) { r =>
+        require(r.getLong(2) <= 1L,
+          s"$what has duplicate keys on (${pkCols.mkString(", ")}): " +
+            s"${r.getStruct(3).toSeq.mkString(", ")} — compact it first (one row per key)")
+        KeyedBatch(r.getLong(1), r.getSeq[Int](4).toSet)
+      }
+  }
+
   private def swapPointer(targetDir: String, version: Long, batchId: Long): Unit = {
     val tmp = s"$targetDir/.$VersionFile.tmp"
     StoreFs.writeString(tmp, s"$version $batchId")
@@ -975,29 +1001,32 @@ object CdcPipeline {
   /** Read the named buckets through the manifest (all buckets =
     * the full snapshot). The explicit schema keeps carried-over
     * pre-evolution files consistent (missing columns → NULL) and
-    * skips footer merging.
+    * skips footer merging. Every segment of each bucket is scanned,
+    * and the buckets' deletion vectors are applied inside the scan:
+    * the driver reads them (no Spark job) into a per-file position
+    * filter ([[LivePosition]]) that ships with the tasks, so every
+    * reader path sees merge-on-read deletes without knowing they
+    * exist, and a read of a store with vectors starts the same jobs as
+    * a read of one without.
     */
   private[graft] def readBuckets(spark: SparkSession, targetDir: String, m: Manifest,
       buckets: Set[Int]): DataFrame =
-    readBucketsWithPos(spark, targetDir, m, buckets).drop(DvFileCol, DvPosCol)
+    cachedScan(spark, targetDir, m, buckets, positions = false)
 
   /** [[readBuckets]] plus the file-position identity of every row
-    * ([[DvFileCol]], [[DvPosCol]] — data-file key + row index). Every
-    * segment of each bucket is scanned, and the buckets' deletion
-    * vectors are applied inside the scan: the driver reads them (no
-    * Spark job) into a per-file position filter that ships with the
-    * tasks, so every reader path sees merge-on-read deletes without
-    * knowing they exist, and a read of a store with vectors starts the
-    * same jobs as a read of one without. When the chosen buckets have
-    * no vector the position columns are unreferenced after
-    * [[readBuckets]]' drop, so Catalyst never materializes `_metadata`.
+    * ([[DvFileCol]], [[DvPosCol]] — data-file key + row index).
     */
   private[graft] def readBucketsWithPos(spark: SparkSession, targetDir: String,
-      m: Manifest, buckets: Set[Int]): DataFrame = {
-    def scan = scanSegments(spark, targetDir, m, buckets, dvPositions(targetDir, m, buckets))
+      m: Manifest, buckets: Set[Int]): DataFrame =
+    cachedScan(spark, targetDir, m, buckets, positions = true)
+
+  private def cachedScan(spark: SparkSession, targetDir: String, m: Manifest,
+      buckets: Set[Int], positions: Boolean): DataFrame = {
+    def scan = scanSegments(spark, targetDir, m, buckets, dvPositions(targetDir, m, buckets),
+      positions)
     if (m.chain.isEmpty) scan
     else {
-      val key = (spark, targetDir, m.chain, buckets)
+      val key = (spark, targetDir, m.chain, buckets, positions)
       scans.synchronized(Option(scans.get(key))).getOrElse {
         val df = scan
         scans.synchronized(scans.put(key, df))
@@ -1007,29 +1036,34 @@ object CdcPipeline {
   }
 
   /** Resolved scans of committed versions, by (session, store, the
-    * manifest's chain hash, buckets): a committed version's segments
-    * and vectors never change, so a repeated read of one (the serving
-    * path's common case) skips the file listing and the vector reads.
-    * Bounded; the least recently used scan goes first.
+    * manifest's chain hash, buckets, with positions): a committed
+    * version's segments and vectors never change, so a repeated read
+    * of one (the serving path's common case) skips the file listing
+    * and the vector reads. Bounded; the least recently used scan goes
+    * first.
     */
-  private val scans = new java.util.LinkedHashMap[(SparkSession, String, String, Set[Int]), DataFrame](
-      64, 0.75f, true) {
-    override def removeEldestEntry(
-        e: java.util.Map.Entry[(SparkSession, String, String, Set[Int]), DataFrame]): Boolean =
+  private val scans = new java.util.LinkedHashMap[ScanKey, DataFrame](64, 0.75f, true) {
+    override def removeEldestEntry(e: java.util.Map.Entry[ScanKey, DataFrame]): Boolean =
       size > 256
   }
+  private type ScanKey = (SparkSession, String, String, Set[Int], Boolean)
 
   /** Every segment of `buckets` in `m`, with the rows at `deleted`
-    * positions (file key → sorted row indexes) filtered out.
+    * positions (file key → sorted row indexes) filtered out, and with
+    * [[DvFileCol]] and [[DvPosCol]] when `positions`. A scan asks for
+    * `_metadata` only when it filters or returns positions: once a
+    * DataFrame names `_metadata`, Spark materializes every field of
+    * it for every row, even when nothing downstream reads them.
     */
   private def scanSegments(spark: SparkSession, targetDir: String, m: Manifest,
-      buckets: Set[Int], deleted: Map[String, Array[Long]]): DataFrame = {
+      buckets: Set[Int], deleted: Map[String, Array[Long]], positions: Boolean): DataFrame = {
     val chosen = buckets.toSeq.sorted.flatMap(b => m.buckets.getOrElse(b, Nil).map(b -> _))
-    if (chosen.isEmpty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], m.schema)
-        .withColumn(DvFileCol, lit(null).cast(StringType))
+    if (chosen.isEmpty) {
+      val empty = spark.createDataFrame(spark.sparkContext.emptyRDD[Row], m.schema)
+      if (!positions) empty
+      else empty.withColumn(DvFileCol, lit(null).cast(StringType))
         .withColumn(DvPosCol, lit(null).cast(LongType))
-    else {
+    } else {
       // initial-default fill (A57): group the chosen segments by WHICH
       // declared defaults apply to them (ref version < declaration
       // version ⇒ the file predates the column and its NULL means
@@ -1043,24 +1077,22 @@ object CdcPipeline {
         else refVersion(ver).toSeq.flatMap(rv =>
           defaults.collect { case (c, declV, d) if rv < declV => (c, d) })
       val types = m.schema.fields.map(f => f.name -> f.dataType).toMap
-      val base = chosen.groupBy { case (_, ver) => applicable(ver) }.toSeq
+      chosen.groupBy { case (_, ver) => applicable(ver) }.toSeq
         .sortBy(_._1.mkString(","))
         .map { case (fills, grp) =>
-          val scan = spark.read.schema(m.schema)
+          val files = spark.read.schema(m.schema)
             .parquet(grp.map { case (b, ver) => bucketDir(versionRoot(targetDir, ver), b) }: _*)
-            .select(col("*"),
+          val live = if (deleted.isEmpty) files
+            else files.filter(LivePosition(col("_metadata.file_path"), col("_metadata.row_index"),
+              deleted))
+          val scan = if (!positions) live
+            else live.select(col("*"),
               substring_index(col("_metadata.file_path"), "/", -2).as(DvFileCol),
               col("_metadata.row_index").as(DvPosCol))
           fills.foldLeft(scan) { case (df, (c, d)) =>
             df.withColumn(c, coalesce(col(c), lit(d).cast(types(c))))
           }
         }.reduce(_ unionByName _)
-      if (deleted.isEmpty) base
-      else {
-        val live = udf((file: String, pos: Long) =>
-          deleted.get(file).forall(ps => java.util.Arrays.binarySearch(ps, pos) < 0))
-        base.filter(live(col(DvFileCol), col(DvPosCol)))
-      }
     }
   }
 
@@ -1738,8 +1770,9 @@ object CdcPipeline {
     */
   private[graft] sealed trait KeyedDelta
   private[graft] object KeyedDelta {
-    /** `rows` replace the stored rows of their PKs, and the stored rows
-      * of the PKs in `deleted` (PK columns only) go.
+    /** `rows`, one per PK (see [[keyedBatch]]), replace the stored rows
+      * of their PKs, and the stored rows of the PKs in `deleted` (PK
+      * columns only) go.
       */
     final case class Upserts(rows: DataFrame, deleted: Option[DataFrame] = None)
       extends KeyedDelta
@@ -1749,8 +1782,8 @@ object CdcPipeline {
       * the positions.
       */
     final case class Replace(rows: DataFrame, keys: DataFrame) extends KeyedDelta
-    /** `rows` carry only PKs the store does not hold (the caller has
-      * checked), so no stored row goes.
+    /** `rows` carry only PKs the store does not hold, each once (the
+      * caller has checked), so no stored row goes.
       */
     final case class Inserts(rows: DataFrame) extends KeyedDelta
     /** `rows` are the touched buckets' whole new content: each touched
@@ -1784,10 +1817,12 @@ object CdcPipeline {
     * stored rows minus the replaced ones, plus its new rows; the vector
     * goes) when it already holds [[MaxSegments]] segments or its vector
     * would pass [[MaxDvPct]] percent of its footer rows; every touched
-    * bucket is when `deltaRows` (the change set's size, when the caller
-    * knows it) passes `SnapshotMerge.LargeDeltaRows`, where the
-    * positions would not fit the driver, or when `f` returns
-    * [[KeyedDelta.Content]].
+    * bucket is when the change set's size passes
+    * `SnapshotMerge.LargeDeltaRows`, where the positions would not fit
+    * the driver, or when `f` returns [[KeyedDelta.Content]]. The size is
+    * the caller's `deltaRows`, or, when it passes none, the delta's keys
+    * counted first (`store.merge: delta size`) — the positions are
+    * collected only for a delta known to be small.
     *
     * `f` runs before the version claim, so its eager work (a count, a
     * check, a side write) precedes the commit. The commit refuses a
@@ -1803,11 +1838,25 @@ object CdcPipeline {
       (f: DataFrame => KeyedDelta): KeyedWrite = {
     val oldDv = touched.toSeq.map(b => b -> dvPositions(targetDir, m, Set(b))).toMap
     val allDv = oldDv.values.foldLeft(Map.empty[String, Array[Long]])(_ ++ _)
-    val delta = f(scanSegments(spark, targetDir, m, touched, allDv).drop(DvFileCol, DvPosCol))
+    val delta = f(scanSegments(spark, targetDir, m, touched, allDv, positions = false))
     validatePk(targetDir, pkCols)
-    val large = deltaRows.exists(_ > SnapshotMerge.LargeDeltaRows)
     def keysOf(df: DataFrame, up: Boolean): DataFrame =
       df.select(pkCols.map(col) :+ lit(up).as(UpCol): _*)
+    // the PKs whose stored rows go: the new rows' (marked up) and the
+    // deleted ones
+    val goneKeys: Option[DataFrame] = delta match {
+      case KeyedDelta.Upserts(rows, deleted) =>
+        val ups = keysOf(alignTypes(rows, m.schema), up = true)
+        Some(deleted.fold(ups)(d => ups.unionByName(keysOf(d, up = false))))
+      case KeyedDelta.Replace(_, keys) => Some(keysOf(keys, up = false))
+      case _ => None
+    }
+    // the positions pass collects to the driver, so a delta whose size
+    // the caller does not know is counted first: past LargeDeltaRows it
+    // takes the copy-on-write path, which runs on the executors
+    val size = deltaRows.orElse(goneKeys.map(k =>
+      labeled(spark, "store.merge: delta size")(k.count())))
+    val large = size.exists(_ > SnapshotMerge.LargeDeltaRows)
     def dvRows(b: Int): Long = oldDv(b).values.map(_.length.toLong).sum
     // the fold policy, for bucket `b` losing `lost` more rows
     def mustFold(b: Int, lost: Long): Boolean =
@@ -1819,8 +1868,8 @@ object CdcPipeline {
     // `rows`' columns: the content of buckets rewritten as one segment
     def folded(rows: DataFrame, buckets: Set[Int], deleted: Map[String, Array[Long]]) =
       if (buckets.isEmpty) rows
-      else rows.unionByName(scanSegments(spark, targetDir, m, buckets, deleted)
-        .drop(DvFileCol, DvPosCol), allowMissingColumns = true).select(rows.columns.map(col): _*)
+      else rows.unionByName(scanSegments(spark, targetDir, m, buckets, deleted, positions = false),
+        allowMissingColumns = true).select(rows.columns.map(col): _*)
     type Lost = Map[Int, Map[String, Array[Long]]]
     // the pass that finds the positions of the stored rows whose PKs
     // `keys` names, by bucket, and how many of them a new row replaces.
@@ -1828,10 +1877,9 @@ object CdcPipeline {
     // another thread resolves no function: a caller inside SQL analysis
     // (a table function) holds the session catalog's lock.
     def positions(keys: DataFrame): () => (Lost, Long) = {
-      val hinted = if (deltaRows.isDefined) broadcast(keys) else keys.hint("shuffle_hash")
-      val pass = scanSegments(spark, targetDir, m, touched, allDv)
+      val pass = scanSegments(spark, targetDir, m, touched, allDv, positions = true)
         .select(pkCols.map(col) ++ Seq(fileBucket.as("_b"), col(DvFileCol), col(DvPosCol)): _*)
-        .join(hinted, pkCols)
+        .join(broadcast(keys), pkCols)
         .select(col("_b"), col(DvFileCol), col(DvPosCol), col(UpCol))
       pass.queryExecution.assertAnalyzed()
       () => {
@@ -1849,7 +1897,7 @@ object CdcPipeline {
     // replaced rows in the large-delta path too
     def upsert(rows: DataFrame, keys: DataFrame, counted: Boolean): Plan =
       if (large) {
-        val stored = scanSegments(spark, targetDir, m, touched, allDv).drop(DvFileCol, DvPosCol)
+        val stored = scanSegments(spark, targetDir, m, touched, allDv, positions = false)
         val replaced = if (!counted) 0L else labeled(spark, "store.merge: matched keys") {
           stored.select(pkCols.map(col): _*)
             .join(rows.select(pkCols.map(col): _*).hint("shuffle_hash"), pkCols, "left_semi")
@@ -1859,7 +1907,7 @@ object CdcPipeline {
           pkCols, "left_anti")
         (rows.unionByName(kept, allowMissingColumns = true).select(rows.columns.map(col): _*),
           touched, (Map.empty, replaced), None)
-      } else if (deltaRows.exists(n => touched.forall(b => !mustFold(b, n)))) {
+      } else if (size.exists(n => touched.forall(b => !mustFold(b, n)))) {
         // no bucket folds even if every change lands in it: the rows
         // are the whole write, and the positions pass runs beside it
         (rows, Set.empty, (Map.empty, 0L), Some(positions(keys)))
@@ -1875,12 +1923,10 @@ object CdcPipeline {
         val rows = alignTypes(rows0, m.schema)
         val fold = touched.filter(mustFold(_, 0L))
         (folded(rows, fold, allDv), fold, (Map.empty, 0L), None)
-      case KeyedDelta.Upserts(rows0, deleted) =>
-        val rows = alignTypes(rows0, m.schema)
-        upsert(rows, deleted.fold(keysOf(rows, up = true))(d =>
-          keysOf(rows, up = true).unionByName(keysOf(d, up = false))), counted = true)
-      case KeyedDelta.Replace(rows, keys) =>
-        upsert(alignTypes(rows, m.schema), keysOf(keys, up = false), counted = false)
+      case KeyedDelta.Upserts(rows, _) =>
+        upsert(alignTypes(rows, m.schema), goneKeys.get, counted = true)
+      case KeyedDelta.Replace(rows, _) =>
+        upsert(alignTypes(rows, m.schema), goneKeys.get, counted = false)
     }
     var (lost, replaced) = known
     val version = commit(targetDir, m.readVersion, Some(m), op, swapNow = swapNow,
@@ -1888,7 +1934,7 @@ object CdcPipeline {
       val dir = s"$targetDir/v$next"
       def write(): Unit = labeled(spark, "store.rewriteBuckets: bucket write") {
         writeBuckets(content, pkCols, m.numBuckets, dir,
-          oneTask = fold.isEmpty && deltaRows.isDefined && !large)
+          oneTask = fold.isEmpty && size.isDefined && !large)
       }
       def writeDvs(): Unit = lost.foreach { case (b, ps) => writeDv(dir, b, ps) }
       findBeside match {
@@ -1925,20 +1971,10 @@ object CdcPipeline {
   }
 
   /** Footer rows of bucket `b`'s segments in `m`: the fold check's
-    * denominator. A committed segment dir is written once, so its count
-    * is read once per process and kept (bounded); a count gone stale
-    * (the dir deleted and written again) could only move a fold.
+    * denominator.
     */
   private def segmentRows(storeDir: String, m: Manifest, b: Int): Long =
-    segmentDirs(storeDir, m, b).map { d =>
-      Option(segmentRowCounts.get(d)).map(_.longValue).getOrElse {
-        val n = StoreFs.footerRowsBytes(d).fold(0L)(_._1)
-        if (segmentRowCounts.size < 100000) segmentRowCounts.put(d, n)
-        n
-      }
-    }.sum
-
-  private val segmentRowCounts = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
+    segmentDirs(storeDir, m, b).map(d => StoreFs.footerRowsBytes(d).fold(0L)(_._1)).sum
 
   /** `rows` with each column the stored `schema` also has cast to its
     * stored type, so a new segment reads like the segments beside it.
@@ -3046,7 +3082,8 @@ object CdcPipeline {
       // what is on disk now, not a resolved scan of this version: the
       // audit looks for files that should not be there
       val all = m.buckets.keySet
-      val snap = scanSegments(spark, targetDir, m, all, dvPositions(targetDir, m, all))
+      val snap = scanSegments(spark, targetDir, m, all, dvPositions(targetDir, m, all),
+        positions = true)
       val withBucket = snap.withColumn("_read_bucket", fileBucket)
       val mis = withBucket
         .filter(bucketExpr(pkCols, m.numBuckets) =!= col("_read_bucket"))

@@ -96,18 +96,14 @@ object CopyInto {
       col(f.name).cast(f.dataType).as(f.name)): _*)
 
     CdcPipeline.enforceConstraints(m, source, targetDir)
-    val rows = source.count()
-    val touched = CdcPipeline.bucketSet(source, CdcPipeline.bucketExpr(pkCols, m.numBuckets))
+    val batch = CdcPipeline.keyedBatch(source, pkCols, m.numBuckets, "COPY INTO source")
+    val rows = batch.rows
     val v =
-      if (touched.isEmpty) cur
-      else CdcPipeline.rewriteBuckets(spark, targetDir, pkCols, m, touched, "copy-into",
+      if (batch.buckets.isEmpty) cur
+      else CdcPipeline.rewriteBuckets(spark, targetDir, pkCols, m, batch.buckets, "copy-into",
           deltaRows = Some(rows)) { _ =>
         // the rows replace the stored rows of their keys (UPDATE SET * /
-        // INSERT *); the same ANSI duplicate-key refusal as MERGE
-        val dup = source.groupBy(pkCols.map(col): _*).count()
-          .filter(col("count") > 1).limit(1).collect()
-        require(dup.isEmpty, s"COPY INTO source has duplicate keys on (${pkCols.mkString(", ")}): " +
-          dup.head.toSeq.init.mkString(", "))
+        // INSERT *)
         CdcPipeline.KeyedDelta.Upserts(source)
       }.version
     // Markers last (see object doc: crash before these re-merges the

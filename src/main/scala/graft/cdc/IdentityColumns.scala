@@ -99,11 +99,12 @@ object IdentityColumns {
         s"no identity column $name declared at $targetDir"))
     val m = CdcPipeline.currentManifest(targetDir).getOrElse(
       throw new IllegalArgumentException(s"no graft store at $targetDir"))
-    val touched = CdcPipeline.bucketSet(source, CdcPipeline.bucketExpr(pkCols, m.numBuckets))
-    if (touched.isEmpty) return (m.readVersion, 0L)
+    // a repeated key would take two rows, and two fresh ids
+    val batch = CdcPipeline.keyedBatch(source, pkCols, m.numBuckets, "identity merge source")
+    if (batch.buckets.isEmpty) return (m.readVersion, 0L)
     var nNew = 0L
-    val v = CdcPipeline.rewriteBuckets(spark, targetDir, pkCols, m, touched,
-        "merge-identity") { stored =>
+    val v = CdcPipeline.rewriteBuckets(spark, targetDir, pkCols, m, batch.buckets,
+        "merge-identity", deltaRows = Some(batch.rows)) { stored =>
       val subset = stored.localCheckpoint()
       val existing = subset.select((pkCols :+ name).map(col): _*)
       val withId = source.join(existing, pkCols, "left")

@@ -313,36 +313,21 @@ private[graft] object StoreFs {
   }
 
   /** The (file key, row index) pairs [[writePositions]] wrote, read on
-    * the driver. Every read path reads the vectors of the buckets it
-    * scans, so the pairs are kept (bounded) by (path, length,
-    * modification time): one status call instead of a parquet open on
-    * a repeated read, and a rewritten file is read again.
+    * the driver.
     */
-  def readPositions(path: String): Seq[(String, Long)] = {
-    val p = new Path(path)
-    val st = fs(p).getFileStatus(p)
-    val key = (path, st.getLen, st.getModificationTime)
-    Option(positionsRead.get(key)).getOrElse {
-      val pairs = walkFooters(path, recursive = false) { (_, r) =>
-        val schema = r.getFooter.getFileMetaData.getSchema
-        val io = new org.apache.parquet.io.ColumnIOFactory().getColumnIO(schema)
-        Iterator.continually(r.readNextRowGroup()).takeWhile(_ != null).flatMap { rg =>
-          val rows = io.getRecordReader(rg,
-            new org.apache.parquet.example.data.simple.convert.GroupRecordConverter(schema))
-          (0L until rg.getRowCount).map { _ =>
-            val g = rows.read()
-            g.getString("file", 0) -> g.getLong("pos", 0)
-          }
-        }.toVector
-      }.flatten
-      if (positionsRead.size >= 4096) positionsRead.clear()
-      positionsRead.put(key, pairs)
-      pairs
-    }
-  }
-
-  private val positionsRead =
-    new java.util.concurrent.ConcurrentHashMap[(String, Long, Long), Seq[(String, Long)]]()
+  def readPositions(path: String): Seq[(String, Long)] =
+    walkFooters(path, recursive = false) { (_, r) =>
+      val schema = r.getFooter.getFileMetaData.getSchema
+      val io = new org.apache.parquet.io.ColumnIOFactory().getColumnIO(schema)
+      Iterator.continually(r.readNextRowGroup()).takeWhile(_ != null).flatMap { rg =>
+        val rows = io.getRecordReader(rg,
+          new org.apache.parquet.example.data.simple.convert.GroupRecordConverter(schema))
+        (0L until rg.getRowCount).map { _ =>
+          val g = rows.read()
+          g.getString("file", 0) -> g.getLong("pos", 0)
+        }
+      }.toVector
+    }.flatten
 
   /** Copy every file directly in `src` into the directory `dst`
     * (created if missing), keeping names, with Hadoop `FileUtil` so it

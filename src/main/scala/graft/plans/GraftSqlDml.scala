@@ -331,11 +331,12 @@ object GraftSqlDml {
         val v = CdcPipeline.publish(source, path, pk, op = "sql-insert-overwrite")
         Seq(Row(v, n))
       } else {
-        val srcRows = source.count()
-        val touched = CdcPipeline.bucketSet(source, CdcPipeline.bucketExpr(pk, m.numBuckets))
+        // a key the query repeats is refused like one the store holds
+        val batch = CdcPipeline.keyedBatch(source, pk, m.numBuckets, s"INSERT INTO $path source")
         val v =
-          if (touched.isEmpty) m.readVersion
-          else CdcPipeline.rewriteBuckets(spark, path, pk, m, touched, "sql-insert") { subset =>
+          if (batch.buckets.isEmpty) m.readVersion
+          else CdcPipeline.rewriteBuckets(spark, path, pk, m, batch.buckets, "sql-insert",
+              deltaRows = Some(batch.rows)) { subset =>
             val dup = subset.join(
               org.apache.spark.sql.functions.broadcast(
                 source.select(pk.map(col): _*)), pk, "left_semi")
@@ -346,7 +347,7 @@ object GraftSqlDml {
                 "already exists — use MERGE INTO to upsert")
             CdcPipeline.KeyedDelta.Inserts(source)
           }.version
-        Seq(Row(v, srcRows))
+        Seq(Row(v, batch.rows))
       }
     }
   }

@@ -1,6 +1,7 @@
 package graft.cdc
 
 import java.nio.file.Files
+import org.apache.spark.ListenerDrain
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -127,6 +128,18 @@ class MergeOnReadSpec extends AnyFunSuite {
     assert(snapshot(dir) === model.toMap)
   }
 
+  test("a read asks the scan for row positions only where a deletion vector applies") {
+    val (dir, model) = store(400)
+    def plan(df: DataFrame): String = df.queryExecution.executedPlan.toString
+    assert(!plan(CdcPipeline.readSnapshot(spark, dir).get).contains("_metadata"))
+    merge(dir, model, Seq((1L, 5L)), Nil)
+    val withDv = plan(CdcPipeline.readSnapshot(spark, dir).get)
+    assert(withDv.contains("live_position"), withDv)
+    assert(!withDv.contains("file_modification_time"), s"only the filter's fields: $withDv")
+    assert(!plan(CdcPipeline.readSnapshotAt(spark, dir, 0L).get).contains("_metadata"))
+    assert(snapshot(dir) === model.toMap)
+  }
+
   test("a change set past LargeDeltaRows folds every touched bucket") {
     val (dir, model) = store(400)
     val m = head(dir)
@@ -143,6 +156,63 @@ class MergeOnReadSpec extends AnyFunSuite {
     val after = head(dir)
     assert(touched.forall(b => after.buckets(b) === Seq(s"v${w.version}")) && after.dvs.isEmpty)
     assert(snapshot(dir) === model.toMap)
+  }
+
+  test("a delta of unknown size is counted before its positions reach the driver") {
+    val (dir, model) = store(400)
+    val m = head(dir)
+    val ups = Seq((1L, 5L), (900L, 7L)).toDF("id", "payload")
+      .select(col("id"), (col("id") % 7).as("grp"), col("payload"))
+    val touched = CdcPipeline.keyBuckets(ups, Seq("id"), B)
+    val (w, jobs) = ListenerDrain.jobsOf(spark.sparkContext) {
+      CdcPipeline.rewriteBuckets(spark, dir, Seq("id"), m, touched)(_ =>
+        CdcPipeline.KeyedDelta.Upserts(ups))
+    }
+    val labels = jobs.map(p => Option(p.getProperty("spark.job.description")).getOrElse(""))
+    val sized = labels.indexOf("store.merge: delta size")
+    assert(sized >= 0, s"no sizing job among $labels")
+    assert(labels.indexOf("store.merge: matched keys") > sized, labels)
+    Seq((1L, 5L), (900L, 7L)).foreach { case (id, p) => model(id) = p }
+    assert(w.replaced === 1L)
+    assert(snapshot(dir) === model.toMap)
+    assert(head(dir).dvs.nonEmpty, "a small delta stays merge-on-read")
+  }
+
+  test("a batch that repeats a key is refused with the store unchanged: INSERT, identity merge, COPY INTO") {
+    val (dir, model) = store(400)
+    def refused(what: String)(body: => Any): Unit = {
+      val before = head(dir).readVersion
+      val e = intercept[Exception](body)
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(t => Option(t.getMessage).exists(_.contains("duplicate keys"))), s"$what: $e")
+      assert(head(dir).readVersion === before, s"$what committed a version")
+      assert(snapshot(dir) === model.toMap, what)
+    }
+    refused("INSERT") {
+      spark.sql(s"INSERT INTO graft.`$dir` VALUES (5000, 1, 1), (5000, 2, 2)").collect()
+    }
+    // a fresh key once is still inserted
+    spark.sql(s"INSERT INTO graft.`$dir` VALUES (5001, 1, 7)").collect()
+    model(5001L) = 7L
+    assert(snapshot(dir) === model.toMap)
+
+    val idDir = tmp()
+    CdcPipeline.publish(CdcPipeline.readSnapshot(spark, dir).get
+      .withColumn("sid", col("id") + 1), idDir, Seq("id"), buckets = Some(B))
+    val spec = IdentityColumns.declare(spark, idDir, "sid")
+    val idBefore = CdcPipeline.readSnapshot(spark, idDir).get.collect().toSet
+    val e = intercept[IllegalArgumentException] {
+      IdentityColumns.mergeWithIdentity(spark, idDir, Seq("id"),
+        Seq((7000L, 0L, 1L), (7000L, 0L, 2L), (3L, 3L, 9L)).toDF("id", "grp", "payload"), "sid")
+    }
+    assert(e.getMessage.contains("duplicate keys"), e.getMessage)
+    assert(CdcPipeline.readSnapshot(spark, idDir).get.collect().toSet === idBefore)
+    assert(IdentityColumns.identitySpec(idDir, "sid").get === spec, "no ids were reserved")
+
+    val land = tmp()
+    Seq((42L, 0L, 1L), (42L, 0L, 2L)).toDF("id", "grp", "payload").coalesce(1)
+      .write.parquet(s"$land/dup")
+    refused("COPY INTO")(CopyInto.copyInto(spark, dir, Seq("id"), Seq(s"$land/dup")))
   }
 
   test("liveness: three merge-on-read merges, then vacuum(keep = 1): the model reads and fsck is clean") {
